@@ -2149,9 +2149,8 @@ object Queries {
   def g1SignalEngine(spark: SparkSession, dir: String): DataFrame = {
     // deterministic (symbol, ts_us) dedup BEFORE the engine: ts_us is
     // micros truncated from nanos, so two events CAN collide on the key
-    // in future corpora; detectSignals' own keep-last dedup tie-breaks
-    // on ts_us itself (row-order-nondeterministic among exact dups) and
-    // the oracle could not mirror it. event_id desc pins the pick on
+    // in future corpora; detectSignals' own dedup keeps an arbitrary
+    // row among (symbol, ts_us) ties and the oracle could not mirror it. event_id desc pins the pick on
     // both engines; detectSignals' internal dedup is then a no-op.
     // Agg form (max_by): event_id is unique, so the pick is total; the
     // map-side combine beats the window form's full per-partition sort.

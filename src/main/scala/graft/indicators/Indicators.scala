@@ -162,11 +162,15 @@ object Indicators {
     *
     * OUTPUT CONTRACT: rows come back key-partitioned and
     * (key, order)-sorted — the fold's own repartition + in-partition
-    * sort survives the order-preserving `mapPartitions`. Downstream
-    * per-key folds (the signal engine) compose on this contract
-    * directly instead of re-shuffling; Catalyst cannot prove the
-    * invariant through `mapPartitions`, so a caller-side repartition
-    * would plan a REDUNDANT exchange + sort.
+    * sort survives the order-preserving `mapPartitions`. A downstream
+    * per-key fold can compose on this contract directly instead of
+    * re-shuffling; Catalyst cannot prove the invariant through
+    * `mapPartitions`, so a caller-side repartition would plan a
+    * REDUNDANT exchange + sort. (The signal engine no longer builds on
+    * these columns: it folds the incremental kernel itself, see
+    * [[graft.signals.HullMacd.detectSignals]]. `prePartitioned` stays
+    * for external callers that feed this fold from a window over the
+    * same key, as `withHull` output is.)
     */
   def withMacd(
       df: DataFrame,

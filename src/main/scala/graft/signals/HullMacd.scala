@@ -6,8 +6,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.indicators.Indicators
-import graft.ops.Relational
+import graft.streaming.Streams
 
 /** Hull MA + MACD confluence signal engine (reference
   * `analytics/engines/hull_macd.py:36-260`, SURVEY T5): a position-aware
@@ -17,13 +16,14 @@ import graft.ops.Relational
   * CLOSEs any time after; no OPENs at/after `latestEntry`).
   *
   * The transition function is pure `(State, Candle) → (State, Signals)`
-  * — unit-testable exactly like the reference engine — and the batch
-  * driver folds it over key-sorted partitions after computing the
-  * indicator columns with [[graft.indicators.Indicators]] (prefix-fold
-  * EMA and trailing-window WMA make per-row values identical to the
-  * reference's recompute-per-candle over its buffer, for series within
-  * the reference's 500-candle cap; the cap itself is a memory bound, not
-  * a semantic choice — SURVEY §7.5.3).
+  * — unit-testable exactly like the reference engine. Batch
+  * ([[detectSignals]]) and the streams drive it through ONE kernel,
+  * [[graft.streaming.Streams.stepIndicatorFull]], which updates Hull and
+  * MACD per candle (trailing-window WMA and prefix-fold EMA make per-row
+  * values identical to the reference's recompute-per-candle over its
+  * buffer, for series within the reference's 500-candle cap; the cap
+  * itself is a memory bound, not a semantic choice — SURVEY §7.5.3).
+  * [[graft.indicators.Indicators]] computes the same values as columns.
   */
 object HullMacd {
 
@@ -140,11 +140,21 @@ object HullMacd {
   ))
 
   /** Batch signal detection: `df` needs (symbolCol: string, timeUs: long,
-    * closeCol: double). Pipeline: keep-last dedup on (symbol, time) →
-    * Hull(20) + MACD(12,26,9) columns (prior close defaults to each
-    * symbol's first close, the reference's `prior_close=None` fallback) →
-    * per-symbol ordered fold of [[step]]. The first candle of each symbol
-    * only warms indicators (reference requires ≥2 candles).
+    * closeCol: double). One pipeline: project to (symbol, time, close),
+    * drop null closes, shuffle once on symbol and sort within partitions
+    * by (symbol, time), then fold [[graft.streaming.Streams.stepIndicatorFull]]
+    * over each symbol's run — Hull(20) and MACD(12,26,9) updated per
+    * candle, padded and seeded with the symbol's first close (the
+    * reference's `prior_close=None` fallback), and [[step]] applied from
+    * the second candle on (reference requires ≥2 candles).
+    *
+    * Duplicates: unless `assumeDeduped`, a candle is skipped when the
+    * next candle of its run has the same (symbol, time), so exactly one
+    * candle per (symbol, time) is folded; WHICH of several rows sharing
+    * (symbol, time) survives is arbitrary. A caller that needs a defined
+    * pick dedups upstream with a real tie-break column and passes
+    * `assumeDeduped = true`, its guarantee that (symbol, time) is
+    * already unique.
     */
   def detectSignals(
       df: DataFrame,
@@ -157,60 +167,23 @@ object HullMacd {
       signalLen: Int = 9,
       assumeDeduped: Boolean = false
   ): DataFrame = {
-    // assumeDeduped: the caller guarantees (symbol, time) is already
-    // unique (e.g. an upstream keep-last with a REAL tie-break column,
-    // or bucket candles that are unique by construction) — the internal
-    // keep-last would be a semantic no-op that still pays a full
-    // sort + window pass. Mirrors withMacd's prePartitioned flag.
-    val deduped =
-      if (assumeDeduped) df.filter(col(closeCol).isNotNull)
-      else Relational.dedupKeepLast(df.filter(col(closeCol).isNotNull), Seq(symbolCol, timeUsCol), timeUsCol)
-    val withHull = Indicators.withHull(deduped, symbolCol, Seq(timeUsCol), closeCol, hullLength, padCol = None)
-    // withHull's windows partition by the same key, so the MACD fold can
-    // skip its repartition (prePartitioned) — no redundant exchange
-    val withMacd = Indicators.withMacd(withHull, symbolCol, Seq(timeUsCol), closeCol, None, fast, slow, signalLen,
-      prePartitioned = true)
-    val symIdx = withMacd.schema.fieldIndex(symbolCol)
-    val timeIdx = withMacd.schema.fieldIndex(timeUsCol)
-    val closeIdx = withMacd.schema.fieldIndex(closeCol)
-    val hmaIdx = withMacd.schema.fieldIndex("hma")
-    val hmaColorIdx = withMacd.schema.fieldIndex("hma_color")
-    val mvIdx = withMacd.schema.fieldIndex("macd_value")
-    val msIdx = withMacd.schema.fieldIndex("avg")
-    val mhIdx = withMacd.schema.fieldIndex("diff")
-    // NO repartition here: withMacd's output contract is
-    // key-partitioned, (key, time)-sorted rows (its own fold shuffled
-    // and sorted; mapPartitions preserved the layout), so re-shuffling
-    // would add a redundant Exchange that Catalyst can't eliminate (it
-    // cannot see through mapPartitions). The in-partition sort is kept:
-    // it is a cheap pass over already-sorted rows AND the row-format
-    // boundary between the two object pipelines (fusing the
-    // mapPartitions lambdas directly trips Spark's object-serializer
-    // pruning with an ObjectType-in-struct projection error).
-    val sorted = withMacd.sortWithinPartitions(col(symbolCol), col(timeUsCol))
-    sorted.mapPartitions { rows =>
-      var curKey: String = null
-      var started = false
-      var state = State()
-      var rowsInKey = 0
-      rows.flatMap { r =>
-        val k = r.getString(symIdx)
-        if (!started || k != curKey) {
-          curKey = k; started = true; state = State(); rowsInKey = 0
-        }
-        rowsInKey += 1
-        if (rowsInKey < 2) Nil // reference: need >= 2 candles
+    import df.sparkSession.implicits._
+    val candles = df
+      .select(col(symbolCol).as("symbol"), col(timeUsCol).as("timeUs"), col(closeCol).as("close"))
+      .filter(col("close").isNotNull)
+      .as[Streams.CandleIn]
+    Streams.perSymbolRuns(candles) { (sym, run) =>
+      val it = run.buffered
+      var state = Streams.emptyIndicatorState
+      it.flatMap { c =>
+        if (!assumeDeduped && it.hasNext && it.head.timeUs == c.timeUs) Nil
         else {
-          val c = Candle(
-            r.getLong(timeIdx), r.getDouble(closeIdx), r.getString(hmaColorIdx),
-            r.getDouble(hmaIdx), r.getDouble(mvIdx), r.getDouble(msIdx), r.getDouble(mhIdx)
-          )
-          val (ns, sigs) = step(state, c)
-          state = ns
+          val (next, cd, sigs) = Streams.stepIndicatorFull(state, c, hullLength, fast, slow, signalLen)
+          state = next
           sigs.map(sg =>
             Row(
-              k, sg.timeUs, sg.signalType, sg.direction, "hull_macd", sg.trigger,
-              sg.hullDirection, sg.hullValue, sg.macdValue, sg.macdSignal, sg.macdHistogram, sg.closePrice
+              sym, cd.timeUs, sg.signal_type, sg.direction, "hull_macd", sg.trigger,
+              cd.hullColor, cd.hullValue, cd.macdValue, cd.macdSignal, cd.macdHistogram, cd.close
             )
           )
         }

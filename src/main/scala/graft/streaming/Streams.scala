@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.StructType
@@ -117,11 +117,12 @@ object Streams {
 
   /** Per-symbol incremental indicator state: trailing close/diff rings
     * for the Hull WMAs, EMA scalars for MACD, and the engine's
-    * position-aware state. O(hullLength) memory per key, O(1) update —
-    * the streaming twin of the batch recompute, and (unlike the
+    * position-aware state. O(hullLength) memory per key, O(hullLength)
+    * update. The batch engine folds this same kernel, so (unlike the
     * reference, which accepts drift between its engine and chart paths,
-    * `Proposal.MD:136`) numerically IDENTICAL to the batch fold because
-    * both evaluate the same trailing-window/recursion arithmetic.
+    * `Proposal.MD:136`) stream and batch cannot differ; the column form
+    * (`Indicators.withHull`/`withMacd`) evaluates the same
+    * trailing-window/recursion arithmetic and matches it bit for bit.
     */
   case class IndicatorState(
       closes: List[Double],
@@ -144,15 +145,16 @@ object Streams {
       close_price: Double
   )
 
-  /** Reference-order padded WMA over the trailing ring (newest last):
-    * identical term order to `Indicators.paddedWmaCol`.
+  /** Reference-order padded WMA over a trailing ring given NEWEST FIRST
+    * (one walk, O(period)): identical term order to
+    * `Indicators.paddedWmaCol`.
     */
-  private def wmaPadded(ring: List[Double], period: Int, pad: Double): Double = {
-    val n = ring.size
+  private def wmaPadded(newestFirst: List[Double], period: Int, pad: Double): Double = {
+    val it = newestFirst.iterator
     var acc = 0.0
     var k = 0
     while (k < period) {
-      val v = if (k < n) ring(n - 1 - k) else pad
+      val v = if (it.hasNext) it.next() else pad
       acc += (period - k).toDouble * v
       k += 1
     }
@@ -173,9 +175,9 @@ object Streams {
 
   /** [[stepIndicator]] with the per-candle indicator SURFACE exposed
     * (the fully-computed [[HullMacd.Candle]] — hull value/color, MACD
-    * value/signal/histogram): one arithmetic body serves both the
-    * signal engine and the W5 indicator-series emission, so the two
-    * cannot drift.
+    * value/signal/histogram): one arithmetic body serves the batch and
+    * streaming signal engines and the W5 indicator-series emission, so
+    * they cannot drift.
     */
   def stepIndicatorFull(
       st: IndicatorState,
@@ -189,9 +191,10 @@ object Streams {
     val sqrtLen = math.round(math.sqrt(hullLength.toDouble)).toInt
     val pad = if (st.count == 0) c.close else st.pad
     val closes = (st.closes :+ c.close).takeRight(hullLength)
-    val diff = 2.0 * wmaPadded(closes, half, pad) - wmaPadded(closes, hullLength, pad)
+    val recentCloses = closes.reverse
+    val diff = 2.0 * wmaPadded(recentCloses, half, pad) - wmaPadded(recentCloses, hullLength, pad)
     val diffs = (st.diffs :+ diff).takeRight(sqrtLen)
-    val hma = wmaPadded(diffs, sqrtLen, pad)
+    val hma = wmaPadded(diffs.reverse, sqrtLen, pad)
     val hullColor = if (st.prevHma.exists(hma > _)) "Up" else "Down"
     val aF = 2.0 / (fastLen + 1.0)
     val aS = 2.0 / (slowLen + 1.0)
@@ -285,33 +288,43 @@ object Streams {
       signalLen: Int = 9
   ): org.apache.spark.sql.KeyValueGroupedDataset[String, IndicatorState] = {
     import history.sparkSession.implicits._
-    import org.apache.spark.sql.functions.col
-    // One shuffle on symbol, engine-sorted runs, streamed per-key fold
-    // with O(hullLength) state — the accounts.Lifo shape. No group
-    // materialization, so a caller can point this at a YEAR of history
-    // (not just a warmup-window slice) and the engine's sort handles
-    // spilling, not task memory.
-    history
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("timeUs"))
-      .mapPartitions { rows =>
-        new Iterator[(String, IndicatorState)] {
-          private var cur: CandleIn = if (rows.hasNext) rows.next() else null
-          def hasNext: Boolean = cur != null
-          def next(): (String, IndicatorState) = {
-            val sym = cur.symbol
-            var st = emptyIndicatorState
-            while (cur != null && cur.symbol == sym) {
-              st = stepIndicator(st, cur, hullLength, fast, slow, signalLen)._1
-              cur = if (rows.hasNext) rows.next() else null
-            }
-            (sym, st)
-          }
-        }
-      }
+    // The Lifo shape: no group materialization, so a caller can point
+    // this at a YEAR of history (not just a warmup-window slice) and the
+    // engine's sort handles spilling, not task memory.
+    perSymbolRuns(history) { (sym, run) =>
+      Iterator.single(sym -> run.foldLeft(emptyIndicatorState)(stepIndicator(_, _, hullLength, fast, slow, signalLen)._1))
+    }
       .groupByKey(_._1)
       .mapValues(_._2)
   }
+
+  /** The batch per-symbol fold: ONE shuffle on symbol, an engine sort
+    * on (symbol, timeUs) within partitions, then `perRun(symbol, run)`
+    * on each symbol's time-ordered run, streamed — per-key memory is
+    * whatever `perRun` keeps, never the run itself. Whatever `perRun`
+    * leaves of its run is skipped before the next symbol starts.
+    */
+  private[graft] def perSymbolRuns[B: Encoder](candles: Dataset[CandleIn])(
+      perRun: (String, Iterator[CandleIn]) => Iterator[B]
+  ): Dataset[B] =
+    candles
+      .repartition(col("symbol"))
+      .sortWithinPartitions(col("symbol"), col("timeUs"))
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        new Iterator[(String, Iterator[CandleIn])] {
+          private var run: Iterator[CandleIn] = Iterator.empty
+          def hasNext: Boolean = { run.foreach(_ => ()); it.hasNext }
+          def next(): (String, Iterator[CandleIn]) = {
+            val sym = it.head.symbol
+            run = new Iterator[CandleIn] {
+              def hasNext: Boolean = it.hasNext && it.head.symbol == sym
+              def next(): CandleIn = it.next()
+            }
+            (sym, run)
+          }
+        }.flatMap { case (sym, run) => perRun(sym, run) }
+      }
 
   /** Streaming signal detection: keyed incremental state via
     * `flatMapGroupsWithState` (append mode). Candles within a micro-batch
@@ -331,9 +344,9 @@ object Streams {
     val fn = (sym: String, rows: Iterator[CandleIn], state: GroupState[IndicatorState]) => {
       var st = state.getOption.getOrElse(emptyIndicatorState)
       // toSeq.sortBy buffers one key's MICRO-BATCH slice (small by
-      // construction — trigger-bounded), not its full history; batch-mode
-      // reuse of this fold belongs on the Lifo-style sorted-iterator
-      // path instead.
+      // construction — trigger-bounded), not its full history; the batch
+      // twin (HullMacd.detectSignals) folds the same kernel over engine-
+      // sorted runs instead ([[perSymbolRuns]]).
       val out = rows.toSeq.sortBy(_.timeUs).flatMap { c =>
         val (ns, sigs) = stepIndicator(st, c, hullLength, fast, slow, signalLen)
         st = ns

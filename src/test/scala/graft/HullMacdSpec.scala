@@ -2,6 +2,15 @@ package graft
 
 import java.time.{LocalDateTime, ZoneOffset}
 
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.window.WindowExecBase
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import graft.indicators.Indicators
+import graft.ops.Relational
 import graft.signals.HullMacd
 import graft.signals.HullMacd.{Candle, State}
 
@@ -138,5 +147,99 @@ class HullMacdSpec extends SparkSpec {
       }
     }
     assert(rows.nonEmpty)
+  }
+
+  /** The column-form signal pipeline, kept here as an independent
+    * reference for the kernel fold: keep-last dedup → Hull and MACD
+    * columns → per-symbol fold of [[HullMacd.step]] over the sorted
+    * indicator rows.
+    */
+  private def columnFormSignals(df: DataFrame, symbolCol: String, timeUsCol: String, closeCol: String): DataFrame = {
+    val deduped = Relational.dedupKeepLast(df.filter(col(closeCol).isNotNull), Seq(symbolCol, timeUsCol), timeUsCol)
+    val withHull = Indicators.withHull(deduped, symbolCol, Seq(timeUsCol), closeCol, 20, padCol = None)
+    val withMacd = Indicators.withMacd(withHull, symbolCol, Seq(timeUsCol), closeCol, None, 12, 26, 9, prePartitioned = true)
+    val Seq(symIdx, timeIdx, closeIdx, hmaIdx, colorIdx, mvIdx, msIdx, mhIdx) =
+      Seq(symbolCol, timeUsCol, closeCol, "hma", "hma_color", "macd_value", "avg", "diff").map(withMacd.schema.fieldIndex)
+    withMacd.sortWithinPartitions(col(symbolCol), col(timeUsCol)).mapPartitions { rows =>
+      var curKey: String = null
+      var state = State()
+      var rowsInKey = 0
+      rows.flatMap { r =>
+        val k = r.getString(symIdx)
+        if (rowsInKey == 0 || k != curKey) { curKey = k; state = State(); rowsInKey = 0 }
+        rowsInKey += 1
+        if (rowsInKey < 2) Nil
+        else {
+          val c = Candle(r.getLong(timeIdx), r.getDouble(closeIdx), r.getString(colorIdx),
+            r.getDouble(hmaIdx), r.getDouble(mvIdx), r.getDouble(msIdx), r.getDouble(mhIdx))
+          val (ns, sigs) = HullMacd.step(state, c)
+          state = ns
+          sigs.map(sg => Row(k, sg.timeUs, sg.signalType, sg.direction, "hull_macd", sg.trigger,
+            sg.hullDirection, sg.hullValue, sg.macdValue, sg.macdSignal, sg.macdHistogram, sg.closePrice))
+        }
+      }
+    }(Encoders.row(HullMacd.signalSchema))
+  }
+
+  /** Seeded 1-minute session bars (09:30–15:59 ET on 2026-02-10) for
+    * eight symbols, in shuffled row order, with null closes and
+    * exact-duplicate (symbol, time, close) rows.
+    */
+  private def seededBars(): DataFrame = {
+    val rnd = new scala.util.Random(7)
+    val open = LocalDateTime.of(2026, 2, 10, 14, 30).toInstant(ZoneOffset.UTC).toEpochMilli * 1000
+    val rows = for {
+      s <- 0 until 8
+      px = Iterator.iterate(50.0 + 10 * s)(p => p + rnd.nextGaussian() * 0.3).take(390).toVector
+      (p, i) <- px.zipWithIndex
+      close = if (rnd.nextDouble() < 0.04) null else java.lang.Double.valueOf(p)
+      copies = if (rnd.nextDouble() < 0.05) 2 else 1
+      _ <- 0 until copies
+    } yield Row(s"S$s", open + i * 60000000L, close)
+    val schema = StructType(Seq(
+      StructField("symbol", StringType), StructField("time_us", LongType), StructField("close", DoubleType)))
+    spark.createDataFrame(java.util.Arrays.asList(rnd.shuffle(rows): _*), schema)
+  }
+
+  private def bitwise(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().toSeq
+      .map(r => r.toSeq.map {
+        case d: Double => java.lang.Double.doubleToRawLongBits(d)
+        case x         => x
+      })
+      .sortBy(r => (r(0).asInstanceOf[String], r(1).asInstanceOf[Long], r(2).asInstanceOf[String], r(3).asInstanceOf[String]))
+
+  test("kernel-fold detectSignals == column-form pipeline, all 12 columns bit-identical at widths 1, 4, 64") {
+    val events = graft.io.Tables
+      .events(spark, sf0001)
+      .select(col("user_id").cast("string").as("symbol"), col("ts_us"), col("value"))
+    val inputs = Seq(("events", events, "ts_us", "value"), ("seeded", seededBars(), "time_us", "close"))
+    val key = "spark.sql.shuffle.partitions"
+    val prior = spark.conf.getOption(key)
+    try {
+      for (width <- Seq(1, 4, 64); (name, df, timeCol, closeCol) <- inputs) {
+        spark.conf.set(key, width.toString)
+        val kernel = HullMacd.detectSignals(df, "symbol", timeCol, closeCol)
+        assert(kernel.schema == HullMacd.signalSchema)
+        val got = bitwise(kernel)
+        val want = bitwise(columnFormSignals(df, "symbol", timeCol, closeCol))
+        assert(want.nonEmpty, s"$name produced no signals")
+        assert(got == want, s"$name at width $width: first diff ${got.zip(want).find(p => p._1 != p._2)}, " +
+          s"sizes ${got.size}/${want.size}")
+      }
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
+
+  test("detectSignals with its dedup plans exactly one shuffle exchange and no Window operator") {
+    val out = HullMacd.detectSignals(seededBars(), "symbol", "time_us", "close", assumeDeduped = false)
+    assert(out.collect().nonEmpty)
+    val plan = out.queryExecution.executedPlan
+    val walk = new AdaptiveSparkPlanHelper {}
+    val shuffles = walk.collect(plan) { case e: ShuffleExchangeLike => e }
+    val windows = walk.collect(plan) { case w: WindowExecBase => w }
+    assert(shuffles.size == 1 && windows.isEmpty, s"plan:\n$plan")
   }
 }

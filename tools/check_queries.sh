@@ -9,11 +9,14 @@
 # requested names (check_oracle.py iterates every oracle entry and
 # errors on missing dumps; the full DuckDB pass is also slow), then
 # runs the --exact string compare. Exits non-zero on the first
-# non-green scale.
+# non-green scale. Each scale's dump directory is removed once that
+# scale is green; a failing scale's directory is kept for inspection.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 [ $# -ge 1 ] || { echo "usage: $0 <query> [query ...]" >&2; exit 2; }
 queries=("$@")
+out=""
+trap '[ ! -d "$out" ] || echo "not green: dump kept in $out" >&2' EXIT
 for sf in ${SCALES:-sf0.001 sf0.01 sf0.1}; do
   out="/tmp/graft_check_${sf}_$$"
   rm -rf "$out"
@@ -27,4 +30,6 @@ json.dump({k: v for k, v in d.items() if k in keep}, open(p, "w"))
 EOF
   echo "== $sf =="
   python3 tools/check_oracle.py --exact "/root/testdata/$sf" "$out"
+  rm -rf "$out"
+  out=""
 done
