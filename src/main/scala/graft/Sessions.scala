@@ -65,4 +65,22 @@ object Sessions {
     graft.expressions.ShingleHashes.register(spark)
     spark
   }
+
+  /** Run `body` with each `key -> value` set on the session. On exit,
+    * normal or exceptional, every key gets back the value it had
+    * before, or is unset again if it was not set (a key that only had
+    * a default stays unset, so `spark.conf.getAll` is unchanged).
+    * Session conf set this way cannot outlive the code that set it.
+    */
+  def withConf[T](spark: SparkSession, pairs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll // explicitly set keys only, no defaults
+    val prior = pairs.map { case (k, _) => k -> set.get(k) }
+    try {
+      pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prior.reverse.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
+  }
 }

@@ -333,8 +333,8 @@ object Queries {
   }
 
   /** T2/S5 — the keep-last upsert END-STATE through a REAL stream and
-    * the PRODUCTION entry point: two event micro-batches replayed from
-    * a file source (`maxFilesPerTrigger=1`) into
+    * the PRODUCTION entry point: two event micro-batches (copied in by
+    * [[Replay.copyArrival]]) replayed into
     * [[graft.io.LatestUpsert.start]] — the streaming foreachBatch gate
     * with per-batch self-maintenance on (`maxFilesPerBucket=4`, the
     * deployed configuration) — then the committed lake table read
@@ -367,25 +367,11 @@ object Queries {
       }
     }
     // fresh stream plumbing per invocation (the table is shared scratch
-    // — replays converge); mtimes pinned for reproducible batch
-    // boundaries even though the merge is order-free
+    // — replays converge)
     val streamDir = java.nio.file.Files.createTempDirectory("t2src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("t2ckpt").toString
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(streamDir).getFileSystem(conf)
-    val base = System.currentTimeMillis()
-    (1 to 2).foreach { i =>
-      val srcPart = fs
-        .listStatus(new org.apache.hadoop.fs.Path(s"$root/b$i"))
-        .map(_.getPath)
-        .find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"t2 seed b$i has no part file"))
-      val dst = new org.apache.hadoop.fs.Path(s"$streamDir/b$i.parquet")
-      org.apache.hadoop.fs.FileUtil.copy(fs, srcPart, fs, dst, false, conf)
-      fs.setTimes(dst, base + i * 1000L, -1)
-    }
-    val sch = spark.read.parquet(s"$root/b1").schema
-    val src = spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(streamDir)
+    (1 to 2).foreach(i => Replay.copyArrival(spark, s"$root/b$i", streamDir))
+    val src = graft.streaming.Streams.readEventStream(spark, streamDir, spark.read.parquet(s"$root/b1").schema)
     val q = graft.io.LatestUpsert.start(src, s"$root/table", ckpt, maxFilesPerBucket = 4)
     q.processAllAvailable()
     q.stop()
@@ -423,28 +409,15 @@ object Queries {
     val streamDir = java.nio.file.Files.createTempDirectory("s6src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("s6ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("s6out").toString + "/history"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(streamDir).getFileSystem(conf)
-    val base = System.currentTimeMillis()
-    def addFile(i: Int): Unit = {
-      val srcPart = fs
-        .listStatus(new org.apache.hadoop.fs.Path(s"$root/f$i"))
-        .map(_.getPath)
-        .find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"s6 seed f$i has no part file"))
-      val dst = new org.apache.hadoop.fs.Path(s"$streamDir/f$i.parquet")
-      org.apache.hadoop.fs.FileUtil.copy(fs, srcPart, fs, dst, false, conf)
-      fs.setTimes(dst, base + i * 1000L, -1)
-    }
     val sch = spark.read.parquet(s"$root/f1").schema
     def runOnce(): Unit = {
-      val src = spark.readStream.schema(sch).option("maxFilesPerTrigger", 1).parquet(streamDir)
+      val src = graft.streaming.Streams.readEventStream(spark, streamDir, sch)
       val q = graft.io.Sinks.streamHistory(src, out, ckpt, Seq("event_type")).start()
       q.awaitTermination()
     }
-    addFile(1)
+    Replay.copyArrival(spark, s"$root/f1", streamDir)
     runOnce() // run 1: half the history, clean stop
-    addFile(2)
+    Replay.copyArrival(spark, s"$root/f2", streamDir)
     runOnce() // run 2: commit-log resume — run 1's files must NOT re-commit
     spark.read.parquet(out)
       .select("event_id", "ts_us", "user_id", "event_type", "value")
@@ -1367,12 +1340,11 @@ object Queries {
   }
 
   /** T1/T3/W5 — a REAL Structured Streaming run whose end state is
-    * oracle-checked: events split into three parquet files (scratch,
-    * [[QueryParams.seedOnce]]), replayed as three micro-batches through
-    * a file source (`maxFilesPerTrigger=1`, `Trigger.AvailableNow`),
-    * aggregated into 5-minute event-time candles per user in COMPLETE
-    * output mode (reference `processors/default.py:71-75` leading-edge
-    * bars; `messages.py:189-203` boundary floor). Complete mode makes
+    * oracle-checked: events split into three arrival files on
+    * `event_id mod 3`, replayed as three micro-batches and aggregated
+    * into 5-minute event-time candles per user in COMPLETE output mode
+    * (reference `processors/default.py:71-75` leading-edge bars;
+    * `messages.py:189-203` boundary floor). Complete mode makes
     * the end state equal the one-shot batch aggregate regardless of
     * micro-batch arrival order, which is exactly the contract the
     * DuckDB oracle states relationally. StreamingSpec pins streaming ≡
@@ -1390,39 +1362,23 @@ object Queries {
   def t3StreamCandles(spark: SparkSession, dir: String): DataFrame = {
     val root = QueryParams.indexScratch("t3_stream", dir)
     val src = s"$root/src"
-    val stamp = s"t3 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
+    // v2: arrival mtimes pinned
+    val stamp = s"t3 v2 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
     QueryParams.seedOnce(spark, root, stamp) {
       val ev = Tables.events(spark, dir).select($"event_id", $"ts_us", $"user_id", $"value")
-      (0 to 2).foreach { i =>
-        ev.filter(pmod($"event_id", lit(3L)) === i).coalesce(1).write.mode("append").parquet(src)
+      Replay.arrivals(spark, src, (0 to 2).map(i => ev.filter(pmod($"event_id", lit(3L)) === i)))
+    }
+    Replay
+      .toMemory(spark, src, "t3_candles", dir, outputMode = "complete") {
+        _.withColumn("bucket_us", expr("(ts_us div 300000000) * 300000000"))
+          .groupBy($"user_id", $"bucket_us")
+          .agg(
+            count("*").as("n"),
+            round(sum($"value"), 4).as("sum_v"),
+            max($"event_id").as("last_event")
+          )
       }
-    }
-    val qn = "t3_candles_" + Integer.toHexString(dir.hashCode).replace('-', 'n')
-    // state width derived from the source size (guide §2: scale-adaptive
-    // partitioning; AQE cannot coalesce a stateful stream's shuffle)
-    graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(src)) {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .withColumn("bucket_us", expr("(ts_us div 300000000) * 300000000"))
-        .groupBy($"user_id", $"bucket_us")
-        .agg(
-          count("*").as("n"),
-          round(sum($"value"), 4).as("sum_v"),
-          max($"event_id").as("last_event")
-        )
-      val ckpt = java.nio.file.Files.createTempDirectory("t3ckpt").toString
-      val q = stream.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(qn)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(qn).orderBy("user_id", "bucket_us")
+      .orderBy("user_id", "bucket_us")
   }
 
   /** T3b — the SCALE path's emission semantics hash-pinned: the same
@@ -1447,9 +1403,7 @@ object Queries {
     *    strictly before the last real one. Withheld: the last real
     *    window (it has data — a wrong eager emission flips the hash)
     *    and the flusher's own window (a sentinel leak flips it too).
-    *  - batch order is pinned by explicit strictly-increasing file
-    *    mtimes, set per write (the t6 technique, without content
-    *    recovery: each file's mtime is stamped as it lands).
+    *  - batch order is the tertile order ([[Replay.arrivals]]).
     *
     * The oracle states the same set relationally: group-by candles
     * over events restricted to buckets strictly before the last one.
@@ -1469,65 +1423,27 @@ object Queries {
       val tiled = ev.withColumn(
         "_t",
         ntile(3).over(org.apache.spark.sql.expressions.Window.orderBy($"ts_us", $"event_id")))
-      val p = new org.apache.hadoop.fs.Path(src)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val base = System.currentTimeMillis()
-      (1 to 3).foreach { i =>
-        val before: Set[String] =
-          if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
-        val part = tiled.filter($"_t" === i).drop("_t")
-        val withFlush =
-          if (i == 3)
-            part.unionByName(spark.createDataFrame(
-              java.util.List.of(org.apache.spark.sql.Row(-1L, flusherTs, -1L, 0.0)),
-              part.schema))
-          else part
-        withFlush.coalesce(1).write.mode("append").parquet(src)
-        fs.listStatus(p)
-          .filter(st => st.getPath.getName.startsWith("part-") && !before(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, base + i * 1000L, -1))
-      }
+      val parts = (1 to 3).map(i => tiled.filter($"_t" === i).drop("_t"))
+      val flusher = spark.createDataFrame(
+        java.util.List.of(org.apache.spark.sql.Row(-1L, flusherTs, -1L, 0.0)), parts.last.schema)
+      Replay.arrivals(spark, src, parts.init :+ parts.last.unionByName(flusher))
     }
-    // pin the conf for THIS stream only, restoring the prior session
-    // value afterwards — setting it on the shared session leaked into
-    // every subsequent query in the same bench process (ADVICE r11)
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val ndPrior = spark.conf.getOption(ndKey)
-    spark.conf.set(ndKey, "true")
-    try graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(src)) {
-    val qn = "t3b_candles_" + Integer.toHexString(dir.hashCode).replace('-', 'n')
-    val stream = spark.readStream
-      .schema(spark.read.parquet(src).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(src)
-      .withColumn("ts", timestamp_micros($"ts_us"))
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window($"ts", "5 minutes"), $"user_id")
-      .agg(
-        count("*").as("n"),
-        round(sum($"value"), 4).as("sum_v"),
-        max($"event_id").as("last_event")
-      )
-      .select(
-        $"user_id",
-        unix_micros($"window.start").as("bucket_us"),
-        $"n", $"sum_v", $"last_event")
-    val ckpt = java.nio.file.Files.createTempDirectory("t3bckpt").toString
-    val q = stream.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(qn)
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(qn).orderBy("user_id", "bucket_us")
-    } finally {
-      ndPrior match {
-        case Some(v) => spark.conf.set(ndKey, v)
-        case None    => spark.conf.unset(ndKey)
+    Sessions.withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
+      Replay.toMemory(spark, src, "t3b_candles", dir) {
+        _.withColumn("ts", timestamp_micros($"ts_us"))
+          .withWatermark("ts", "10 minutes")
+          .groupBy(window($"ts", "5 minutes"), $"user_id")
+          .agg(
+            count("*").as("n"),
+            round(sum($"value"), 4).as("sum_v"),
+            max($"event_id").as("last_event")
+          )
+          .select(
+            $"user_id",
+            unix_micros($"window.start").as("bucket_us"),
+            $"n", $"sum_v", $"last_event")
       }
-    }
+    }.orderBy("user_id", "bucket_us")
   }
 
   /** T6 — stateful streaming dedup END-STATE through a real stream
@@ -1536,13 +1452,11 @@ object Queries {
     * become three micro-batches (`fill_id = event_id div 3`, batch `i =
     * event_id mod 3` — so a fill can recur ACROSS batches but is unique
     * WITHIN each, which is what makes "first arrival" deterministic
-    * under Spark's intra-batch shuffle). Batch order is pinned by
-    * explicit strictly-increasing file mtimes (the file source batches
-    * in timestamp order — same-millisecond writes would otherwise fall
-    * back to path order over nondeterministic part-file names).
-    * `dropDuplicates("fill_id")` in append mode then emits exactly the
-    * earliest batch's row per fill, i.e. the row with `min(event_id)`
-    * per div-3 group — which the DuckDB oracle states relationally. The
+    * under Spark's intra-batch shuffle). Batch order is pinned
+    * ([[Replay.arrivals]]). `dropDuplicates("fill_id")` in append mode
+    * then emits exactly the earliest batch's row per fill, i.e. the row
+    * with `min(event_id)` per div-3 group — which the DuckDB oracle
+    * states relationally. The
     * payload column rides along, so a wrong-arrival keeper flips the
     * hash, pinning the ORDERING contract, not just the key set.
     *
@@ -1554,7 +1468,8 @@ object Queries {
   def t6StreamDedup(spark: SparkSession, dir: String): DataFrame = {
     val root = QueryParams.indexScratch("t6_stream", dir)
     val src = s"$root/src"
-    val stamp = s"t6 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
+    // v2: arrival mtimes stamped as each batch lands
+    val stamp = s"t6 v2 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
     QueryParams.seedOnce(spark, root, stamp) {
       val ev = Tables
         .events(spark, dir)
@@ -1563,41 +1478,12 @@ object Queries {
           $"event_id",
           $"event_type".as("payload")
         )
-      (0 to 2).foreach { i =>
-        ev.filter(pmod($"event_id", lit(3L)) === i).coalesce(1).write.mode("append").parquet(src)
-      }
-      // pin arrival order: the file source batches by mtime, and three
-      // back-to-back writes can land in the same millisecond
-      val p = new org.apache.hadoop.fs.Path(src)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val base = System.currentTimeMillis()
-      fs.listStatus(p)
-        .filter(_.getPath.getName.startsWith("part-"))
-        .sortBy { st =>
-          // recover which batch a part file holds from its contents
-          spark.read.parquet(st.getPath.toString).select(pmod(min($"event_id"), lit(3L))).head().getLong(0)
-        }
-        .zipWithIndex
-        .foreach { case (st, i) => fs.setTimes(st.getPath, base + i * 1000L, -1) }
+      Replay.arrivals(spark, src, (0 to 2).map(i => ev.filter(pmod($"event_id", lit(3L)) === i)))
     }
-    val qn = "t6_dedup_" + Integer.toHexString(dir.hashCode).replace('-', 'n')
-    graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(src)) {
-      val stream = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .dropDuplicates("fill_id")
-      val ckpt = java.nio.file.Files.createTempDirectory("t6ckpt").toString
-      val q = stream.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qn)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(qn).select($"fill_id", $"event_id", $"payload").orderBy("fill_id")
+    Replay
+      .toMemory(spark, src, "t6_dedup", dir)(_.dropDuplicates("fill_id"))
+      .select($"fill_id", $"event_id", $"payload")
+      .orderBy("fill_id")
   }
 
   /** T8 — checkpoint/resume END-STATE hash-pinned through a REAL
@@ -1611,8 +1497,9 @@ object Queries {
     * even and an odd member):
     *  - run 1, file 1: the EVEN member of every even fill; file 2:
     *    the ODD member of those same fills — an in-run duplicate,
-    *    dropped by in-memory state (arrival pinned by mtimes, the t6
-    *    technique, so the even member is always the keeper);
+    *    dropped by in-memory state (arrival pinned by
+    *    [[Replay.copyArrival]], so the even member is always the
+    *    keeper);
     *  - run 2, file 3: the odd member of every even fill AGAIN (a
     *    duplicate that can only be dropped if the seen-set was
     *    RESTORED from the checkpoint — broken recovery emits a second
@@ -1648,25 +1535,10 @@ object Queries {
     val streamDir = java.nio.file.Files.createTempDirectory("t8src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("t8ckpt").toString
     val out = java.nio.file.Files.createTempDirectory("t8out").toString + "/rows"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(streamDir).getFileSystem(conf)
-    val base = System.currentTimeMillis()
-    def addFile(i: Int): Unit = {
-      val srcPart = fs
-        .listStatus(new org.apache.hadoop.fs.Path(s"$root/f$i"))
-        .map(_.getPath)
-        .find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(s"t8 seed f$i has no part file"))
-      val dst = new org.apache.hadoop.fs.Path(s"$streamDir/f$i.parquet")
-      org.apache.hadoop.fs.FileUtil.copy(fs, srcPart, fs, dst, false, conf)
-      fs.setTimes(dst, base + i * 1000L, -1) // arrival order pinned
-    }
     val sch = spark.read.parquet(s"$root/f1").schema
     def runOnce(): Unit = {
-      val q = spark.readStream
-        .schema(sch)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(streamDir)
+      val q = graft.streaming.Streams
+        .readEventStream(spark, streamDir, sch)
         .dropDuplicates("fill_id")
         .writeStream
         .option("checkpointLocation", ckpt)
@@ -1678,12 +1550,14 @@ object Queries {
         .start()
       q.awaitTermination()
     }
-    addFile(1); addFile(2)
-    // both runs under one adaptive width (the checkpoint pins the state
-    // width at first start; the wrap keeps session conf restored after)
-    graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(streamDir)) {
+    Replay.copyArrival(spark, s"$root/f1", streamDir)
+    Replay.copyArrival(spark, s"$root/f2", streamDir)
+    // both runs under one width: the checkpoint pins the state width at
+    // first start
+    val width = graft.streaming.Streams.adaptiveStateWidth(spark, Seq(streamDir))
+    Sessions.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
       runOnce() // run 1: two micro-batches, clean stop
-      addFile(3)
+      Replay.copyArrival(spark, s"$root/f3", streamDir)
       runOnce() // run 2: recovery from the checkpoint — state restored
     }
     spark.read.parquet(out).orderBy("fill_id")
@@ -2146,31 +2020,13 @@ object Queries {
     * series (user ≈ symbol, value ≈ close, ET session gates on the
     * event timestamps).
     */
-  def g1SignalEngine(spark: SparkSession, dir: String): DataFrame = {
-    // deterministic (symbol, ts_us) dedup BEFORE the engine: ts_us is
-    // micros truncated from nanos, so two events CAN collide on the key
-    // in future corpora; detectSignals' own dedup keeps an arbitrary
-    // row among (symbol, ts_us) ties and the oracle could not mirror it. event_id desc pins the pick on
-    // both engines; detectSignals' internal dedup is then a no-op.
-    // Agg form (max_by): event_id is unique, so the pick is total; the
-    // map-side combine beats the window form's full per-partition sort.
-    val ev = Relational
-      .latestPerKeyAgg(
-        Tables
-          .events(spark, dir)
-          .select($"user_id".cast("string").as("symbol"), $"ts_us", $"value", $"event_id")
-          .filter($"value".isNotNull),
-        Seq("symbol", "ts_us"),
-        $"event_id",
-        Seq("value")
-      )
-      .select("symbol", "ts_us", "value")
+  def g1SignalEngine(spark: SparkSession, dir: String): DataFrame =
     graft.signals.HullMacd
-      // assumeDeduped: the latestPerKey above already made (symbol,
-      // ts_us) unique with a real tie-break
-      .detectSignals(ev, "symbol", "ts_us", "value", assumeDeduped = true)
+      // assumeDeduped: the feed is already unique on (symbol, ts_us) with
+      // a real tie-break the oracle mirrors; detectSignals' own dedup
+      // would keep an arbitrary row among ties
+      .detectSignals(Replay.candleFeed(spark, dir), "symbol", "ts_us", "value", assumeDeduped = true)
       .orderBy("symbol", "time_us", "signal_type", "direction")
-  }
 
   /** T5/W5 — the FLAGSHIP signal engine through a REAL stream: g1's
     * deduped candle feed replayed as three TIME-ORDERED tertile
@@ -2193,69 +2049,31 @@ object Queries {
     val src = s"$root/src"
     val stamp = s"t5 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
     QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Relational
-        .latestPerKeyAgg(
-          Tables
-            .events(spark, dir)
-            .select($"user_id".cast("string").as("symbol"), $"ts_us", $"value", $"event_id")
-            .filter($"value".isNotNull),
-          Seq("symbol", "ts_us"),
-          $"event_id",
-          Seq("value")
-        )
-        .select("symbol", "ts_us", "value")
-      val tiled = ev.withColumn(
+      val tiled = Replay.candleFeed(spark, dir).withColumn(
         "_t",
         ntile(3).over(org.apache.spark.sql.expressions.Window.orderBy($"ts_us", $"symbol")))
-      val p = new org.apache.hadoop.fs.Path(src)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val base = System.currentTimeMillis()
-      (1 to 3).foreach { i =>
-        val before: Set[String] =
-          if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
-        tiled.filter($"_t" === i).drop("_t").coalesce(1).write.mode("append").parquet(src)
-        fs.listStatus(p)
-          .filter(st => st.getPath.getName.startsWith("part-") && !before(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, base + i * 1000L, -1))
-      }
+      Replay.arrivals(spark, src, (1 to 3).map(i => tiled.filter($"_t" === i).drop("_t")))
     }
-    val qn = "t5_signals_" + Integer.toHexString(dir.hashCode).replace('-', 'n')
     implicit val candleEnc: org.apache.spark.sql.Encoder[graft.streaming.Streams.CandleIn] =
       org.apache.spark.sql.Encoders.product[graft.streaming.Streams.CandleIn]
-    graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(src)) {
-      val candles = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select($"symbol", $"ts_us".as("timeUs"), $"value".as("close"))
-        .as[graft.streaming.Streams.CandleIn]
-      val ckpt = java.nio.file.Files.createTempDirectory("t5ckpt").toString
-      val q = graft.streaming.Streams
-        .detectSignalsStream(candles)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qn)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(qn)
+    Replay
+      .toMemory(spark, src, "t5_signals", dir) { s =>
+        graft.streaming.Streams.detectSignalsStream(
+          s.select($"symbol", $"ts_us".as("timeUs"), $"value".as("close")).as[graft.streaming.Streams.CandleIn])
+      }
       .select("symbol", "time_us", "signal_type", "direction", "trigger", "close_price")
       .orderBy("symbol", "time_us", "signal_type", "direction")
   }
 
-  /** T4/W5 — the last spec-only semantic path hash-pinned cross-engine:
-    * the INCREMENTAL per-candle indicator series (hull value/color,
-    * MACD value/signal/histogram; reference
-    * `charting/indicators.py:26-284` O(1) chart-state updates) through
-    * a REAL warm-started stream. Construction: g1's deduped candle feed
-    * is quartered on the global (ts_us, symbol) row_number — the FIRST
-    * quarter becomes batch HISTORY folded into per-symbol
-    * [[graft.streaming.Streams.IndicatorState]] by `seedIndicatorState`
-    * (the W5 warm start), the remaining three quarters arrive as
-    * mtime-pinned micro-batches into
+  /** T4/W5 — hash-pinned cross-engine: the INCREMENTAL per-candle
+    * indicator series (hull value/color, MACD value/signal/histogram;
+    * reference `charting/indicators.py:26-284` O(1) chart-state
+    * updates) through a REAL warm-started stream. Construction: g1's
+    * deduped candle feed is quartered on the global (ts_us, symbol)
+    * row_number — the FIRST quarter becomes batch HISTORY folded into
+    * per-symbol [[graft.streaming.Streams.IndicatorState]] by
+    * `seedIndicatorState` (the W5 warm start), the remaining three
+    * quarters arrive as mtime-pinned micro-batches into
     * [[graft.streaming.Streams.indicatorSeriesStream]], which emits
     * each candle's indicator surface from the O(1) state update. The
     * oracle recomputes the hull/MACD recursions over each symbol's FULL
@@ -2268,7 +2086,7 @@ object Queries {
     * split from first principles.
     */
   def t4StreamIndicators(spark: SparkSession, dir: String): DataFrame =
-    runT4Harness(spark, dir, "t4_indicators_") { (candles, seeded) =>
+    runT4Harness(spark, dir, "t4_indicators") { (candles, seeded) =>
       graft.streaming.Streams
         .indicatorSeriesStream(candles, Some(seeded), hullLength = 8, fast = 4, slow = 8, signalLen = 3)
     }
@@ -2283,48 +2101,35 @@ object Queries {
     * between the processor and the fold (state encoding, initial-state
     * delivery, emission order) flips exactly one of the two hashes.
     */
-  def t4bStreamIndicatorsTws(spark: SparkSession, dir: String): DataFrame = {
-    // transformWithState needs the RocksDB state-store provider (the
-    // default HDFS-backed one can't host its multi-column-family
-    // layout); set it for the stream and RESTORE after — a query must
-    // not leak session conf into its neighbors
-    // changelog checkpointing: the RocksDB store's default commit
-    // persists a FULL instance snapshot per partition per micro-batch;
-    // the changelog form persists only the batch's changed keys, so at
-    // scale the per-commit upload is proportional to the BATCH, not the
-    // state size. StreamProbe r14 (warm, summed across partitions):
-    // steady-state commits 807/790 ms -> 422/418 ms; batch 0 pays a
-    // one-time higher commit (909 -> 1234 ms), so the 3-batch sf0.1
-    // carrier's wall time is neutral — the steady-state halving is the
-    // scale win. Same results (the t4b oracle row hash-pins them).
-    val keys = Seq(
+  def t4bStreamIndicatorsTws(spark: SparkSession, dir: String): DataFrame =
+    // transformWithState needs the RocksDB provider (the default
+    // HDFS-backed one can't host its multi-column-family layout).
+    // Changelog checkpointing persists only each batch's changed keys
+    // instead of a full instance snapshot per partition per batch, so
+    // the per-commit upload follows the batch, not the state size.
+    Sessions.withConf(
+      spark,
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
-    val prior = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-    keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try
-      runT4Harness(spark, dir, "t4b_indicators_") { (candles, seeded) =>
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
+    ) {
+      runT4Harness(spark, dir, "t4b_indicators") { (candles, seeded) =>
         graft.streaming.Streams
           .indicatorSeriesTransformWithState(candles, Some(seeded), hullLength = 8, fast = 4, slow = 8, signalLen = 3)
       }
-    finally prior.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
-  }
 
-  /** The shared t4/t4b harness: builds (seedOnce, stamp shared by both
-    * carriers so whichever runs first pays it) the quarter split —
-    * history = first quarter of g1's deduped candle feed, stream =
-    * three mtime-pinned micro-batch files — folds the warm-start state,
-    * runs the given indicator-series stream into a memory sink, and
-    * projects the pinned output columns.
+  /** The shared t4/t4b harness: the quarter split (seedOnce, one stamp
+    * for both carriers, so whichever runs first pays it) — history =
+    * the first quarter of g1's candle feed, stream = the other three
+    * quarters as arrival files — the warm-start state folded from the
+    * history, the given indicator-series stream, and the pinned output
+    * columns.
     */
   private def runT4Harness(
       spark: SparkSession,
       dir: String,
-      qnPrefix: String
+      name: String
   )(
       mk: (
           org.apache.spark.sql.Dataset[graft.streaming.Streams.CandleIn],
@@ -2336,65 +2141,25 @@ object Queries {
     val hist = s"$root/history"
     val stamp = s"t4 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
     QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Relational
-        .latestPerKeyAgg(
-          Tables
-            .events(spark, dir)
-            .select($"user_id".cast("string").as("symbol"), $"ts_us", $"value", $"event_id")
-            .filter($"value".isNotNull),
-          Seq("symbol", "ts_us"),
-          $"event_id",
-          Seq("value")
-        )
-        .select("symbol", "ts_us", "value")
+      val ev = Replay.candleFeed(spark, dir)
       val n = ev.count()
       val ranked = ev.withColumn(
         "_rn",
         row_number().over(org.apache.spark.sql.expressions.Window.orderBy($"ts_us", $"symbol")))
       ranked.filter($"_rn" <= lit(n / 4)).drop("_rn")
         .coalesce(1).write.mode("overwrite").parquet(hist)
-      val p = new org.apache.hadoop.fs.Path(src)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val base = System.currentTimeMillis()
-      (1 to 3).foreach { i =>
-        val before: Set[String] =
-          if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
-        ranked
-          .filter($"_rn" > lit(n * i / 4) && $"_rn" <= lit(n * (i + 1) / 4))
-          .drop("_rn")
-          .coalesce(1).write.mode("append").parquet(src)
-        fs.listStatus(p)
-          .filter(st => st.getPath.getName.startsWith("part-") && !before(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, base + i * 1000L, -1))
-      }
+      Replay.arrivals(spark, src, (1 to 3).map { i =>
+        ranked.filter($"_rn" > lit(n * i / 4) && $"_rn" <= lit(n * (i + 1) / 4)).drop("_rn")
+      })
     }
     implicit val candleEnc: org.apache.spark.sql.Encoder[graft.streaming.Streams.CandleIn] =
       org.apache.spark.sql.Encoders.product[graft.streaming.Streams.CandleIn]
-    val history = spark.read.parquet(hist)
-      .select($"symbol", $"ts_us".as("timeUs"), $"value".as("close"))
-      .as[graft.streaming.Streams.CandleIn]
+    def candles(df: DataFrame) =
+      df.select($"symbol", $"ts_us".as("timeUs"), $"value".as("close")).as[graft.streaming.Streams.CandleIn]
     val seeded = graft.streaming.Streams
-      .seedIndicatorState(history, hullLength = 8, fast = 4, slow = 8, signalLen = 3)
-    val qn = qnPrefix + Integer.toHexString(dir.hashCode).replace('-', 'n')
-    graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(src)) {
-      val candles = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select($"symbol", $"ts_us".as("timeUs"), $"value".as("close"))
-        .as[graft.streaming.Streams.CandleIn]
-      val ckpt = java.nio.file.Files.createTempDirectory(qnPrefix + "ckpt").toString
-      val q = mk(candles, seeded)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qn)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(qn)
+      .seedIndicatorState(candles(spark.read.parquet(hist)), hullLength = 8, fast = 4, slow = 8, signalLen = 3)
+    Replay
+      .toMemory(spark, src, name, dir)(s => mk(candles(s), seeded))
       .select("symbol", "time_us", "hma", "hma_color", "macd_value", "avg", "diff")
       .orderBy("symbol", "time_us")
   }
@@ -3044,17 +2809,7 @@ object Queries {
       val tiled = ev.withColumn(
         "_t",
         ntile(3).over(org.apache.spark.sql.expressions.Window.orderBy($"timeUs", $"symbol", $"flags")))
-      val p = new org.apache.hadoop.fs.Path(src)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val base = System.currentTimeMillis()
-      (1 to 3).foreach { i =>
-        val before: Set[String] =
-          if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
-        tiled.filter($"_t" === i).drop("_t").coalesce(1).write.mode("append").parquet(src)
-        fs.listStatus(p)
-          .filter(st => st.getPath.getName.startsWith("part-") && !before(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, base + i * 1000L, -1))
-      }
+      Replay.arrivals(spark, src, (1 to 3).map(i => tiled.filter($"_t" === i).drop("_t")))
     }
     // bounded driver collect: one string per registered user
     val registered: Set[String] = Tables
@@ -3065,29 +2820,15 @@ object Queries {
       .collect()
       .map(_.getString(0))
       .toSet
-    val qn = "t7_completions_" + Integer.toHexString(dir.hashCode).replace('-', 'n')
     implicit val fe: org.apache.spark.sql.Encoder[graft.streaming.Streams.FlaggedEvent] =
       org.apache.spark.sql.Encoders.product[graft.streaming.Streams.FlaggedEvent]
-    graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(src)) {
-      val events = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select($"symbol", $"timeUs", $"flags")
-        .as[graft.streaming.Streams.FlaggedEvent]
-      val ckpt = java.nio.file.Files.createTempDirectory("t7ckpt").toString
-      val q = graft.streaming.Streams
-        .snapshotCompletions(events, registered)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qn)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(qn).select($"symbol", $"completed_at_us").orderBy("symbol")
+    Replay
+      .toMemory(spark, src, "t7_completions", dir) { s =>
+        graft.streaming.Streams.snapshotCompletions(
+          s.select($"symbol", $"timeUs", $"flags").as[graft.streaming.Streams.FlaggedEvent], registered)
+      }
+      .select($"symbol", $"completed_at_us")
+      .orderBy("symbol")
   }
 
   /** W12 — deterministic sha-derived dedup jitter (reference
@@ -3200,36 +2941,10 @@ object Queries {
     * the HullMacd engine, entry prices as-of joined from the raw stream.
     */
   def b1Backtest(spark: SparkSession, dir: String): DataFrame = {
-    val events = Tables
-      .events(spark, dir)
-      .select($"user_id".cast("string").as("symbol"), $"ts_us".as("time_us"), $"value".as("close"), $"event_id")
-    // event_id tie-break (the b1_enrich rule): ts_us is micros truncated
-    // from nanos, so two events CAN collide on (symbol, time_us) in
-    // future corpora — the deterministic pick must not depend on row
-    // order. Applied to BOTH halves: the bucket dedup below AND the
-    // as-of right side (the ASOF↔union-window parity requires a unique
-    // (key, ts) right side — see oracle notes). Null closes drop BEFORE
-    // the dedup — "most recent NON-NULL close" means a null-close dup
-    // must not shadow a real price — which also keeps the IsNotNull
-    // predicate at the scan.
-    // Agg form (max_by) for both dedups: event_id is unique so the
-    // (time_us, event_id) struct order is total, and the bucket dedup's
-    // 30-min keys give the map-side combine real reduction — the window
-    // form would sort every raw event instead.
-    val pricing = Relational
-      .latestPerKeyAgg(events.filter($"close".isNotNull), Seq("symbol", "time_us"), $"event_id", Seq("close"))
-      .select("symbol", "time_us", "close")
-    val signalCandles = Relational
-      .latestPerKeyAgg(
-        events.withColumn("bucket_us", expr("(time_us div 1800000000) * 1800000000")),
-        Seq("symbol", "bucket_us"),
-        struct($"time_us", $"event_id"),
-        Seq("close")
-      )
-      .select($"symbol", $"bucket_us".as("time_us"), $"close")
+    val (pricing, signalCandles) = Replay.backtestSides(spark, dir)
     graft.backtest.Backtest
       // assumeDeduped: bucket candles are unique per (symbol, time) by
-      // construction (one row per bucket from the keep-last above)
+      // construction (one row per bucket)
       .run(signalCandles, pricing, hullLength = 8, fast = 4, slow = 8, signalLen = 3, assumeDeduped = true)
       .select("symbol", "time_us", "signal_type", "direction", "trigger", "close_price", "entry_price")
       .orderBy("symbol", "time_us", "signal_type", "direction")
@@ -3251,79 +2966,36 @@ object Queries {
     * b1's own SQL — the engine CTE fold plus DuckDB's native ASOF
     * JOIN — so the streaming fold's state carry-over, the
     * pricing-first tie rule, and the null-before-first-pricing edge
-    * all land on the hash. Closes the last spec-only streaming path
-    * (T9 was previously pinned only by StreamingSpec's bit-parity).
+    * all land on the hash.
     */
   def t9StreamBacktest(spark: SparkSession, dir: String): DataFrame = {
     val root = QueryParams.indexScratch("t9_stream", dir)
     val src = s"$root/src"
     val stamp = s"t9 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
     QueryParams.seedOnce(spark, root, stamp) {
-      val events = Tables
-        .events(spark, dir)
-        .select($"user_id".cast("string").as("symbol"), $"ts_us".as("time_us"), $"value".as("close"), $"event_id")
-      // EXACTLY b1's two sides (see b1Backtest's dedup notes): pricing
-      // drops null closes BEFORE its dedup ("most recent NON-NULL
-      // close"); the bucket candles dedup first (a null-close keeper
-      // must shadow earlier events, as the engine-side drop does) and
-      // filter null closes after — the engine's own WHERE, applied at
-      // construction because RankedCandle.close is a primitive
-      val pricing = Relational
-        .latestPerKeyAgg(events.filter($"close".isNotNull), Seq("symbol", "time_us"), $"event_id", Seq("close"))
-        .select($"symbol", $"time_us", $"close").withColumn("rank", lit(0))
-      val signalCandles = Relational
-        .latestPerKeyAgg(
-          events.withColumn("bucket_us", expr("(time_us div 1800000000) * 1800000000")),
-          Seq("symbol", "bucket_us"),
-          struct($"time_us", $"event_id"),
-          Seq("close")
-        )
-        .select($"symbol", $"bucket_us".as("time_us"), $"close").withColumn("rank", lit(1))
-        .filter($"close".isNotNull)
-      val merged = pricing.unionByName(signalCandles)
+      // the bucket candles' null closes are filtered AFTER their dedup —
+      // the engine's own WHERE, applied at construction because
+      // RankedCandle.close is a primitive
+      val (pricing, signalCandles) = Replay.backtestSides(spark, dir)
+      val merged = pricing.withColumn("rank", lit(0))
+        .unionByName(signalCandles.withColumn("rank", lit(1)).filter($"close".isNotNull))
       val n = merged.count()
       val ranked = merged.withColumn(
         "_rn",
         row_number().over(
           org.apache.spark.sql.expressions.Window.orderBy($"time_us", $"rank", $"symbol")))
-      val p = new org.apache.hadoop.fs.Path(src)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val base = System.currentTimeMillis()
-      (1 to 3).foreach { i =>
-        val before: Set[String] =
-          if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
-        ranked
-          .filter($"_rn" > lit(n * (i - 1) / 3) && $"_rn" <= lit(n * i / 3))
-          .drop("_rn")
-          .coalesce(1).write.mode("append").parquet(src)
-        fs.listStatus(p)
-          .filter(st => st.getPath.getName.startsWith("part-") && !before(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, base + i * 1000L, -1))
-      }
+      Replay.arrivals(spark, src, (1 to 3).map { i =>
+        ranked.filter($"_rn" > lit(n * (i - 1) / 3) && $"_rn" <= lit(n * i / 3)).drop("_rn")
+      })
     }
     implicit val rcEnc: org.apache.spark.sql.Encoder[graft.streaming.Streams.RankedCandle] =
       org.apache.spark.sql.Encoders.product[graft.streaming.Streams.RankedCandle]
-    val qn = "t9_backtest_" + Integer.toHexString(dir.hashCode).replace('-', 'n')
-    graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(src)) {
-      val candles = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select($"symbol", $"time_us".as("timeUs"), $"rank", $"close")
-        .as[graft.streaming.Streams.RankedCandle]
-      val ckpt = java.nio.file.Files.createTempDirectory("t9ckpt").toString
-      val q = graft.streaming.Streams
-        .backtestStream(candles, hullLength = 8, fast = 4, slow = 8, signalLen = 3)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qn)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(qn)
+    Replay
+      .toMemory(spark, src, "t9_backtest", dir) { s =>
+        graft.streaming.Streams.backtestStream(
+          s.select($"symbol", $"time_us".as("timeUs"), $"rank", $"close").as[graft.streaming.Streams.RankedCandle],
+          hullLength = 8, fast = 4, slow = 8, signalLen = 3)
+      }
       .select("symbol", "time_us", "signal_type", "direction", "trigger", "close_price", "entry_price")
       .orderBy("symbol", "time_us", "signal_type", "direction")
   }
@@ -3348,59 +3020,23 @@ object Queries {
     val src = s"$root/src"
     val stamp = s"w10 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
     QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Relational
-        .latestPerKeyAgg(
-          Tables
-            .events(spark, dir)
-            .select($"user_id".cast("string").as("symbol"), $"ts_us", $"value", $"event_id")
-            .filter($"value".isNotNull),
-          Seq("symbol", "ts_us"),
-          $"event_id",
-          Seq("value")
-        )
-        .select("symbol", "ts_us", "value")
+      val ev = Replay.candleFeed(spark, dir)
       val n = ev.count()
       val ranked = ev.withColumn(
         "_rn",
         row_number().over(org.apache.spark.sql.expressions.Window.orderBy($"ts_us", $"symbol")))
-      val p = new org.apache.hadoop.fs.Path(src)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val base = System.currentTimeMillis()
-      (1 to 3).foreach { i =>
-        val before: Set[String] =
-          if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
-        ranked
-          .filter($"_rn" > lit(n * (i - 1) / 3) && $"_rn" <= lit(n * i / 3))
-          .drop("_rn")
-          .coalesce(1).write.mode("append").parquet(src)
-        fs.listStatus(p)
-          .filter(st => st.getPath.getName.startsWith("part-") && !before(st.getPath.getName))
-          .foreach(st => fs.setTimes(st.getPath, base + i * 1000L, -1))
-      }
+      Replay.arrivals(spark, src, (1 to 3).map { i =>
+        ranked.filter($"_rn" > lit(n * (i - 1) / 3) && $"_rn" <= lit(n * i / 3)).drop("_rn")
+      })
     }
     implicit val ciEnc: org.apache.spark.sql.Encoder[graft.streaming.Streams.CandleIn] =
       org.apache.spark.sql.Encoders.product[graft.streaming.Streams.CandleIn]
-    val qn = "w10_rowcap_" + Integer.toHexString(dir.hashCode).replace('-', 'n')
-    graft.streaming.Streams.withAdaptiveStateWidth(spark, Seq(src)) {
-      val candles = spark.readStream
-        .schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .select($"symbol", $"ts_us".as("timeUs"), $"value".as("close"))
-        .as[graft.streaming.Streams.CandleIn]
-      val ckpt = java.nio.file.Files.createTempDirectory("w10ckpt").toString
-      val q = graft.streaming.Streams
-        .rowCapStream(candles, cap = 5)
-        .writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(qn)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(qn)
+    Replay
+      .toMemory(spark, src, "w10_rowcap", dir) { s =>
+        graft.streaming.Streams.rowCapStream(
+          s.select($"symbol", $"ts_us".as("timeUs"), $"value".as("close")).as[graft.streaming.Streams.CandleIn],
+          cap = 5)
+      }
       .select($"symbol", $"retained".cast("int").as("retained"), $"oldest_us", $"newest_us")
       .orderBy("symbol", "newest_us")
   }
@@ -3414,31 +3050,9 @@ object Queries {
     * stays spec-carried (BacktestSpec/HullMacdSpec).
     */
   def b1Enrich(spark: SparkSession, dir: String): DataFrame = {
-    val events = Tables
-      .events(spark, dir)
-      .select($"user_id".cast("string").as("symbol"), $"ts_us".as("time_us"), $"value".as("close"), $"event_id")
-    // event_id tie-break: ts_us is micros truncated from nanos, so two
-    // events CAN collide on (symbol, time_us) in future corpora — the
-    // deterministic pick must not depend on row order (oracle parity).
-    // The as-of RIGHT side needs it too: ASOF↔union-window equivalence
-    // requires a unique (key, ts) right side. Null closes drop BEFORE
-    // the dedup (a null-close dup must not shadow a real price; keeps
-    // the IsNotNull predicate at the scan).
-    // Agg form (max_by): see b1Backtest — unique event_id makes the pick
-    // total; the bucket dedup combines map-side.
-    val pricing = Relational
-      .latestPerKeyAgg(events.filter($"close".isNotNull), Seq("symbol", "time_us"), $"event_id", Seq("close"))
-      .select("symbol", "time_us", "close")
-    val signals = Relational
-      .latestPerKeyAgg(
-        events.withColumn("bucket_us", expr("(time_us div 1800000000) * 1800000000")),
-        Seq("symbol", "bucket_us"),
-        struct($"time_us", $"event_id"),
-        Seq("close")
-      )
-      .select($"symbol", $"bucket_us".as("time_us"), $"close".as("close_price"))
+    val (pricing, candles) = Replay.backtestSides(spark, dir)
     graft.backtest.Backtest
-      .enrichSignals(signals, pricing)
+      .enrichSignals(candles.withColumnRenamed("close", "close_price"), pricing)
       .select("symbol", "time_us", "close_price", "entry_price")
       .orderBy("symbol", "time_us")
   }

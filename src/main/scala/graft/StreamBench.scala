@@ -104,12 +104,12 @@ object StreamBench {
 
     val fmgws = engine("flatMapGroupsWithState", ds => Streams.detectSignalsStream(ds))
     // the transformWithState twin needs the RocksDB provider (multi
-    // column-family state); set AFTER the first engine's queries started
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    val tws = engine("transformWithState", ds => Streams.detectSignalsTransformWithState(ds))
+    // column-family state)
+    val tws = Sessions.withConf(
+      spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    )(engine("transformWithState", ds => Streams.detectSignalsTransformWithState(ds)))
     val json =
       s"""{"metric":"stream_signal_engine","symbols":$nSymbols,$fmgws,$tws,"calib":${HostCalib.json()}}"""
     println(json)

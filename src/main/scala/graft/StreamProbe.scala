@@ -24,23 +24,28 @@ object StreamProbe {
     // still active; the last batch's file shows the steady-state plan.
     val planDir = sys.env.get("SPARK_GRAFT_PROBE_PLANS")
     planDir.foreach(d => java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)))
-    // the declared query currently driving the stream — dump files are
-    // prefixed with it so unnamed foreachBatch queries (t2, t8) don't
-    // collide on "unnamed"
-    @volatile var currentQuery = ""
+    // streaming query id -> the declared query that started it. Spark
+    // runs onQueryStarted before start() returns, so `current` still
+    // names the declared query that called start(); the asynchronous
+    // progress and termination events look their label up by query id.
+    @volatile var current = ""
+    val declared = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
     spark.streams.addListener(new org.apache.spark.sql.streaming.StreamingQueryListener {
       import org.apache.spark.sql.streaming.StreamingQueryListener._
-      override def onQueryStarted(e: QueryStartedEvent): Unit =
-        println(s"[stream] started ${e.name} at ${System.nanoTime() / 1000000}ms")
+      override def onQueryStarted(e: QueryStartedEvent): Unit = {
+        declared.put(e.id, current)
+        println(s"[stream] $current started ${e.name} at ${System.nanoTime() / 1000000}ms")
+      }
       override def onQueryProgress(e: QueryProgressEvent): Unit = {
         val p = e.progress
+        val label = declared.getOrDefault(p.id, "?") + "__" + Option(p.name).getOrElse("unnamed")
         planDir.foreach { dir =>
           try {
-            val qname = currentQuery + "__" + Option(p.name).getOrElse("unnamed")
+            // StreamingQueryWrapper is Spark 4.1's internal runtime class
             spark.streams.active.find(_.id == p.id).foreach {
               case w: org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper =>
                 java.nio.file.Files.writeString(
-                  java.nio.file.Paths.get(dir, s"${qname}_batch${p.batchId}.txt"),
+                  java.nio.file.Paths.get(dir, s"${label}_batch${p.batchId}.txt"),
                   w.streamingQuery.lastExecution.explainString(
                     org.apache.spark.sql.execution.FormattedMode))
               case _ => ()
@@ -49,7 +54,7 @@ object StreamProbe {
         }
         val d = p.durationMs
         println(
-          s"[stream] ${p.name} batch=${p.batchId} rows=${p.numInputRows} " +
+          s"[stream] $label batch=${p.batchId} rows=${p.numInputRows} " +
             s"trigger=${d.get("triggerExecution")} addBatch=${d.get("addBatch")} " +
             s"getBatch=${d.get("getBatch")} latestOffset=${d.get("latestOffset")} " +
             s"walCommit=${d.get("walCommit")} planning=${d.get("queryPlanning")} " +
@@ -57,10 +62,10 @@ object StreamProbe {
             s"state=${p.stateOperators.map(s => s"commit=${s.commitTimeMs}ms mem=${s.memoryUsedBytes}").mkString(";")}")
       }
       override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
-        println(s"[stream] terminated at ${System.nanoTime() / 1000000}ms")
+        println(s"[stream] ${declared.getOrDefault(e.id, "?")} terminated at ${System.nanoTime() / 1000000}ms")
     })
     args.foreach { name =>
-      currentQuery = name
+      current = name
       val t0 = System.nanoTime()
       SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
       println(f"PROBE $name ${(System.nanoTime() - t0) / 1e9}%.2f s")

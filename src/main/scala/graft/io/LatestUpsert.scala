@@ -534,20 +534,22 @@ object LatestUpsert {
     }
   }
 
-  /** The merge PLAN for one batch (pre-materialization), with the
-    * touched bucket set: package-visible so the pruning spec can lint
-    * the exact plan [[upsert]] executes. None when the batch is empty.
-    * The existing-side read lists ONLY the touched buckets' current
-    * directories — path-level pruning, untouched dirs never appear in
-    * the scan. (Thin wrapper over [[stagedMergeForBatch]]; the pinned
-    * batch it leaves behind is released by the session's storage sweep.)
+  /** Run `f` on the merge PLAN for one batch (pre-materialization) and
+    * its touched bucket set — package-visible so the pruning spec can
+    * lint, or stage, the exact plan [[upsert]] executes. None when the
+    * batch is empty. The existing-side read lists ONLY the touched
+    * buckets' current directories — path-level pruning, untouched dirs
+    * never appear in the scan. The pinned batch the plan reads is
+    * released when `f` returns or throws, so `f` must consume the plan
+    * before it returns.
     */
-  private[graft] def mergedForBatch(
-      spark: SparkSession,
-      root: String,
-      batch: DataFrame
-  ): Option[(DataFrame, Seq[Int])] =
-    stagedMergeForBatch(spark, root, batch).map(sm => (sm.merged, sm.touched))
+  private[graft] def withMergedForBatch[T](spark: SparkSession, root: String, batch: DataFrame)(
+      f: (DataFrame, Seq[Int]) => T
+  ): Option[T] =
+    stagedMergeForBatch(spark, root, batch).map { sm =>
+      try f(sm.merged, sm.touched)
+      finally graft.Checkpoints.release(sm.pinned)
+    }
 
   /** Merge one batch of events into the artifact. Key/order columns,
     * their pinned types, and the bucket count come from the sidecar —

@@ -62,23 +62,6 @@ object Streams {
     math.min(sessionWidth, math.max(math.min(8, sessionWidth), derived))
   }
 
-  /** Run `body` (stream construction + start + awaitTermination) with
-    * `spark.sql.shuffle.partitions` set to [[adaptiveStateWidth]] for
-    * the given sources, restoring the prior session value afterwards —
-    * per-query conf discipline (a carrier must not leak conf into its
-    * bench neighbors; the t3b/t4b save-restore pattern).
-    */
-  def withAdaptiveStateWidth[T](spark: SparkSession, srcDirs: Seq[String])(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, adaptiveStateWidth(spark, srcDirs).toString)
-    try body
-    finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   /** A1/T2 — streaming latest-value table: watermarked update-mode
     * aggregation keeping the max-(time, tiebreak) row per key
     * (reference Redis HSET latest, `redis.py:36-38`). Note on lateness:
@@ -536,46 +519,26 @@ object Streams {
     }
   }
 
+  /** T5 on the Spark 4 `transformWithState` API: the same
+    * [[HullMacdProcessor]], warm-startable like [[detectSignalsStream]] —
+    * each key's seeded [[IndicatorState]] (from [[seedIndicatorState]])
+    * is delivered via `handleInitialState` before its first input row.
+    */
   def detectSignalsTransformWithState(
       candles: org.apache.spark.sql.Dataset[CandleIn],
+      initialState: Option[org.apache.spark.sql.KeyValueGroupedDataset[String, IndicatorState]] = None,
       hullLength: Int = 20,
       fast: Int = 12,
       slow: Int = 26,
       signalLen: Int = 9
   ): org.apache.spark.sql.Dataset[SignalOut] = {
     import candles.sparkSession.implicits._
-    candles
-      .groupByKey(_.symbol)
-      .transformWithState(
-        new HullMacdProcessor(hullLength, fast, slow, signalLen),
-        TimeMode.None(),
-        OutputMode.Append()
-      )
-  }
-
-  /** W5 warm start on the Spark 4 `transformWithState` API: the same
-    * [[HullMacdProcessor]] with each key's seeded [[IndicatorState]]
-    * (from [[seedIndicatorState]]) delivered via `handleInitialState`
-    * before the first input row — the new-API twin of
-    * [[detectSignalsStream]]'s `initialState` overload.
-    */
-  def detectSignalsTransformWithStateSeeded(
-      candles: org.apache.spark.sql.Dataset[CandleIn],
-      initialState: org.apache.spark.sql.KeyValueGroupedDataset[String, IndicatorState],
-      hullLength: Int = 20,
-      fast: Int = 12,
-      slow: Int = 26,
-      signalLen: Int = 9
-  ): org.apache.spark.sql.Dataset[SignalOut] = {
-    import candles.sparkSession.implicits._
-    candles
-      .groupByKey(_.symbol)
-      .transformWithState(
-        new HullMacdProcessor(hullLength, fast, slow, signalLen),
-        TimeMode.None(),
-        OutputMode.Append(),
-        initialState
-      )
+    val grouped = candles.groupByKey(_.symbol)
+    val proc = new HullMacdProcessor(hullLength, fast, slow, signalLen)
+    initialState match {
+      case Some(init) => grouped.transformWithState(proc, TimeMode.None(), OutputMode.Append(), init)
+      case None       => grouped.transformWithState(proc, TimeMode.None(), OutputMode.Append())
+    }
   }
 
   /** The `transformWithState` twin of [[indicatorSeriesStream]]: the W5

@@ -19,9 +19,8 @@ class BucketingSpec extends SparkSpec {
     Bucketing.writeBucketed(o, "b_orders", s"$base/o", "o_orderkey", 8)
     Bucketing.writeBucketed(l.withColumnRenamed("l_orderkey", "o_orderkey"), "b_lineitem", s"$base/l", "o_orderkey", 8)
 
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force a real join strategy
-    try {
+    // force a real join strategy
+    try Sessions.withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // AQE wraps the physical plan, so count exchanges in the explain
       // text (the initial plan shows them before adaptive execution).
       // Match the partitioning spec, not tree-prefix art: nested left
@@ -46,7 +45,6 @@ class BucketingSpec extends SparkSpec {
         .groupBy("o_orderstatus").agg(sum("l_quantity").as("qty"))
       assert(nExchanges(unbucketed) > bucketedExchanges)
     } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       spark.sql("DROP TABLE IF EXISTS b_orders")
       spark.sql("DROP TABLE IF EXISTS b_lineitem")
     }

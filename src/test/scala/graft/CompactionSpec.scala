@@ -230,13 +230,12 @@ class CompactionSpec extends SparkSpec {
     // steady-state file hygiene is by construction (one writing task per
     // touched bucket per generation), so model an over-split bucket the
     // way Spark itself produces one: a records-per-file cap
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
-    try {
+    Sessions.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> "2") {
       LatestUpsert.init(
         spark, root, ev.filter(col("event_id") % 5 === 0),
         keyCols = Seq("user_id", "event_type"), orderCols = Seq("ts_us", "event_id"), buckets = 8)
       (1 to 4).foreach(i => LatestUpsert.upsert(spark, root, ev.filter(col("event_id") % 5 === i)))
-    } finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    }
 
     def snap() = LatestUpsert.read(spark, root).collect().map(_.toSeq).toSet
     def currentFiles() = LatestUpsert.bucketFileCounts(spark, root).values.sum
@@ -254,14 +253,15 @@ class CompactionSpec extends SparkSpec {
     val oneUser = ev.orderBy("user_id", "event_type").limit(1)
       .select("user_id", "event_type").as[(Long, String)].head()
     val oneKey = ev.filter(col("user_id") === oneUser._1 && col("event_type") === oneUser._2)
-    val Some((merged, touched)) = LatestUpsert.mergedForBatch(spark, root, oneKey)
-    assert(touched.size == 1)
-    val scans = fileScans(merged)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("latestcompact")))
-    assert(
-      scans.nonEmpty && scans.forall(
-        _.relation.location.rootPaths.forall(_.toString.endsWith(s"kb=${touched.head}"))),
-      "post-compaction merge listed more than the touched bucket dir")
+    LatestUpsert.withMergedForBatch(spark, root, oneKey) { (merged, touched) =>
+      assert(touched.size == 1)
+      val scans = fileScans(merged)
+        .filter(_.relation.location.rootPaths.exists(_.toString.contains("latestcompact")))
+      assert(
+        scans.nonEmpty && scans.forall(
+          _.relation.location.rootPaths.forall(_.toString.endsWith(s"kb=${touched.head}"))),
+        "post-compaction merge listed more than the touched bucket dir")
+    }.getOrElse(fail("one-key batch staged no merge"))
     // and the sidecar still describes the layout (upsert would throw without it)
     LatestUpsert.upsert(spark, root, oneKey)
     assert(snap() == before, "replayed rows changed latest content")

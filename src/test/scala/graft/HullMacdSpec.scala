@@ -214,11 +214,8 @@ class HullMacdSpec extends SparkSpec {
       .events(spark, sf0001)
       .select(col("user_id").cast("string").as("symbol"), col("ts_us"), col("value"))
     val inputs = Seq(("events", events, "ts_us", "value"), ("seeded", seededBars(), "time_us", "close"))
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.getOption(key)
-    try {
-      for (width <- Seq(1, 4, 64); (name, df, timeCol, closeCol) <- inputs) {
-        spark.conf.set(key, width.toString)
+    for (width <- Seq(1, 4, 64); (name, df, timeCol, closeCol) <- inputs)
+      Sessions.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
         val kernel = HullMacd.detectSignals(df, "symbol", timeCol, closeCol)
         assert(kernel.schema == HullMacd.signalSchema)
         val got = bitwise(kernel)
@@ -227,10 +224,6 @@ class HullMacdSpec extends SparkSpec {
         assert(got == want, s"$name at width $width: first diff ${got.zip(want).find(p => p._1 != p._2)}, " +
           s"sizes ${got.size}/${want.size}")
       }
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
   }
 
   test("detectSignals with its dedup plans exactly one shuffle exchange and no Window operator") {

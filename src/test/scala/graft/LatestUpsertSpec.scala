@@ -128,19 +128,21 @@ class LatestUpsertSpec extends SparkSpec {
     // a one-user batch touches exactly one bucket
     val oneUser = ev.orderBy("user_id").limit(1).select("user_id").as[Long].head()
     val batch = ev.filter($"user_id" === oneUser)
-    val Some((merged, touched)) = LatestUpsert.mergedForBatch(spark, root, batch)
-    assert(touched.size == 1)
-    // path-level pruning: the scan over the artifact has ONLY the touched
-    // bucket's directory as a root path — untouched dirs are never listed
-    val artifactScans = fileScans(merged)
-      .filter(_.relation.location.rootPaths.exists(_.toString.contains("latestupsert")))
-    assert(artifactScans.nonEmpty, "no scan over the latest table found")
-    artifactScans.foreach { s =>
-      val roots = s.relation.location.rootPaths.map(_.toString)
-      assert(
-        roots.forall(_.endsWith(s"kb=${touched.head}")),
-        s"merge read listed non-touched dirs: $roots")
-    }
+    val touched = LatestUpsert.withMergedForBatch(spark, root, batch) { (merged, touched) =>
+      assert(touched.size == 1)
+      // path-level pruning: the scan over the artifact has ONLY the touched
+      // bucket's directory as a root path — untouched dirs are never listed
+      val artifactScans = fileScans(merged)
+        .filter(_.relation.location.rootPaths.exists(_.toString.contains("latestupsert")))
+      assert(artifactScans.nonEmpty, "no scan over the latest table found")
+      artifactScans.foreach { s =>
+        val roots = s.relation.location.rootPaths.map(_.toString)
+        assert(
+          roots.forall(_.endsWith(s"kb=${touched.head}")),
+          s"merge read listed non-touched dirs: $roots")
+      }
+      touched
+    }.getOrElse(fail("one-user batch staged no merge"))
 
     // physical stability: generations are immutable and GC retains the
     // previous manifest's dirs, so EVERY pre-commit file survives the
@@ -229,22 +231,27 @@ class LatestUpsertSpec extends SparkSpec {
     * generation's expected content.
     */
   private def stageUpTo(root: String, batch: DataFrame, crashPoint: Int): Unit = {
-    val Some((merged, touched)) = LatestUpsert.mergedForBatch(spark, root, batch)
-    val gen = manifestFiles(root).last.stripPrefix("m").toLong
-    val next = f"g${gen + 1}%012d"
-    if (crashPoint == 1) {
-      merged.filter($"kb" === touched.head)
-        .write.mode("overwrite").partitionBy("kb").parquet(s"$root/data/$next")
-    } else {
-      merged.write.mode("overwrite").partitionBy("kb").parquet(s"$root/data/$next")
-    }
-    if (crashPoint >= 3) {
-      val mf = manifestMap(root, gen) ++ touched.map(b => b -> s"data/$next/kb=$b")
-      val body = mf.toSeq.sortBy(_._1).map { case (b, p) => s"$b\t$p" }.mkString("\n")
-      val name = f"m${gen + 1}%012d"
-      if (crashPoint == 3) Files.writeString(Paths.get(s"$root/_manifests/.tmp-$name"), body)
-      else Files.writeString(Paths.get(s"$root/_manifests/$name"), body)
-    }
+    val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
+    LatestUpsert.withMergedForBatch(spark, root, batch) { (merged, touched) =>
+      val gen = manifestFiles(root).last.stripPrefix("m").toLong
+      val next = f"g${gen + 1}%012d"
+      if (crashPoint == 1) {
+        merged.filter($"kb" === touched.head)
+          .write.mode("overwrite").partitionBy("kb").parquet(s"$root/data/$next")
+      } else {
+        merged.write.mode("overwrite").partitionBy("kb").parquet(s"$root/data/$next")
+      }
+      if (crashPoint >= 3) {
+        val mf = manifestMap(root, gen) ++ touched.map(b => b -> s"data/$next/kb=$b")
+        val body = mf.toSeq.sortBy(_._1).map { case (b, p) => s"$b\t$p" }.mkString("\n")
+        val name = f"m${gen + 1}%012d"
+        if (crashPoint == 3) Files.writeString(Paths.get(s"$root/_manifests/.tmp-$name"), body)
+        else Files.writeString(Paths.get(s"$root/_manifests/$name"), body)
+      }
+    }.getOrElse(fail("batch staged no merge"))
+    // the pinned batch the executed plan read is released on return
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- pinnedBefore
+    assert(leaked.isEmpty, s"withMergedForBatch left pinned RDDs $leaked")
   }
 
   private def manifestMap(root: String, gen: Long): Map[Int, String] =
@@ -333,11 +340,11 @@ class LatestUpsertSpec extends SparkSpec {
   test("maintain: threshold policy re-coalesces split buckets through a manifest commit, content identical") {
     val ev = events
     val root = freshRoot()
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "2")
-    try LatestUpsert.init(
-      spark, root, ev,
-      keyCols = Seq("user_id"), orderCols = Seq("ts_us", "event_id"), buckets = 4)
-    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    Sessions.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> "2") {
+      LatestUpsert.init(
+        spark, root, ev,
+        keyCols = Seq("user_id"), orderCols = Seq("ts_us", "event_id"), buckets = 4)
+    }
     val before = readSet(root)
     assert(LatestUpsert.bucketFileCounts(spark, root).values.max > 1, "premise: no bucket split")
     assert(LatestUpsert.maintain(spark, root, maxFilesPerBucket = 1), "maintain should have compacted")
@@ -372,9 +379,9 @@ class LatestUpsertSpec extends SparkSpec {
     val root = freshRoot()
     initThirds(root, ev, buckets = 8) // gen 0: one fileset per bucket
     // split ONLY the buckets a small batch touches
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
-    try LatestUpsert.upsert(spark, root, ev.filter($"event_id" % 3 === 1).filter($"event_id" % 17 === 0))
-    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    Sessions.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> "1") {
+      LatestUpsert.upsert(spark, root, ev.filter($"event_id" % 3 === 1).filter($"event_id" % 17 === 0))
+    }
     val counts = LatestUpsert.bucketFileCounts(spark, root)
     val over = counts.collect { case (b, n) if n > 2 => b }.toSet
     val under = counts.collect { case (b, n) if n <= 2 => b }.toSet
@@ -409,9 +416,9 @@ class LatestUpsertSpec extends SparkSpec {
     val root = freshRoot()
     initThirds(root, ev, buckets = 8)
     // split some buckets so the next batch has maintenance work
-    spark.conf.set("spark.sql.files.maxRecordsPerFile", "1")
-    try LatestUpsert.upsert(spark, root, ev.filter($"event_id" % 3 === 1).filter($"event_id" % 17 === 0))
-    finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
+    Sessions.withConf(spark, "spark.sql.files.maxRecordsPerFile" -> "1") {
+      LatestUpsert.upsert(spark, root, ev.filter($"event_id" % 3 === 1).filter($"event_id" % 17 === 0))
+    }
     assert(LatestUpsert.bucketFileCounts(spark, root).values.max > 1, "premise: buckets due for compaction")
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val genBefore = LatestUpsert.currentGen(fs, root).get

@@ -94,15 +94,14 @@ class RegistrationSpec extends SparkSpec {
 
   test("maxLive is session-configurable via spark.graft.registration.maxLive") {
     val prefix = "graft_regspec_conf"
-    spark.conf.set("spark.graft.registration.maxLive", "8")
-    try {
+    Sessions.withConf(spark, "spark.graft.registration.maxLive" -> "8") {
       (1 to 12).foreach { i =>
         val c = Registration.parameterized(prefix, s"cfg:$i", constBuilder(i), col("x"))
         assert(Seq(0).toDF("x").select(c.as("v")).head().getInt(0) == i)
       }
       // the lowered bound applies globally to the session's live set
       assert(liveNames("graft_regspec").size <= 8)
-    } finally spark.conf.unset("spark.graft.registration.maxLive")
+    }
   }
 
   test("an identical parameterization reuses one registration (no growth on repeat calls)") {

@@ -8,9 +8,33 @@ class RelationalSpec extends SparkSpec {
 
   test("all registered queries run and have stable schemas") {
     SparkEntry.queries.foreach { case (name, fn) =>
+      val confBefore = spark.conf.getAll
       val df = fn(spark, sf0001)
       assert(df.columns.nonEmpty, name)
       assert(df.count() >= 0, name)
+      // session conf never escapes the query that set it
+      val confAfter = spark.conf.getAll
+      assert(confAfter == confBefore,
+        s"$name changed session conf: ${(confAfter.toSet diff confBefore.toSet) ++ (confBefore.toSet diff confAfter.toSet)}")
+    }
+  }
+
+  test("withConf restores a set key and unsets an unset key, also when the body throws") {
+    val (setKey, unsetKey) = ("spark.sql.shuffle.partitions", "spark.sql.files.maxRecordsPerFile")
+    Sessions.withConf(spark, setKey -> "17") {
+      assert(!spark.conf.getAll.contains(unsetKey), "premise: the unset key is set")
+      val before = spark.conf.getAll
+      def run(body: => Unit): Unit =
+        Sessions.withConf(spark, setKey -> "3", unsetKey -> "5") {
+          assert(spark.conf.get(setKey) == "3" && spark.conf.get(unsetKey) == "5")
+          body
+        }
+      run(())
+      assert(spark.conf.getAll == before)
+      intercept[RuntimeException](run(throw new RuntimeException("boom")))
+      assert(spark.conf.get(setKey) == "17")
+      assert(!spark.conf.getAll.contains(unsetKey))
+      assert(spark.conf.getAll == before)
     }
   }
 

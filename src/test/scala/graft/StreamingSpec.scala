@@ -132,75 +132,78 @@ class StreamingSpec extends SparkSpec {
     syms.foreach(s => assert(seeded(s) == expected(s), s"state mismatch for $s"))
   }
 
+  /** transformWithState needs the RocksDB state store (multiple column
+    * families); the default HDFS-backed provider can't host it.
+    */
+  private def onRocksDb[T](body: => T): T =
+    Sessions.withConf(
+      spark,
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
+
   test("transformWithState twin emits the same signals as flatMapGroupsWithState") {
     implicit val ctx = spark.sqlContext
-    // transformWithState requires the RocksDB state store (multiple
-    // column families); the default HDFS-backed provider can't host it
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    val all = eventCandles().filter(col("symbol") < "2").collect().sortBy(c => (c.symbol, c.timeUs))
-    val cut = all.map(_.timeUs).sorted.apply(all.length / 2)
-    val (b1, b2) = all.partition(_.timeUs < cut)
-    val input = MemoryStream[CandleIn]
-    val q = Streams
-      .detectSignalsTransformWithState(input.toDS())
-      .writeStream
-      .format("memory")
-      .queryName("sigs_tws")
-      .outputMode("append")
-      .start()
-    try {
-      input.addData(b1.toSeq); q.processAllAvailable()
-      input.addData(b2.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val tws = spark
-      .table("sigs_tws")
-      .select("symbol", "time_us", "signal_type", "direction", "trigger")
-      .as[(String, Long, String, String, String)]
-      .collect()
-      .toSet
-    val batch = graft.signals.HullMacd
-      .detectSignals(
-        eventCandles().filter(col("symbol") < "2").toDF()
-          .withColumnRenamed("timeUs", "ts_us").withColumnRenamed("close", "value"),
-        "symbol", "ts_us", "value"
-      )
-      .select("symbol", "time_us", "signal_type", "direction", "trigger")
-      .as[(String, Long, String, String, String)]
-      .collect()
-      .toSet
-    assert(tws == batch)
-  }
-
-  test("transformWithState indicator series (warm-started) == flatMapGroupsWithState twin, bit-exact") {
-    implicit val ctx = spark.sqlContext
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    val all = eventCandles().filter(col("symbol") < "3").collect().sortBy(c => (c.symbol, c.timeUs))
-    val times = all.map(_.timeUs).sorted
-    val (histCut, cut) = (times(all.length / 4), times(all.length / 2))
-    val history = all.filter(_.timeUs < histCut)
-    val (b1, b2) = all.filter(_.timeUs >= histCut).partition(_.timeUs < cut)
-    val seeded = Streams.seedIndicatorState(history.toSeq.toDS())
-
-    def run(name: String, mk: org.apache.spark.sql.Dataset[CandleIn] => org.apache.spark.sql.Dataset[Streams.IndicatorOut]) = {
+    onRocksDb {
+      val all = eventCandles().filter(col("symbol") < "2").collect().sortBy(c => (c.symbol, c.timeUs))
+      val cut = all.map(_.timeUs).sorted.apply(all.length / 2)
+      val (b1, b2) = all.partition(_.timeUs < cut)
       val input = MemoryStream[CandleIn]
-      val q = mk(input.toDS()).writeStream.format("memory").queryName(name).outputMode("append").start()
+      val q = Streams
+        .detectSignalsTransformWithState(input.toDS())
+        .writeStream
+        .format("memory")
+        .queryName("sigs_tws")
+        .outputMode("append")
+        .start()
       try {
         input.addData(b1.toSeq); q.processAllAvailable()
         input.addData(b2.toSeq); q.processAllAvailable()
       } finally q.stop()
-      spark.table(name).as[Streams.IndicatorOut].collect().sortBy(o => (o.symbol, o.time_us)).toSeq
+      val tws = spark
+        .table("sigs_tws")
+        .select("symbol", "time_us", "signal_type", "direction", "trigger")
+        .as[(String, Long, String, String, String)]
+        .collect()
+        .toSet
+      val batch = graft.signals.HullMacd
+        .detectSignals(
+          eventCandles().filter(col("symbol") < "2").toDF()
+            .withColumnRenamed("timeUs", "ts_us").withColumnRenamed("close", "value"),
+          "symbol", "ts_us", "value"
+        )
+        .select("symbol", "time_us", "signal_type", "direction", "trigger")
+        .as[(String, Long, String, String, String)]
+        .collect()
+        .toSet
+      assert(tws == batch)
     }
+  }
 
-    val fmgws = run("ind_fmgws", ds => Streams.indicatorSeriesStream(ds, Some(seeded)))
-    val tws = run("ind_tws", ds => Streams.indicatorSeriesTransformWithState(ds, Some(Streams.seedIndicatorState(history.toSeq.toDS()))))
-    assert(tws.nonEmpty, "vacuous: no indicator rows emitted")
-    assert(tws == fmgws, "the two stateful APIs diverged on the warm-started indicator series")
+  test("transformWithState indicator series (warm-started) == flatMapGroupsWithState twin, bit-exact") {
+    implicit val ctx = spark.sqlContext
+    onRocksDb {
+      val all = eventCandles().filter(col("symbol") < "3").collect().sortBy(c => (c.symbol, c.timeUs))
+      val times = all.map(_.timeUs).sorted
+      val (histCut, cut) = (times(all.length / 4), times(all.length / 2))
+      val history = all.filter(_.timeUs < histCut)
+      val (b1, b2) = all.filter(_.timeUs >= histCut).partition(_.timeUs < cut)
+      val seeded = Streams.seedIndicatorState(history.toSeq.toDS())
+
+      def run(name: String, mk: org.apache.spark.sql.Dataset[CandleIn] => org.apache.spark.sql.Dataset[Streams.IndicatorOut]) = {
+        val input = MemoryStream[CandleIn]
+        val q = mk(input.toDS()).writeStream.format("memory").queryName(name).outputMode("append").start()
+        try {
+          input.addData(b1.toSeq); q.processAllAvailable()
+          input.addData(b2.toSeq); q.processAllAvailable()
+        } finally q.stop()
+        spark.table(name).as[Streams.IndicatorOut].collect().sortBy(o => (o.symbol, o.time_us)).toSeq
+      }
+
+      val fmgws = run("ind_fmgws", ds => Streams.indicatorSeriesStream(ds, Some(seeded)))
+      val tws = run("ind_tws", ds => Streams.indicatorSeriesTransformWithState(ds, Some(Streams.seedIndicatorState(history.toSeq.toDS()))))
+      assert(tws.nonEmpty, "vacuous: no indicator rows emitted")
+      assert(tws == fmgws, "the two stateful APIs diverged on the warm-started indicator series")
+    }
   }
 
   test("T9 merged-stream ordering: pricing folds before signal on tied timestamps; == batch backtest") {
@@ -256,35 +259,33 @@ class StreamingSpec extends SparkSpec {
 
   test("W5 warm start on transformWithState: seeded processor == pure-batch fold") {
     implicit val ctx = spark.sqlContext
-    spark.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    )
-    val all = eventCandles().filter(col("symbol") < "3").collect().sortBy(c => (c.symbol, c.timeUs))
-    val cut = all.map(_.timeUs).sorted.apply(all.length / 2)
-    val (history, live) = all.partition(_.timeUs < cut)
-    val seed = Streams.seedIndicatorState(history.toSeq.toDS())
-    val input = MemoryStream[CandleIn]
-    val q = Streams
-      .detectSignalsTransformWithStateSeeded(input.toDS(), seed)
-      .writeStream.format("memory").queryName("sigs_tws_seeded").outputMode("append").start()
-    try {
-      input.addData(live.toSeq); q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("sigs_tws_seeded")
-      .select("symbol", "time_us", "signal_type", "direction", "trigger")
-      .as[(String, Long, String, String, String)].collect().toSet
-    val batch = graft.signals.HullMacd
-      .detectSignals(
-        eventCandles().filter(col("symbol") < "3").toDF()
-          .withColumnRenamed("timeUs", "ts_us").withColumnRenamed("close", "value"),
-        "symbol", "ts_us", "value"
-      )
-      .select("symbol", "time_us", "signal_type", "direction", "trigger")
-      .as[(String, Long, String, String, String)].collect()
-      .filter(_._2 >= cut).toSet
-    assert(streamed == batch, s"missing=${(batch -- streamed).take(3)} extra=${(streamed -- batch).take(3)}")
-    assert(batch.nonEmpty)
+    onRocksDb {
+      val all = eventCandles().filter(col("symbol") < "3").collect().sortBy(c => (c.symbol, c.timeUs))
+      val cut = all.map(_.timeUs).sorted.apply(all.length / 2)
+      val (history, live) = all.partition(_.timeUs < cut)
+      val seed = Streams.seedIndicatorState(history.toSeq.toDS())
+      val input = MemoryStream[CandleIn]
+      val q = Streams
+        .detectSignalsTransformWithState(input.toDS(), Some(seed))
+        .writeStream.format("memory").queryName("sigs_tws_seeded").outputMode("append").start()
+      try {
+        input.addData(live.toSeq); q.processAllAvailable()
+      } finally q.stop()
+      val streamed = spark.table("sigs_tws_seeded")
+        .select("symbol", "time_us", "signal_type", "direction", "trigger")
+        .as[(String, Long, String, String, String)].collect().toSet
+      val batch = graft.signals.HullMacd
+        .detectSignals(
+          eventCandles().filter(col("symbol") < "3").toDF()
+            .withColumnRenamed("timeUs", "ts_us").withColumnRenamed("close", "value"),
+          "symbol", "ts_us", "value"
+        )
+        .select("symbol", "time_us", "signal_type", "direction", "trigger")
+        .as[(String, Long, String, String, String)].collect()
+        .filter(_._2 >= cut).toSet
+      assert(streamed == batch, s"missing=${(batch -- streamed).take(3)} extra=${(streamed -- batch).take(3)}")
+      assert(batch.nonEmpty)
+    }
   }
 
   test("streaming latest-per-key (complete mode) matches batch max_by") {
@@ -458,30 +459,20 @@ class StreamingSpec extends SparkSpec {
   test("adaptiveStateWidth: derived from source bytes, clamped to [min(8,w), w], conf restored") {
     val dir = java.nio.file.Files.createTempDirectory("asw").toString
     Seq(1, 2, 3).toDF("x").coalesce(1).write.mode("overwrite").parquet(dir)
-    val key = "spark.sql.shuffle.partitions"
-    val prior = spark.conf.get(key)
-    try {
-      // tiny source, large advisory: floor wins (min(8, sessionWidth))
-      spark.conf.set(key, "32")
-      assert(Streams.adaptiveStateWidth(spark, Seq(dir)) == 8)
-      spark.conf.set(key, "4") // session narrower than the floor: width = session
-      assert(Streams.adaptiveStateWidth(spark, Seq(dir)) == 4)
-      // advisory smaller than the source: derived grows but never past the session width
-      spark.conf.set(key, "32")
-      val advKey = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
-      val advPrior = spark.conf.get(advKey, "64MB")
-      try {
-        spark.conf.set(advKey, "1b")
-        assert(Streams.adaptiveStateWidth(spark, Seq(dir)) == 32)
-      } finally spark.conf.set(advKey, advPrior)
-      // missing dir counts as zero bytes, not an error
-      assert(Streams.adaptiveStateWidth(spark, Seq(s"$dir/_nope")) == 8)
-      // the wrapper restores the prior session value even on throw
-      spark.conf.set(key, "17")
-      intercept[RuntimeException] {
-        Streams.withAdaptiveStateWidth(spark, Seq(dir)) { throw new RuntimeException("boom") }
+    val confBefore = spark.conf.getAll
+    def width(sessionWidth: Int, dirs: String*) =
+      Sessions.withConf(spark, "spark.sql.shuffle.partitions" -> sessionWidth.toString) {
+        Streams.adaptiveStateWidth(spark, dirs)
       }
-      assert(spark.conf.get(key) == "17")
-    } finally spark.conf.set(key, prior)
+    // tiny source, large advisory: floor wins (min(8, sessionWidth))
+    assert(width(32, dir) == 8)
+    assert(width(4, dir) == 4) // session narrower than the floor: width = session
+    // advisory smaller than the source: derived grows but never past the session width
+    Sessions.withConf(spark, "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1b") {
+      assert(width(32, dir) == 32)
+    }
+    // missing dir counts as zero bytes, not an error
+    assert(width(32, s"$dir/_nope") == 8)
+    assert(spark.conf.getAll == confBefore)
   }
 }
