@@ -1,5392 +1,44 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.dedup.Dedup
-import graft.functions.{Functions => Funcs}
-import graft.indicators.Indicators
-import graft.io.Tables
-import graft.ops.Relational
-import graft.similarity.Similarity
-import graft.streaming.{DedupIngest, SemDedupIngest}
-import graft.text.TextOps
+import graft.queries._
+import graft.queries.Oracle.{Fitted, Fixture, Sql}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * Every implemented operator from SURVEY §2 gets a `queries` entry
-  * (Spark DataFrame program over the driver's test tables) and, where
-  * SQL-expressible, an `oracleSql` entry (DuckDB SQL over the same
-  * tables). Column names and types are aligned on both sides; float
-  * aggregates are rounded identically so partial-aggregation ordering
-  * differences cannot flip the hash.
+  * Every implemented operator from SURVEY §2 is declared once, as a
+  * [[QueryDef]] in its family under `graft.queries`: a Spark DataFrame
+  * program over the driver's test tables and exactly one DuckDB oracle
+  * over the same tables. The maps the driver reads are views of that one
+  * list.
   */
 object SparkEntry {
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Queries.a3PricingSummary(spark, "/root/testdata/sf0.001")
+    RelationalQueries.a3PricingSummary(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a1_latest_per_key"  -> (Queries.a1LatestPerKey _),
-    "a2_dedup_keep_last" -> (Queries.a2DedupKeepLast _),
-    "a3_pricing_summary" -> (Queries.a3PricingSummary _),
-    "a7_weighted_avg"    -> (Queries.a7WeightedAvg _),
-    "a9_distinct_agg"    -> (Queries.a9DistinctAgg _),
-    "j1_region_revenue"  -> (Queries.j1RegionRevenue _),
-    "j2_position_metrics" -> (Queries.j2PositionMetrics _),
-    "j10_anti_join"      -> (Queries.j10AntiJoin _),
-    "o4_topk_per_group"  -> (Queries.o4TopKPerGroup _),
-    "f13_json_extract"   -> (Queries.f13JsonExtract _),
-    "u2_union_diagonal"  -> (Queries.u2UnionDiagonal _),
-    "j6_asof_join"       -> (Queries.j6AsofJoin _),
-    "w6_forward_fill"    -> (Queries.w6ForwardFill _),
-    "w7_prior_period"    -> (Queries.w7PriorPeriod _),
-    "p7_nearest_key"     -> (Queries.p7NearestKey _),
-    "p1_filter_pushdown" -> (Queries.p1FilterPushdown _),
-    "s7_pivot_wide"      -> (Queries.s7PivotWide _),
-    "w1_padded_wma"      -> (Queries.w1PaddedWma _),
-    "w2_hull"            -> (Queries.w2Hull _),
-    "w3_ema_seeded"      -> (Queries.w3EmaSeeded _),
-    "w4_macd"            -> (Queries.w4Macd _),
-    "x1_text_stats"      -> (Queries.x1TextStats _),
-    "x2_quality_gopher"  -> (Queries.x2QualityGopher _),
-    "x6_chunking"        -> (Queries.x6Chunking _),
-    "x7_packing"         -> (Queries.x7Packing _),
-    "x7b_packing"        -> (Queries.x7bPackingExact _),
-    "x8_epoch_shuffle"   -> (Queries.x8EpochShuffle _),
-    "x9_split"           -> (Queries.x9Split _),
-    "x10_corpus_freq"    -> (Queries.x10CorpusFreq _),
-    "d8_components"      -> (Queries.d8Components _),
-    "x11_eval_sample"    -> (Queries.x11EvalSample _),
-    "d8b_dedup_filter"   -> (Queries.d8bDedupFilter _),
-    "d9_incremental_minhash" -> (Queries.d9IncrementalMinhash _),
-    "d9b_novel_filter"   -> (Queries.d9bNovelFilter _),
-    "d13_ingest_corpus"  -> (Queries.d13IngestCorpus _),
-    "s5_latest_upsert"   -> (Queries.s5LatestUpsert _),
-    "d14_sem_ingest"     -> (Queries.d14SemIngest _),
-    "d10_semdedup"       -> (Queries.d10Semdedup _),
-    "d11_safe_split"     -> (Queries.d11SafeSplit _),
-    "d12_sem_decontaminate" -> (Queries.d12SemDecontaminate _),
-    "x15_token_budget_mix" -> (Queries.x15TokenBudgetMix _),
-    "x17_exact_decontaminate" -> (Queries.x17ExactDecontaminate _),
-    "x18_bloom_decontaminate" -> (Queries.x18BloomDecontaminate _),
-    "x19_frequent_ngrams" -> (Queries.x19FrequentNgrams _),
-    "x19b_frequent_ngrams_cms" -> (Queries.x19bFrequentNgramsCms _),
-    "x21_pipeline_sweep" -> (Queries.x21PipelineSweep _),
-    "x12_dup_spans"      -> (Queries.x12DupSpans _),
-    "x13_span_dedup"     -> (Queries.x13SpanDedup _),
-    "x14_pack_sequences" -> (Queries.x14PackSequences _),
-    "x3_lang_id"         -> (Queries.x3LangId _),
-    "x4_fingerprint"     -> (Queries.x4Fingerprint _),
-    "x5_redact_pii"      -> (Queries.x5RedactPii _),
-    "x16_quality_sample" -> (Queries.x16QualitySample _),
-    "d1_exact_dedup"     -> (Queries.d1ExactDedup _),
-    "d2_minhash_lsh"     -> (Queries.d2MinhashLsh _),
-    "d3_simhash"         -> (Queries.d3Simhash _),
-    "d4_ngram_jaccard"   -> (Queries.d4NgramJaccard _),
-    "d5_embed_neardup"   -> (Queries.d5EmbedNeardup _),
-    "d6_embed_lsh_pairs" -> (Queries.d6EmbedLshPairs _),
-    "d6_buckets"         -> (Queries.d6Buckets _),
-    "n2_buckets"         -> (Queries.n2Buckets _),
-    "n3_cells"           -> (Queries.n3Cells _),
-    "d7_decontaminate"   -> (Queries.d7Decontaminate _),
-    "n1_ann_brute"       -> (Queries.n1AnnBrute _),
-    "n2_ann_lsh"         -> (Queries.n2AnnLsh _),
-    "n3_ann_ivf"         -> (Queries.n3AnnIvf _),
-    "n5_ann_pq"          -> (Queries.n5AnnPq _),
-    "ivfpq_topk"         -> (Queries.ivfpqTopK _),
-    "n4_ann_quantized"   -> (Queries.n4AnnQuantized _),
-    "m1_multimodal"      -> (Queries.m1Multimodal _),
-    "m2_video_frames"    -> (Queries.m2VideoFrames _),
-    "m3_video_quarantine" -> (Queries.m3VideoQuarantine _),
-    "a8_lifo"            -> (Queries.a8Lifo _),
-    "g1_signal_engine"   -> (Queries.g1SignalEngine _),
-    "s11_classify"       -> (Queries.s11Classify _),
-    "h1_health"          -> (Queries.h1Health _),
-    "a5_max_profit_loss" -> (Queries.a5MaxProfitLoss _),
-    "s8_chain_flatten"   -> (Queries.s8ChainFlatten _),
-    "j7_chain_snapshots" -> (Queries.j7ChainSnapshots _),
-    "f1_normalize"       -> (Queries.f1Normalize _),
-    "f2_symbol_munge"    -> (Queries.f2SymbolMunge _),
-    "f6_occ_roundtrip"   -> (Queries.f6OccRoundtrip _),
-    "f7_scalar_effects"  -> (Queries.f7ScalarEffects _),
-    "f19_time_display"   -> (Queries.f19TimeDisplay _),
-    "p5_session_filter"  -> (Queries.p5SessionFilter _),
-    "t3_stream_candles"  -> (Queries.t3StreamCandles _),
-    "t3b_stream_candles_append" -> (Queries.t3bStreamCandlesAppend _),
-    "t6_stream_dedup"    -> (Queries.t6StreamDedup _),
-    "t8_stream_resume"   -> (Queries.t8StreamResume _),
-    "t2_stream_latest"   -> (Queries.t2StreamLatest _),
-    "s6_stream_history"  -> (Queries.s6StreamHistory _),
-    "s5b_changes_between" -> (Queries.s5bChangesBetween _),
-    "t5_stream_signals"  -> (Queries.t5StreamSignals _),
-    "t4_stream_indicators" -> (Queries.t4StreamIndicators _),
-    "t4b_stream_indicators_tws" -> (Queries.t4bStreamIndicatorsTws _),
-    "t9_stream_backtest" -> (Queries.t9StreamBacktest _),
-    "w10_stream_rowcap"  -> (Queries.w10StreamRowCap _),
-    "t7_snapshot_completions" -> (Queries.t7SnapshotCompletions _),
-    "j3_coalesce_join"   -> (Queries.j3CoalesceJoin _),
-    "w9_flags_filter"    -> (Queries.w9FlagsFilter _),
-    "w12_jitter"         -> (Queries.w12Jitter _),
-    "a4_strategy_netting" -> (Queries.a4StrategyNetting _),
-    "a5_salted_agg"      -> (Queries.a5SaltedAgg _),
-    "a6_campaign_rollup" -> (Queries.a6CampaignRollup _),
-    "w8_candle_close"    -> (Queries.w8CandleClose _),
-    "u4_symbol_dedup"    -> (Queries.u4SymbolDedup _),
-    "j5_explode_join"    -> (Queries.j5ExplodeJoin _),
-    "b1_backtest"        -> (Queries.b1Backtest _),
-    "b1_enrich"          -> (Queries.b1Enrich _),
-    "s2_wire_decode"     -> (Queries.s2WireDecode _),
-    "f16_leg_desc"       -> (Queries.f16LegDesc _)
-  )
+  /** Every declared query; a name declared twice fails here. */
+  val defs: List[QueryDef] = QueryDef.registry(
+    RelationalQueries.defs ++ SignalQueries.defs ++ StreamQueries.defs ++ StrategyQueries.defs ++
+      TextQueries.defs ++ DedupQueries.defs ++ AnnQueries.defs ++ MultimodalQueries.defs)
 
-  def oracleSql: Map[String, String] = Oracles.sql
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    defs.map(d => d.name -> d.program).toMap
 
-  /** Oracles whose SQL embeds data-dependent FITTED model state,
-    * exported as literals at dump time (the d6/n2 hyperplane-literal
-    * technique, extended to a model that is itself a function of the
-    * data): rendered against the live session + sfDir so the dumped
-    * oracle_sql.json carries runnable, fully-pinned SQL. The fit is
-    * deterministic (hash-ordered bounded sample, sequential driver-side
-    * arithmetic), so the query-side and dump-side fits yield identical
-    * binary64 centroids.
+  /** The oracles fixed when the registry is built: plain and fixture SQL. */
+  def oracleSql: Map[String, String] = defs.collect {
+    case QueryDef(name, _, Sql(text)) => name -> text
+    case QueryDef(name, _, Fixture(_, text, _)) => name -> text
+  }.toMap
+
+  /** The oracles embedding FITTED model state, rendered against the live
+    * session and sfDir so the dumped oracle_sql.json carries runnable,
+    * fully-pinned SQL. One [[Fits]] holder per call: each model is fitted
+    * at most once however many oracles read it.
     */
-  /** Names served by [[oracleSqlFitted]] rather than the static map —
-    * part of the oracle-coverage contract (RelationalSpec asserts every
-    * query is in exactly one of static / fitted / oracle-free).
-    */
-  val fittedOracleNames: Set[String] =
-    Set("n3_ann_ivf", "d10_semdedup", "d12_sem_decontaminate", "n5_ann_pq", "d14_sem_ingest", "ivfpq_topk")
-
   def oracleSqlFitted(spark: SparkSession, dir: String): Map[String, String] = {
-    // d10/d12/d14/ivfpq share n3's fit (same corpus, same k) — render
-    // once; n5/ivfpq share the PQ fit likewise.
-    val cents = Queries.n3FittedCentroids(spark, dir)
-    val aug = graft.similarity.Similarity.pqAugmented(Queries.n5FittedPq(spark, dir))
-    Map(
-      "n3_ann_ivf" -> Oracles.n3IvfSql(cents),
-      "d10_semdedup" -> Oracles.d10SemdedupSql(cents),
-      "d12_sem_decontaminate" -> Oracles.d12SemDecontaminateSql(cents),
-      "d14_sem_ingest" -> Oracles.d14SemIngestSql(cents),
-      "n5_ann_pq" -> Oracles.n5PqSql(aug),
-      "ivfpq_topk" -> Oracles.ivfpqTopKSql(cents, aug)
-    )
+    val fits = new Fits(spark, dir)
+    defs.collect { case QueryDef(name, _, Fitted(render)) => name -> render(fits) }.toMap
   }
-
-  /** Queries intentionally without a DuckDB oracle (non-SQL-expressible
-    * semantics); the driver records a weaker rows-only check for these and
-    * ScalaTest specs carry the correctness burden instead.
-    */
-  def oracleFree: Set[String] = Set.empty
-  // (s11_classify, the last member, was fixture-pinned in round 6 — the
-  // m1 decode-expectation technique applied to the greedy classifier.)
-}
-
-/** Parameters shared VERBATIM between a query and its oracle SQL —
-  * single definitions so the two sides cannot drift (the same coupling
-  * discipline as `Dedup.xorSeeds` / `Similarity.tablePlanes`).
-  */
-private[graft] object QueryParams {
-  val X10MinCount: Long = 500L
-  val X11Seed: Long = 13L
-  val X11Quota: Int = 20
-  val X12SpanWidth: Int = 13
-  val X12MaxDupFrac: Double = 0.3
-  // d10 shares d5/d6's cosine regime: 0.4 is where this synthetic
-  // corpus has planted near-dups.
-  val D10Cos: Double = 0.4
-  // x15: a FIXED total token budget — binds at every sf (admits ~1/3 of
-  // sf0.01's docs, ~3% of sf0.1's), so the cap is exercised wherever
-  // the driver checks
-  val X15Budget: Long = 10000L
-  val X15Seed: Long = 7L
-  val X16Seed: Long = 11L
-  // x18: the bloom gate's false-positive rate — result-invisible (the
-  // exact verify removes FPs; x18 shares x17's oracle), so the value
-  // only shapes the survivor stream
-  val X18Fpp: Double = 0.01
-  // x19: shorter windows than x12/x13's dedup spans — a boilerplate
-  // MINER wants the phrase, not the whole duplicated passage; 8 tokens
-  // is the scale where scraper chrome repeats
-  val X19GramWidth: Int = 8
-  val X19MinDocs: Long = 2L
-  val X19TopK: Int = 100
-  // Committed expectation fixtures (see graft.GenM1Fixture /
-  // graft.GenS11Fixture). The directory is env/sysprop-overridable for
-  // checkouts not at /root/repo; the resolved value must be ABSOLUTE
-  // because the dumped oracle SQL embeds it verbatim and the driver's
-  // DuckDB runs with an unknown working directory.
-  private val FixturesDir: String =
-    sys.env
-      .get("SPARK_GRAFT_FIXTURES_DIR")
-      .orElse(sys.props.get("graft.fixtures.dir"))
-      .getOrElse("/root/repo/fixtures")
-  val M1FixturePath: String = s"$FixturesDir/m1_expected.parquet"
-  val M2FixturePath: String = s"$FixturesDir/m2_expected.parquet"
-  val S11FixturePath: String = s"$FixturesDir/s11_expected.parquet"
-  val H1FixturePath: String = s"$FixturesDir/h1_expected.parquet"
-  val A5FixturePath: String = s"$FixturesDir/a5_expected.parquet"
-
-  /** Scratch root for queries that materialize an index as part of
-    * their flow (d9/d9b): keyed by the sf dir so verify (sf0.01) and
-    * bench (sf0.1) runs in one JVM can't serve each other's artifacts;
-    * writes are Overwrite so reps are self-cleaning.
-    */
-  def indexScratch(name: String, sfDir: String): String =
-    s"${sys.props("java.io.tmpdir")}/graft_index/${name}_${sfDir.replaceAll("[^A-Za-z0-9]", "_")}"
-
-  /** Content-identity stamp for a driver-generated source table: FS
-    * metadata only (total length, file count, mtime) — changes whenever
-    * the driver regenerates testdata, with no data scan. Guards shared
-    * seeded scratch ([[seedOnce]]) against serving state built from a
-    * previous testdata generation.
-    */
-  def tableStamp(spark: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val sum = fs.getContentSummary(p)
-    s"len=${sum.getLength} files=${sum.getFileCount} mtime=${st.getModificationTime}"
-  }
-
-  /** Seed-once shared scratch for the ingest end-state queries
-    * (d13/d14): if `root/_SEEDED` holds exactly `stamp`, the seed build
-    * is SKIPPED (bench reps 2+, or a verify run on unchanged data);
-    * otherwise the root is deleted, `build` runs, and the sentinel is
-    * written. Callers re-run the ingest GATES every rep regardless —
-    * the gates are replay-idempotent (spec-pinned: a replayed or
-    * previously-rejected row is re-dropped by the id/novelty guard or
-    * by its now-indexed anchor), so the end state is identical whether
-    * the gates run against a fresh seed or an already-ingested index.
-    * What reps 2+ don't re-pay is the seed build and the (no-op)
-    * appends; rep 1 retains the full ingest cost (visible in the bench
-    * reps array — documented in README).
-    */
-  def seedOnce(spark: SparkSession, root: String, stamp: String)(build: => Unit): Unit = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val sentinel = new org.apache.hadoop.fs.Path(s"$root/_SEEDED")
-    val current = fs.exists(sentinel) && {
-      val in = fs.open(sentinel)
-      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) == stamp
-      finally in.close()
-    }
-    if (!current) {
-      if (fs.exists(rootPath)) fs.delete(rootPath, true)
-      build
-      // sentinel written strictly AFTER the seed build: a crash mid-seed
-      // leaves no sentinel and the next run rebuilds from nothing
-      val out = fs.create(sentinel, true)
-      try out.write(stamp.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-  }
-}
-
-/** The concrete query programs, one per SURVEY §2 operator. */
-object Queries {
-
-  /** A1/W11 — latest event per user (the Redis latest-value table,
-    * reference `messaging/processors/default.py:62-68`).
-    */
-  def a1LatestPerKey(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    Relational
-      .latestPerKey(ev, Seq("user_id"), "ts_us", "event_id")
-      .select("user_id", "event_id", "ts_us", "event_type", "value")
-      .orderBy("user_id")
-  }
-
-  /** S5 at lake scale — the incremental latest-value table END-STATE
-    * (see [[graft.io.LatestUpsert]]): seed the bucket-partitioned
-    * artifact with the event_id%3==0 events, then merge the %3==1 and
-    * %3==2 batches IN ORDER with bucket-pruned rewrites, and read the
-    * final table. The merge is row-level idempotent (max is
-    * associative/commutative/idempotent), so the end state equals the
-    * one-shot latest-per-key over ALL events — which is a1's contract,
-    * so this query's oracle is a1's SQL verbatim (the d13/d14 end-state
-    * technique, with the sequential gate replaced by an order-free
-    * merge the oracle can state directly). Scratch: seed shared across
-    * runs on unchanged testdata ([[QueryParams.seedOnce]]); the two
-    * upserts re-run every time and idempotence keeps the end state
-    * identical (LatestUpsertSpec replay test).
-    */
-  def s5LatestUpsert(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables
-      .events(spark, dir)
-      .select("user_id", "event_id", "ts_us", "event_type", "value")
-    val root = QueryParams.indexScratch("s5_latest", dir)
-    // v3: generation-manifest layout (atomic manifest commits, full
-    // pinned schema) — stale v2 rename-swap scratch must re-seed
-    val stamp = s"s5 v3 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      graft.io.LatestUpsert.init(
-        spark, root, ev.filter(pmod($"event_id", lit(3)) === 0),
-        keyCols = Seq("user_id"), orderCols = Seq("ts_us", "event_id"), buckets = 32)
-    }
-    graft.io.LatestUpsert.upsert(spark, root, ev.filter(pmod($"event_id", lit(3)) === 1))
-    graft.io.LatestUpsert.upsert(spark, root, ev.filter(pmod($"event_id", lit(3)) === 2))
-    graft.io.LatestUpsert
-      .read(spark, root)
-      .select("user_id", "event_id", "ts_us", "event_type", "value")
-      .orderBy("user_id")
-  }
-
-  /** T2/S5 — the keep-last upsert END-STATE through a REAL stream and
-    * the PRODUCTION entry point: two event micro-batches (copied in by
-    * [[Replay.copyArrival]]) replayed into
-    * [[graft.io.LatestUpsert.start]] — the streaming foreachBatch gate
-    * with per-batch self-maintenance on (`maxFilesPerBucket=4`, the
-    * deployed configuration) — then the committed lake table read
-    * back. s5 pins the same end state through DIRECT upsert calls;
-    * this row pins it through the streaming machinery itself
-    * (checkpointed foreachBatch, batch boundaries from the file
-    * source), so a regression in the stream wiring — not just the
-    * merge — flips the hash. The merge is row-level idempotent and
-    * batch-order-free (max over a total per-key order), so re-running
-    * the stream against the shared scratch table converges to the
-    * identical end state (LatestUpsertSpec replay property), and the
-    * oracle is the one-shot latest-per-key over all events — a1's SQL
-    * verbatim, the reference's late/duplicate-bar resolution contract
-    * (`processors/default.py:80-91`: keep-last on the key, no
-    * lateness bound).
-    */
-  def t2StreamLatest(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables
-      .events(spark, dir)
-      .select("user_id", "event_id", "ts_us", "event_type", "value")
-    val root = QueryParams.indexScratch("t2_stream", dir)
-    val stamp = s"t2 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      graft.io.LatestUpsert.init(
-        spark, s"$root/table", ev.filter(pmod($"event_id", lit(3)) === 0),
-        keyCols = Seq("user_id"), orderCols = Seq("ts_us", "event_id"), buckets = 32)
-      (1 to 2).foreach { i =>
-        ev.filter(pmod($"event_id", lit(3)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/b$i")
-      }
-    }
-    // fresh stream plumbing per invocation (the table is shared scratch
-    // — replays converge)
-    val streamDir = java.nio.file.Files.createTempDirectory("t2src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("t2ckpt").toString
-    (1 to 2).foreach(i => Replay.copyArrival(spark, s"$root/b$i", streamDir))
-    val src = graft.streaming.Streams.readEventStream(spark, streamDir, spark.read.parquet(s"$root/b1").schema)
-    val q = graft.io.LatestUpsert.start(src, s"$root/table", ckpt, maxFilesPerBucket = 4)
-    q.processAllAvailable()
-    q.stop()
-    graft.io.LatestUpsert
-      .read(spark, s"$root/table")
-      .select("user_id", "event_id", "ts_us", "event_type", "value")
-      .orderBy("user_id")
-  }
-
-  /** S6 — the time-series history sink END-STATE through the NATIVE
-    * parquet file sink ([[graft.io.Sinks.streamHistory]]: partitioned
-    * append, `_spark_metadata` commit log), exactly-once pinned ACROSS
-    * A RESTART: run 1 streams the first half of events (AvailableNow,
-    * clean stop), run 2 resumes from the same checkpoint with the
-    * second half added — mis-restored offsets would re-commit run 1's
-    * rows and double them (the commit log is what makes the file sink
-    * exactly-once; a reader sees only log-committed files). The oracle
-    * is the whole events table: every row exactly once, partition
-    * round-trip included (`event_type` rides as the partition dir and
-    * must come back value-exact). Unlike t8 (foreachBatch, state-store
-    * recovery) this pins the NATIVE sink's own transaction log.
-    */
-  def s6StreamHistory(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables
-      .events(spark, dir)
-      .select("event_id", "ts_us", "user_id", "value", "event_type")
-    val root = QueryParams.indexScratch("s6_stream", dir)
-    val stamp = s"s6 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      (0 to 1).foreach { i =>
-        ev.filter(pmod($"event_id", lit(2)) === i)
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/f${i + 1}")
-      }
-    }
-    val streamDir = java.nio.file.Files.createTempDirectory("s6src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("s6ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("s6out").toString + "/history"
-    val sch = spark.read.parquet(s"$root/f1").schema
-    def runOnce(): Unit = {
-      val src = graft.streaming.Streams.readEventStream(spark, streamDir, sch)
-      val q = graft.io.Sinks.streamHistory(src, out, ckpt, Seq("event_type")).start()
-      q.awaitTermination()
-    }
-    Replay.copyArrival(spark, s"$root/f1", streamDir)
-    runOnce() // run 1: half the history, clean stop
-    Replay.copyArrival(spark, s"$root/f2", streamDir)
-    runOnce() // run 2: commit-log resume — run 1's files must NOT re-commit
-    spark.read.parquet(out)
-      .select("event_id", "ts_us", "user_id", "event_type", "value")
-      .orderBy("event_id")
-  }
-
-  /** S5 CDC — [[graft.io.LatestUpsert.changesBetween]] hash-pinned
-    * cross-engine (the spec pins diff ≡ snapshot-compare and the
-    * changed-bucket scan pruning; this row pins the emitted rows
-    * against DuckDB): a FRESH latest table per invocation (generation
-    * numbers must be deterministic — replays against shared scratch
-    * converge and would diff empty), seeded with the mod-0 events,
-    * upserted with mod-1 (gen 1) then mod-2 (gen 2); the diff of the
-    * last two generations is every user whose latest row CHANGED in
-    * the second batch. The oracle states it relationally: latest over
-    * mod ≤ 1 vs latest over all, left-joined on the key, kept where
-    * the winning event differs (event_id is unique, so payload
-    * difference ⇔ winner difference). The per-invocation init is the
-    * price of generation determinism — bounded by the seed subset,
-    * and the diff itself stays ∝ changed buckets (spec-pinned).
-    */
-  def s5bChangesBetween(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables
-      .events(spark, dir)
-      .select("user_id", "event_id", "ts_us", "event_type", "value")
-    val root = java.nio.file.Files.createTempDirectory("s5b_changes").toString + "/t"
-    graft.io.LatestUpsert.init(
-      spark, root, ev.filter(pmod($"event_id", lit(3)) === 0),
-      keyCols = Seq("user_id"), orderCols = Seq("ts_us", "event_id"), buckets = 32)
-    graft.io.LatestUpsert.upsert(spark, root, ev.filter(pmod($"event_id", lit(3)) === 1))
-    graft.io.LatestUpsert.upsert(spark, root, ev.filter(pmod($"event_id", lit(3)) === 2))
-    graft.io.LatestUpsert
-      .changesBetween(spark, root, 1L, 2L)
-      .select("user_id", "event_id", "ts_us", "event_type", "value", "change")
-      .orderBy("user_id")
-  }
-
-  /** A2/T6 — keep-last upsert on a composite key (candle dedup,
-    * reference `processors/default.py:80-91`).
-    */
-  def a2DedupKeepLast(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    Relational
-      .latestPerKey(ev, Seq("user_id", "event_type"), "ts_us", "event_id")
-      .select("user_id", "event_type", "event_id", "ts_us", "value")
-      .orderBy("user_id", "event_type")
-  }
-
-  /** A3/A4/A6-family — multi-aggregate rollup (strategy netting shape,
-    * reference `strategies/models.py:160-247`). TPC-H Q1-like so the
-    * DuckDB oracle is exact; money sums rounded 2dp on both sides.
-    */
-  def a3PricingSummary(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .lineitem(spark, dir)
-      .groupBy($"l_returnflag", $"l_linestatus")
-      .agg(
-        round(sum($"l_quantity"), 2).as("sum_qty"),
-        round(sum($"l_extendedprice"), 2).as("sum_base"),
-        round(sum($"l_extendedprice" * (lit(1.0) - $"l_discount")), 2).as("sum_disc"),
-        round(avg($"l_quantity"), 6).as("avg_qty"),
-        count(lit(1)).as("n_rows")
-      )
-      .orderBy("l_returnflag", "l_linestatus")
-
-  /** A7 — weighted average price Σ(price×qty)/Σ(qty) per part
-    * (reference `transactions.py:213-226`).
-    */
-  def a7WeightedAvg(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .lineitem(spark, dir)
-      .groupBy($"l_partkey")
-      .agg(
-        round(sum($"l_extendedprice" * $"l_quantity") / sum($"l_quantity"), 6).as("wavg_price"),
-        round(sum($"l_quantity"), 2).as("total_qty")
-      )
-      .orderBy("l_partkey")
-
-  /** A9 — distinct-count rollup (expiration summary shape,
-    * reference `subscription/cli.py:693-703`).
-    */
-  def a9DistinctAgg(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .part(spark, dir)
-      .groupBy($"p_brand")
-      .agg(
-        countDistinct($"p_type").as("n_types"),
-        count(lit(1)).as("n_parts"),
-        min($"p_retailprice").as("min_rp"),
-        max($"p_retailprice").as("max_rp")
-      )
-      .orderBy("p_brand")
-
-  /** Skew escape hatch as a first-class query: two-stage salted
-    * aggregation (`Relational.saltedSumCount`) over a deliberately
-    * low-cardinality key (3 return flags across the whole lineitem
-    * table — every key is a hot key). The salt spreads each key over 32
-    * reducers before the exact per-key combine; the result is identical
-    * to the plain groupBy, which is what the DuckDB oracle checks.
-    * `l_quantity` sums are whole numbers, so the extra partial layer
-    * cannot perturb the float fold.
-    */
-  def a5SaltedAgg(spark: SparkSession, dir: String): DataFrame =
-    Relational
-      .saltedSumCount(Tables.lineitem(spark, dir), Seq("l_returnflag"), "l_quantity", saltBuckets = 32)
-      .select($"l_returnflag", round($"sum_value", 2).as("sum_qty"), $"n_rows")
-      .orderBy("l_returnflag")
-
-  /** J1-family — dimension join chain with broadcast small sides
-    * (positions ⋈ latest quotes shape, reference
-    * `analytics/metrics.py:158-173`). region/nation/customer are the
-    * broadcast dims; orders is the fact side.
-    */
-  def j1RegionRevenue(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val c = Tables.customer(spark, dir)
-    val n = Tables.nation(spark, dir)
-    val r = Tables.region(spark, dir)
-    o.join(broadcast(c), o("o_custkey") === c("c_custkey"))
-      .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
-      .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
-      .groupBy($"r_name")
-      .agg(
-        round(sum($"o_totalprice"), 2).as("revenue"),
-        count(lit(1)).as("n_orders")
-      )
-      .orderBy("r_name")
-  }
-
-  /** J2 — the full position-metrics wide table (reference
-    * `analytics/metrics.py:94-195` + `positions.py:528-760`): synthetic
-    * positions derived from `part` with REST/WS duplicate copies, merged
-    * by [[graft.metrics.Metrics.dedupePositions]] (streamer-symbol copy
-    * wins, equity fallback, quoteless non-equity dropped), then the
-    * quote/greeks/instrument/credit join chain with the delta-1
-    * theoretical greek defaults. Every rule is SQL-expressible, so the
-    * whole pipeline hash-matches a DuckDB oracle.
-    */
-  def j2PositionMetrics(spark: SparkSession, dir: String): DataFrame = {
-    val p = Tables.part(spark, dir)
-    val k = pmod($"p_partkey", lit(500)).cast("long")
-    val sym = concat(lit("S"), k.cast("string"))
-    val itype = when(pmod($"p_partkey", lit(4)) === 0, "Equity")
-      .when(pmod($"p_partkey", lit(4)) === 1, "Equity Option")
-      .when(pmod($"p_partkey", lit(4)) === 2, "Future")
-      .otherwise("Equity Option")
-    val positions = p.select(
-      $"p_partkey".cast("long").as("row_id"),
-      sym.as("symbol"),
-      sym.as("underlying_symbol"),
-      itype.as("instrument_type"),
-      when(pmod($"p_partkey", lit(3)) === 0, lit(null).cast("string"))
-        .otherwise(concat(lit(".XS"), k.cast("string"))).as("streamer_symbol"),
-      (pmod($"p_partkey", lit(7)) + 1).cast("double").as("quantity"),
-      when(pmod($"p_partkey", lit(11)) === 0, "Closed")
-        .when(pmod($"p_partkey", lit(2)) === 0, "Long")
-        .otherwise("Short").as("quantity_direction"),
-      when(itype.isin("Equity Option", "Future Option"), 100.0)
-        .when(itype === "Future", 50.0)
-        .otherwise(1.0).as("multiplier")
-    )
-    val slots = p.select(k.as("k")).distinct()
-    val kd = $"k".cast("double")
-    val quotes = slots
-      .select(
-        concat(lit(".XS"), $"k".cast("string")).as("streamer_symbol"),
-        round(kd * 0.5 + 1.0, 2).as("bid_price"),
-        round(kd * 0.5 + 1.2, 2).as("ask_price")
-      )
-      .union(slots.select(
-        concat(lit("S"), $"k".cast("string")),
-        round(kd + 10.0, 2),
-        round(kd + 10.4, 2)
-      ))
-    // partial coverage (k%5==0 missing) exercises the awaiting-greeks path
-    val greeks = slots.filter(pmod($"k", lit(5)) =!= 0).select(
-      concat(lit(".XS"), $"k".cast("string")).as("streamer_symbol"),
-      round(kd / 500.0 - 0.5, 4).as("delta"),
-      round(kd / 10000.0, 6).as("gamma"),
-      round(-kd / 2000.0, 6).as("theta"),
-      round(kd / 1000.0, 6).as("vega")
-    )
-    // partial coverage (k%7==0 missing) exercises the null-instrument path
-    val instruments = slots.filter(pmod($"k", lit(7)) =!= 0).select(
-      concat(lit("S"), $"k".cast("string")).as("symbol"),
-      when(pmod($"k", lit(2)) === 0, "C").otherwise("P").as("option_type"),
-      $"k".cast("decimal(12,3)").as("strike_price"),
-      lit(java.sql.Date.valueOf("2026-09-18")).as("expiration_date"),
-      (pmod($"k", lit(45)) + 1).cast("int").as("days_to_expiration")
-    )
-    val credits = slots.filter(pmod($"k", lit(2)) === 0).select(
-      concat(lit("S"), $"k".cast("string")).as("symbol"),
-      (-$"k" * 10).cast("decimal(12,2)").as("entry_credit"),
-      (kd / 10.0).cast("decimal(12,2)").as("fees")
-    )
-    graft.metrics.Metrics
-      .positionMetrics(graft.metrics.Metrics.dedupePositions(positions, "row_id"), quotes, greeks, instruments, credits)
-      .select(
-        $"symbol", $"streamer_symbol", $"instrument_type", $"quantity", $"quantity_direction",
-        $"multiplier", $"bid_price", $"ask_price", $"mid_price", $"delta", $"gamma", $"theta", $"vega",
-        $"option_type",
-        // DECIMAL stays inside the pipeline (strike/credit/fee arithmetic is
-        // decimal-typed, as in the reference); the compare surface is DOUBLE
-        // because driver-side hash canonicalization of DECIMAL is
-        // format-ambiguous (r2: bit-exact values, red hash). Values are exact
-        // at <=3 dp, so the cast is lossless.
-        $"strike_price".cast("double").as("strike_price"),
-        date_format($"expiration_date", "yyyy-MM-dd").as("expiry"),
-        $"days_to_expiration",
-        $"entry_credit".cast("double").as("entry_credit"),
-        $"fees".cast("double").as("fees"),
-        $"signed_quantity", $"dollar_theta"
-      )
-      .orderBy("symbol")
-  }
-
-  /** J10/U3 — anti-join diff (subscription resolver,
-    * reference `subscription/resolver.py:101-112`).
-    */
-  def j10AntiJoin(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(spark, dir)
-    val o = Tables.orders(spark, dir).filter($"o_orderstatus" === "F")
-    c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-      .select("c_custkey", "c_name")
-      .orderBy("c_custkey")
-  }
-
-  /** O4 — deterministic top-k per group (row-cap/tail retention shape,
-    * reference `processors/default.py:39-48`).
-    */
-  def o4TopKPerGroup(spark: SparkSession, dir: String): DataFrame =
-    Relational
-      .topKPerGroup(
-        Tables.orders(spark, dir),
-        Seq("o_orderpriority"),
-        Seq($"o_totalprice".desc, $"o_orderkey".asc),
-        3
-      )
-      .select("o_orderpriority", "o_orderkey", "o_totalprice")
-      .orderBy("o_orderpriority", "o_orderkey")
-
-  /** F13 — JSON field extraction + rollup (event JSON encode/decode,
-    * reference `redis.py:28-38`). Regex-based so Spark and DuckDB share
-    * identical extraction semantics.
-    */
-  def f13JsonExtract(spark: SparkSession, dir: String): DataFrame = {
-    val m = regexp_extract($"props", """"k"\s*:\s*(\d+)""", 1)
-    Tables
-      .events(spark, dir)
-      // empty-match guard: ANSI mode would throw on cast('' as long)
-      .withColumn("k", when(m =!= "", m).cast("long"))
-      .groupBy($"event_type")
-      .agg(
-        sum($"k").as("sum_k"),
-        count($"k").as("n_k"),
-        count(lit(1)).as("n_rows")
-      )
-      .orderBy("event_type")
-  }
-
-  /** U1/U2 — diagonal (schema-widening) union,
-    * reference `providers/market.py:351-358`.
-    */
-  def u2UnionDiagonal(spark: SparkSession, dir: String): DataFrame = {
-    val c = Tables
-      .customer(spark, dir)
-      .select(
-        $"c_custkey".cast("long").as("key"),
-        $"c_acctbal".as("bal"),
-        lit("customer").as("side"),
-        $"c_mktsegment".as("mktsegment")
-      )
-    val s = Tables
-      .supplier(spark, dir)
-      .select(
-        $"s_suppkey".cast("long").as("key"),
-        $"s_acctbal".as("bal"),
-        lit("supplier").as("side")
-      )
-    Relational.unionDiagonal(Seq(c, s)).orderBy("side", "key")
-  }
-
-  /** J6 — as-of join (reference `backtest/publisher.py:112-128`): each
-    * error event picks up the most recent purchase value at or before it
-    * for the same user. Union+window formulation — one shuffle, no range
-    * explosion.
-    */
-  def j6AsofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val errors = ev.filter($"event_type" === "error")
-    val purchases = ev
-      .filter($"event_type" === "purchase")
-      .select($"user_id", $"ts", $"value".as("purchase_value"))
-    Relational
-      .asOfJoin(errors, purchases, "user_id", "ts", "ts", Seq("purchase_value"))
-      .select("user_id", "ts_us", "event_id", "purchase_value")
-      .orderBy("user_id", "ts_us")
-  }
-
-  /** W6 — forward-fill onto an hourly grid, emitting only gap rows
-    * (reference `utils/time_series.py:72-96`).
-    */
-  def w6ForwardFill(spark: SparkSession, dir: String): DataFrame = {
-    val hourUs = 3600000000L
-    val ev = Tables
-      .events(spark, dir)
-      .withColumn("bucket_us", expr(s"(ts_us div $hourUs) * $hourUs"))
-    val perBucket = Relational
-      .latestPerKey(ev, Seq("user_id", "bucket_us"), "ts_us", "event_id")
-      .select("user_id", "bucket_us", "value")
-    Relational
-      .forwardFillGrid(perBucket, "user_id", "bucket_us", hourUs, Seq("value"))
-      .select("user_id", "bucket_us", "value")
-      .orderBy("user_id", "bucket_us")
-  }
-
-  /** W7 — prior-trading-day close analog (reference
-    * `providers/market.py:187-235`): per (user, day) last value, plus the
-    * previous *available* day's value.
-    */
-  def w7PriorPeriod(spark: SparkSession, dir: String): DataFrame = {
-    val dayUs = 86400000000L
-    val ev = Tables.events(spark, dir)
-    Relational
-      .priorPeriodLast(ev, "user_id", expr(s"(ts_us div $dayUs) * $dayUs"), Seq("ts_us", "event_id"), "value")
-      .select($"user_id", $"period".as("day_us"), $"period_last", $"prior_last")
-      .orderBy("user_id", "day_us")
-  }
-
-  /** P7 — nearest-available-key match (reference
-    * `market/option_chains.py:144-172` DTE-closest-expiration), targets
-    * broadcast against the distinct key set.
-    */
-  def p7NearestKey(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val targets = Seq(5, 15, 25, 48).toDF("target")
-    Relational
-      .nearestKey(targets, "target", Tables.part(spark, dir), "p_size")
-      .orderBy("target")
-  }
-
-  /** P1/P2/P3 — predicate + projection pushdown to the parquet scan
-    * (reference `providers/market.py:130-140` Flux range/filter).
-    */
-  def p1FilterPushdown(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .lineitem(spark, dir)
-      .filter(
-        $"l_returnflag" === "R" &&
-          $"l_shipdate" >= lit(java.time.LocalDateTime.of(1996, 1, 1, 0, 0)) &&
-          $"l_shipdate" < lit(java.time.LocalDateTime.of(1997, 1, 1, 0, 0))
-      )
-      .select(
-        $"l_orderkey",
-        $"l_linenumber",
-        $"l_quantity",
-        date_format($"l_shipdate", "yyyy-MM-dd").as("ship_date")
-      )
-      .orderBy("l_orderkey", "l_linenumber")
-
-  /** S7 — tall→wide pivot (InfluxDB Flux `pivot`, reference
-    * `providers/market.py:130-140`): per (user, day), one column per
-    * event type. Pivot values are declared, not discovered — at scale a
-    * `.pivot(col)` without values triggers an extra collect job.
-    */
-  def s7PivotWide(spark: SparkSession, dir: String): DataFrame = {
-    val dayUs = 86400000000L
-    Tables
-      .events(spark, dir)
-      .withColumn("day_us", expr(s"(ts_us div $dayUs) * $dayUs"))
-      .groupBy($"user_id", $"day_us")
-      .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-      .agg(round(sum($"value"), 6))
-      .orderBy("user_id", "day_us")
-  }
-
-  /** W1 — padded weighted MA over each user's value series, pad = first
-    * value (reference `momentum.py:10-40`). Pure window expressions;
-    * bit-exact against the DuckDB lag-formula oracle.
-    */
-  def w1PaddedWma(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val ev = Tables.events(spark, dir)
-    val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val pad = first($"value").over(w)
-    ev.withColumn("wma", Indicators.paddedWmaCol($"value", pad, 5, w))
-      .select("user_id", "ts_us", "event_id", "wma")
-      .orderBy("user_id", "ts_us", "event_id")
-  }
-
-  /** W2 — Hull MA (length 8 → half 4, √ → 3) per user, pad = first value
-    * (reference `momentum.py:43-98`).
-    */
-  def w2Hull(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    Indicators
-      .withHull(ev, "user_id", Seq("ts", "event_id"), "value", 8, padCol = None)
-      .select("user_id", "ts_us", "event_id", "hma", "hma_color")
-      .orderBy("user_id", "ts_us", "event_id")
-  }
-
-  /** W3 — seeded EMA (length 5, seed = first value) per user
-    * (reference `momentum.py:101-113`); single-pass per-key fold.
-    */
-  def w3EmaSeeded(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    Indicators
-      .withEmaSeeded(ev, "user_id", Seq("ts", "event_id"), "value", None, 5, "ema")
-      .select("user_id", "ts_us", "event_id", "ema")
-      .orderBy("user_id", "ts_us", "event_id")
-  }
-
-  /** W4 — MACD(4,8,3) per user, prior close = first value, signal seed 0
-    * (reference `momentum.py:116-193`); one streaming pass.
-    */
-  def w4Macd(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    Indicators
-      .withMacd(ev, "user_id", Seq("ts", "event_id"), "value", None, 4, 8, 3)
-      .select("user_id", "ts_us", "event_id", "macd_value", "avg", "diff", "diff_color")
-      .orderBy("user_id", "ts_us", "event_id")
-  }
-
-  /** Text analysis (training-data pipeline): token counts, word-piece
-    * counts, punctuation ratio, stopword hits, composite quality score —
-    * all codegen'd column expressions at scan speed.
-    */
-  def x1TextStats(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .documents(spark, dir)
-      .select(
-        $"doc_id",
-        TextOps.tokenCount($"text").cast("long").as("n_tokens"),
-        TextOps.wordPieceCount($"text").cast("long").as("n_pieces"),
-        TextOps.punctRatio($"text").as("punct_ratio"),
-        TextOps.stopwordCount($"text").cast("long").as("stop_cnt"),
-        TextOps.qualityScore($"text").as("quality")
-      )
-      .orderBy("doc_id")
-
-  /** Language-ID heuristic: argmax of per-language marker-token hits. */
-  /** X2 — Gopher-rule quality metrics + keep flag per document
-    * (`TextOps.gopherQuality`); the bigram-mode aggregation makes this
-    * the repetition-filter shape of a real training-data sweep.
-    */
-  def x2QualityGopher(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .gopherQuality(Tables.documents(spark, dir), "doc_id", "text")
-      .orderBy("doc_id")
-
-  /** X6 — token-window chunking (40-token chunks, 10 overlap): one row
-    * per chunk with its index and token count — the context-window
-    * preparation sweep.
-    */
-  def x6Chunking(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .documents(spark, dir)
-      .select($"doc_id", posexplode(TextOps.chunkTokens($"text", 40, 10)).as(Seq("chunk_idx", "chunk_text")))
-      .select(
-        $"doc_id",
-        $"chunk_idx",
-        $"chunk_text",
-        size(split($"chunk_text", " ")).cast("long").as("n_tokens")
-      )
-      .orderBy("doc_id", "chunk_idx")
-
-  /** X7 — per-shard sequence packing: documents ordered by id within
-    * each source shard, assigned to 2048-token bins by running prefix
-    * sum.
-    */
-  def x7Packing(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .packIntoBins(
-        Tables
-          .documents(spark, dir)
-          .select($"doc_id", $"source", TextOps.tokenCount($"text").cast("long").as("n_tokens")),
-        shardCol = "source",
-        orderCol = "doc_id",
-        tokenCountCol = "n_tokens",
-        budget = 2048
-      )
-      .select("source", "doc_id", "n_tokens", "bin_id")
-      .orderBy("source", "doc_id")
-
-  /** X7b — exact sequential (first-fit) packing: the overflow-free rule,
-    * fold-based (see [[graft.text.TextOps.packFirstFitExact]]). Same
-    * derivation as x7 so the two rules are directly comparable.
-    */
-  def x7bPackingExact(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .packFirstFitExact(
-        Tables
-          .documents(spark, dir)
-          .select($"doc_id", $"source", TextOps.tokenCount($"text").cast("long").as("n_tokens")),
-        shardCol = "source",
-        orderCol = "doc_id",
-        tokenCountCol = "n_tokens",
-        budget = 2048
-      )
-      .select("source", "doc_id", "n_tokens", "bin_id")
-      .orderBy("source", "doc_id")
-
-  /** x14 — packed-sequence materialization: x7b's exact first-fit bins
-    * rendered into the training sequences a packed-corpus writer ships
-    * (normalized text, single-space separator, so each sequence
-    * tokenizes back to exactly `seq_tokens`).
-    */
-  def x14PackSequences(spark: SparkSession, dir: String): DataFrame = {
-    val packed = TextOps.packFirstFitExact(
-      Tables
-        .documents(spark, dir)
-        // materializeSequences requires null/empty text dropped upstream
-        // (a null doc would inject size(NULL) = -1 token counts into bin
-        // fill under the non-ANSI session config); same WHERE in the
-        // oracle CTE
-        .filter($"text".isNotNull)
-        .select(
-          $"doc_id",
-          $"source",
-          TextOps.normalize($"text").as("norm"),
-          TextOps.tokenCount($"text").cast("long").as("n_tokens")
-        ),
-      shardCol = "source",
-      orderCol = "doc_id",
-      tokenCountCol = "n_tokens",
-      budget = 2048
-    )
-    TextOps
-      .materializeSequences(packed, "source", "bin_id", "doc_id", "norm", "n_tokens")
-      .orderBy("source", "bin_id")
-  }
-
-  /** X8 — deterministic epoch shuffle: seeded md5 permutation into 8
-    * shards with reproducible within-shard order.
-    */
-  def x8EpochShuffle(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .shuffleShards(
-        Tables.documents(spark, dir).select($"doc_id", $"source"),
-        idCol = "doc_id",
-        seed = 42L,
-        numShards = 8
-      )
-      .select("doc_id", "source", "shard", "pos")
-      .orderBy("shard", "pos")
-
-  /** X9 — seeded train/validation/test split assignment (80/10/10). */
-  def x9Split(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .assignSplit(
-        Tables.documents(spark, dir).select($"doc_id", $"source"),
-        idCol = "doc_id",
-        seed = 7L
-      )
-      .select("doc_id", "source", "split")
-      .orderBy("doc_id")
-
-  /** x11 — deterministic stratified eval-set sampling: exactly 20 docs
-    * per source, ranked by seeded md5 (engine-portable, reproducible).
-    */
-  def x11EvalSample(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .sampleStratified(
-        Tables.documents(spark, dir).select($"doc_id", $"source"),
-        idCol = "doc_id",
-        strataCol = "source",
-        quota = QueryParams.X11Quota,
-        seed = QueryParams.X11Seed
-      )
-      .orderBy("source", "doc_id")
-
-  /** x17 — exact 13-gram decontamination (the GPT-3 App. C literal-
-    * leakage rule; see [[graft.text.TextOps.exactNgramDecontaminate]]).
-    * Same mod-5 corpus/benchmark split as d7 so the two decontamination
-    * rules — near-dup LSH there, literal n-gram overlap here — describe
-    * the same leakage surface, and the same window width as x12/x13 so
-    * all three n-gram rules share one blocking unit.
-    */
-  def x17ExactDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    TextOps
-      .exactNgramDecontaminate(
-        docs.filter(pmod($"doc_id", lit(5)) =!= 0),
-        docs.filter(pmod($"doc_id", lit(5)) === 0),
-        "doc_id",
-        "text",
-        n = QueryParams.X12SpanWidth
-      )
-      .orderBy("doc_id")
-  }
-
-  /** x18 — the SAME decontamination contract as x17, gated by a Bloom
-    * sketch instead of a broadcast hash relation (the non-broadcastable-
-    * benchmark regime; see
-    * [[graft.text.TextOps.exactNgramDecontaminateBloom]]). The sketch is
-    * result-invisible — no false negatives, exact verify removes false
-    * positives — so this query's oracle is x17's SQL verbatim.
-    */
-  def x18BloomDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    TextOps
-      .exactNgramDecontaminateBloom(
-        docs.filter(pmod($"doc_id", lit(5)) =!= 0),
-        docs.filter(pmod($"doc_id", lit(5)) === 0),
-        "doc_id",
-        "text",
-        n = QueryParams.X12SpanWidth,
-        fpp = QueryParams.X18Fpp
-      )
-      .orderBy("doc_id")
-  }
-
-  /** x19 — frequent n-gram mining (the boilerplate detector; see
-    * [[graft.text.TextOps.frequentNgrams]]). The synthetic corpus's
-    * injected near-dups repeat 8-token phrases across documents
-    * (1000+ qualifying grams at sf0.001), so the top-100 cut genuinely
-    * selects.
-    */
-  def x19FrequentNgrams(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .frequentNgrams(
-        Tables.documents(spark, dir),
-        "doc_id",
-        "text",
-        n = QueryParams.X19GramWidth,
-        minDocs = QueryParams.X19MinDocs,
-        topK = QueryParams.X19TopK
-      )
-
-  /** x19b — the count-min-gated heavy-hitter miner for the regime
-    * x19's scale note declares past exact reach (the unique gram tail
-    * dominates the shuffle): sketch pass + gated exact pass, result
-    * identical to x19 by construction ([[TextOps.frequentNgramsSketched]]),
-    * sharing x19's oracle verbatim.
-    */
-  def x19bFrequentNgramsCms(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .frequentNgramsSketched(
-        Tables.documents(spark, dir),
-        "doc_id",
-        "text",
-        n = QueryParams.X19GramWidth,
-        minDocs = QueryParams.X19MinDocs,
-        topK = QueryParams.X19TopK
-      )
-
-  /** x21 — the FULL cleaning pipeline as ONE oracled query: the
-    * PipelineE2ESpec user journey (redact → Gopher quality filter →
-    * exact dedup → near-dup cluster resolution → benchmark
-    * decontamination → dup-span flag → span-level strip → token-window
-    * chunking) composed end-to-end over the real corpus, hash-compared
-    * against a single DuckDB statement that restates every stage over
-    * the PREVIOUS stage's relation. Each stage is individually
-    * hash-green (x5/x2/d1/d2+d8/d7/x12/x13/x6); what only THIS query
-    * verifies is the COUPLING — that each operator consumes exactly
-    * what the previous one produced (filtered ids, rebuilt text,
-    * re-tokenization idempotence), the class of bug no single-stage
-    * oracle can see. Constants match the E2E spec: LSH defaults at
-    * jaccard ≥ 0.3, benchmark slice doc_id%101, span width 13 with
-    * dup-span bar 0.5, 40-token chunks with 10 overlap.
-    */
-  def x21PipelineSweep(spark: SparkSession, dir: String): DataFrame = {
-    val docsAll = Tables.documents(spark, dir)
-    val docs = docsAll.filter($"text".isNotNull)
-    // Stage boundaries are localCheckpoint'ed: every stage feeds TWO+
-    // consumers (its filter computation and the carry-forward join), and
-    // without the checkpoint each consumer re-executes the ENTIRE
-    // upstream pipeline — measured 40 s vs ~8 s at sf0.1. Each stage's
-    // EAGER checkpoint makes its predecessor's blocks dead (lineage is
-    // severed), so stage k-1 is released as soon as stage k lands —
-    // live storage is ONE shrinking stage, not six (round 9; before the
-    // Checkpoints.release fix the inline "releases" here would have
-    // been silent no-ops anyway). Only the LAST checkpoint survives the
-    // call: the returned lazy plan reads it. At 100 TB the same
-    // boundaries are parquet materializations between pipeline jobs.
-    // 1. redact (projection; a no-op on PII-free rows by construction)
-    val redacted = docs.select($"doc_id", TextOps.redactPii($"text").as("text")).localCheckpoint()
-    // 2. Gopher quality gate (defaults)
-    val kept = redacted.join(
-      TextOps.gopherQuality(redacted, "doc_id", "text").filter($"keep_doc").select("doc_id"),
-      Seq("doc_id")).localCheckpoint()
-    graft.Checkpoints.release(redacted)
-    // 3. exact dedup: drop non-keeper group members
-    val exactDeduped = kept.join(
-      Dedup.exactDuplicates(kept, "doc_id", "text")
-        .filter($"doc_id" =!= $"keeper_id").select("doc_id"),
-      Seq("doc_id"), "left_anti").localCheckpoint()
-    graft.Checkpoints.release(kept)
-    // 4. near-dup cluster resolution (components keeper, min id);
-    // releasing the PRE-checkpoint frame frees every dead leaf at once:
-    // exactDeduped AND the components run's final label checkpoint
-    val nd0 = Dedup.keepersOnly(
-      exactDeduped, "doc_id",
-      Dedup.connectedComponents(
-        Dedup.minhashLshPairs(exactDeduped, "doc_id", "text"), "id_a", "id_b"))
-    val nearDeduped = nd0.localCheckpoint()
-    graft.Checkpoints.release(nd0)
-    // 5. decontaminate vs the raw benchmark slice
-    val clean = Dedup.decontaminate(
-      nearDeduped,
-      docsAll.filter(pmod($"doc_id", lit(101)) === 0).select("doc_id", "text"),
-      "doc_id", "text").localCheckpoint()
-    graft.Checkpoints.release(nearDeduped)
-    // 6a. dup-span coverage flag; 6b. strip repeated spans, drop emptied docs
-    val unflagged = clean.join(
-      TextOps.dupSpanStats(clean, "doc_id", "text", n = QueryParams.X12SpanWidth, maxDupSpanFrac = 0.5)
-        .filter($"keep_doc").select("doc_id"),
-      Seq("doc_id")).localCheckpoint()
-    graft.Checkpoints.release(clean)
-    val despanned = unflagged
-      .drop("text")
-      .join(
-        TextOps.dedupSpansExact(unflagged, "doc_id", "text", n = QueryParams.X12SpanWidth)
-          .select($"doc_id", $"clean_text".as("text")),
-        Seq("doc_id"))
-      .filter(length($"text") > 0)
-    // 7. chunk to 40-token windows, 10 overlap
-    despanned
-      .select($"doc_id", posexplode(TextOps.chunkTokens($"text", 40, 10)).as(Seq("chunk_idx", "chunk_text")))
-      .select(
-        $"doc_id",
-        $"chunk_idx",
-        $"chunk_text",
-        size(split($"chunk_text", " ")).cast("long").as("n_tokens")
-      )
-      .orderBy("doc_id", "chunk_idx")
-  }
-
-  /** x12 — duplicate-span coverage (the Gopher/RefinedWeb dup-n-gram
-    * repetition rule at token granularity; see
-    * [[graft.text.TextOps.dupSpanStats]]). The synthetic corpus's
-    * injected near-dups give the 13-token windows real cross-document
-    * repeats, so both branches of the threshold are exercised.
-    */
-  def x12DupSpans(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .dupSpanStats(
-        Tables.documents(spark, dir),
-        "doc_id",
-        "text",
-        n = QueryParams.X12SpanWidth,
-        maxDupSpanFrac = QueryParams.X12MaxDupFrac
-      )
-      .orderBy("doc_id")
-
-  /** x13 — exact span dedup with first-occurrence retention (the
-    * RefinedWeb exact-substring rule at token-window granularity; see
-    * [[graft.text.TextOps.dedupSpansExact]]). Same window width as x12
-    * so the two rules describe the same repetition surface.
-    */
-  def x13SpanDedup(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .dedupSpansExact(Tables.documents(spark, dir), "doc_id", "text", n = QueryParams.X12SpanWidth)
-      .orderBy("doc_id")
-
-  /** x10 — corpus-frequency document scoring (the LM-filter shape with
-    * exact integer internals; see
-    * [[graft.text.TextOps.corpusFrequencyStats]]).
-    */
-  def x10CorpusFreq(spark: SparkSession, dir: String): DataFrame =
-    // minCount 500: the synthetic corpus has a tiny dense vocabulary
-    // (31 tokens, counts 26..964 at sf0.01), so a realistic threshold
-    // would leave oov_frac identically 0 — 500 makes the driver check
-    // exercise BOTH branches of the OOV rule
-    TextOps
-      .corpusFrequencyStats(Tables.documents(spark, dir), "doc_id", "text", minCount = QueryParams.X10MinCount)
-      .orderBy("doc_id")
-
-  def x3LangId(spark: SparkSession, dir: String): DataFrame = {
-    implicit val s: SparkSession = spark
-    Tables
-      .documents(spark, dir)
-      .select(
-        $"doc_id",
-        $"lang",
-        TextOps.langIdHeuristicNative($"text").as("lang_pred")
-      )
-      .orderBy("doc_id")
-  }
-
-  /** Content fingerprint (rolling-identity hash of normalized text). */
-  def x4Fingerprint(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .documents(spark, dir)
-      .select($"doc_id", graft.text.TextOps.fingerprint($"text").as("fingerprint"))
-      .orderBy("doc_id")
-
-  /** x16 — quality-proportional sampling: each document admitted with
-    * probability = its UNIQUE-word fraction (1 − the x2 gopher
-    * dup_word_frac, which spans 0–0.7 on this corpus — repetitive
-    * documents survive in proportion to quality instead of dying at a
-    * hard cutoff), decided by the x9 seeded md5-uniform. Both halves
-    * are restatements of hash-green machinery: the metric is rounded
-    * 6dp on both engines before the 1−x complement, so the threshold
-    * compare is bit-stable.
-    */
-  def x16QualitySample(spark: SparkSession, dir: String): DataFrame =
-    TextOps
-      .sampleByQuality(
-        TextOps
-          .gopherQuality(Tables.documents(spark, dir), "doc_id", "text")
-          .select($"doc_id", (lit(1.0) - $"dup_word_frac").as("uniq_word_frac")),
-        "doc_id", "uniq_word_frac", seed = QueryParams.X16Seed
-      )
-      .orderBy("doc_id")
-
-  /** x5 — PII/URL redaction (the standard pre-training scrub). The
-    * synthetic corpus carries no natural PII, so the query plants a
-    * deterministic email + URL + long digit run per document (derived
-    * from doc_id — relationally expressible, so the oracle plants the
-    * identical text) and redacts; the hash compare then proves all
-    * three regex rules produce identical output across engines,
-    * including the URL rule's trailing-punctuation carve-out.
-    */
-  def x5RedactPii(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .documents(spark, dir)
-      .select(
-        $"doc_id",
-        TextOps.redactPii(
-          concat(
-            $"text",
-            lit(" contact user"), $"doc_id".cast("string"),
-            lit("@mail.example.com or (https://site"), $"doc_id".cast("string"),
-            lit(".example.org/path). acct 1234567"), $"doc_id".cast("string")
-          )
-        ).as("clean_text")
-      )
-      .orderBy("doc_id")
-
-  /** Exact dedup by content hash. The test corpus has no natural exact
-    * dups, so the query dedups the corpus unioned with an id-shifted
-    * copy of itself — every doc forms a group of 2 with a keeper.
-    */
-  def d1ExactDedup(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select("doc_id", "text")
-    val copies = docs.select(($"doc_id" + 1000000L).as("doc_id"), $"text")
-    Dedup
-      .exactDuplicates(docs.unionByName(copies), "doc_id", "text")
-      .orderBy("doc_id")
-  }
-
-  /** MinHash (k=16) + LSH banding (8 bands × 2 rows) near-dup pairs,
-    * verified with exact 3-gram Jaccard ≥ 0.3.
-    */
-  def d2MinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    Dedup
-      .minhashLshPairs(Tables.documents(spark, dir), "doc_id", "text", n = 3, k = 16, bands = 8, threshold = 0.3)
-      .orderBy("id_a", "id_b")
-
-  /** d8 — near-dup cluster resolution: connected components over the d2
-    * pair list (pointer-jumping min-label propagation); component =
-    * minimum doc id of the cluster = the canonical keeper.
-    */
-  def d8Components(spark: SparkSession, dir: String): DataFrame =
-    Dedup
-      .connectedComponents(
-        Dedup.minhashLshPairs(Tables.documents(spark, dir), "doc_id", "text", n = 3, k = 16, bands = 8, threshold = 0.3),
-        "id_a",
-        "id_b"
-      )
-      .orderBy("component", "id")
-
-  /** d8b — the deduplicated corpus itself: every document except
-    * non-keeper near-dup cluster members (keeper = cluster min id).
-    */
-  def d8bDedupFilter(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val clusters = Dedup.connectedComponents(
-      Dedup.minhashLshPairs(docs, "doc_id", "text", n = 3, k = 16, bands = 8, threshold = 0.3),
-      "id_a",
-      "id_b"
-    )
-    Dedup
-      .keepersOnly(docs, "doc_id", clusters)
-      .select("doc_id", "source")
-      .orderBy("doc_id")
-  }
-
-  /** d9 — incremental near-dup dedup against the materialized MinHash
-    * index ([[graft.dedup.Dedup.writeMinhashIndex]]): corpus =
-    * documents with doc_id % 3 != 0 (indexed), increment batch =
-    * doc_id % 3 == 0; result = every near-dup pair the increment
-    * introduces (batch×corpus via the index plus batch-internal) —
-    * semantically the d2 pair list restricted to pairs touching the
-    * batch, which is exactly what the oracle recomputes. The index
-    * build is INSIDE the query on purpose: the bench measures the real
-    * end-to-end increment flow (build + probe), and correctness only
-    * sees the output surface.
-    */
-  def d9IncrementalMinhash(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val path = QueryParams.indexScratch("d9_minhash", dir)
-    // pure probe (no appends) against a deterministic index — the build
-    // is shared across unchanged-data runs (seedOnce), so bench reps
-    // time the INCREMENT's probe, not a corpus re-index
-    QueryParams.seedOnce(spark, path, s"d9 v2 ${QueryParams.tableStamp(spark, s"$dir/documents.parquet")}") {
-      Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", path, n = 3, k = 16, bands = 8)
-    }
-    Dedup
-      .incrementalLshPairs(spark, path, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text", threshold = 0.3)
-      .orderBy("id_a", "id_b")
-  }
-
-  /** d9b — incremental EXACT dedup: batch rows (doc_id % 3 == 0) whose
-    * normalized-text fingerprint the indexed corpus (doc_id % 3 != 0)
-    * has never seen. Null-safe: a NULL-text batch row is non-novel
-    * because the corpus contains NULL-text docs.
-    */
-  def d9bNovelFilter(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    val path = QueryParams.indexScratch("d9b_fingerprints", dir)
-    QueryParams.seedOnce(spark, path, s"d9b v2 ${QueryParams.tableStamp(spark, s"$dir/documents.parquet")}") {
-      Dedup.writeFingerprintIndex(docs.filter(col("doc_id") % 3 =!= 0), "text", path)
-    }
-    Dedup
-      .novelOnly(spark, path, docs.filter(col("doc_id") % 3 === 0), "text")
-      .select("doc_id", "source")
-      .orderBy("doc_id")
-  }
-
-  /** T1/T3/W5 — a REAL Structured Streaming run whose end state is
-    * oracle-checked: events split into three arrival files on
-    * `event_id mod 3`, replayed as three micro-batches and aggregated
-    * into 5-minute event-time candles per user in COMPLETE output mode
-    * (reference `processors/default.py:71-75` leading-edge bars;
-    * `messages.py:189-203` boundary floor). Complete mode makes
-    * the end state equal the one-shot batch aggregate regardless of
-    * micro-batch arrival order, which is exactly the contract the
-    * DuckDB oracle states relationally. StreamingSpec pins streaming ≡
-    * batch bit-parity for windowed aggs; this row hash-pins the SAME
-    * semantics against a second engine, end to end through a real
-    * stream. The float sum is rounded on both sides (the partial-agg
-    * ordering discipline); the window bucket is pure integer division.
-    *
-    * Scale note: COMPLETE mode is the oracle vehicle, not the 100 TB
-    * path — its state is every window ever seen. The production form is
-    * watermark + append ([[graft.streaming.Streams.windowedAgg]], W5),
-    * whose streaming ≡ batch parity StreamingSpec pins; this query
-    * exists to hash-pin the shared window/agg semantics cross-engine.
-    */
-  def t3StreamCandles(spark: SparkSession, dir: String): DataFrame = {
-    val root = QueryParams.indexScratch("t3_stream", dir)
-    val src = s"$root/src"
-    // v2: arrival mtimes pinned
-    val stamp = s"t3 v2 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Tables.events(spark, dir).select($"event_id", $"ts_us", $"user_id", $"value")
-      Replay.arrivals(spark, src, (0 to 2).map(i => ev.filter(pmod($"event_id", lit(3L)) === i)))
-    }
-    Replay
-      .toMemory(spark, src, "t3_candles", dir, outputMode = "complete") {
-        _.withColumn("bucket_us", expr("(ts_us div 300000000) * 300000000"))
-          .groupBy($"user_id", $"bucket_us")
-          .agg(
-            count("*").as("n"),
-            round(sum($"value"), 4).as("sum_v"),
-            max($"event_id").as("last_event")
-          )
-      }
-      .orderBy("user_id", "bucket_us")
-  }
-
-  /** T3b — the SCALE path's emission semantics hash-pinned: the same
-    * event stream as t3, but through watermark + APPEND mode (the
-    * [[graft.streaming.Streams.windowedAgg]] form that runs at 100 TB
-    * — bounded state, windows emitted once when the watermark closes
-    * them, late rows dropped). Determinism construction:
-    *
-    *  - the three micro-batch files are TIME-ORDERED tertiles (ntile
-    *    over (ts_us, event_id)), so no real row is ever late — each
-    *    batch's min event time exceeds the previous batch's max, and
-    *    the watermark (10 min behind the running max) can never
-    *    overtake an unseen row. The no-late-drops contract is thereby
-    *    stated BY CONSTRUCTION, and the oracle needs no drop clause.
-    *  - a sentinel "flusher" row (user_id = -1) rides at the end of
-    *    the LAST file, mid-window two windows past the last real one:
-    *    ts = ((max div W) + 2)·W + W/2. The final watermark lands at
-    *    (max div W)·W + W/2 — STRICTLY INSIDE the last real window,
-    *    150 s from either boundary, so the emitted set is immune to
-    *    the engine's ≤-vs-< eviction boundary and to the internal
-    *    micros→millis watermark floor. Closed (emitted): every window
-    *    strictly before the last real one. Withheld: the last real
-    *    window (it has data — a wrong eager emission flips the hash)
-    *    and the flusher's own window (a sentinel leak flips it too).
-    *  - batch order is the tertile order ([[Replay.arrivals]]).
-    *
-    * The oracle states the same set relationally: group-by candles
-    * over events restricted to buckets strictly before the last one.
-    * `spark.sql.streaming.noDataMicroBatches.enabled` (default true)
-    * is pinned explicitly — the final no-data batch is what lets the
-    * flusher-advanced watermark evict the closed windows under
-    * `Trigger.AvailableNow`.
-    */
-  def t3bStreamCandlesAppend(spark: SparkSession, dir: String): DataFrame = {
-    val root = QueryParams.indexScratch("t3b_stream", dir)
-    val src = s"$root/src"
-    val stamp = s"t3b v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Tables.events(spark, dir).select($"event_id", $"ts_us", $"user_id", $"value")
-      val maxTs = ev.agg(max($"ts_us")).head().getLong(0)
-      val flusherTs = ((maxTs / 300000000L) + 2L) * 300000000L + 150000000L
-      val tiled = ev.withColumn(
-        "_t",
-        ntile(3).over(org.apache.spark.sql.expressions.Window.orderBy($"ts_us", $"event_id")))
-      val parts = (1 to 3).map(i => tiled.filter($"_t" === i).drop("_t"))
-      val flusher = spark.createDataFrame(
-        java.util.List.of(org.apache.spark.sql.Row(-1L, flusherTs, -1L, 0.0)), parts.last.schema)
-      Replay.arrivals(spark, src, parts.init :+ parts.last.unionByName(flusher))
-    }
-    Sessions.withConf(spark, "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
-      Replay.toMemory(spark, src, "t3b_candles", dir) {
-        _.withColumn("ts", timestamp_micros($"ts_us"))
-          .withWatermark("ts", "10 minutes")
-          .groupBy(window($"ts", "5 minutes"), $"user_id")
-          .agg(
-            count("*").as("n"),
-            round(sum($"value"), 4).as("sum_v"),
-            max($"event_id").as("last_event")
-          )
-          .select(
-            $"user_id",
-            unix_micros($"window.start").as("bucket_us"),
-            $"n", $"sum_v", $"last_event")
-      }
-    }.orderBy("user_id", "bucket_us")
-  }
-
-  /** T6 — stateful streaming dedup END-STATE through a real stream
-    * (reference `orchestrator.py:339-371` seen-fill_id set; dedup is by
-    * ID ALONE, first arrival wins even when payloads differ). Events
-    * become three micro-batches (`fill_id = event_id div 3`, batch `i =
-    * event_id mod 3` — so a fill can recur ACROSS batches but is unique
-    * WITHIN each, which is what makes "first arrival" deterministic
-    * under Spark's intra-batch shuffle). Batch order is pinned
-    * ([[Replay.arrivals]]). `dropDuplicates("fill_id")` in append mode
-    * then emits exactly the earliest batch's row per fill, i.e. the row
-    * with `min(event_id)` per div-3 group — which the DuckDB oracle
-    * states relationally. The
-    * payload column rides along, so a wrong-arrival keeper flips the
-    * hash, pinning the ORDERING contract, not just the key set.
-    *
-    * Scale note: unbounded keys ⇒ the production form is the
-    * watermarked [[graft.streaming.Streams.dedupByIds]] (state TTL);
-    * this bounded replay exists to hash-pin the keep-first semantics
-    * cross-engine.
-    */
-  def t6StreamDedup(spark: SparkSession, dir: String): DataFrame = {
-    val root = QueryParams.indexScratch("t6_stream", dir)
-    val src = s"$root/src"
-    // v2: arrival mtimes stamped as each batch lands
-    val stamp = s"t6 v2 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Tables
-        .events(spark, dir)
-        .select(
-          expr("event_id div 3").as("fill_id"),
-          $"event_id",
-          $"event_type".as("payload")
-        )
-      Replay.arrivals(spark, src, (0 to 2).map(i => ev.filter(pmod($"event_id", lit(3L)) === i)))
-    }
-    Replay
-      .toMemory(spark, src, "t6_dedup", dir)(_.dropDuplicates("fill_id"))
-      .select($"fill_id", $"event_id", $"payload")
-      .orderBy("fill_id")
-  }
-
-  /** T8 — checkpoint/resume END-STATE hash-pinned through a REAL
-    * stop-and-restart: the stream runs TWICE against the same
-    * checkpoint (two `Trigger.AvailableNow` executions — a clean stop
-    * after the first, a genuine state-store + offset-log recovery into
-    * the second), deduping fills by id with keep-first semantics
-    * across the restart boundary.
-    *
-    * Construction (fill_id = event_id div 2, so every fill has an
-    * even and an odd member):
-    *  - run 1, file 1: the EVEN member of every even fill; file 2:
-    *    the ODD member of those same fills — an in-run duplicate,
-    *    dropped by in-memory state (arrival pinned by
-    *    [[Replay.copyArrival]], so the even member is always the
-    *    keeper);
-    *  - run 2, file 3: the odd member of every even fill AGAIN (a
-    *    duplicate that can only be dropped if the seen-set was
-    *    RESTORED from the checkpoint — broken recovery emits a second
-    *    row per even fill and fails the row-count gate) plus the even
-    *    member of every odd fill (novel keys after resume, which
-    *    broken recovery could also lose — both failure directions
-    *    flip the result).
-    *
-    * The sink is `foreachBatch` appending to a per-invocation scratch
-    * dir (the memory sink does not recover from a checkpoint in
-    * append mode), so the final table is the union of both runs'
-    * emissions. The DuckDB oracle states the end state relationally:
-    * arg-min per fill over exactly the replayed subset (all events
-    * except the never-delivered odd members of odd fills).
-    */
-  def t8StreamResume(spark: SparkSession, dir: String): DataFrame = {
-    val root = QueryParams.indexScratch("t8_stream", dir)
-    val stamp = s"t8 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Tables
-        .events(spark, dir)
-        .select(expr("event_id div 2").as("fill_id"), $"event_id", $"event_type".as("payload"))
-      val even = $"event_id" % 2 === 0
-      val evenFill = expr("event_id div 2") % 2 === 0
-      Seq(
-        ev.filter(even && evenFill),            // f1: keeper rows, run 1
-        ev.filter(!even && evenFill),           // f2: in-run duplicates
-        ev.filter((even && !evenFill) || (!even && evenFill)) // f3: run 2
-      ).zipWithIndex.foreach { case (df, i) =>
-        df.coalesce(1).write.mode("overwrite").parquet(s"$root/f${i + 1}")
-      }
-    }
-    val streamDir = java.nio.file.Files.createTempDirectory("t8src").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("t8ckpt").toString
-    val out = java.nio.file.Files.createTempDirectory("t8out").toString + "/rows"
-    val sch = spark.read.parquet(s"$root/f1").schema
-    def runOnce(): Unit = {
-      val q = graft.streaming.Streams
-        .readEventStream(spark, streamDir, sch)
-        .dropDuplicates("fill_id")
-        .writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(out)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-    }
-    Replay.copyArrival(spark, s"$root/f1", streamDir)
-    Replay.copyArrival(spark, s"$root/f2", streamDir)
-    // both runs under one width: the checkpoint pins the state width at
-    // first start
-    val width = graft.streaming.Streams.adaptiveStateWidth(spark, Seq(streamDir))
-    Sessions.withConf(spark, "spark.sql.shuffle.partitions" -> width.toString) {
-      runOnce() // run 1: two micro-batches, clean stop
-      Replay.copyArrival(spark, s"$root/f3", streamDir)
-      runOnce() // run 2: recovery from the checkpoint — state restored
-    }
-    spark.read.parquet(out).orderBy("fill_id")
-  }
-
-  /** d13 — the streaming dedup-ingest END-STATE: seed the corpus + both
-    * indexes with the doc_id%3==1 documents, then gate the %3==2 and
-    * %3==0 batches through [[graft.streaming.DedupIngest.ingestBatch]]
-    * IN THAT ORDER (the exact frames DedupIngestSpec feeds the
-    * `foreachBatch` stream — spec-pinned stream ≡ sequential), and
-    * return the final corpus. The DuckDB oracle recomputes the same
-    * sequential gate: per batch, within-batch exact keeper → exact
-    * novelty vs accepted fingerprints → near-dup components over the
-    * pair graph restricted to (batch ∪ accepted) touching the batch,
-    * corpus anchors win, min batch id keeps. Scratch: the SEED build is
-    * shared across runs on unchanged testdata ([[QueryParams.seedOnce]]
-    * — keyed to the documents table's FS content stamp); the two gated
-    * batches re-run EVERY time, and the gate's replay idempotence
-    * (DedupIngestSpec) makes the end state identical whether they run
-    * against a fresh seed or an already-ingested corpus — the appends
-    * are the one non-idempotent step and the guards turn replays of
-    * them into no-ops.
-    */
-  def d13IngestCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir).select(col("doc_id"), col("source"), col("text"))
-    val root = QueryParams.indexScratch("d13_ingest", dir)
-    val seed = docs.filter(col("doc_id") % 3 === 1)
-    val corpusOut = s"$root/corpus"
-    // v2: bucketed fingerprint/minhash index layout (stale v1 scratch
-    // lacks the partition columns and must rebuild)
-    val stamp = s"d13 v2 ${QueryParams.tableStamp(spark, s"$dir/documents.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      DedupIngest.initIndexes(seed, "doc_id", "text", s"$root/idx")
-      seed.write.mode("overwrite").parquet(corpusOut)
-    }
-    DedupIngest.ingestBatch(spark, s"$root/idx", corpusOut, docs.filter(col("doc_id") % 3 === 2), "doc_id", "text")
-    DedupIngest.ingestBatch(spark, s"$root/idx", corpusOut, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text")
-    spark.read.parquet(corpusOut).select("doc_id", "source").orderBy("doc_id")
-  }
-
-  /** d14 — the SEMANTIC ingest END-STATE: seed the IVF index with the
-    * vec_id%3==1 embeddings under the n3 fitted model (k=16 — the
-    * d10/d12 pin), then gate the %3==2 and %3==0 batches through
-    * [[graft.streaming.SemDedupIngest.ingestBatch]] IN THAT ORDER and
-    * return the final index contents (id, cell). The fitted oracle
-    * recomputes the sequential gate relationally: cell assignment from
-    * the centroid literals, within-cell cosine pairs, two unrolled
-    * recursive closures with corpus-seniority anchoring — the d13
-    * construction in embedding space. Scratch: seed index shared across
-    * runs on unchanged testdata ([[QueryParams.seedOnce]], the d13
-    * note); the two gated batches re-run every time and the id guard
-    * (SemDedupIngestSpec replay test) keeps the end state identical.
-    */
-  def d14SemIngest(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val root = QueryParams.indexScratch("d14_sem_ingest", dir)
-    val stamp = s"d14 v1 ${QueryParams.tableStamp(spark, s"$dir/embeddings.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      Similarity.writeIvfIndex(
-        emb.filter(col("vec_id") % 3 === 1), "vec_id", "embedding", root,
-        nCentroids = 16, centroidModel = Some(n3FittedCentroids(spark, dir)))
-    }
-    SemDedupIngest.ingestBatch(spark, root, emb.filter(col("vec_id") % 3 === 2), "vec_id", "embedding", QueryParams.D10Cos)
-    SemDedupIngest.ingestBatch(spark, root, emb.filter(col("vec_id") % 3 === 0), "vec_id", "embedding", QueryParams.D10Cos)
-    spark.read
-      .parquet(root)
-      .select(col("id").as("vec_id"), col("cell").cast("int").as("cell"))
-      .orderBy("vec_id")
-  }
-
-  /** x15 — token-budget mixture sampling: domain weights derived from
-    * the source NAME (digits % 3 + 1 — relationally expressible so the
-    * oracle recomputes them), integer-exact budget split over a fixed
-    * total, strict seeded-hash admission. The distinct-domain collect
-    * is bounded model state (the kmeans-precedent class).
-    */
-  def x15TokenBudgetMix(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables
-      .documents(spark, dir)
-      .select($"doc_id", $"source", TextOps.tokenCount($"text").cast("long").as("n_tokens"))
-    val domains = base.select("source").distinct().collect().map(_.getString(0))
-    val weights = domains
-      .map(d => d -> ("""\d+""".r.findFirstIn(d).getOrElse("0").toLong % 3 + 1))
-      .toMap
-    TextOps
-      .sampleTokenBudget(
-        base, "doc_id", "source", "n_tokens",
-        TextOps.mixtureBudgets(weights, QueryParams.X15Budget),
-        seed = QueryParams.X15Seed
-      )
-      .select("doc_id", "source", "n_tokens", "cum_tokens")
-      .orderBy("doc_id")
-  }
-
-  /** d11 — leakage-safe train/val/test split: the x9 hash rule applied
-    * to the near-dup GROUP key (d8's components) instead of the doc id,
-    * so a near-copy of a training document can never land in eval.
-    * Singletons keep their x9 assignment bit-for-bit.
-    */
-  def d11SafeSplit(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    TextOps
-      .assignSplitLeakageSafe(
-        docs.select($"doc_id", $"source"),
-        "doc_id",
-        Dedup.minhashLshPairs(docs, "doc_id", "text", n = 3, k = 16, bands = 8, threshold = 0.3),
-        seed = 7L
-      )
-      .select("doc_id", "source", "group_key", "split")
-      .orderBy("doc_id")
-  }
-
-  /** d12 — SEMANTIC test-set decontamination: bipartite SemDeDup
-    * between a corpus/benchmark split of `embeddings` (every 5th vec is
-    * the "benchmark", d7's split convention) — the paraphrase leak that
-    * text-Jaccard d7 cannot see. Same fitted model and k=16 pin as
-    * d10/n3; benchmark side broadcasts.
-    */
-  def d12SemDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    Similarity
-      .crossSemDedupPairs(
-        emb.filter(pmod($"vec_id", lit(5)) =!= 0),
-        emb.filter(pmod($"vec_id", lit(5)) === 0),
-        "vec_id", "embedding",
-        threshold = QueryParams.D10Cos,
-        nClusters = 16,
-        centroidModel = Some(n3FittedCentroids(spark, dir))
-      )
-      .orderBy("corpus_id", "bench_id")
-  }
-
-  /** d10 — SemDeDup semantic near-dup pairs: k-means cells (the SAME
-    * fitted model as n3 — one fit, two consumers) bound the exact
-    * cosine pair search to within-cell. End-to-end fitted oracle: the
-    * dump-time centroid literals reproduce cell assignment in DuckDB,
-    * the pair join + cosine are pure relational algebra over them.
-    */
-  def d10Semdedup(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    Similarity
-      .semDedupPairs(
-        emb, "vec_id", "embedding",
-        threshold = QueryParams.D10Cos,
-        nClusters = 16,
-        centroidModel = Some(n3FittedCentroids(spark, dir))
-      )
-      .orderBy("id_a", "id_b")
-  }
-
-  /** 60-bit SimHash near-dup pairs (hamming ≤ 20 over synthetic docs —
-    * wide threshold so the operator produces work on this corpus).
-    */
-  def d3Simhash(spark: SparkSession, dir: String): DataFrame =
-    Dedup
-      .simhashPairs(Tables.documents(spark, dir), "doc_id", "text", maxHamming = 20)
-      .orderBy("id_a", "id_b")
-
-  /** Exact n-gram Jaccard near-dup pairs with length-band blocking. */
-  def d4NgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    Dedup
-      .ngramJaccardPairs(Tables.documents(spark, dir), "doc_id", "text", "n_chars", n = 3, threshold = 0.3)
-      .orderBy("id_a", "id_b")
-
-  /** Embedding-cosine near-dup pairs — the exact O(n²) VERIFIER, kept
-    * as the oracle-checkable ground truth at test scale only. The scale
-    * path is [[d6EmbedLshPairs]]; do not run this form on a large corpus
-    * (the all-pairs join is quadratic by construction). Threshold set to
-    * the corpus's actual similarity regime.
-    */
-  def d5EmbedNeardup(spark: SparkSession, dir: String): DataFrame =
-    Similarity
-      .cosineNearDupPairs(Tables.embeddings(spark, dir), "vec_id", "embedding", 0.4)
-      .orderBy("id_a", "id_b")
-
-  /** D7 — test-set decontamination: bipartite MinHash-LSH between a
-    * synthetic corpus/benchmark split of `documents` (every 5th doc is
-    * the "benchmark"); emitted pairs are benchmark items that leaked
-    * into the corpus at Jaccard ≥ 0.3. Benchmark side broadcast.
-    */
-  def d7Decontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.documents(spark, dir)
-    Dedup
-      .crossLshPairs(
-        docs.filter(pmod($"doc_id", lit(5)) =!= 0),
-        docs.filter(pmod($"doc_id", lit(5)) === 0),
-        "doc_id", "text"
-      )
-      .orderBy("id_a", "id_b")
-  }
-
-  /** D6 — the 100 TB embedding near-dup path: banded sign-LSH candidate
-    * pairs + exact cosine verify (see `Similarity.lshNearDupPairs` for
-    * the recall math). SimilaritySpec proves ≥95% recall vs the
-    * oracle-checked d5 on the same corpus.
-    */
-  def d6EmbedLshPairs(spark: SparkSession, dir: String): DataFrame =
-    Similarity
-      // EXPLICIT pin (bits=2, tables=8): the d6_buckets oracle bakes this
-      // config's hyperplanes as SQL literals, so it must not float with
-      // the corpus. The operator's default path now derives a scale-safe
-      // config from (count, threshold) via lshConfigFor — the quadratic
-      // small-config can only happen by a pin like this one.
-      .lshNearDupPairs(Tables.embeddings(spark, dir), "vec_id", "embedding", 0.4, bits = 2, tables = 8)
-      .orderBy("id_a", "id_b")
-
-  /** The d6 BLOCKING step alone — seeded sign-LSH bucket assignment at
-    * d6's exact configuration (bits=2, tables=8, seed=42, corpus
-    * dim=64). Oracle-checkable because the hyperplanes are exported as
-    * SQL literals: DuckDB recomputes every bucket bit from the same
-    * planes, pinning the candidate generation the d6/n2 scale path
-    * rides; the end-metric recall stays covered by SimilaritySpec.
-    */
-  def d6Buckets(spark: SparkSession, dir: String): DataFrame =
-    Similarity
-      .bucketAssignments(Tables.embeddings(spark, dir), "vec_id", "embedding",
-        bits = 2, tables = 8, seed = 42L, dim = 64)
-      .orderBy("tbl", "bucket", "id")
-
-  /** The n2 BLOCKING step alone — the same hyperplane-literal pin as
-    * [[d6Buckets]] at n2's configuration (bits=4, tables=6, seed=42).
-    */
-  def n2Buckets(spark: SparkSession, dir: String): DataFrame =
-    Similarity
-      .bucketAssignments(Tables.embeddings(spark, dir), "vec_id", "embedding",
-        bits = 4, tables = 6, seed = 42L, dim = 64)
-      .orderBy("tbl", "bucket", "id")
-
-  /** The n3/IVF BLOCKING step alone — nearest-centroid cell assignment
-    * under the deterministic id-fallback centroid set (first 16 corpus
-    * vectors by id), which is pure relational algebra and so
-    * hash-checkable: DuckDB recomputes every centroid dot with the same
-    * left-to-right fold and the same (score, cell) tie-break. The n3
-    * query itself runs the SAME machinery with the k-means-fitted model
-    * (Scala-side state; recall spec covers the end metric).
-    */
-  def n3Cells(spark: SparkSession, dir: String): DataFrame =
-    Similarity
-      .cellAssignments(Tables.embeddings(spark, dir), "vec_id", "embedding", nCentroids = 16)
-      .orderBy("id")
-
-  /** Brute-force cosine top-5 for the first 10 vectors as queries. */
-  def n1AnnBrute(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    Similarity
-      .bruteForceTopK(emb, "vec_id", "embedding", emb.filter($"vec_id" < 10), 5)
-      .orderBy("query_id", "nbr_id")
-  }
-
-  /** Multi-table sign-LSH ANN top-5 (6 tables × 4 bits). */
-  def n2AnnLsh(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    Similarity
-      .lshTopK(emb, "vec_id", "embedding", emb.filter($"vec_id" < 10), 5, bits = 4, tables = 6)
-      .orderBy("query_id", "nbr_id")
-  }
-
-  /** The n3 fitted model, shared VERBATIM between the query and its
-    * dump-time oracle rendering (QueryParams discipline): deterministic,
-    * so both fits produce identical binary64 centroids.
-    */
-  def n3FittedCentroids(spark: SparkSession, dir: String): Array[Array[Double]] =
-    Similarity.kmeansCentroids(Tables.embeddings(spark, dir), "vec_id", "embedding", k = 16)
-
-  def n5FittedPq(spark: SparkSession, dir: String): Array[Array[Array[Double]]] =
-    Similarity.pqSubCentroids(Tables.embeddings(spark, dir), "vec_id", "embedding")
-
-  /** n5 — product-quantization ANN top-5 by asymmetric distance: 8
-    * subspaces × 16 euclidean sub-centroids (fitted, bounded sample),
-    * codes via the native augmented-dot argmax, ADC from the literal
-    * codebook. End-to-end fitted oracle: the augmented codebook renders
-    * as literals, DuckDB re-derives codes and re-folds the per-subspace
-    * distances in the same order.
-    */
-  def n5AnnPq(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    Similarity
-      .pqTopK(emb, "vec_id", "embedding", emb.filter($"vec_id" < 10), 5, n5FittedPq(spark, dir))
-      .orderBy("query_id", "nbr_id")
-  }
-
-  /** IVF-quantized ANN top-5 (16 cells, 6 probes) with a k-means model
-    * fitted on a bounded deterministic sample (`kmeansCentroids`).
-    */
-  def n3AnnIvf(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val model = n3FittedCentroids(spark, dir)
-    Similarity
-      .ivfTopK(emb, "vec_id", "embedding", emb.filter($"vec_id" < 10), 5, nCentroids = 16, nProbe = 6, centroidModel = Some(model))
-      .orderBy("query_id", "nbr_id")
-  }
-
-  /** ivfpq — the FULL IVF-PQ serving path against the materialized
-    * index artifact ([[Similarity.writeIvfPqIndex]]): partition-pruned
-    * probe of the 6 best cells per query → ADC over the stored codes
-    * (column-pruned — full vectors unread in stage 1) → exact cosine
-    * re-rank of the 50-deep shortlist → top-5. Both frozen models are
-    * the fitted ones n3/n5 already pin (coarse k-means cells, 8×16 PQ
-    * sub-centroids), so the oracle renders BOTH as literals and
-    * re-derives cells, codes, ADC shortlist, and re-rank relationally —
-    * the direct CORRECTNESS row for the indexed probe that
-    * SimilaritySpec previously covered only via equivalence to the flat
-    * twin. Index build shared across reps via [[QueryParams.seedOnce]]
-    * (the write is a pure overwrite of deterministic content, so
-    * rebuild-vs-reuse cannot change the result).
-    */
-  def ivfpqTopK(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val root = QueryParams.indexScratch("ivfpq", dir)
-    val stamp = s"ivfpq v1 ${QueryParams.tableStamp(spark, s"$dir/embeddings.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      Similarity.writeIvfPqIndex(
-        emb, "vec_id", "embedding", root,
-        nCentroids = 16, m = 8, ks = 16,
-        centroidModel = Some(n3FittedCentroids(spark, dir)),
-        pqModel = Some(n5FittedPq(spark, dir)))
-    }
-    Similarity
-      .ivfPqTopKIndexed(spark, root, emb.filter($"vec_id" < 10), "vec_id", "embedding",
-        k = 5, nProbe = 6, shortlist = 50)
-      .orderBy("query_id", "nbr_id")
-  }
-
-  /** Int8-quantized brute-force ANN top-5: the memory-bound scan path
-    * (4× smaller corpus bytes). Fully SQL-expressible — the DuckDB
-    * oracle replicates quantize (floor(x/scale + 0.5)) and the integer
-    * cosine bit-for-bit.
-    */
-  def n4AnnQuantized(spark: SparkSession, dir: String): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    Similarity
-      .quantizedTopK(emb, "vec_id", "embedding", emb.filter($"vec_id" < 10), 5)
-      .orderBy("query_id", "nbr_id")
-  }
-
-  /** Multimodal pipeline: pack → batched REAL decode (jpeg/png pixels,
-    * wav PCM) → rollup per format, CHECKED row-by-row against the
-    * committed decode-expectation fixture (GenM1Fixture): `n_match`
-    * counts rows whose live-decoded feature vector and packed width
-    * equal the fixture's — so the DuckDB oracle, which recomputes the
-    * whole aggregate from the fixture alone (media decode is not
-    * SQL-expressible; the fixture is the hashable surface), hash-fails
-    * if any decode diverges (n_match < n_media, and avg_f0 moves).
-    */
-  def m1Multimodal(spark: SparkSession, dir: String): DataFrame = {
-    val media = graft.multimodal.Multimodal.packDocuments(Tables.documents(spark, dir))
-    val fixture = spark.read
-      .parquet(QueryParams.M1FixturePath)
-      .select($"doc_id", $"width".as("exp_width"), $"features".as("exp_features"))
-    graft.multimodal.Multimodal
-      .extractFeatures(media, "media")
-      .join(broadcast(fixture), $"media_id" === $"doc_id", "left")
-      .groupBy($"meta.format".as("format"))
-      .agg(
-        count(lit(1)).as("n_media"),
-        round(avg(element_at($"features", 1)), 6).as("avg_f0"),
-        round(avg($"meta.width"), 2).as("avg_width"),
-        count(when($"features" <=> $"exp_features" && $"meta.width" <=> $"exp_width", 1)).as("n_match")
-      )
-      .orderBy("format")
-  }
-
-  /** Video pipeline: pack documents as MJPEG AVIs → REAL container
-    * parse + per-frame JPEG decode ([[graft.multimodal.Multimodal.videoStats]])
-    * → per-frame-count rollup, CHECKED row-by-row against the committed
-    * decode-expectation fixture (GenM2Fixture) exactly like m1:
-    * `n_match` counts videos whose live frame count AND mean frame
-    * features equal the fixture's, so the DuckDB oracle (which
-    * recomputes the aggregate from the fixture alone — video decode is
-    * not SQL-expressible) hash-fails if any decode diverges.
-    */
-  def m2VideoFrames(spark: SparkSession, dir: String): DataFrame = {
-    val media = graft.multimodal.Multimodal.packVideos(Tables.documents(spark, dir))
-    val fixture = spark.read
-      .parquet(QueryParams.M2FixturePath)
-      .select($"doc_id", $"n_frames".as("exp_n_frames"), $"features".as("exp_features"))
-    graft.multimodal.Multimodal
-      .videoStats(media, "media", maxFrames = 8)
-      .join(broadcast(fixture), $"media_id" === $"doc_id", "left")
-      .groupBy($"n_frames")
-      .agg(
-        count(lit(1)).as("n_videos"),
-        round(avg(element_at($"features", 1)), 6).as("avg_f0"),
-        count(when($"features" <=> $"exp_features" && $"n_frames" <=> $"exp_n_frames", 1)).as("n_match")
-      )
-      .orderBy("n_frames")
-  }
-
-  /** m3 — the exotic-codec QUARANTINE contract, hash-pinned: a
-    * mixed-codec media table ([[graft.multimodal.Multimodal.packVideosMixed]])
-    * plants undecodable payloads by doc_id rule (%7==0 a non-RIFF
-    * "h264" stream, %7==3 a truncated AVI), [[graft.multimodal.Multimodal.videoStats]]
-    * decodes the rest for REAL, and the aggregate groups by the
-    * quarantined flag. Because quarantine is a pure function of doc_id
-    * by construction, DuckDB recomputes BOTH groups relationally —
-    * n_videos from the %7 rule, sum_frames from the %6+2 frame rule for
-    * the decodable group — so a decoder that silently emits features
-    * for garbage (or quarantines a valid AVI) breaks the hash.
-    */
-  def m3VideoQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    val media = graft.multimodal.Multimodal.packVideosMixed(Tables.documents(spark, dir))
-    graft.multimodal.Multimodal
-      .videoStats(media, "media", maxFrames = 8)
-      .groupBy($"n_frames".isNull.as("quarantined"))
-      .agg(
-        count(lit(1)).as("n_videos"),
-        coalesce(sum($"n_frames"), lit(0)).cast("long").as("sum_frames")
-      )
-      .orderBy("quarantined")
-  }
-
-  /** A8 — LIFO entry-credit replay over a synthetic fill stream derived
-    * deterministically from lineitem (symbol per supplier, open/close
-    * actions from the line number, Decimal money).
-    */
-  def a8Lifo(spark: SparkSession, dir: String): DataFrame = {
-    val li = Tables.lineitem(spark, dir)
-    val txns = li.select(
-      concat(lit("S"), $"l_suppkey").as("symbol"),
-      // + orderkey*8 + linenumber makes the sort key TOTAL (linenumber
-      // < 8): the fold order, hence the oracle compare, is deterministic
-      (unix_timestamp($"l_shipdate") * 1000000L + $"l_orderkey" * 8 + $"l_linenumber")
-        .as("executed_at_us"),
-      element_at(
-        array(lit("Buy to Open"), lit("Sell to Close"), lit("Sell to Open"), lit("Buy to Close")),
-        (pmod($"l_linenumber", lit(4)) + 1).cast("int")
-      ).as("action"),
-      // price via MULTIPLICATION, not division: 2dp × (1 + 2dp) terminates
-      // at 4dp, so round(_, 4) never sits on a tie — division (ep/qty with
-      // qty = 8, 16, 32...) lands exactly on x.xxxx5 ties where Spark's
-      // exact-expansion HALF_UP and DuckDB's multiply-based round() pick
-      // opposite sides (~1% of rows diverge).
-      round($"l_extendedprice" * (lit(1.0) + $"l_discount"), 4).as("price"),
-      $"l_extendedprice".as("value"),
-      when($"l_discount" > 0.05, "Credit").otherwise("Debit").as("value_effect"),
-      round($"l_extendedprice" * (lit(1.0) + $"l_tax"), 4).as("net_value"),
-      greatest($"l_quantity".cast("int"), lit(1)).as("quantity")
-    )
-    // every symbol positioned at the constant 25: the general
-    // entryCredits(txns, distinct-symbols × 25) inner join is the
-    // identity here, so the uniform fast path drops the second lineitem
-    // scan, the distinct exchange and the broadcast join (equality
-    // pinned by LifoSpec's uniform-path test)
-    graft.accounts.Lifo
-      .entryCreditsUniform(txns, 25)
-      // compare surface: DECIMAL(18,6) money → DOUBLE (lossless at 6 dp;
-      // the j2 lesson — DECIMAL canonicalization is format-ambiguous in
-      // the driver hash), count → BIGINT to match DuckDB's count(*)
-      .select(
-        $"symbol",
-        $"entry_credit".cast("double").as("entry_credit"),
-        $"fees".cast("double").as("fees"),
-        $"weighted_price".cast("double").as("weighted_price"),
-        $"transaction_count".cast("long").as("transaction_count")
-      )
-      .orderBy("symbol")
-  }
-
-  /** T5 — HullMacd confluence signal engine over each user's value
-    * series (user ≈ symbol, value ≈ close, ET session gates on the
-    * event timestamps).
-    */
-  def g1SignalEngine(spark: SparkSession, dir: String): DataFrame =
-    graft.signals.HullMacd
-      // assumeDeduped: the feed is already unique on (symbol, ts_us) with
-      // a real tie-break the oracle mirrors; detectSignals' own dedup
-      // would keep an arbitrary row among ties
-      .detectSignals(Replay.candleFeed(spark, dir), "symbol", "ts_us", "value", assumeDeduped = true)
-      .orderBy("symbol", "time_us", "signal_type", "direction")
-
-  /** T5/W5 — the FLAGSHIP signal engine through a REAL stream: g1's
-    * deduped candle feed replayed as three TIME-ORDERED tertile
-    * micro-batches (global ntile over (ts_us, symbol), mtime-pinned
-    * arrival — cross-batch order is the file source's contract, and
-    * the tertile split guarantees every symbol's candles arrive in
-    * time order across batches; within a batch the engine sorts) into
-    * [[graft.streaming.Streams.detectSignalsStream]] — the keyed
-    * `flatMapGroupsWithState` incremental fold — with the emitted
-    * signals accumulated in append mode. StreamingSpec pins streaming
-    * ≡ batch bit-parity engine-to-engine; this row pins the streaming
-    * fold's OUTPUT against a second engine: the oracle re-derives the
-    * signal set relationally with g1's own CTE chain, projected to the
-    * streaming engine's output columns. A drift anywhere — indicator
-    * recursion, seeding, state carry-over between micro-batches,
-    * signal arming/confluence — flips the hash.
-    */
-  def t5StreamSignals(spark: SparkSession, dir: String): DataFrame = {
-    val root = QueryParams.indexScratch("t5_stream", dir)
-    val src = s"$root/src"
-    val stamp = s"t5 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      val tiled = Replay.candleFeed(spark, dir).withColumn(
-        "_t",
-        ntile(3).over(org.apache.spark.sql.expressions.Window.orderBy($"ts_us", $"symbol")))
-      Replay.arrivals(spark, src, (1 to 3).map(i => tiled.filter($"_t" === i).drop("_t")))
-    }
-    implicit val candleEnc: org.apache.spark.sql.Encoder[graft.streaming.Streams.CandleIn] =
-      org.apache.spark.sql.Encoders.product[graft.streaming.Streams.CandleIn]
-    Replay
-      .toMemory(spark, src, "t5_signals", dir) { s =>
-        graft.streaming.Streams.detectSignalsStream(
-          s.select($"symbol", $"ts_us".as("timeUs"), $"value".as("close")).as[graft.streaming.Streams.CandleIn])
-      }
-      .select("symbol", "time_us", "signal_type", "direction", "trigger", "close_price")
-      .orderBy("symbol", "time_us", "signal_type", "direction")
-  }
-
-  /** T4/W5 — hash-pinned cross-engine: the INCREMENTAL per-candle
-    * indicator series (hull value/color, MACD value/signal/histogram;
-    * reference `charting/indicators.py:26-284` O(1) chart-state
-    * updates) through a REAL warm-started stream. Construction: g1's
-    * deduped candle feed is quartered on the global (ts_us, symbol)
-    * row_number — the FIRST quarter becomes batch HISTORY folded into
-    * per-symbol [[graft.streaming.Streams.IndicatorState]] by
-    * `seedIndicatorState` (the W5 warm start), the remaining three
-    * quarters arrive as mtime-pinned micro-batches into
-    * [[graft.streaming.Streams.indicatorSeriesStream]], which emits
-    * each candle's indicator surface from the O(1) state update. The
-    * oracle recomputes the hull/MACD recursions over each symbol's FULL
-    * series (history ∪ stream, the w2/w4 formulas at Hull(8) /
-    * MACD(4,8,3)) and projects the streamed quarters — so a drift
-    * anywhere in the incremental state (ring contents, EMA carry,
-    * prev-HMA color across the seed boundary, state hand-off between
-    * micro-batches) flips the hash. Quartering uses explicit
-    * row_number/count arithmetic, NOT ntile, so both engines derive the
-    * split from first principles.
-    */
-  def t4StreamIndicators(spark: SparkSession, dir: String): DataFrame =
-    runT4Harness(spark, dir, "t4_indicators") { (candles, seeded) =>
-      graft.streaming.Streams
-        .indicatorSeriesStream(candles, Some(seeded), hullLength = 8, fast = 4, slow = 8, signalLen = 3)
-    }
-
-  /** t4b — the same W5 incremental indicator series, same seed split,
-    * same warm start, same oracle, through the Spark-4
-    * `transformWithState` PRODUCTION API
-    * ([[graft.streaming.Streams.IndicatorSeriesProcessor]] with the
-    * RocksDB state-store provider) instead of
-    * `flatMapGroupsWithState` — so BOTH stateful streaming APIs are
-    * pinned against the one relational recomputation, and a divergence
-    * between the processor and the fold (state encoding, initial-state
-    * delivery, emission order) flips exactly one of the two hashes.
-    */
-  def t4bStreamIndicatorsTws(spark: SparkSession, dir: String): DataFrame =
-    // transformWithState needs the RocksDB provider (the default
-    // HDFS-backed one can't host its multi-column-family layout).
-    // Changelog checkpointing persists only each batch's changed keys
-    // instead of a full instance snapshot per partition per batch, so
-    // the per-commit upload follows the batch, not the state size.
-    Sessions.withConf(
-      spark,
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true"
-    ) {
-      runT4Harness(spark, dir, "t4b_indicators") { (candles, seeded) =>
-        graft.streaming.Streams
-          .indicatorSeriesTransformWithState(candles, Some(seeded), hullLength = 8, fast = 4, slow = 8, signalLen = 3)
-      }
-    }
-
-  /** The shared t4/t4b harness: the quarter split (seedOnce, one stamp
-    * for both carriers, so whichever runs first pays it) — history =
-    * the first quarter of g1's candle feed, stream = the other three
-    * quarters as arrival files — the warm-start state folded from the
-    * history, the given indicator-series stream, and the pinned output
-    * columns.
-    */
-  private def runT4Harness(
-      spark: SparkSession,
-      dir: String,
-      name: String
-  )(
-      mk: (
-          org.apache.spark.sql.Dataset[graft.streaming.Streams.CandleIn],
-          org.apache.spark.sql.KeyValueGroupedDataset[String, graft.streaming.Streams.IndicatorState]
-      ) => org.apache.spark.sql.Dataset[graft.streaming.Streams.IndicatorOut]
-  ): DataFrame = {
-    val root = QueryParams.indexScratch("t4_stream", dir)
-    val src = s"$root/src"
-    val hist = s"$root/history"
-    val stamp = s"t4 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Replay.candleFeed(spark, dir)
-      val n = ev.count()
-      val ranked = ev.withColumn(
-        "_rn",
-        row_number().over(org.apache.spark.sql.expressions.Window.orderBy($"ts_us", $"symbol")))
-      ranked.filter($"_rn" <= lit(n / 4)).drop("_rn")
-        .coalesce(1).write.mode("overwrite").parquet(hist)
-      Replay.arrivals(spark, src, (1 to 3).map { i =>
-        ranked.filter($"_rn" > lit(n * i / 4) && $"_rn" <= lit(n * (i + 1) / 4)).drop("_rn")
-      })
-    }
-    implicit val candleEnc: org.apache.spark.sql.Encoder[graft.streaming.Streams.CandleIn] =
-      org.apache.spark.sql.Encoders.product[graft.streaming.Streams.CandleIn]
-    def candles(df: DataFrame) =
-      df.select($"symbol", $"ts_us".as("timeUs"), $"value".as("close")).as[graft.streaming.Streams.CandleIn]
-    val seeded = graft.streaming.Streams
-      .seedIndicatorState(candles(spark.read.parquet(hist)), hullLength = 8, fast = 4, slow = 8, signalLen = 3)
-    Replay
-      .toMemory(spark, src, name, dir)(s => mk(candles(s), seeded))
-      .select("symbol", "time_us", "hma", "hma_color", "macd_value", "avg", "diff")
-      .orderBy("symbol", "time_us")
-  }
-
-  /** §2.11 legs synthesis, shared VERBATIM with [[GenS11Fixture]] so the
-    * fixture generator and the live query cannot drift (the same
-    * coupling discipline as Multimodal.packDocuments for m1).
-    *
-    * underlying = blocks of 10 consecutive partkeys: group size stays
-    * portfolio-shaped (~10 legs) at every scale factor — the greedy
-    * matcher's combinations(n, 4) must never see data-volume-sized n.
-    * partkeys are 0-based and contiguous at every sf, so every block is
-    * COMPLETE and a group's content is scale-invariant: sf0.01's groups
-    * are a strict subset of sf0.1's, which is what lets one committed
-    * sf0.1 fixture serve every scale (the oracle scale-filters by
-    * joining part, exactly like m1's join on documents).
-    *
-    * Every derived field is a function of p_partkey / p_retailprice
-    * ONLY: those are scale-invariant in the corpus, whereas p_size is
-    * drawn independently per scale factor (sf0.01's partkey 0 has
-    * p_size 11, sf0.1's has 1) — a p_size-derived leg field would make
-    * the same underlying classify differently per sf and invalidate the
-    * single committed fixture (caught by the cross-scale verify probe).
-    * Within a block of 10, k mod 2 (sign) and k mod 5 (option type) are
-    * independent by CRT, and the absolute-key mod-7 equity slot and
-    * div-3 expiration shift per block, so matcher variety is preserved.
-    */
-  def s11Legs(spark: SparkSession, dir: String): DataFrame = {
-    Tables
-      .part(spark, dir)
-      .select(
-        concat(lit("L"), $"p_partkey").as("symbol"),
-        concat(lit("U"), expr("p_partkey div 10")).as("underlying"),
-        when(pmod($"p_partkey", lit(7)) === 0, "Equity").otherwise("Equity Option").as("instrument_type"),
-        (when(pmod($"p_partkey", lit(2)) === 0, 1.0).otherwise(-1.0) *
-          (pmod($"p_partkey", lit(3)) + 1)).as("signed_quantity"),
-        when(pmod($"p_partkey", lit(7)) === 0, lit(null).cast("string"))
-          .otherwise(when(pmod($"p_partkey", lit(5)) < 2, "C").otherwise("P")).as("option_type"),
-        // strike ladder: the block's retailprice base plus a mod-4 rung
-        // (0/5/10/15) — without the rungs a block's strikes collapse to
-        // ~one value (retailprice spans 1.0 per block) and the
-        // same-expiry different-strike matchers (verticals, condors,
-        // butterflies) never fire
-        when(pmod($"p_partkey", lit(7)) === 0, lit(null).cast("decimal(12,3)"))
-          .otherwise((round($"p_retailprice", 0) + pmod($"p_partkey", lit(4)) * 5).cast("decimal(12,3)")).as("strike"),
-        when(pmod($"p_partkey", lit(7)) === 0, lit(null).cast("date"))
-          .otherwise(
-            date_add(
-              lit(java.sql.Date.valueOf("2026-03-20")),
-              (pmod(expr("p_partkey div 3"), lit(3)) * 28).cast("int")
-            )
-          ).as("expiration")
-      )
-  }
-
-  /** S8 — the nested option-chain REST payload synthesized
-    * DETERMINISTICALLY from part (roots → expirations → strikes →
-    * {call, put}, some sides missing — the reference shape,
-    * `market/option_chains.py:32-141`), serialized to REAL JSON, then
-    * flattened through the REAL parse path
-    * ([[graft.io.OptionChains.flatten]]: `from_json` with the declared
-    * schema → two explodes → call/put `stack` unpivot → null-side
-    * drop). Because the synthesis is a pure per-partkey function, the
-    * flattened row SET is a pure function of part — so the DuckDB
-    * oracle restates the whole contract relationally from part,
-    * verifying the JSON round-trip + flatten end-to-end (row-set
-    * equality; the compare sorts rows, so array order inside the JSON
-    * is immaterial).
-    */
-  def s8ChainFlatten(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables
-      .part(spark, dir)
-      .select(
-        concat(lit("U"), expr("p_partkey div 10")).as("underlying"),
-        $"p_partkey".as("pk"),
-        (round($"p_retailprice", 0) + pmod($"p_partkey", lit(4)) * 5)
-          .cast("decimal(12,3)").as("strike"),
-        pmod($"p_partkey", lit(2)).cast("int").as("expi")
-      )
-    // strike node: each side present only when its mod-rule fires (the
-    // missing-side drop is part of the contract under test)
-    val strikes = base.select(
-      $"underlying", $"expi",
-      struct(
-        $"strike".cast("string").as("strike_price"),
-        when(pmod($"pk", lit(3)) =!= 0, concat(lit("C"), $"pk")).as("call"),
-        when(pmod($"pk", lit(2)) =!= 0, concat(lit("P"), $"pk")).as("put")
-      ).as("s")
-    )
-    val expirations = strikes
-      .groupBy($"underlying", $"expi")
-      .agg(collect_list($"s").as("strikes"))
-      .select(
-        $"underlying",
-        struct(
-          date_format(date_add(lit(java.sql.Date.valueOf("2026-03-20")), $"expi" * 28), "yyyy-MM-dd")
-            .as("expiration_date"),
-          ($"expi" * 28 + 10).cast("int").as("days_to_expiration"),
-          lit("PM").as("settlement_type"),
-          $"strikes"
-        ).as("e")
-      )
-    val chains = expirations
-      .groupBy($"underlying")
-      .agg(collect_list($"e").as("expirations"))
-      .select(to_json(struct($"underlying", $"underlying".as("root"), $"expirations")).as("json"))
-    graft.io.OptionChains
-      .flatten(chains)
-      // DECIMAL and DATE off the compare surface (the r2 j2 lesson:
-      // format-ambiguous types hash differently even when equal)
-      .withColumn("strike", $"strike".cast("double"))
-      .withColumn("expiration_date", $"expiration_date".cast("string"))
-      .orderBy("underlying", "symbol")
-  }
-
-  /** The j7 chains table: the nested TradeChain JSON (chain →
-    * lite-nodes → market-state-snapshot → market-datas — the reference
-    * `accounts/models.py:995-1147` tree) synthesized DETERMINISTICALLY
-    * from orders × lineitem: one chain per customer, one node per
-    * order (occurred-at from the order date), one market-data per
-    * lineitem with exact-double greeks, node net greeks a pure
-    * orderkey function. Serialized to REAL JSON so
-    * [[graft.io.TradeChains.snapshots]] exercises the REAL declared-
-    * schema `from_json` parse (missing fields → null, the permissive
-    * reference contract).
-    */
-  def j7Chains(spark: SparkSession, dir: String): DataFrame = {
-    val md = Tables
-      .lineitem(spark, dir)
-      .select(
-        $"l_orderkey",
-        struct(
-          concat(lit("S"), $"l_linenumber").as("symbol"),
-          ($"l_linenumber".cast("double") / 10).cast("string").as("delta"),
-          (-$"l_quantity".cast("double") / 100).cast("string").as("theta")
-        ).as("md")
-      )
-      .groupBy($"l_orderkey")
-      .agg(collect_list($"md").as("mds"))
-    val nodes = Tables
-      .orders(spark, dir)
-      .join(md, $"o_orderkey" === $"l_orderkey")
-      .select(
-        $"o_custkey",
-        struct(
-          lit("ORDER").as("node-type"),
-          concat(lit("N"), $"o_orderkey").as("id"),
-          date_format($"o_orderdate", "yyyy-MM-dd'T'00:00:00'Z'").as("occurred-at"),
-          struct(
-            $"mds".as("market-datas"),
-            (pmod($"o_orderkey", lit(100)).cast("double") / 10).cast("string").as("total-delta"),
-            (-(pmod($"o_orderkey", lit(50)) + 1).cast("double") / 10).cast("string").as("total-theta")
-          ).as("market-state-snapshot")
-        ).as("node")
-      )
-      .groupBy($"o_custkey")
-      .agg(collect_list($"node").as("nodes"))
-    nodes.select(
-      to_json(
-        struct(
-          concat(lit("CH"), $"o_custkey").as("id"),
-          concat(lit("U"), $"o_custkey").as("underlying-symbol"),
-          $"nodes".as("lite-nodes")
-        )
-      ).as("json")
-    )
-  }
-
-  /** J7 — the snapshot-correlation join through the REAL JSON parse:
-    * per-symbol execution greeks equi-joined with the node's NET greeks
-    * on node identity ([[graft.io.TradeChains.snapshots]], reference
-    * `accounts/orchestrator.py:155-234`). The synthesis is a pure
-    * function of orders × lineitem, so the DuckDB oracle restates the
-    * whole flatten + join relationally — JSON round-trip verified
-    * end-to-end (doubles survive exactly: shortest-repr serialization
-    * both ways). Timestamp leaves the compare surface as epoch micros
-    * (the ts_us discipline).
-    */
-  def j7ChainSnapshots(spark: SparkSession, dir: String): DataFrame =
-    graft.io.TradeChains
-      // no checkpoint: snapshots is join-free (net greeks ride the
-      // explode), so the synthesis + parse run exactly once in one
-      // linear pipeline — materializing the JSON would only add a
-      // write/read of every chain document
-      .snapshots(j7Chains(spark, dir))
-      .withColumn("occurred_us", unix_micros($"occurred_at"))
-      .drop("occurred_at")
-      .orderBy("chain_id", "node_id", "symbol")
-
-  /** The h1 legs table: [[s11Legs]] plus the metrics enrichment health
-    * reads, both pure per-leg functions of the partkey (parsed back out
-    * of the leg symbol so the two syntheses cannot drift):
-    *   - `delta`: (pk mod 17 − 8)/10 ∈ {−0.8 … 0.8 step 0.1} for
-    *     options, sign(qty)·1.0 for equities (delta-1 instruments);
-    *   - `days_to_expiration`: pk·7 mod 45 ∈ {0 … 44} for options
-    *     (crosses BOTH the ≤7 critical and ≤14 warning bars), null for
-    *     equities.
-    * Per-leg determinism + complete partkey blocks of 10 at every sf
-    * (the s11 fixture argument) make the sf0.1-generated alert fixture
-    * valid at every smaller scale.
-    */
-  def h1Legs(spark: SparkSession, dir: String): DataFrame = {
-    val pk = substring($"symbol", 2, 18).cast("long")
-    s11Legs(spark, dir)
-      .withColumn(
-        "delta",
-        when($"instrument_type" === "Equity", signum($"signed_quantity") * lit(1.0))
-          .otherwise((pmod(pk, lit(17)) - lit(8)).cast("double") / lit(10.0))
-      )
-      .withColumn(
-        "days_to_expiration",
-        when($"instrument_type" === "Equity", lit(null).cast("int"))
-          .otherwise(pmod(pk * 7, lit(45)).cast("int"))
-      )
-  }
-
-  /** §2.11 health — the strategy health monitor CHECKED alert-by-alert
-    * against the committed expectation fixture (GenH1Fixture — the s11
-    * technique one level up: classification AND the health rules are a
-    * pure deterministic function of the enriched leg group, so the
-    * expected alert set is a fixed table keyed by (underlying,
-    * legs_key, level, message)). The live query classifies + health-
-    * checks per underlying ([[graft.strategies.Health.alertsDf]]),
-    * matches each alert against the fixture, and aggregates per
-    * (underlying, level); the DuckDB oracle recomputes the aggregate
-    * from the fixture alone, scale-filtered by joining part — any
-    * divergence (missing alert, extra alert, drifted message text)
-    * breaks n/n_match or the group keys.
-    */
-  def h1Health(spark: SparkSession, dir: String): DataFrame = {
-    val fixture = spark.read
-      .parquet(QueryParams.H1FixturePath)
-      .select(
-        $"underlying".as("f_underlying"),
-        $"legs_key".as("f_legs_key"),
-        $"level".as("f_level"),
-        $"message".as("f_message")
-      )
-    graft.strategies.Health
-      .alertsDf(spark, h1Legs(spark, dir))
-      .join(
-        broadcast(fixture),
-        $"underlying" === $"f_underlying" && $"legs_key" === $"f_legs_key" &&
-          $"level" === $"f_level" && $"message" === $"f_message",
-        "left"
-      )
-      .groupBy($"underlying", $"level")
-      .agg(
-        count(lit(1)).as("n"),
-        count($"f_underlying").as("n_match")
-      )
-      .orderBy("underlying", "level")
-  }
-
-  /** The a5 legs table: a DEDICATED synthesis (not [[s11Legs]] — its
-    * classifier-stressing mix lands mostly on types OUTSIDE the A5
-    * formula dispatch and would leave the wing math unexercised).
-    * Every field is a pure function of p_partkey, and blocks of 10
-    * consecutive partkeys are complete at every sf (the s11 fixture
-    * argument), so the sf0.1-generated risk fixture is valid at every
-    * smaller scale. Within a block (k = pk mod 10, blk = pk div 10,
-    * strike base B = 100 + 5·(blk mod 7), qty q = 1 + blk mod 3),
-    * expirations partition the block into four independently-matched
-    * sub-strategies:
-    *   - k 0–3 (expiry E1): the iron family, variant by blk mod 4 —
-    *     symmetric condor / iron butterfly / iron broken-wing /
-    *     asymmetric condor (put wing 15 vs call wing 10, exercising
-    *     the max(putW, callW) branch of the loss formula);
-    *   - k 4–5 (E2): vertical spread, variant by blk mod 4 (all four
-    *     bull/bear call/put forms — both the debit and credit max-loss
-    *     dispatches); blocks with blk mod 7 = 3 become a same-strike
-    *     straddle instead (short = credit + unlimited risk, long =
-    *     undefined/undefined);
-    *   - k 6–8 (E3): 1:2:1 butterfly (call/put by blk parity; blk mod
-    *     5 = 0 breaks a wing → BROKEN_FLY, exercising the narrow-wing
-    *     profit vs wide-wing loss split); blocks with blk mod 7 = 5
-    *     become a jade lizard instead;
-    *   - k 9 (E4): naked short / long single by blk mod 4.
-    * Entry values are signed per leg (shorts +credit, longs −debit,
-    * magnitude (pk mod 13 + 1)·5 — coprime to the block structure, so
-    * net credits cross zero and both branches of every max(0) clamp
-    * fire); multiplier is the OCC 100.
-    */
-  def a5Legs(spark: SparkSession, dir: String): DataFrame = {
-    val pk = $"p_partkey"
-    val k = pmod(pk, lit(10))
-    val blk = expr("p_partkey div 10")
-    val b = lit(100) + pmod(blk, lit(7)) * 5
-    val q = (pmod(blk, lit(3)) + 1).cast("double")
-    val v4 = pmod(blk, lit(4))
-    val straddleBlk = pmod(blk, lit(7)) === 3
-    val jadeBlk = pmod(blk, lit(7)) === 5
-    val brokenBlk = pmod(blk, lit(5)) === 0
-    val putFly = pmod(blk, lit(2)) === 1
-
-    val optType =
-      when(k <= 1, lit("P"))
-        .when(k <= 3, lit("C"))
-        .when(k === 4, when(straddleBlk, lit("C")).when(v4 >= 2, lit("P")).otherwise(lit("C")))
-        .when(k === 5, when(straddleBlk, lit("P")).when(v4 >= 2, lit("P")).otherwise(lit("C")))
-        .when(k === 6, when(jadeBlk, lit("P")).when(putFly, lit("P")).otherwise(lit("C")))
-        .when(k <= 8, when(jadeBlk, lit("C")).when(putFly, lit("P")).otherwise(lit("C")))
-        .otherwise(when(v4 === 0 || v4 === 2, lit("C")).otherwise(lit("P")))
-
-    val off =
-      when(k === 0, when(v4 === 1, -10).when(v4 === 3, -20).otherwise(-15))
-        .when(k === 1, when(v4 === 1 || v4 === 2, 0).otherwise(-5))
-        .when(k === 2, when(v4 === 1 || v4 === 2, 0).otherwise(5))
-        .when(k === 3, when(v4 === 1 || v4 === 2, 10).otherwise(15))
-        .when(k === 4, 0)
-        .when(k === 5, when(straddleBlk, 0).otherwise(10))
-        .when(k === 6, when(jadeBlk, -10).when(brokenBlk, -5).otherwise(-10))
-        .when(k === 7, 0)
-        .when(k === 8, 10)
-        .otherwise(0)
-
-    // sign of quantity: +1 long, −1 short
-    val dirn =
-      when(k === 0 || k === 3, 1.0)
-        .when(k <= 2, -1.0)
-        .when(k === 4,
-          when(straddleBlk, when(pmod(blk, lit(2)) === 0, -1.0).otherwise(1.0))
-            .when(v4 === 0 || v4 === 2, 1.0).otherwise(-1.0))
-        .when(k === 5,
-          when(straddleBlk, when(pmod(blk, lit(2)) === 0, -1.0).otherwise(1.0))
-            .when(v4 === 0 || v4 === 2, -1.0).otherwise(1.0))
-        .when(k === 6, when(jadeBlk, -1.0).otherwise(1.0))
-        .when(k === 7, -1.0)
-        .when(k === 8, 1.0)
-        .otherwise(when(v4 <= 1, -1.0).otherwise(1.0))
-
-    val qty = dirn * when(k === 7 && !jadeBlk, q * 2).otherwise(q)
-    val egrp = when(k <= 3, 0).when(k <= 5, 1).when(k <= 8, 2).otherwise(3)
-
-    Tables
-      .part(spark, dir)
-      .select(
-        concat(lit("L"), pk).as("symbol"),
-        concat(lit("U"), blk).as("underlying"),
-        lit("Equity Option").as("instrument_type"),
-        qty.as("signed_quantity"),
-        optType.as("option_type"),
-        (b + off).cast("decimal(12,3)").as("strike"),
-        date_add(lit(java.sql.Date.valueOf("2026-03-20")), (egrp * 28).cast("int")).as("expiration"),
-        lit(100).cast("decimal(12,2)").as("multiplier"),
-        (-dirn * (pmod(pk, lit(13)) + 1) * 5).cast("decimal(12,2)").as("entry_value")
-      )
-  }
-
-  /** §2.4 A5 — max-profit / max-loss, CHECKED instance-by-instance
-    * against the committed risk-expectation fixture (GenA5Fixture —
-    * the h1 technique applied one level up the analytics stack:
-    * classification AND the type-dispatched risk formula tree
-    * (reference `strategies/models.py:274-452`) are pure deterministic
-    * functions of the enriched leg group, so the expected (max_profit,
-    * max_loss) per strategy instance is a fixed table keyed by
-    * (underlying, legs_key)). The live query classifies + computes
-    * risk per underlying ([[graft.strategies.Strategies.riskDf]]),
-    * matches each instance against the fixture on type AND both risk
-    * figures (null-safe — null means unlimited/undefined and must
-    * match as null), and aggregates per (underlying, strategy_type)
-    * with live-value sums; the DuckDB oracle recomputes the aggregate
-    * from the fixture alone, scale-filtered by joining part — any
-    * formula drift breaks n_match or the sums.
-    */
-  def a5MaxProfitLoss(spark: SparkSession, dir: String): DataFrame = {
-    val fixture = spark.read
-      .parquet(QueryParams.A5FixturePath)
-      .select(
-        $"underlying".as("f_underlying"),
-        $"legs_key".as("f_legs_key"),
-        $"strategy_type".as("exp_type"),
-        $"max_profit".as("exp_max_profit"),
-        $"max_loss".as("exp_max_loss")
-      )
-    graft.strategies.Strategies
-      .riskDf(spark, a5Legs(spark, dir))
-      .join(
-        broadcast(fixture),
-        $"underlying" === $"f_underlying" && $"legs_key" === $"f_legs_key",
-        "left"
-      )
-      .groupBy($"underlying", $"strategy_type")
-      .agg(
-        count(lit(1)).as("n"),
-        // whole-dollar quantized values: the double sums are exact, so
-        // the bit-identical hash compare is safe (round keeps parity
-        // with the oracle's round)
-        round(sum($"max_profit"), 2).as("sum_max_profit"),
-        round(sum($"max_loss"), 2).as("sum_max_loss"),
-        count(
-          when(
-            $"strategy_type" <=> $"exp_type" &&
-              $"max_profit" <=> $"exp_max_profit" &&
-              $"max_loss" <=> $"exp_max_loss",
-            1
-          )
-        ).as("n_match")
-      )
-      .orderBy("underlying", "strategy_type")
-  }
-
-  /** §2.11 — greedy strategy classification, CHECKED instance-by-instance
-    * against the committed classification-expectation fixture
-    * (GenS11Fixture): each live strategy instance is identified by its
-    * exact leg set (sorted leg_symbols — greedy matching consumes every
-    * leg exactly once, so leg sets are disjoint and the key is unique
-    * within an underlying) and compared on (strategy_type, n_legs,
-    * net_qty). `n_match` counts instances whose live classification
-    * equals the fixture's — so the DuckDB oracle, which recomputes the
-    * whole aggregate from the fixture alone (greedy combinatorial
-    * matching is not SQL-expressible; the fixture is the hashable
-    * surface), hash-fails if any classification diverges (n_match < n,
-    * or the group keys/counts shift). Determinism of the classify output
-    * under shuffle — the property that makes a committed fixture valid —
-    * is proven by StrategyClassifierPropSpec's shuffled-row-order test;
-    * independence from the fixture is carried by the reference canonical
-    * cases + ScalaCheck invariants in StrategiesSpec.
-    */
-  def s11Classify(spark: SparkSession, dir: String): DataFrame = {
-    val fixture = spark.read
-      .parquet(QueryParams.S11FixturePath)
-      .select(
-        $"underlying".as("f_underlying"),
-        $"legs_key".as("f_legs_key"),
-        $"strategy_type".as("exp_type"),
-        $"n_legs".as("exp_n_legs"),
-        $"net_qty".as("exp_net_qty")
-      )
-    graft.strategies.Strategies
-      .classify(spark, s11Legs(spark, dir))
-      .withColumn("legs_key", concat_ws(",", array_sort($"leg_symbols")))
-      .join(
-        broadcast(fixture),
-        $"underlying" === $"f_underlying" && $"legs_key" === $"f_legs_key",
-        "left"
-      )
-      .groupBy($"underlying", $"strategy_type")
-      .agg(
-        count(lit(1)).as("n"),
-        sum($"n_legs").as("total_legs"),
-        count(
-          when($"strategy_type" <=> $"exp_type" && $"n_legs" <=> $"exp_n_legs" && $"net_qty" <=> $"exp_net_qty", 1)
-        ).as("n_match")
-      )
-      .orderBy("underlying", "strategy_type")
-  }
-
-  /** F1 — ingest float normalization: NaN/±Inf → null, 10dp rounding
-    * (reference `events.py:37-53`); NaN/Inf synthesized deterministically.
-    */
-  def f1Normalize(spark: SparkSession, dir: String): DataFrame = {
-    val raw = when(pmod($"event_id", lit(10)) === 0, lit(Double.PositiveInfinity))
-      .when(pmod($"event_id", lit(10)) === 1, lit(Double.NaN))
-      .when(pmod($"event_id", lit(10)) === 2, lit(Double.NegativeInfinity))
-      .otherwise($"value")
-    Tables
-      .events(spark, dir)
-      .select($"event_id", Funcs.normalizeFloat(raw).as("norm_value"))
-      .orderBy("event_id")
-  }
-
-  /** F2/F3 — candle symbol munging: strip implied-1 interval, parse back
-    * ticker + re-prefixed interval (reference `utils/helpers.py:33-47`).
-    */
-  def f2SymbolMunge(spark: SparkSession, dir: String): DataFrame = {
-    val interval = element_at(
-      map(
-        lit("click"), lit("1m"), lit("error"), lit("5m"), lit("purchase"), lit("1h"),
-        lit("signup"), lit("1d"), lit("view"), lit("1w")
-      ),
-      $"event_type"
-    )
-    val sym = concat(lit("U"), $"user_id", lit("{="), interval, lit("}"))
-    Tables
-      .events(spark, dir)
-      .select($"event_id", sym.as("sym"))
-      .select(
-        $"event_id",
-        $"sym",
-        Funcs.stripCandleInterval($"sym").as("stripped"),
-        Funcs.candleTicker(Funcs.stripCandleInterval($"sym")).as("ticker"),
-        Funcs.candleInterval(Funcs.stripCandleInterval($"sym")).as("interval"),
-        Funcs.intervalToMillis(Funcs.candleInterval(Funcs.stripCandleInterval($"sym"))).as("interval_ms")
-      )
-      .orderBy("event_id")
-  }
-
-  /** F6 — OCC option-symbol build + parse round trip (reference
-    * `positions.py:599-633`).
-    */
-  def f6OccRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val occ = concat(
-      rpad(substring($"p_brand", 1, 6), 6, " "),
-      lit("260320"),
-      when(pmod($"p_size", lit(2)) === 0, "C").otherwise("P"),
-      lpad((round($"p_retailprice", 0) * 1000).cast("long").cast("string"), 8, "0")
-    )
-    Tables
-      .part(spark, dir)
-      .select($"p_partkey", occ.as("occ"))
-      .select(
-        $"p_partkey",
-        $"occ",
-        date_format(Funcs.occExpiry($"occ"), "yyyy-MM-dd").as("expiry"),
-        Funcs.occType($"occ").as("opt_type"),
-        Funcs.occStrike($"occ").as("strike")
-      )
-      .orderBy("p_partkey")
-  }
-
-  /** F5/F7/F8/F9/F17/F18 — the row-local scalar helpers as one carrier
-    * over orders (references `messages.py:189-203` interval floor,
-    * `positions.py:32-43` apply_effect, `metrics.py:167-172` mid price,
-    * `positions.py:710-721` dollar theta, `option_chains.py:22-29`
-    * futures detect/strip, `orchestrator.py:145-152` safe_float). Every
-    * input is synthesized from o_orderkey/o_totalprice deterministically;
-    * float surfaces stay off rounding edges (mid derives from integer
-    * cents so the 4dp round is identity on the decimal value, theta is
-    * shifted off zero so no -0.0 can arise).
-    */
-  def f7ScalarEffects(spark: SparkSession, dir: String): DataFrame = {
-    val k = $"o_orderkey"
-    val effect = when(pmod(k, lit(2L)) === 0, "Credit").otherwise("Debit")
-    val bidCents = pmod(k, lit(10000L))
-    val askCents = bidCents + pmod(k, lit(200L)) + lit(1L)
-    val theta = -(pmod(k, lit(50L)) + 1) / 1000.0
-    val signedQty = (when(pmod(k, lit(4L)) < 2, 1L).otherwise(-1L) * (pmod(k, lit(3L)) + 1)).cast("double")
-    val sym = when(pmod(k, lit(3L)) === 0, concat(lit("/ES"), pmod(k, lit(10L)).cast("string")))
-      .otherwise(concat(lit("SPY"), pmod(k, lit(10L)).cast("string")))
-    val floatStr = when(pmod(k, lit(5L)) === 0, lit("n/a"))
-      .when(pmod(k, lit(5L)) === 1, lit(""))
-      .when(pmod(k, lit(5L)) === 2, lit(null).cast("string"))
-      .otherwise($"o_totalprice".cast("string"))
-    Tables
-      .orders(spark, dir)
-      .select(
-        k.as("o_orderkey"),
-        Funcs.applyEffect($"o_totalprice", effect).as("signed_amount"),
-        Funcs.midPrice(bidCents / 100.0, askCents / 100.0).as("mid"),
-        Funcs.dollarTheta(theta, signedQty, lit(100.0)).as("dollar_theta"),
-        sym.as("sym"),
-        Funcs.isFutures(sym).cast("int").as("is_fut"),
-        Funcs.stripFuturesPrefix(sym).as("product"),
-        Funcs.safeFloat(floatStr).as("parsed_price"),
-        Funcs.floorToInterval(k * 61234L + 17L, lit(300000L)).as("bar_ms")
-      )
-      .orderBy("o_orderkey")
-  }
-
-  /** P5 — ET session-window gate as a relational filter (reference
-    * `analytics/engines/hull_macd.py:31-33`): keep events whose UTC
-    * timestamp falls in [10:00, 15:00) Eastern wall-clock. The same rule
-    * rides g1's oracle row-locally; this is the direct filter form with
-    * its own oracle (timezone('America/New_York', ...) on the DuckDB
-    * side), so the predicate itself is hash-pinned, not just its signal
-    * consumers.
-    */
-  def p5SessionFilter(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .events(spark, dir)
-      .filter(Funcs.inEtSession($"ts_t"))
-      .select($"event_id", $"ts_us", $"user_id", $"event_type")
-      .orderBy("event_id")
-
-  /** F11/F12/F19 — the time-display helpers as one carrier over events
-    * (references `charting/server.py:36-60` ET shift, `helpers.py:16-30`
-    * last-weekday, `subscription/orchestrator.py:49-59` +
-    * `subscription/status.py:41-53` uptime/age humanization). Uptime and
-    * age are synthesized from event_id with coprime multipliers so every
-    * display branch (d/h/m shapes; s/m/h/d buckets + the null→"unknown"
-    * row) occurs at every scale.
-    */
-  def f19TimeDisplay(spark: SparkSession, dir: String): DataFrame = {
-    val up = pmod($"event_id" * 7919L, lit(500000L))
-    val age = when(pmod($"event_id", lit(11L)) === 0, lit(null).cast("long"))
-      .otherwise(pmod($"event_id" * 104729L, lit(200000L)))
-    val epochSec = floor($"ts_us" / 1000000L).cast("long")
-    Tables
-      .events(spark, dir)
-      .select(
-        $"event_id",
-        up.as("uptime_s"),
-        Funcs.formatUptime(up).as("uptime"),
-        age.as("age_s"),
-        Funcs.ageDisplay(age).as("age"),
-        Funcs.utcEpochToEtShiftedEpoch(epochSec).as("et_epoch"),
-        date_format(Funcs.lastWeekday(to_date($"ts_t")), "yyyy-MM-dd").as("last_wd")
-      )
-      .orderBy("event_id")
-  }
-
-  /** J3 — left join with fallback synthesis when the dimension row is
-    * missing (reference `strategies/classifier.py:40-62` instrument
-    * fallback parse).
-    */
-  def j3CoalesceJoin(spark: SparkSession, dir: String): DataFrame = {
-    val o = Tables.orders(spark, dir)
-    val known = Tables.customer(spark, dir).filter(pmod($"c_custkey", lit(3)) === 0)
-    o.join(broadcast(known), o("o_custkey") === known("c_custkey"), "left")
-      .select(
-        $"o_orderkey",
-        coalesce($"c_name", concat(lit("CUST-"), $"o_custkey")).as("display_name")
-      )
-      .orderBy("o_orderkey")
-  }
-
-  /** W9 — snapshot-complete bitmask gate (reference
-    * `messaging/processors/snapshot.py:6-26,82`).
-    */
-  def w9FlagsFilter(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).withColumn("flags", pmod($"event_id", lit(32)).cast("int"))
-    ev.filter(Funcs.snapshotComplete($"flags"))
-      .select($"event_id", $"flags", $"event_type")
-      .orderBy("event_id")
-  }
-
-  /** T7 — the snapshot-completion handshake through a REAL stream
-    * ([[graft.streaming.Streams.snapshotCompletions]], reference
-    * `messaging/processors/snapshot.py:30-100`): per REGISTERED
-    * symbol, exactly one completion at the first event carrying
-    * SNAPSHOT_END|SNAPSHOT_SNIP (flags & 0x18), later flagged
-    * re-deliveries swallowed by the per-symbol done state,
-    * unregistered symbols ignored. Flags synthesized as w9 does
-    * (`event_id % 32`); registered = users with id % 3 ≠ 2 (the
-    * ignore path is on the hash). Determinism: batches are
-    * time-ordered tertiles (mtime-pinned), the detector sorts within
-    * a batch and emits only (symbol, min flagged time) — so the
-    * output is the GLOBAL min flagged time per registered symbol
-    * regardless of tie placement at tertile boundaries, which is
-    * exactly what the oracle states relationally. A detector that
-    * forgot the done state (duplicate completions), missed the
-    * registered filter, or picked a non-first flagged event all flip
-    * the result.
-    */
-  def t7SnapshotCompletions(spark: SparkSession, dir: String): DataFrame = {
-    val root = QueryParams.indexScratch("t7_stream", dir)
-    val src = s"$root/src"
-    val stamp = s"t7 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Tables
-        .events(spark, dir)
-        .select(
-          $"user_id".cast("string").as("symbol"),
-          $"ts_us".as("timeUs"),
-          pmod($"event_id", lit(32)).cast("int").as("flags"))
-      val tiled = ev.withColumn(
-        "_t",
-        ntile(3).over(org.apache.spark.sql.expressions.Window.orderBy($"timeUs", $"symbol", $"flags")))
-      Replay.arrivals(spark, src, (1 to 3).map(i => tiled.filter($"_t" === i).drop("_t")))
-    }
-    // bounded driver collect: one string per registered user
-    val registered: Set[String] = Tables
-      .events(spark, dir)
-      .filter(pmod($"user_id", lit(3)) =!= 2)
-      .select($"user_id".cast("string"))
-      .distinct()
-      .collect()
-      .map(_.getString(0))
-      .toSet
-    implicit val fe: org.apache.spark.sql.Encoder[graft.streaming.Streams.FlaggedEvent] =
-      org.apache.spark.sql.Encoders.product[graft.streaming.Streams.FlaggedEvent]
-    Replay
-      .toMemory(spark, src, "t7_completions", dir) { s =>
-        graft.streaming.Streams.snapshotCompletions(
-          s.select($"symbol", $"timeUs", $"flags").as[graft.streaming.Streams.FlaggedEvent], registered)
-      }
-      .select($"symbol", $"completed_at_us")
-      .orderBy("symbol")
-  }
-
-  /** W12 — deterministic sha-derived dedup jitter (reference
-    * `visualizations/models.py:130-147`).
-    */
-  def w12Jitter(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .documents(spark, dir)
-      .select(
-        $"doc_id",
-        Funcs.jitterMicros(concat($"source", lit("|"), $"doc_id")).as("jitter_us")
-      )
-      .orderBy("doc_id")
-
-  /** A4 — strategy netting as relational aggregation (reference
-    * `strategies/models.py:160-247`): per synthetic strategy group,
-    * Σ greek×signed_qty, dollar theta ×multiplier, min DTE, strike width.
-    */
-  def a4StrategyNetting(spark: SparkSession, dir: String): DataFrame = {
-    val legs = Tables
-      .part(spark, dir)
-      .select(
-        expr("p_partkey div 4").as("strategy_id"),
-        (when(pmod($"p_partkey", lit(2)) === 0, 1.0).otherwise(-1.0) * (pmod($"p_partkey", lit(3)) + 1)).as("qty"),
-        round($"p_retailprice" / 1000.0, 4).as("delta"),
-        round($"p_retailprice" / 50000.0, 6).as("theta"),
-        lit(100.0).as("multiplier"),
-        round($"p_retailprice", 0).as("strike"),
-        (pmod($"p_size", lit(5)) * 7 + 7).as("dte")
-      )
-    legs
-      .groupBy($"strategy_id")
-      .agg(
-        round(sum($"delta" * $"qty"), 4).as("net_delta"),
-        round(sum($"theta" * $"qty" * $"multiplier"), 2).as("net_theta"),
-        min($"dte").as("min_dte"),
-        (max($"strike") - min($"strike")).as("width"),
-        count(lit(1)).as("n_legs")
-      )
-      .orderBy("strategy_id")
-  }
-
-  /** A6 — campaign rollup by key with recovery = max(0, −net)
-    * (reference `positions.py:277-381`).
-    */
-  def a6CampaignRollup(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .orders(spark, dir)
-      .groupBy($"o_custkey")
-      .agg(
-        round(sum(when($"o_orderstatus" === "F", $"o_totalprice").otherwise(-$"o_totalprice")), 2).as("net"),
-        count(lit(1)).as("n_orders"),
-        countDistinct($"o_orderstatus").as("n_statuses")
-      )
-      .withColumn("recovery", greatest(lit(0.0), -$"net"))
-      .orderBy("o_custkey")
-
-  /** W8 — candle-period close detection (reference
-    * `charting/server.py:351-411`): the indicator advances only when a
-    * NEW bucket appears; emit the finished bucket with its final value.
-    */
-  def w8CandleClose(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val bucketUs = 300000000L // 5 minutes
-    val ev = Tables
-      .events(spark, dir)
-      .withColumn("bucket_us", expr(s"(ts_us div $bucketUs) * $bucketUs"))
-    val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    ev.withColumn("prev_bucket", lag($"bucket_us", 1).over(w))
-      .withColumn("prev_value", lag($"value", 1).over(w))
-      .filter($"prev_bucket".isNotNull && $"bucket_us" > $"prev_bucket")
-      .select($"user_id", $"prev_bucket".as("closed_bucket_us"), $"prev_value".as("final_value"))
-      .orderBy("user_id", "closed_bucket_us")
-  }
-
-  /** U4 — symbol-set dedup: distinct tickers from candle-style symbols
-    * (reference `charting/server.py:140-143`).
-    */
-  def u4SymbolDedup(spark: SparkSession, dir: String): DataFrame = {
-    val sym = concat(lit("U"), $"user_id", lit("{="), $"event_type", lit("}"))
-    Tables
-      .events(spark, dir)
-      .select(split(sym, "\\{=").getItem(0).as("ticker"))
-      .distinct()
-      .orderBy("ticker")
-  }
-
-  /** J5 — explode nested entries then join (reference
-    * `positions.py:653-672` trade-chain open-entry join): orders packed
-    * into per-customer arrays, exploded back, joined to line items.
-    */
-  def j5ExplodeJoin(spark: SparkSession, dir: String): DataFrame = {
-    val chains = Tables
-      .orders(spark, dir)
-      .groupBy($"o_custkey")
-      .agg(sort_array(collect_list($"o_orderkey")).as("order_keys"))
-    val exploded = chains.select($"o_custkey", explode($"order_keys").as("o_orderkey"))
-    val li = Tables.lineitem(spark, dir)
-    exploded
-      .join(li, exploded("o_orderkey") === li("l_orderkey"))
-      .groupBy($"o_custkey")
-      .agg(
-        count(lit(1)).as("n_lines"),
-        round(sum($"l_extendedprice"), 2).as("total_price")
-      )
-      .orderBy("o_custkey")
-  }
-
-  /** §3.3 — end-to-end backtest slice: 30-minute signal candles through
-    * the HullMacd engine, entry prices as-of joined from the raw stream.
-    */
-  def b1Backtest(spark: SparkSession, dir: String): DataFrame = {
-    val (pricing, signalCandles) = Replay.backtestSides(spark, dir)
-    graft.backtest.Backtest
-      // assumeDeduped: bucket candles are unique per (symbol, time) by
-      // construction (one row per bucket)
-      .run(signalCandles, pricing, hullLength = 8, fast = 4, slow = 8, signalLen = 3, assumeDeduped = true)
-      .select("symbol", "time_us", "signal_type", "direction", "trigger", "close_price", "entry_price")
-      .orderBy("symbol", "time_us", "signal_type", "direction")
-  }
-
-  /** T9/J8 — the MERGED multi-timeframe streaming backtest hash-pinned
-    * cross-engine: b1's exact two-sided feed (deduped pricing ticks as
-    * rank 0, 30-minute bucket candles stamped at bucket start as
-    * rank 1 — guaranteed (symbol, time) ties at bucket boundaries, the
-    * ordering rule T9 exists for) interleaved into ONE stream, split
-    * into three time-ordered micro-batches on the global
-    * (time_us, rank, symbol) row_number (a tie straddling a batch
-    * boundary lands its rank-0 pricing row in the EARLIER batch —
-    * folded first, as the merge rule demands), arrival mtime-pinned,
-    * driven through [[graft.streaming.Streams.backtestStream]]: the
-    * per-symbol stateful fold where pricing rows update last-price
-    * state and signal rows step the indicator engine, each emitted
-    * signal carrying its as-of entry price FROM STATE. The oracle is
-    * b1's own SQL — the engine CTE fold plus DuckDB's native ASOF
-    * JOIN — so the streaming fold's state carry-over, the
-    * pricing-first tie rule, and the null-before-first-pricing edge
-    * all land on the hash.
-    */
-  def t9StreamBacktest(spark: SparkSession, dir: String): DataFrame = {
-    val root = QueryParams.indexScratch("t9_stream", dir)
-    val src = s"$root/src"
-    val stamp = s"t9 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      // the bucket candles' null closes are filtered AFTER their dedup —
-      // the engine's own WHERE, applied at construction because
-      // RankedCandle.close is a primitive
-      val (pricing, signalCandles) = Replay.backtestSides(spark, dir)
-      val merged = pricing.withColumn("rank", lit(0))
-        .unionByName(signalCandles.withColumn("rank", lit(1)).filter($"close".isNotNull))
-      val n = merged.count()
-      val ranked = merged.withColumn(
-        "_rn",
-        row_number().over(
-          org.apache.spark.sql.expressions.Window.orderBy($"time_us", $"rank", $"symbol")))
-      Replay.arrivals(spark, src, (1 to 3).map { i =>
-        ranked.filter($"_rn" > lit(n * (i - 1) / 3) && $"_rn" <= lit(n * i / 3)).drop("_rn")
-      })
-    }
-    implicit val rcEnc: org.apache.spark.sql.Encoder[graft.streaming.Streams.RankedCandle] =
-      org.apache.spark.sql.Encoders.product[graft.streaming.Streams.RankedCandle]
-    Replay
-      .toMemory(spark, src, "t9_backtest", dir) { s =>
-        graft.streaming.Streams.backtestStream(
-          s.select($"symbol", $"time_us".as("timeUs"), $"rank", $"close").as[graft.streaming.Streams.RankedCandle],
-          hullLength = 8, fast = 4, slow = 8, signalLen = 3)
-      }
-      .select("symbol", "time_us", "signal_type", "direction", "trigger", "close_price", "entry_price")
-      .orderBy("symbol", "time_us", "signal_type", "direction")
-  }
-
-  /** W10 — streaming row-cap retention hash-pinned through a real
-    * stream (reference `messaging/processors/default.py:39-48` keeps
-    * the newest N rows per key): the deduped candle feed in three
-    * mtime-pinned, time-ordered micro-batches (tiles of the global
-    * (ts_us, symbol) row_number — tile boundaries respect the global
-    * time order, so each touch's `newest_us` strictly increases and
-    * the report multiset has no collisions) through
-    * [[graft.streaming.Streams.rowCapStream]] at cap 5. Every batch
-    * emits one retention report per TOUCHED symbol; the oracle
-    * restates all of them relationally: for each (symbol, tile with
-    * rows), the newest-5 window over that symbol's rows in tiles ≤ it.
-    * The per-key state bound ACROSS batches — the property that keeps
-    * streaming state from growing with stream length — is what the
-    * retained/oldest columns pin.
-    */
-  def w10StreamRowCap(spark: SparkSession, dir: String): DataFrame = {
-    val root = QueryParams.indexScratch("w10_stream", dir)
-    val src = s"$root/src"
-    val stamp = s"w10 v1 ${QueryParams.tableStamp(spark, s"$dir/events.parquet")}"
-    QueryParams.seedOnce(spark, root, stamp) {
-      val ev = Replay.candleFeed(spark, dir)
-      val n = ev.count()
-      val ranked = ev.withColumn(
-        "_rn",
-        row_number().over(org.apache.spark.sql.expressions.Window.orderBy($"ts_us", $"symbol")))
-      Replay.arrivals(spark, src, (1 to 3).map { i =>
-        ranked.filter($"_rn" > lit(n * (i - 1) / 3) && $"_rn" <= lit(n * i / 3)).drop("_rn")
-      })
-    }
-    implicit val ciEnc: org.apache.spark.sql.Encoder[graft.streaming.Streams.CandleIn] =
-      org.apache.spark.sql.Encoders.product[graft.streaming.Streams.CandleIn]
-    Replay
-      .toMemory(spark, src, "w10_rowcap", dir) { s =>
-        graft.streaming.Streams.rowCapStream(
-          s.select($"symbol", $"ts_us".as("timeUs"), $"value".as("close")).as[graft.streaming.Streams.CandleIn],
-          cap = 5)
-      }
-      .select($"symbol", $"retained".cast("int").as("retained"), $"oldest_us", $"newest_us")
-      .orderBy("symbol", "newest_us")
-  }
-
-  /** B1-enrich — the oracle-checkable half of the backtest: candle-close
-    * rows (the signal positions a state machine would emit, here derived
-    * relationally: last event per 30-min bucket, stamped at the bucket
-    * start) enriched with the as-of entry price through the SAME
-    * [[graft.backtest.Backtest.enrichSignals]] code path b1 uses. Hash-
-    * checks the union+window as-of machinery; the signal ENGINE half
-    * stays spec-carried (BacktestSpec/HullMacdSpec).
-    */
-  def b1Enrich(spark: SparkSession, dir: String): DataFrame = {
-    val (pricing, candles) = Replay.backtestSides(spark, dir)
-    graft.backtest.Backtest
-      .enrichSignals(candles.withColumnRenamed("close", "close_price"), pricing)
-      .select("symbol", "time_us", "close_price", "entry_price")
-      .orderBy("symbol", "time_us")
-  }
-
-  /** S2 — compact-array wire decode: per-user FEED_DATA-style frames
-    * (flat [event_id, ts_us] pairs in time order) chunked back into one
-    * row per event (reference `messaging/handlers.py:150-232`).
-    */
-  def s2WireDecode(spark: SparkSession, dir: String): DataFrame = {
-    val frames = Tables
-      .events(spark, dir)
-      .groupBy($"user_id")
-      .agg(
-        flatten(
-          transform(
-            sort_array(collect_list(struct($"ts", $"event_id", $"ts_us"))),
-            e => array(e.getField("event_id").cast("string"), e.getField("ts_us").cast("string"))
-          )
-        ).as("values")
-      )
-      .withColumn("eventType", lit("Event"))
-    graft.io.WireDecoder
-      .decode(frames, "Event", Seq("eid", "ts_us_s"))
-      .select(
-        $"user_id",
-        $"seq",
-        $"eid".cast("long").as("event_id"),
-        $"ts_us_s".cast("long").as("ts_us")
-      )
-      .orderBy("user_id", "seq")
-  }
-
-  /** F16/A3 — leg-description strings: per customer the sorted list of
-    * formatted order tags (reference `positions.py:166-171` leg
-    * descriptions via collect_list).
-    */
-  def f16LegDesc(spark: SparkSession, dir: String): DataFrame =
-    Tables
-      .orders(spark, dir)
-      .filter($"o_totalprice" > 400000.0)
-      .groupBy($"o_custkey")
-      .agg(
-        concat_ws(",", sort_array(collect_list(concat($"o_orderstatus", lit("#"), $"o_orderkey")))).as("legs"),
-        count(lit(1)).as("n")
-      )
-      .orderBy("o_custkey")
-
-  // Column shorthand without a SparkSession in scope.
-  private implicit class Dollar(val sc: StringContext) {
-    def $(args: Any*): org.apache.spark.sql.Column = col(sc.s(args: _*))
-  }
-}
-
-/** DuckDB oracle SQL, keyed identically to [[SparkEntry.queries]].
-  * Conventions: BIGINT casts on counts/int-sums (DuckDB widens to
-  * HUGEINT), identical `round()` placement as the Spark side, and
-  * `epoch_us(ts)` for the nano-timestamp events table.
-  */
-object Oracles {
-
-  /** x17/x18 shared contract — exact n-gram decontamination. Integer
-    * counts plus ONE final double division (hit_frac): bit-identical on
-    * both engines. Window CTE mirrors x13's. x18's bloom gate is
-    * result-invisible, so both queries hash against this one statement.
-    */
-  private val x17Sql: String = {
-    val n = QueryParams.X12SpanWidth
-    s"""WITH base AS (
-       |  SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
-       |  FROM documents WHERE text IS NOT NULL),
-       |spans AS (
-       |  SELECT doc_id,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_transform(range(1, len(toks) - $n + 2), i -> md5(array_to_string(toks[i:i+${n - 1}], ' ')))
-       |      ELSE []::VARCHAR[] END AS ws
-       |  FROM base),
-       |bench AS (SELECT DISTINCT unnest(ws) AS span FROM spans WHERE doc_id % 5 = 0),
-       |occ AS (SELECT doc_id, unnest(ws) AS span FROM spans WHERE doc_id % 5 <> 0),
-       |hits AS (
-       |  SELECT o.doc_id,
-       |    CAST(count(*) AS BIGINT) AS n_hit_spans,
-       |    CAST(count(DISTINCT o.span) AS BIGINT) AS n_grams_hit
-       |  FROM occ o JOIN bench USING (span) GROUP BY o.doc_id),
-       |stats AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_spans FROM spans WHERE doc_id % 5 <> 0)
-       |SELECT s.doc_id, s.n_spans, h.n_hit_spans, h.n_grams_hit,
-       |  CAST(h.n_hit_spans AS DOUBLE) / CAST(s.n_spans AS DOUBLE) AS hit_frac
-       |FROM stats s JOIN hits h USING (doc_id)
-       |WHERE h.n_hit_spans >= 1
-       |ORDER BY doc_id""".stripMargin
-  }
-
-  /** x21 — the whole cleaning pipeline in ONE statement: every stage's
-    * committed oracle machinery (x5 redact chain, x2 quality rule, d1
-    * fingerprint keeper, d2 banding + d8 recursive closure, d7
-    * bipartite decontamination, x12 span flag, x13 first-occurrence
-    * strip, x6 chunking) re-stated over the PREVIOUS stage's relation
-    * instead of `documents`. The minhash signature machinery is
-    * instantiated twice (stage-4 self-pairs over the exact-deduped
-    * corpus; stage-5 benchmark side) with the same 16 xor seeds /
-    * 8 bands the engine uses.
-    */
-  // x19 — integer-exact counts; (n_docs DESC, n_occurrences DESC,
-  // gram) is a TOTAL order (gram is the group key), so the LIMIT cut
-  // is deterministic on both engines. Shared verbatim by x19b (the
-  // count-min gate is result-invisible by construction).
-  private val x19Sql: String = {
-    val n = QueryParams.X19GramWidth
-    s"""WITH base AS (
-       |  SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
-       |  FROM documents WHERE text IS NOT NULL),
-       |grams AS (
-       |  SELECT doc_id, unnest(
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_transform(range(1, len(toks) - $n + 2), i -> array_to_string(toks[i:i+${n - 1}], ' '))
-       |      ELSE []::VARCHAR[] END) AS gram
-       |  FROM base)
-       |SELECT gram,
-       |  CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       |  CAST(count(*) AS BIGINT) AS n_occurrences
-       |FROM grams
-       |GROUP BY gram
-       |HAVING count(DISTINCT doc_id) >= ${QueryParams.X19MinDocs}
-       |ORDER BY n_docs DESC, n_occurrences DESC, gram
-       |LIMIT ${QueryParams.X19TopK}""".stripMargin
-  }
-
-  private val x21Sql: String = {
-    val n = QueryParams.X12SpanWidth
-    val sigExprs = graft.dedup.Dedup
-      .xorSeeds(16)
-      .map(s => s"list_min(list_transform(hs, h -> xor(h, $s)))")
-      .mkString("[", ", ", "]")
-    s"""WITH RECURSIVE
-       |raw AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL),
-       |red AS (
-       |  SELECT doc_id,
-       |    regexp_replace(
-       |      regexp_replace(
-       |        regexp_replace(text, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-       |        '(?i)\\bhttps?://[^\\s]*[^\\s).,;:!?]', '<URL>', 'g'),
-       |      '\\b\\d{7,}\\b', '<NUM>', 'g') AS text
-       |  FROM raw),
-       |qt AS (
-       |  SELECT doc_id, text,
-       |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm,
-       |    string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
-       |  FROM red),
-       |qb AS (
-       |  SELECT doc_id, toks,
-       |    CAST(len(toks) AS BIGINT) AS n_words,
-       |    round((length(norm) - (len(toks) - 1))::DOUBLE / len(toks), 6) AS mean_word_len,
-       |    round(1.0 - len(list_distinct(toks))::DOUBLE / len(toks), 6) AS dup_word_frac
-       |  FROM qt WHERE len(toks) > 0),
-       |qbg AS (SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bigram
-       |        FROM qt, unnest(range(1, greatest(len(toks) - 1, 0) + 1)) AS u(i)),
-       |qbgc AS (SELECT doc_id, bigram, count(*) AS c FROM qbg GROUP BY 1, 2),
-       |qtopb AS (SELECT doc_id, max(c) AS max_c FROM qbgc GROUP BY 1),
-       |qkeep AS (
-       |  SELECT qb.doc_id FROM qb LEFT JOIN qtopb USING (doc_id)
-       |  WHERE n_words >= 20 AND mean_word_len BETWEEN 3.0 AND 10.0
-       |    AND dup_word_frac < 0.6
-       |    AND round(coalesce(max_c, 0) * 2.0 / n_words, 6) < 0.2),
-       |kept AS (SELECT qt.* FROM qt JOIN qkeep USING (doc_id)),
-       |ekeep AS (
-       |  SELECT doc_id FROM (
-       |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(norm)) AS k FROM kept)
-       |  WHERE doc_id = k),
-       |ex AS (SELECT kept.* FROM kept JOIN ekeep USING (doc_id)),
-       |m4base AS (
-       |  SELECT doc_id AS id,
-       |    list_distinct(list_transform(range(1, greatest(len(toks)-2, 0)+1), i -> array_to_string(toks[i:i+2], ' '))) AS sh
-       |  FROM ex),
-       |m4filt AS (SELECT * FROM m4base WHERE len(sh) > 0),
-       |m4hashed AS (SELECT id, sh, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hs FROM m4filt),
-       |m4sig AS (SELECT id, $sigExprs AS sig FROM m4hashed),
-       |m4banded AS (
-       |  SELECT id, b.band, md5(array_to_string(sig[b.band*2+1:b.band*2+2], ',')) AS band_key
-       |  FROM m4sig, (SELECT unnest(range(0, 8)) AS band) b),
-       |m4cand AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM m4banded a JOIN m4banded b ON a.band = b.band AND a.band_key = b.band_key AND a.id < b.id),
-       |m4pairs AS (
-       |  SELECT c.id_a, c.id_b,
-       |    len(list_intersect(sa.sh, sb.sh))::DOUBLE / len(list_distinct(list_concat(sa.sh, sb.sh)))::DOUBLE AS jaccard
-       |  FROM m4cand c JOIN m4filt sa ON sa.id = c.id_a JOIN m4filt sb ON sb.id = c.id_b),
-       |th AS (SELECT id_a, id_b FROM m4pairs WHERE jaccard >= 0.3),
-       |nodes AS (SELECT id_a AS id FROM th UNION SELECT id_b FROM th),
-       |edges AS (SELECT id_a AS src, id_b AS dst FROM th UNION SELECT id_b, id_a FROM th),
-       |reach(id, r) AS (
-       |  SELECT id, id FROM nodes
-       |  UNION
-       |  SELECT e.dst, reach.r FROM edges e JOIN reach ON reach.id = e.src),
-       |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-       |nd AS (SELECT ex.* FROM ex WHERE doc_id NOT IN (SELECT id FROM comp WHERE id <> component)),
-       |bbase AS (
-       |  SELECT doc_id AS id,
-       |    list_distinct(list_transform(range(1, greatest(len(toks)-2, 0)+1), i -> array_to_string(toks[i:i+2], ' '))) AS sh
-       |  FROM (SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
-       |        FROM documents WHERE doc_id % 101 = 0)),
-       |bfilt AS (SELECT * FROM bbase WHERE len(sh) > 0),
-       |bhashed AS (SELECT id, sh, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hs FROM bfilt),
-       |bsig AS (SELECT id, $sigExprs AS sig FROM bhashed),
-       |bbanded AS (
-       |  SELECT id, b.band, md5(array_to_string(sig[b.band*2+1:b.band*2+2], ',')) AS band_key
-       |  FROM bsig, (SELECT unnest(range(0, 8)) AS band) b),
-       |xcand AS (
-       |  SELECT DISTINCT c.id AS id_a, bm.id AS id_b
-       |  FROM (SELECT m4banded.* FROM m4banded JOIN nd ON nd.doc_id = m4banded.id) c
-       |  JOIN bbanded bm ON c.band = bm.band AND c.band_key = bm.band_key),
-       |xpairs AS (
-       |  SELECT cd.id_a, cd.id_b,
-       |    len(list_intersect(sa.sh, sb.sh))::DOUBLE / len(list_distinct(list_concat(sa.sh, sb.sh)))::DOUBLE AS jaccard
-       |  FROM xcand cd JOIN m4filt sa ON sa.id = cd.id_a JOIN bfilt sb ON sb.id = cd.id_b),
-       |cl AS (
-       |  SELECT nd.* FROM nd
-       |  WHERE doc_id NOT IN (SELECT DISTINCT id_a FROM xpairs WHERE jaccard >= 0.3)),
-       |sp AS (
-       |  SELECT doc_id, toks,
-       |    CASE WHEN len(toks) >= $n
-       |      THEN list_transform(range(1, len(toks) - $n + 2), i -> md5(array_to_string(toks[i:i+${n - 1}], ' ')))
-       |      ELSE []::VARCHAR[] END AS ws
-       |  FROM cl),
-       |expl AS (SELECT doc_id, unnest(ws) AS span FROM sp),
-       |dup AS (SELECT span FROM (SELECT span, count(*) AS c FROM expl GROUP BY span) t WHERE c > 1),
-       |sstats AS (
-       |  SELECT e.doc_id,
-       |    CAST(count(*) AS BIGINT) AS n_spans,
-       |    CAST(sum(CASE WHEN d.span IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans
-       |  FROM expl e LEFT JOIN dup d USING (span) GROUP BY e.doc_id),
-       |keep6 AS (
-       |  SELECT sp.doc_id FROM sp LEFT JOIN sstats s USING (doc_id)
-       |  WHERE (CASE WHEN coalesce(s.n_spans, 0) > 0
-       |    THEN CAST(s.n_dup_spans AS DOUBLE) / CAST(s.n_spans AS DOUBLE) ELSE 0.0 END) < 0.5),
-       |uf AS (SELECT sp.doc_id, sp.toks, sp.ws FROM sp JOIN keep6 USING (doc_id)),
-       |occ6 AS (
-       |  SELECT doc_id, u.pos, ws[u.pos] AS span
-       |  FROM uf, (SELECT unnest(range(1, len(ws) + 1)) AS pos) u),
-       |rmv6 AS (
-       |  SELECT doc_id, pos FROM (
-       |    SELECT doc_id, pos,
-       |      row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
-       |    FROM occ6) t
-       |  WHERE rn > 1),
-       |st6 AS (SELECT doc_id, list(pos ORDER BY pos) AS st FROM rmv6 GROUP BY doc_id),
-       |nz AS (
-       |  SELECT doc_id, coalesce(array_to_string(ct, ' '), '') AS text FROM (
-       |    SELECT w.doc_id,
-       |      list_transform(
-       |        list_filter(range(1, len(w.toks) + 1),
-       |          p -> len(list_filter(coalesce(s.st, []::BIGINT[]), x -> p >= x AND p < x + $n)) = 0),
-       |        p -> w.toks[p]) AS ct
-       |    FROM uf w LEFT JOIN st6 s USING (doc_id))
-       |  WHERE length(coalesce(array_to_string(ct, ' '), '')) > 0),
-       |ct7 AS (SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks FROM nz),
-       |ch AS (
-       |  SELECT doc_id, u.i AS start_i,
-       |    array_to_string(toks[u.i:u.i+39], ' ') AS chunk_text
-       |  FROM ct7, unnest(range(1, greatest(len(toks) - 10, 1) + 1, 30)) AS u(i))
-       |SELECT doc_id,
-       |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start_i) - 1 AS INTEGER) AS chunk_idx,
-       |  chunk_text,
-       |  CAST(len(string_split(chunk_text, ' ')) AS BIGINT) AS n_tokens
-       |FROM ch ORDER BY doc_id, chunk_idx""".stripMargin
-  }
-
-  /** Padded-WMA SQL with [[graft.indicators.Indicators.paddedWmaCol]]'s
-    * exact left-to-right add order (bit-reproducible: SQL `+` is
-    * left-associative like Scala's `reduceLeft`).
-    */
-  private def wmaSql(v: String, pad: String, period: Int, w: String): String = {
-    val terms = (0 until period).map { k =>
-      val weight = (period - k).toDouble
-      val src = if (k == 0) v else s"coalesce(lag($v,$k) OVER $w, $pad)"
-      s"$weight*$src"
-    }
-    s"(${terms.mkString(" + ")})/${(period * (period + 1) / 2).toDouble}"
-  }
-
-  // G1 — the HullMacd per-symbol state machine as a DuckDB list_reduce
-  // fold (the a8 technique: LIST(VARCHAR) accumulator — STRUCT
-  // accumulators mis-fold on ragged vectors in DuckDB v1.0.0 — with
-  // nested single-element list_transforms binding locals). The
-  // accumulator layout is [hullDir, macdPos, hullArmed, macdArmed,
-  // bullishOpen, bearishOpen, sig...]; each candle item is
-  // [ts_us, hull_color, macd_pos, pre_session, power_hour]. The fold
-  // only emits (t|TYPE|DIR|TRIGGER) keys — every numeric output column
-  // is a pass-through of the candle's indicator values, so they are
-  // re-joined from the indicator CTEs (bit-exact per the w2/w4 oracle
-  // precedent; same WMA add order, same seeded-EMA left fold).
-  // Reference semantics: `analytics/engines/hull_macd.py:93-260`.
-  private val g1Lambda: String =
-    """(a, x) -> CASE WHEN x[4] = '1'
-      |  THEN list_concat([x[2], x[3], a[3], a[4], a[5], a[6]], a[7:])
-      |  ELSE list_transform([[
-      |         CASE WHEN a[1] <> '' AND a[1] <> x[2] THEN '1' ELSE '0' END,
-      |         CASE WHEN a[2] <> '' AND a[2] <> x[3] THEN '1' ELSE '0' END]], h ->
-      |    list_transform([[
-      |         CASE WHEN a[5] = '1' AND h[1] = '1' AND x[2] = 'Down' THEN 'hull'
-      |              WHEN a[5] = '1' AND h[2] = '1' AND x[3] = 'bearish' THEN 'macd'
-      |              ELSE '' END,
-      |         CASE WHEN a[6] = '1' AND h[1] = '1' AND x[2] = 'Up' THEN 'hull'
-      |              WHEN a[6] = '1' AND h[2] = '1' AND x[3] = 'bullish' THEN 'macd'
-      |              ELSE '' END]], c ->
-      |      list_transform([[
-      |         CASE WHEN c[1] <> '' THEN '0' ELSE a[5] END,
-      |         CASE WHEN c[2] <> '' THEN '0' ELSE a[6] END]], o ->
-      |        list_transform([list_concat(
-      |             CASE WHEN c[1] <> '' THEN [x[1] || '|CLOSE|BULLISH|' || c[1]] ELSE []::VARCHAR[] END,
-      |             CASE WHEN c[2] <> '' THEN [x[1] || '|CLOSE|BEARISH|' || c[2]] ELSE []::VARCHAR[] END)], g ->
-      |          CASE WHEN x[5] = '1'
-      |            THEN list_concat(list_concat([x[2], x[3], a[3], a[4], o[1], o[2]], a[7:]), g)
-      |            ELSE list_transform([[
-      |                   CASE WHEN h[1] = '1' THEN (CASE WHEN x[2] = 'Up' THEN 'BULLISH' ELSE 'BEARISH' END) ELSE a[3] END,
-      |                   CASE WHEN h[2] = '1' THEN (CASE WHEN x[3] = 'bullish' THEN 'BULLISH' ELSE 'BEARISH' END) ELSE a[4] END]], r ->
-      |              CASE
-      |                WHEN r[1] <> '' AND r[1] = r[2]
-      |                     AND NOT ((r[1] = 'BULLISH' AND o[1] = '1') OR (r[1] = 'BEARISH' AND o[2] = '1'))
-      |                THEN list_concat(list_concat(
-      |                       [x[2], x[3], '', '',
-      |                        CASE WHEN r[1] = 'BULLISH' THEN '1' ELSE o[1] END,
-      |                        CASE WHEN r[1] = 'BEARISH' THEN '1' ELSE o[2] END], a[7:]),
-      |                       list_append(g, x[1] || '|OPEN|' || r[1] || '|confluence'))
-      |                WHEN r[1] <> '' AND r[2] <> '' AND r[1] <> r[2]
-      |                THEN list_concat(list_concat(
-      |                       [x[2], x[3],
-      |                        CASE WHEN h[1] = '1' AND h[2] = '0' THEN r[1] ELSE '' END,
-      |                        CASE WHEN h[2] = '1' AND h[1] = '0' THEN r[2] ELSE '' END,
-      |                        o[1], o[2]], a[7:]), g)
-      |                ELSE list_concat(list_concat([x[2], x[3], r[1], r[2], o[1], o[2]], a[7:]), g)
-      |              END)[1]
-      |          END)[1])[1])[1])[1]
-      |END""".stripMargin
-
-  /** The candle→indicator→state-machine CTE chain shared by the g1 and
-    * b1 oracles, parameterized on indicator lengths exactly like
-    * [[graft.signals.HullMacd.detectSignals]]. `src` must be a prior
-    * CTE providing (symbol, ts_us, value). Produces CTEs `candles`
-    * (indicator-augmented, `rn` = per-symbol row number) and `parsed`
-    * (one row per emitted signal: symbol, time_us, signal_type,
-    * direction, trigger).
-    */
-  private def signalEngineCtes(src: String, hullLength: Int, fast: Int, slow: Int, signalLen: Int): String = {
-    val half = math.round(hullLength / 2.0).toInt
-    val sqrtLen = math.round(math.sqrt(hullLength.toDouble)).toInt
-    val wmaHalf = wmaSql("value", "pad", half, "w")
-    val wmaFull = wmaSql("value", "pad", hullLength, "w")
-    val wmaFinal = wmaSql("hd", "pad", sqrtLen, "w")
-    val aF = s"2.0/${fast + 1}.0"
-    val aS = s"2.0/${slow + 1}.0"
-    val aM = s"2.0/${signalLen + 1}.0"
-    s"""base AS (
-       |  SELECT symbol, ts_us, value,
-       |         first_value(value) OVER (PARTITION BY symbol ORDER BY ts_us) AS pad,
-       |         list(value) OVER (PARTITION BY symbol ORDER BY ts_us
-       |                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-       |  FROM $src WHERE value IS NOT NULL),
-       |d AS (
-       |  SELECT *, 2.0*($wmaHalf) - ($wmaFull) AS hd
-       |  FROM base WINDOW w AS (PARTITION BY symbol ORDER BY ts_us)),
-       |h AS (
-       |  SELECT *, $wmaFinal AS hma
-       |  FROM d WINDOW w AS (PARTITION BY symbol ORDER BY ts_us)),
-       |mac AS (
-       |  SELECT *,
-       |    list_reduce(list_prepend(pad, pre), (acc, v) -> ($aF)*v + (1.0 - $aF)*acc)
-       |    - list_reduce(list_prepend(pad, pre), (acc, v) -> ($aS)*v + (1.0 - $aS)*acc) AS macd_value
-       |  FROM h),
-       |sg AS (
-       |  SELECT *,
-       |    list_reduce(list_prepend(0.0, list(macd_value) OVER (PARTITION BY symbol ORDER BY ts_us
-       |                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-       |                (acc, v) -> ($aM)*v + (1.0 - $aM)*acc) AS avg
-       |  FROM mac),
-       |candles AS (
-       |  SELECT symbol, ts_us, value AS close_price,
-       |    hma,
-       |    CASE WHEN hma > lag(hma,1) OVER w THEN 'Up' ELSE 'Down' END AS hma_color,
-       |    macd_value, avg, macd_value - avg AS diff,
-       |    CASE WHEN macd_value > avg THEN 'bullish' ELSE 'bearish' END AS mp,
-       |    CASE WHEN hour(timezone('America/New_York', timezone('UTC',
-       |           make_timestamp((ts_us // 1000) * 1000)))) < 10 THEN '1' ELSE '0' END AS pre_gate,
-       |    CASE WHEN hour(timezone('America/New_York', timezone('UTC',
-       |           make_timestamp((ts_us // 1000) * 1000)))) >= 15 THEN '1' ELSE '0' END AS pow_gate,
-       |    row_number() OVER w AS rn
-       |  FROM sg WINDOW w AS (PARTITION BY symbol ORDER BY ts_us)),
-       |packed AS (
-       |  SELECT symbol,
-       |    list([CAST(ts_us AS VARCHAR), hma_color, mp, pre_gate, pow_gate] ORDER BY ts_us) AS l
-       |  FROM candles WHERE rn >= 2 GROUP BY symbol),
-       |folded AS (
-       |  SELECT symbol, list_reduce(list_prepend(['','','','','0','0'], l), $g1Lambda) AS s
-       |  FROM packed),
-       |sigs AS (SELECT symbol, unnest(s[7:]) AS enc FROM folded),
-       |parsed AS (
-       |  SELECT symbol, CAST(split_part(enc,'|',1) AS BIGINT) AS time_us,
-       |    split_part(enc,'|',2) AS signal_type, split_part(enc,'|',3) AS direction,
-       |    split_part(enc,'|',4) AS trigger
-       |  FROM sigs)""".stripMargin
-  }
-
-  // T4/W5 — the streamed indicator series: hull/MACD recursions at
-  // Hull(8)/MACD(4,8,3) over each symbol's FULL deduped series (the
-  // candles CTE of the shared engine fold), projected to the streamed
-  // quarters. The quartering is explicit integer row_number/count
-  // arithmetic over the total (ts_us, symbol) order — both engines
-  // derive the split from first principles (no ntile semantics
-  // dependency), so the seed/stream boundary is bit-pinned too.
-  private val t4Sql: String =
-    s"""WITH src0 AS (
-       |  SELECT symbol, ts_us, value FROM (
-       |    SELECT CAST(user_id AS VARCHAR) AS symbol, epoch_us(ts) AS ts_us, value,
-       |      row_number() OVER (PARTITION BY user_id, epoch_us(ts) ORDER BY event_id DESC) AS rn
-       |    FROM events WHERE value IS NOT NULL) t
-       |  WHERE rn = 1),
-       |ranked AS (
-       |  SELECT symbol, ts_us, value,
-       |    row_number() OVER (ORDER BY ts_us, symbol) AS _rn,
-       |    count(*) OVER () AS _n
-       |  FROM src0),
-       |src AS (SELECT symbol, ts_us, value FROM src0),
-       |${signalEngineCtes("src", hullLength = 8, fast = 4, slow = 8, signalLen = 3)}
-       |SELECT c.symbol, c.ts_us AS time_us, c.hma, c.hma_color, c.macd_value, c.avg, c.diff
-       |FROM candles c
-       |JOIN ranked r ON r.symbol = c.symbol AND r.ts_us = c.ts_us
-       |WHERE r._rn > r._n // 4
-       |ORDER BY c.symbol, time_us""".stripMargin
-
-  private val g1Sql: String =
-    s"""WITH src AS (
-       |  SELECT symbol, ts_us, value FROM (
-       |    SELECT CAST(user_id AS VARCHAR) AS symbol, epoch_us(ts) AS ts_us, value,
-       |      row_number() OVER (PARTITION BY user_id, epoch_us(ts) ORDER BY event_id DESC) AS rn
-       |    FROM events WHERE value IS NOT NULL) t
-       |  WHERE rn = 1),
-       |${signalEngineCtes("src", hullLength = 20, fast = 12, slow = 26, signalLen = 9)}
-       |SELECT p.symbol, p.time_us, p.signal_type, p.direction, 'hull_macd' AS engine, p.trigger,
-       |  c.hma_color AS hull_direction, c.hma AS hull_value, c.macd_value,
-       |  c.avg AS macd_signal, c.diff AS macd_histogram, c.close_price
-       |FROM parsed p JOIN candles c ON p.symbol = c.symbol AND p.time_us = c.ts_us
-       |ORDER BY p.symbol, p.time_us, p.signal_type, p.direction""".stripMargin
-
-  // T5 — g1's engine CTEs projected to the STREAMING engine's output
-  // columns (SignalOut carries the signal row + close, not the full
-  // indicator surface): same src dedup, same fold, stated once.
-  private val t5Sql: String =
-    s"""WITH src AS (
-       |  SELECT symbol, ts_us, value FROM (
-       |    SELECT CAST(user_id AS VARCHAR) AS symbol, epoch_us(ts) AS ts_us, value,
-       |      row_number() OVER (PARTITION BY user_id, epoch_us(ts) ORDER BY event_id DESC) AS rn
-       |    FROM events WHERE value IS NOT NULL) t
-       |  WHERE rn = 1),
-       |${signalEngineCtes("src", hullLength = 20, fast = 12, slow = 26, signalLen = 9)}
-       |SELECT p.symbol, p.time_us, p.signal_type, p.direction, p.trigger, c.close_price
-       |FROM parsed p JOIN candles c ON p.symbol = c.symbol AND p.time_us = c.ts_us
-       |ORDER BY p.symbol, p.time_us, p.signal_type, p.direction""".stripMargin
-
-  // B1 — the FULL backtest slice: 30-minute signal candles (latest event
-  // per bucket, stamped at the bucket start) → the same fold at
-  // Hull(8)/MACD(4,8,3) → each signal enriched with its as-of entry
-  // price from the raw pricing stream (DuckDB native ASOF JOIN, the
-  // b1_enrich-proven shape). Composition of two already-green halves.
-  private val b1Sql: String =
-    s"""WITH pricing AS (
-       |  SELECT CAST(user_id AS VARCHAR) AS symbol, epoch_us(ts) AS time_us, value AS close, event_id
-       |  FROM events),
-       |ranked AS (
-       |  SELECT symbol, (time_us // 1800000000) * 1800000000 AS bucket_us, time_us, close,
-       |    row_number() OVER (PARTITION BY symbol, time_us // 1800000000
-       |                       ORDER BY time_us DESC, event_id DESC) AS rnk
-       |  FROM pricing),
-       |src AS (SELECT symbol, bucket_us AS ts_us, close AS value FROM ranked WHERE rnk = 1),
-       |${signalEngineCtes("src", hullLength = 8, fast = 4, slow = 8, signalLen = 3)}
-       |SELECT p.symbol, p.time_us, p.signal_type, p.direction, p.trigger,
-       |  c.close_price, r.close AS entry_price
-       |FROM parsed p
-       |JOIN candles c ON p.symbol = c.symbol AND p.time_us = c.ts_us
-       |ASOF LEFT JOIN (
-       |  SELECT symbol, time_us, close FROM (
-       |    SELECT symbol, time_us, close,
-       |      row_number() OVER (PARTITION BY symbol, time_us ORDER BY event_id DESC) AS prn
-       |    FROM pricing WHERE close IS NOT NULL) dp
-       |  WHERE prn = 1) r
-       |  ON p.symbol = r.symbol AND p.time_us >= r.time_us
-       |ORDER BY p.symbol, p.time_us, p.signal_type, p.direction""".stripMargin
-
-  // D6-buckets — sign-LSH bucket assignment recomputed from the SAME
-  // seeded hyperplanes, exported as SQL literals (Double.toString is
-  // shortest-round-trip, so DuckDB parses back the identical binary64).
-  // Each plane's dot product is an explicit 64-term left-associative
-  // sum — the evaluation order of the native DotProduct expression —
-  // and each float element casts to DOUBLE exactly on both engines.
-  private def bucketsUnion(bits: Int, tables: Int, seed: Long): String = {
-    val planes = graft.similarity.Similarity.tablePlanes(bits, tables, dim = 64, seed = seed)
-    def dotSql(plane: Array[Double]): String =
-      plane.zipWithIndex
-        .map { case (c, i) => s"CAST(embedding[${i + 1}] AS DOUBLE)*($c)" }
-        .mkString(" + ")
-    val perTable = planes.zipWithIndex.map { case (ps, t) =>
-      val bucket = ps.zipWithIndex
-        .map { case (p, b) => s"CASE WHEN (${dotSql(p)}) > 0.0 THEN ${1L << b} ELSE 0 END" }
-        .mkString(" + ")
-      s"SELECT CAST($t AS INTEGER) AS tbl, CAST($bucket AS BIGINT) AS bucket, vec_id AS id FROM embeddings"
-    }
-    perTable.mkString("", "\nUNION ALL\n", "")
-  }
-  private val d6BucketsSql: String = bucketsUnion(bits = 2, tables = 8, seed = 42L) + "\nORDER BY tbl, bucket, id"
-  private val n2BucketsSql: String = bucketsUnion(bits = 4, tables = 6, seed = 42L) + "\nORDER BY tbl, bucket, id"
-
-  // The exact-cosine SQL of the d5/n1 oracles (list_reduce left fold =
-  // the native DotProduct loop order; norms recomputed per side exactly
-  // like Similarity.norm = sqrt(dot(v,v))).
-  private def cosSql(a: String, b: String): String = {
-    def dot(x: String, y: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> $x[i] * $y[i])), (acc, x) -> acc + x)"
-    s"${dot(a, b)} / (sqrt(${dot(a, a)}) * sqrt(${dot(b, b)}))"
-  }
-
-  // D6 — the FULL sign-LSH near-dup pair pipeline: bucket assignment
-  // from the exported hyperplane literals (the d6_buckets pin) →
-  // distinct same-(table,bucket) candidate pairs (id_a < id_b) → exact
-  // cosine verify ≥ 0.4 (the d5 formula). Every stage is relational
-  // over the seeded model, so the whole scale path hash-checks, not
-  // just its blocking step.
-  private val d6PairsSql: String =
-    s"""WITH b AS (
-       |${bucketsUnion(bits = 2, tables = 8, seed = 42L)}),
-       |cand AS (
-       |  SELECT DISTINCT a.id AS id_a, b2.id AS id_b
-       |  FROM b a JOIN b b2 ON a.tbl = b2.tbl AND a.bucket = b2.bucket AND a.id < b2.id),
-       |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |p AS (
-       |  SELECT c.id_a, c.id_b, ${cosSql("va.v", "vb.v")} AS cos
-       |  FROM cand c JOIN e va ON va.vec_id = c.id_a JOIN e vb ON vb.vec_id = c.id_b)
-       |SELECT id_a, id_b, cos FROM p WHERE cos >= 0.4 ORDER BY id_a, id_b""".stripMargin
-
-  // N2 — the FULL multi-table LSH ANN pipeline: same bucket literals at
-  // n2's configuration, query side = vec_id < 10, candidates from ANY
-  // shared (table, bucket) excluding self, exact cosine re-rank, top-5
-  // per query with the (cos DESC, nbr_id) tie-break of the n1 oracle.
-  private val n2TopKSql: String =
-    s"""WITH b AS (
-       |${bucketsUnion(bits = 4, tables = 6, seed = 42L)}),
-       |qb AS (SELECT * FROM b WHERE id < 10),
-       |cand AS (
-       |  SELECT DISTINCT qb.id AS query_id, b.id AS nbr_id
-       |  FROM qb JOIN b ON qb.tbl = b.tbl AND qb.bucket = b.bucket AND b.id <> qb.id),
-       |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |scored AS (
-       |  SELECT c.query_id, c.nbr_id, ${cosSql("q.v", "n.v")} AS cos
-       |  FROM cand c JOIN e q ON q.vec_id = c.query_id JOIN e n ON n.vec_id = c.nbr_id)
-       |SELECT query_id, nbr_id, cos FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nbr_id) AS rn FROM scored) t
-       |WHERE rn <= 5 ORDER BY query_id, nbr_id""".stripMargin
-
-  // Shared CTE chain producing the d2 MinHash+LSH verified pair list
-  // (ends with CTE `pairs`); d2 filters it, d8 runs a recursive closure
-  // over it. xor-permutation minhash: same seed constants as
-  // Dedup.xorSeeds.
-  private val d2PairsCtes: String = {
-    val sigExprs = graft.dedup.Dedup
-      .xorSeeds(16)
-      .map(s => s"list_min(list_transform(hs, h -> xor(h, $s)))")
-      .mkString("[", ", ", "]")
-    s"""base AS (
-       |  SELECT doc_id AS id,
-       |    list_distinct(list_transform(range(1, greatest(len(toks)-2, 0)+1), i -> array_to_string(toks[i:i+2], ' '))) AS sh
-       |  FROM (SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks FROM documents)),
-       |filt AS (SELECT * FROM base WHERE len(sh) > 0),
-       |hashed AS (SELECT id, sh, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hs FROM filt),
-       |sig AS (SELECT id, $sigExprs AS sig FROM hashed),
-       |banded AS (
-       |  SELECT id, b.band, md5(array_to_string(sig[b.band*2+1:b.band*2+2], ',')) AS band_key
-       |  FROM sig, (SELECT unnest(range(0, 8)) AS band) b),
-       |cand AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM banded a JOIN banded b ON a.band = b.band AND a.band_key = b.band_key AND a.id < b.id),
-       |pairs AS (
-       |  SELECT c.id_a, c.id_b,
-       |    len(list_intersect(sa.sh, sb.sh))::DOUBLE / len(list_distinct(list_concat(sa.sh, sb.sh)))::DOUBLE AS jaccard
-       |  FROM cand c JOIN filt sa ON sa.id = c.id_a JOIN filt sb ON sb.id = c.id_b)""".stripMargin
-  }
-
-  // N3 — the FULL IVF ANN pipeline, rendered at dump time with the
-  // FITTED k-means centroids exported as DOUBLE list literals
-  // (Double.toString is shortest-round-trip, so DuckDB parses back the
-  // identical binary64 — the d6/n2 hyperplane precedent). Stages mirror
-  // Similarity.ivfTopK exactly: nearest-centroid assignment per corpus
-  // vector (argmax tie-break (score DESC, cell DESC) = Spark's
-  // array_max over (score, cell) structs), each query (vec_id < 10)
-  // probes its 6 best cells (reverse(array_sort) = the same tie-break;
-  // a corpus vector lives in exactly one cell and probe cells are
-  // distinct, so the cell equi-join yields no duplicate candidates and
-  // needs no DISTINCT — same as the Spark join), exact cosine re-rank
-  // (the d5/n1 formula), top-5 per query with the (cos DESC, nbr_id)
-  // tie-break of the n1 oracle.
-  /** Render a double array as a DuckDB list of STRING-PARSED doubles:
-    * a bare numeric literal like `0.021083015560482938` types as
-    * DECIMAL(19,18) (int128-backed), and DuckDB's decimal→double
-    * conversion double-rounds — measured 1-ulp off for ~95% of fitted
-    * centroid components, which broke n5's adist hash (n3/d10/d12 were
-    * immune only because their literals feed a discrete argmax).
-    * `'…'::DOUBLE` string-parses with correct rounding: all 1152 PQ
-    * codebook values round-trip bit-exactly.
-    */
-  private def dArr(c: Array[Double]): String =
-    c.map(x => s"'$x'::DOUBLE").mkString("[", ", ", "]")
-
-  def n3IvfSql(centroids: Array[Array[Double]]): String = {
-    val centValues = centroids.zipWithIndex
-      .map { case (c, i) => s"($i, ${dArr(c)})" }
-      .mkString(", ")
-    s"""WITH cents AS (
-       |  SELECT * FROM (VALUES $centValues) AS t(cell, cvec)),
-       |scored AS (
-       |  SELECT e.vec_id AS id, c.cell,
-       |    list_reduce(
-       |      list_prepend(0.0, list_transform(generate_series(1, 64),
-       |        i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])),
-       |      (acc, x) -> acc + x) AS score
-       |  FROM embeddings e CROSS JOIN cents c),
-       |assigned AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell, row_number() OVER (PARTITION BY id ORDER BY score DESC, cell DESC) AS rn
-       |    FROM scored) t WHERE rn = 1),
-       |probes AS (
-       |  SELECT id AS query_id, cell FROM (
-       |    SELECT id, cell, row_number() OVER (PARTITION BY id ORDER BY score DESC, cell DESC) AS rn
-       |    FROM scored WHERE id < 10) t WHERE rn <= 6),
-       |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |cand AS (
-       |  SELECT p.query_id, a.id AS nbr_id
-       |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.id <> p.query_id),
-       |reranked AS (
-       |  SELECT c.query_id, c.nbr_id, ${cosSql("q.v", "n.v")} AS cos
-       |  FROM cand c JOIN e q ON q.vec_id = c.query_id JOIN e n ON n.vec_id = c.nbr_id)
-       |SELECT query_id, nbr_id, cos FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nbr_id) AS rn FROM reranked) t
-       |WHERE rn <= 5 ORDER BY query_id, nbr_id""".stripMargin
-  }
-
-  /** D10 — SemDeDup over the fitted-centroid literals: the n3 assigned
-    * CTE (identical argmax + tie-break) feeds a within-cell self-join;
-    * cosine is the d5 formula. Exact restriction semantics — the oracle
-    * computes the SAME within-cell pair set, so recall-vs-d5 is a
-    * property of the operator, not a hash hazard.
-    */
-  def d10SemdedupSql(centroids: Array[Array[Double]]): String = {
-    val centValues = centroids.zipWithIndex
-      .map { case (c, i) => s"($i, ${dArr(c)})" }
-      .mkString(", ")
-    s"""WITH cents AS (
-       |  SELECT * FROM (VALUES $centValues) AS t(cell, cvec)),
-       |scored AS (
-       |  SELECT e.vec_id AS id, c.cell,
-       |    list_reduce(
-       |      list_prepend(0.0, list_transform(generate_series(1, 64),
-       |        i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])),
-       |      (acc, x) -> acc + x) AS score
-       |  FROM embeddings e CROSS JOIN cents c),
-       |assigned AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell, row_number() OVER (PARTITION BY id ORDER BY score DESC, cell DESC) AS rn
-       |    FROM scored) t WHERE rn = 1),
-       |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |p AS (
-       |  SELECT a.id AS id_a, b.id AS id_b, CAST(a.cell AS INTEGER) AS cell,
-       |    ${cosSql("ea.v", "eb.v")} AS cos
-       |  FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.id < b.id
-       |  JOIN e ea ON ea.vec_id = a.id JOIN e eb ON eb.vec_id = b.id)
-       |SELECT id_a, id_b, cell, cos FROM p
-       |WHERE cos >= ${QueryParams.D10Cos}
-       |ORDER BY id_a, id_b""".stripMargin
-  }
-
-  /** D14 — the semantic ingest end-state over the fitted-centroid
-    * literals: the d10 `assigned`/`p` CTEs (identical argmax tie-break
-    * and cosine) feed the d13 sequential-gate construction — seed =
-    * vec_id%3=1, two gated batches (%3=2 then %3=0) each resolved by a
-    * recursive closure over the pair graph restricted to
-    * (batch ∪ accepted) touching the batch, corpus anchors win, min
-    * batch id keeps. No exact-novelty stage: the semantic gate's replay
-    * guard is id-identity, a no-op on distinct ids.
-    */
-  def d14SemIngestSql(centroids: Array[Array[Double]]): String = {
-    val centValues = centroids.zipWithIndex
-      .map { case (c, i) => s"($i, ${dArr(c)})" }
-      .mkString(", ")
-    s"""WITH RECURSIVE cents AS (
-       |  SELECT * FROM (VALUES $centValues) AS t(cell, cvec)),
-       |scored AS (
-       |  SELECT e.vec_id AS id, c.cell,
-       |    list_reduce(
-       |      list_prepend(0.0, list_transform(generate_series(1, 64),
-       |        i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])),
-       |      (acc, x) -> acc + x) AS score
-       |  FROM embeddings e CROSS JOIN cents c),
-       |assigned AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell, row_number() OVER (PARTITION BY id ORDER BY score DESC, cell DESC) AS rn
-       |    FROM scored) t WHERE rn = 1),
-       |ev AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |p AS (
-       |  SELECT a.id AS id_a, b.id AS id_b
-       |  FROM assigned a JOIN assigned b ON a.cell = b.cell AND a.id < b.id
-       |  JOIN ev ea ON ea.vec_id = a.id JOIN ev eb ON eb.vec_id = b.id
-       |  WHERE ${cosSql("ea.v", "eb.v")} >= ${QueryParams.D10Cos}),
-       |sym AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),
-       |seed AS (SELECT vec_id AS id FROM embeddings WHERE vec_id % 3 = 1),
-       |n2 AS (SELECT vec_id AS id FROM embeddings WHERE vec_id % 3 = 2),
-       |u2 AS (SELECT id FROM n2 UNION SELECT id FROM seed),
-       |ed2 AS (SELECT src, dst FROM sym
-       |  WHERE (src IN (SELECT id FROM n2) OR dst IN (SELECT id FROM n2))
-       |    AND src IN (SELECT id FROM u2) AND dst IN (SELECT id FROM u2)),
-       |r2(id, r) AS (
-       |  SELECT id, id FROM u2
-       |  UNION
-       |  SELECT e2.dst, r2.r FROM ed2 e2 JOIN r2 ON r2.id = e2.src),
-       |c2 AS (SELECT id, min(r) AS component FROM r2 GROUP BY id),
-       |g2 AS (SELECT component,
-       |    max(CASE WHEN id NOT IN (SELECT id FROM n2) THEN 1 ELSE 0 END) AS has_indexed,
-       |    min(CASE WHEN id IN (SELECT id FROM n2) THEN id END) AS min_batch
-       |  FROM c2 GROUP BY component),
-       |acc2 AS (
-       |  SELECT n.id FROM n2 n
-       |  JOIN c2 ON c2.id = n.id
-       |  JOIN g2 ON g2.component = c2.component
-       |  WHERE g2.has_indexed = 0 AND n.id = g2.min_batch),
-       |n0 AS (SELECT vec_id AS id FROM embeddings WHERE vec_id % 3 = 0),
-       |u0 AS (SELECT id FROM n0 UNION SELECT id FROM seed UNION SELECT id FROM acc2),
-       |ed0 AS (SELECT src, dst FROM sym
-       |  WHERE (src IN (SELECT id FROM n0) OR dst IN (SELECT id FROM n0))
-       |    AND src IN (SELECT id FROM u0) AND dst IN (SELECT id FROM u0)),
-       |r0(id, r) AS (
-       |  SELECT id, id FROM u0
-       |  UNION
-       |  SELECT e0.dst, r0.r FROM ed0 e0 JOIN r0 ON r0.id = e0.src),
-       |c0 AS (SELECT id, min(r) AS component FROM r0 GROUP BY id),
-       |g0 AS (SELECT component,
-       |    max(CASE WHEN id NOT IN (SELECT id FROM n0) THEN 1 ELSE 0 END) AS has_indexed,
-       |    min(CASE WHEN id IN (SELECT id FROM n0) THEN id END) AS min_batch
-       |  FROM c0 GROUP BY component),
-       |acc0 AS (
-       |  SELECT n.id FROM n0 n
-       |  JOIN c0 ON c0.id = n.id
-       |  JOIN g0 ON g0.component = c0.component
-       |  WHERE g0.has_indexed = 0 AND n.id = g0.min_batch),
-       |fin AS (SELECT id FROM seed UNION ALL SELECT id FROM acc2 UNION ALL SELECT id FROM acc0)
-       |SELECT f.id AS vec_id, CAST(a.cell AS INTEGER) AS cell
-       |FROM fin f JOIN assigned a ON a.id = f.id
-       |ORDER BY vec_id""".stripMargin
-  }
-
-  /** N5 — PQ ANN over the AUGMENTED codebook literals: codes re-derived
-    * per (id, subspace) by the same score-DESC/c-DESC argmax the other
-    * fitted oracles pin; ADC folds the per-subspace squared distances
-    * in subspace order from 0.0 — associating exactly like the Spark
-    * side's (lit(0.0) +: dists).reduce(_ + _). Sub-centroids are
-    * sliced back out of the same augmented arrays both readers share.
-    */
-  def n5PqSql(aug: Array[Array[Array[Double]]]): String = {
-    val values = (for {
-      s <- aug.indices
-      c <- aug(s).indices
-    } yield s"($s, $c, ${dArr(aug(s)(c))})").mkString(", ")
-    def dot8(a: String, b: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8), i -> $a[i] * $b[i])), (acc, y) -> acc + y)"
-    s"""WITH pq AS (
-       |  SELECT * FROM (VALUES $values) AS t(s, c, cvec)),
-       |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |xs AS (
-       |  SELECT e.vec_id AS id, sub.s,
-       |    list_append(e.v[sub.s*8+1 : sub.s*8+8], 1.0) AS xv
-       |  FROM e CROSS JOIN (SELECT DISTINCT s FROM pq) sub),
-       |scored AS (
-       |  SELECT x.id, x.s, p.c,
-       |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 9), i -> x.xv[i] * p.cvec[i])), (acc, y) -> acc + y) AS score
-       |  FROM xs x JOIN pq p ON p.s = x.s),
-       |codes AS (
-       |  SELECT id, s, c FROM (
-       |    SELECT id, s, c, row_number() OVER (PARTITION BY id, s ORDER BY score DESC, c DESC) AS rn
-       |    FROM scored) t WHERE rn = 1),
-       |cand AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS nbr_id
-       |  FROM e q CROSS JOIN e c
-       |  WHERE q.vec_id < 10 AND c.vec_id <> q.vec_id),
-       |terms AS (
-       |  SELECT cd.query_id, cd.nbr_id, k.s,
-       |    (${dot8("q.v[k.s*8+1 : k.s*8+8]", "q.v[k.s*8+1 : k.s*8+8]")}
-       |      - 2.0 * ${dot8("q.v[k.s*8+1 : k.s*8+8]", "p.cvec[1:8]")})
-       |      + ${dot8("p.cvec[1:8]", "p.cvec[1:8]")} AS term
-       |  FROM cand cd
-       |  JOIN codes k ON k.id = cd.nbr_id
-       |  JOIN pq p ON p.s = k.s AND p.c = k.c
-       |  JOIN e q ON q.vec_id = cd.query_id),
-       |adist AS (
-       |  SELECT query_id, nbr_id,
-       |    list_reduce(list_prepend(0.0, list(term ORDER BY s)), (acc, y) -> acc + y) AS adist
-       |  FROM terms GROUP BY query_id, nbr_id)
-       |SELECT query_id, nbr_id, adist FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist ASC, nbr_id ASC) AS rn
-       |  FROM adist) t
-       |WHERE rn <= 5 ORDER BY query_id, nbr_id""".stripMargin
-  }
-
-  /** ivfpq — the full two-stage IVF-PQ probe from BOTH fitted models as
-    * literals: the n3 `cents/scored/assigned/probes` CTEs (cell
-    * assignment + 6-cell probe, identical argmax tie-breaks) compose
-    * with the n5 code-derivation and ADC CTEs, then a 50-deep ADC
-    * shortlist per query (adist ASC, nbr_id ASC — the exact
-    * `topKPerGroup` ordering, so boundary ties cannot diverge) is
-    * exact-cosine re-ranked to top-5 (cos DESC, nbr_id — the n1/n3
-    * ordering).
-    */
-  def ivfpqTopKSql(centroids: Array[Array[Double]], aug: Array[Array[Array[Double]]]): String = {
-    val centValues = centroids.zipWithIndex
-      .map { case (c, i) => s"($i, ${dArr(c)})" }
-      .mkString(", ")
-    val pqValues = (for {
-      s <- aug.indices
-      c <- aug(s).indices
-    } yield s"($s, $c, ${dArr(aug(s)(c))})").mkString(", ")
-    def dot8(a: String, b: String): String =
-      s"list_reduce(list_prepend(0.0, list_transform(generate_series(1, 8), i -> $a[i] * $b[i])), (acc, y) -> acc + y)"
-    s"""WITH cents AS (
-       |  SELECT * FROM (VALUES $centValues) AS t(cell, cvec)),
-       |cellscored AS (
-       |  SELECT e.vec_id AS id, c.cell,
-       |    list_reduce(
-       |      list_prepend(0.0, list_transform(generate_series(1, 64),
-       |        i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])),
-       |      (acc, x) -> acc + x) AS score
-       |  FROM embeddings e CROSS JOIN cents c),
-       |assigned AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell, row_number() OVER (PARTITION BY id ORDER BY score DESC, cell DESC) AS rn
-       |    FROM cellscored) t WHERE rn = 1),
-       |probes AS (
-       |  SELECT id AS query_id, cell FROM (
-       |    SELECT id, cell, row_number() OVER (PARTITION BY id ORDER BY score DESC, cell DESC) AS rn
-       |    FROM cellscored WHERE id < 10) t WHERE rn <= 6),
-       |pq AS (
-       |  SELECT * FROM (VALUES $pqValues) AS t(s, c, cvec)),
-       |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |xs AS (
-       |  SELECT e.vec_id AS id, sub.s,
-       |    list_append(e.v[sub.s*8+1 : sub.s*8+8], 1.0) AS xv
-       |  FROM e CROSS JOIN (SELECT DISTINCT s FROM pq) sub),
-       |pqscored AS (
-       |  SELECT x.id, x.s, p.c,
-       |    list_reduce(list_prepend(0.0, list_transform(generate_series(1, 9), i -> x.xv[i] * p.cvec[i])), (acc, y) -> acc + y) AS score
-       |  FROM xs x JOIN pq p ON p.s = x.s),
-       |codes AS (
-       |  SELECT id, s, c FROM (
-       |    SELECT id, s, c, row_number() OVER (PARTITION BY id, s ORDER BY score DESC, c DESC) AS rn
-       |    FROM pqscored) t WHERE rn = 1),
-       |cand AS (
-       |  SELECT p.query_id, a.id AS nbr_id
-       |  FROM probes p JOIN assigned a ON a.cell = p.cell AND a.id <> p.query_id),
-       |terms AS (
-       |  SELECT cd.query_id, cd.nbr_id, k.s,
-       |    (${dot8("q.v[k.s*8+1 : k.s*8+8]", "q.v[k.s*8+1 : k.s*8+8]")}
-       |      - 2.0 * ${dot8("q.v[k.s*8+1 : k.s*8+8]", "p.cvec[1:8]")})
-       |      + ${dot8("p.cvec[1:8]", "p.cvec[1:8]")} AS term
-       |  FROM cand cd
-       |  JOIN codes k ON k.id = cd.nbr_id
-       |  JOIN pq p ON p.s = k.s AND p.c = k.c
-       |  JOIN e q ON q.vec_id = cd.query_id),
-       |adist AS (
-       |  SELECT query_id, nbr_id,
-       |    list_reduce(list_prepend(0.0, list(term ORDER BY s)), (acc, y) -> acc + y) AS adist
-       |  FROM terms GROUP BY query_id, nbr_id),
-       |shortlist AS (
-       |  SELECT query_id, nbr_id FROM (
-       |    SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY adist ASC, nbr_id ASC) AS rn
-       |    FROM adist) t WHERE rn <= 50),
-       |reranked AS (
-       |  SELECT s.query_id, s.nbr_id, ${cosSql("q.v", "n.v")} AS cos
-       |  FROM shortlist s JOIN e q ON q.vec_id = s.query_id JOIN e n ON n.vec_id = s.nbr_id)
-       |SELECT query_id, nbr_id, cos FROM (
-       |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nbr_id) AS rn
-       |  FROM reranked) t
-       |WHERE rn <= 5 ORDER BY query_id, nbr_id""".stripMargin
-  }
-
-  /** D12 — bipartite d10: the same assigned CTE, corpus side
-    * (vec_id % 5 ≠ 0) joined to benchmark side (vec_id % 5 = 0) on
-    * cell, exact cosine ≥ threshold.
-    */
-  def d12SemDecontaminateSql(centroids: Array[Array[Double]]): String = {
-    val centValues = centroids.zipWithIndex
-      .map { case (c, i) => s"($i, ${dArr(c)})" }
-      .mkString(", ")
-    s"""WITH cents AS (
-       |  SELECT * FROM (VALUES $centValues) AS t(cell, cvec)),
-       |scored AS (
-       |  SELECT e.vec_id AS id, c.cell,
-       |    list_reduce(
-       |      list_prepend(0.0, list_transform(generate_series(1, 64),
-       |        i -> CAST(e.embedding[i] AS DOUBLE) * c.cvec[i])),
-       |      (acc, x) -> acc + x) AS score
-       |  FROM embeddings e CROSS JOIN cents c),
-       |assigned AS (
-       |  SELECT id, cell FROM (
-       |    SELECT id, cell, row_number() OVER (PARTITION BY id ORDER BY score DESC, cell DESC) AS rn
-       |    FROM scored) t WHERE rn = 1),
-       |e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-       |p AS (
-       |  SELECT a.id AS corpus_id, b.id AS bench_id, CAST(a.cell AS INTEGER) AS cell,
-       |    ${cosSql("ea.v", "eb.v")} AS cos
-       |  FROM assigned a JOIN assigned b ON a.cell = b.cell
-       |  JOIN e ea ON ea.vec_id = a.id JOIN e eb ON eb.vec_id = b.id
-       |  WHERE a.id % 5 <> 0 AND b.id % 5 = 0)
-       |SELECT corpus_id, bench_id, cell, cos FROM p
-       |WHERE cos >= ${QueryParams.D10Cos}
-       |ORDER BY corpus_id, bench_id""".stripMargin
-  }
-
-  // N3-cells — nearest-centroid assignment under the id-fallback
-  // centroid set. The centroids are corpus rows, so no literals are
-  // needed: the dot product folds element products left-to-right
-  // (list_reduce over an ordered product list = the native DotProduct
-  // loop) and the argmax tie-breaks on (score, cell) like Spark's
-  // array_max over (score, cell) structs.
-  private val n3CellsSql: String =
-    """WITH cents AS (
-      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cell, embedding AS cvec
-      |  FROM embeddings ORDER BY vec_id LIMIT 16),
-      |scored AS (
-      |  SELECT e.vec_id AS id, c.cell,
-      |    list_reduce(
-      |      list_prepend(0.0, list_transform(generate_series(1, 64),
-      |        i -> CAST(e.embedding[i] AS DOUBLE) * CAST(c.cvec[i] AS DOUBLE))),
-      |      (acc, x) -> acc + x) AS score
-      |  FROM embeddings e CROSS JOIN cents c),
-      |best AS (
-      |  SELECT id, cell,
-      |    row_number() OVER (PARTITION BY id ORDER BY score DESC, cell DESC) AS rn
-      |  FROM scored)
-      |SELECT id, CAST(cell AS INTEGER) AS cell FROM best WHERE rn = 1 ORDER BY id""".stripMargin
-
-  val sql: Map[String, String] = Map(
-    "g1_signal_engine" -> g1Sql,
-    "t5_stream_signals" -> t5Sql,
-    "t4_stream_indicators" -> t4Sql,
-    // t4b runs the SAME semantics through the transformWithState API —
-    // one oracle, two streaming engines, two independent hashes
-    "t4b_stream_indicators_tws" -> t4Sql,
-    // T9 — the streaming backtest fold must land on the SAME hash as
-    // the batch slice: b1's oracle verbatim (engine CTEs + native ASOF)
-    "t9_stream_backtest" -> b1Sql,
-    // W10 — every retention report the capped stream emits, restated
-    // relationally: for each (symbol, tile with rows), the newest-5
-    // window over the symbol's rows in tiles <= it. Tiling arithmetic
-    // matches the Spark side's integer row_number/count thirds.
-    "w10_stream_rowcap" ->
-      """WITH src AS (
-        |  SELECT symbol, ts_us FROM (
-        |    SELECT CAST(user_id AS VARCHAR) AS symbol, epoch_us(ts) AS ts_us,
-        |      row_number() OVER (PARTITION BY user_id, epoch_us(ts) ORDER BY event_id DESC) AS rn
-        |    FROM events WHERE value IS NOT NULL) t
-        |  WHERE rn = 1),
-        |tiled AS (
-        |  SELECT symbol, ts_us,
-        |    CASE WHEN rn <= n // 3 THEN 1 WHEN rn <= (n * 2) // 3 THEN 2 ELSE 3 END AS tile
-        |  FROM (SELECT symbol, ts_us,
-        |          row_number() OVER (ORDER BY ts_us, symbol) AS rn,
-        |          count(*) OVER () AS n
-        |        FROM src)),
-        |present AS (SELECT DISTINCT symbol, tile FROM tiled),
-        |g AS (
-        |  SELECT p.symbol, p.tile,
-        |    CAST(least(5, count(*)) AS INTEGER) AS retained,
-        |    max(r.ts_us) AS newest_us,
-        |    (list(r.ts_us ORDER BY r.ts_us DESC))[CAST(least(5, count(*)) AS INTEGER)] AS oldest_us
-        |  FROM present p JOIN tiled r ON r.symbol = p.symbol AND r.tile <= p.tile
-        |  GROUP BY p.symbol, p.tile)
-        |SELECT symbol, retained, oldest_us, newest_us
-        |FROM g ORDER BY symbol, newest_us""".stripMargin,
-    "b1_backtest" -> b1Sql,
-    "d6_buckets" -> d6BucketsSql,
-    "n2_buckets" -> n2BucketsSql,
-    "d6_embed_lsh_pairs" -> d6PairsSql,
-    "n2_ann_lsh" -> n2TopKSql,
-    "n3_cells" -> n3CellsSql,
-    // M1 — media decode is not SQL-expressible, but it doesn't need to
-    // be: the committed decode-expectation fixture (GenM1Fixture; pure
-    // function of doc_id) is the hashable surface. The oracle recomputes
-    // the per-format aggregate from the fixture alone; the Spark query
-    // decodes LIVE and counts fixture matches, so any decode divergence
-    // breaks the hash (n_match drops below n_media, avg_f0 moves).
-    "m1_multimodal" ->
-      s"""SELECT f.format,
-         |  CAST(count(*) AS BIGINT) AS n_media,
-         |  round(avg(CAST(f.f0 AS DOUBLE)), 6) AS avg_f0,
-         |  round(avg(f.width), 2) AS avg_width,
-         |  CAST(count(*) AS BIGINT) AS n_match
-         |FROM read_parquet('${QueryParams.M1FixturePath}') f
-         |JOIN documents d ON d.doc_id = f.doc_id
-         |GROUP BY f.format ORDER BY f.format""".stripMargin,
-    // M2 — same fixture-oracle technique for the VIDEO modality: the
-    // committed decode-expectation fixture (GenM2Fixture; pure function
-    // of doc_id, real AVI parse + JPEG frame decode) is the hashable
-    // surface. The Spark query parses and decodes LIVE and counts
-    // fixture matches on (frame count, mean frame features); the oracle
-    // recomputes the per-frame-count aggregate from the fixture alone,
-    // scale-filtered by joining documents.
-    "m2_video_frames" ->
-      s"""SELECT f.n_frames,
-         |  CAST(count(*) AS BIGINT) AS n_videos,
-         |  round(avg(CAST(f.f0 AS DOUBLE)), 6) AS avg_f0,
-         |  CAST(count(*) AS BIGINT) AS n_match
-         |FROM read_parquet('${QueryParams.M2FixturePath}') f
-         |JOIN documents d ON d.doc_id = f.doc_id
-         |GROUP BY f.n_frames ORDER BY f.n_frames""".stripMargin,
-    // M3 — the quarantine contract: undecodability is planted by a
-    // doc_id rule (%7==0 non-RIFF "h264", %7==3 truncated AVI), so the
-    // oracle recomputes both groups WITHOUT a decoder — the quarantined
-    // count from the %7 rule, the decodable group's frame sum from the
-    // %6+2 synthesis rule. A decoder that fakes features for garbage or
-    // quarantines a valid AVI shifts a group and breaks the hash.
-    "m3_video_quarantine" ->
-      """SELECT (doc_id % 7) IN (0, 3) AS quarantined,
-        |  CAST(count(*) AS BIGINT) AS n_videos,
-        |  CAST(coalesce(sum(CASE WHEN (doc_id % 7) IN (0, 3) THEN NULL
-        |                         ELSE doc_id % 6 + 2 END), 0) AS BIGINT) AS sum_frames
-        |FROM documents
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    // S11 — greedy combinatorial strategy matching is not SQL-expressible,
-    // but (like m1) it doesn't need to be: classification is a pure
-    // deterministic function of the legs table (StrategyClassifierPropSpec
-    // proves shuffle-invariance), so the committed expectation fixture
-    // (GenS11Fixture, generated at sf0.1 whose underlying groups are a
-    // strict superset of every smaller sf's — partkey blocks of 10 are
-    // complete at every scale) is the hashable surface. The oracle
-    // recomputes the per-(underlying, strategy_type) aggregate from the
-    // fixture alone, scale-filtered by joining part (m1's documents-join
-    // trick); the Spark query classifies LIVE and counts per-instance
-    // fixture matches, so any divergence breaks the hash (n_match < n,
-    // or shifted group keys/counts).
-    "s11_classify" ->
-      s"""SELECT f.underlying, f.strategy_type,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(f.n_legs) AS BIGINT) AS total_legs,
-         |  CAST(count(*) AS BIGINT) AS n_match
-         |FROM read_parquet('${QueryParams.S11FixturePath}') f
-         |JOIN (SELECT DISTINCT 'U' || CAST(p_partkey // 10 AS VARCHAR) AS underlying FROM part) p
-         |  ON p.underlying = f.underlying
-         |GROUP BY f.underlying, f.strategy_type
-         |ORDER BY f.underlying, f.strategy_type""".stripMargin,
-    // H1 — the s11 fixture technique applied to the health monitor:
-    // the oracle recomputes the per-(underlying, level) alert counts
-    // from the committed expectation fixture alone, scale-filtered by
-    // joining part; the live query health-checks per underlying and
-    // counts per-alert fixture matches, so a missing/extra/drifted
-    // alert breaks n, n_match, or the group keys.
-    // S8 — the flatten contract restated relationally from part: the
-    // Spark side builds REAL nested JSON and runs from_json + explodes
-    // + stack; the oracle derives the same row set directly (the
-    // synthesis is a pure per-partkey function). Row-set equality; the
-    // missing-side drop is the WHERE symbol IS NOT NULL.
-    "s8_chain_flatten" ->
-      """WITH base AS (
-        |  SELECT 'U' || CAST(p_partkey // 10 AS VARCHAR) AS underlying,
-        |    p_partkey AS pk,
-        |    round(p_retailprice, 0) + (p_partkey % 4) * 5 AS strike,
-        |    CAST(p_partkey % 2 AS INTEGER) AS expi
-        |  FROM part),
-        |sides AS (
-        |  SELECT underlying, underlying AS root,
-        |    CAST(CAST(DATE '2026-03-20' + expi * 28 AS DATE) AS VARCHAR) AS expiration_date,
-        |    CAST(expi * 28 + 10 AS INTEGER) AS days_to_expiration,
-        |    'PM' AS settlement_type,
-        |    CAST(strike AS DOUBLE) AS strike,
-        |    'C' AS option_type,
-        |    CASE WHEN pk % 3 <> 0 THEN 'C' || CAST(pk AS VARCHAR) END AS symbol
-        |  FROM base
-        |  UNION ALL
-        |  SELECT underlying, underlying,
-        |    CAST(CAST(DATE '2026-03-20' + expi * 28 AS DATE) AS VARCHAR),
-        |    CAST(expi * 28 + 10 AS INTEGER), 'PM', CAST(strike AS DOUBLE),
-        |    'P', CASE WHEN pk % 2 <> 0 THEN 'P' || CAST(pk AS VARCHAR) END
-        |  FROM base)
-        |SELECT * FROM sides WHERE symbol IS NOT NULL
-        |ORDER BY underlying, symbol""".stripMargin,
-    // J7 — the snapshot-correlation contract restated relationally
-    // from orders × lineitem (the synthesis is a pure function of
-    // both); the Spark side does the REAL from_json + explodes + the
-    // node-identity equi-join. All doubles are exact (shortest-repr
-    // JSON round-trip, identical arithmetic both engines); occurred_us
-    // is the order date at midnight UTC in epoch micros.
-    "j7_chain_snapshots" ->
-      """SELECT 'CH' || CAST(o.o_custkey AS VARCHAR) AS chain_id,
-        |  'N' || CAST(o.o_orderkey AS VARCHAR) AS node_id,
-        |  'S' || CAST(l.l_linenumber AS VARCHAR) AS symbol,
-        |  CAST(l.l_linenumber AS DOUBLE) / 10 AS delta,
-        |  -CAST(l.l_quantity AS DOUBLE) / 100 AS theta,
-        |  CAST(o.o_orderkey % 100 AS DOUBLE) / 10 AS net_delta,
-        |  -CAST(o.o_orderkey % 50 + 1 AS DOUBLE) / 10 AS net_theta,
-        |  epoch_us(CAST(o.o_orderdate AS TIMESTAMP)) AS occurred_us
-        |FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |ORDER BY chain_id, node_id, symbol""".stripMargin,
-    "h1_health" ->
-      s"""SELECT f.underlying, f.level,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  CAST(count(*) AS BIGINT) AS n_match
-         |FROM read_parquet('${QueryParams.H1FixturePath}') f
-         |JOIN (SELECT DISTINCT 'U' || CAST(p_partkey // 10 AS VARCHAR) AS underlying FROM part) p
-         |  ON p.underlying = f.underlying
-         |GROUP BY f.underlying, f.level
-         |ORDER BY f.underlying, f.level""".stripMargin,
-    // A5 — the h1/s11 fixture technique applied to the risk formula
-    // tree: the oracle recomputes the per-(underlying, strategy_type)
-    // aggregate (counts + whole-dollar sums) from the committed risk
-    // fixture alone, scale-filtered by joining part; the live query
-    // classifies and computes max profit/loss LIVE and counts
-    // per-instance fixture matches, so any formula drift breaks
-    // n_match or the sums. Sums are over quantized whole-dollar
-    // doubles — exact in both engines, no float-order hazard.
-    "a5_max_profit_loss" ->
-      s"""SELECT f.underlying, f.strategy_type,
-         |  CAST(count(*) AS BIGINT) AS n,
-         |  round(sum(f.max_profit), 2) AS sum_max_profit,
-         |  round(sum(f.max_loss), 2) AS sum_max_loss,
-         |  CAST(count(*) AS BIGINT) AS n_match
-         |FROM read_parquet('${QueryParams.A5FixturePath}') f
-         |JOIN (SELECT DISTINCT 'U' || CAST(p_partkey // 10 AS VARCHAR) AS underlying FROM part) p
-         |  ON p.underlying = f.underlying
-         |GROUP BY f.underlying, f.strategy_type
-         |ORDER BY f.underlying, f.strategy_type""".stripMargin,
-    "a1_latest_per_key" ->
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    // S5 incremental upsert — the merge is row-level idempotent, so the
-    // END STATE after seed + two batch merges equals the one-shot
-    // latest-per-key over ALL events: a1's SQL verbatim (the oracle
-    // states the contract; the query earns it incrementally through
-    // bucket-pruned rewrites).
-    "s5_latest_upsert" ->
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    // S5 CDC diff: users whose latest row changed in the mod-2 batch —
-    // latest over mod<=1 vs latest over all, kept where the winning
-    // event differs ('added' = a user whose only events are mod 2).
-    "s5b_changes_between" ->
-      """WITH a1 AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |        FROM events WHERE event_id % 3 <= 1) t WHERE rn = 1),
-        |a2 AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value
-        |  FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-        |        FROM events) t WHERE rn = 1)
-        |SELECT a2.user_id, a2.event_id, a2.ts_us, a2.event_type, a2.value,
-        |  CASE WHEN a1.user_id IS NULL THEN 'added' ELSE 'updated' END AS change
-        |FROM a2 LEFT JOIN a1 ON a2.user_id = a1.user_id
-        |WHERE a1.user_id IS NULL OR a2.event_id != a1.event_id
-        |ORDER BY a2.user_id""".stripMargin,
-    // S6 native file-sink history with an exactly-once restart: the
-    // end state is simply every event exactly once (see
-    // s6StreamHistory — a double-committed batch doubles rows).
-    "s6_stream_history" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
-        |FROM events ORDER BY event_id""".stripMargin,
-    // T2 through the REAL stream entry (LatestUpsert.start): same
-    // end-state contract, a1's SQL verbatim — see t2StreamLatest.
-    "t2_stream_latest" ->
-      """SELECT user_id, event_id, epoch_us(ts) AS ts_us, event_type, value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "a2_dedup_keep_last" ->
-      """SELECT user_id, event_type, event_id, epoch_us(ts) AS ts_us, value
-        |FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-    "a3_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  round(sum(l_extendedprice), 2) AS sum_base,
-        |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS sum_disc,
-        |  round(avg(l_quantity), 6) AS avg_qty,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "a7_weighted_avg" ->
-      """SELECT l_partkey,
-        |  round(sum(l_extendedprice * l_quantity) / sum(l_quantity), 6) AS wavg_price,
-        |  round(sum(l_quantity), 2) AS total_qty
-        |FROM lineitem GROUP BY l_partkey ORDER BY l_partkey""".stripMargin,
-    // A8 — the LIFO fold as a DuckDB list_reduce. The engine's BigDecimal
-    // arithmetic is reproduced EXACTLY with HUGEINT fraction accumulators
-    // (entry = en/ed, fees = fn/fd micros, gcd-reduced each step so den
-    // stays ≤ lcm(qty…) ≈ 3e21 ≪ HUGEINT range) and explicit HALF_UP
-    // rounding — (2n+d)//(2d), ties away from zero — at the final 6 dp,
-    // the same rule as java BigDecimal.setScale(6, HALF_UP). DECIMAL128's
-    // 34-digit intermediates differ from these exact rationals by ~1e-34
-    // relative, far below the 1/(2·10^6·den) minimum distance of any
-    // non-tie sum from a rounding boundary, so the rounded results agree;
-    // exact ties (terminating fractions) are exact on both sides.
-    // State rides a LIST(HUGEINT), not a STRUCT: DuckDB v1.0.0
-    // list_reduce mis-folds STRUCT accumulators when a vector carries
-    // lists of different lengths (verified: shortest group returned the
-    // untouched seed at 10 rows, correct alone — list accumulators are
-    // immune). Layout: state [rem, closebuf, en, ed, fn, fd, px, tq],
-    // txn [qty, is_close, sign, value_u, fee_u, price_u]; the nested
-    // single-element list_transforms bind consumed/take/unreduced-
-    // fraction locals, as in the d3 oracle.
-    "a8_lifo" ->
-      """WITH txns AS (
-        |  SELECT 'S' || CAST(l_suppkey AS VARCHAR) AS symbol,
-        |    epoch_ms(l_shipdate) // 1000 * 1000000 + l_orderkey * 8 + l_linenumber AS executed_at_us,
-        |    CAST(CASE WHEN (l_linenumber % 4) IN (1, 3) THEN 1 ELSE 0 END AS HUGEINT) AS is_close,
-        |    CAST(CASE WHEN l_discount > 0.05 THEN 1 ELSE -1 END AS HUGEINT) AS sign,
-        |    CAST(CAST(l_extendedprice AS DECIMAL(18,6)) * 1000000 AS HUGEINT) AS value_u,
-        |    abs(CAST(CAST(round(l_extendedprice * (1.0 + l_tax), 4) AS DECIMAL(18,6)) * 1000000 AS HUGEINT)
-        |        - CAST(CAST(l_extendedprice AS DECIMAL(18,6)) * 1000000 AS HUGEINT)) AS fee_u,
-        |    CAST(CAST(round(l_extendedprice * (1.0 + l_discount), 4) AS DECIMAL(18,6)) * 1000000 AS HUGEINT) AS price_u,
-        |    GREATEST(CAST(floor(l_quantity) AS INTEGER), 1) AS qty
-        |  FROM lineitem),
-        |packed AS (
-        |  SELECT symbol, CAST(count(*) AS BIGINT) AS transaction_count,
-        |    list([CAST(qty AS HUGEINT), is_close, sign, value_u, fee_u, price_u]
-        |         ORDER BY executed_at_us DESC, qty DESC) AS l
-        |  FROM txns GROUP BY symbol),
-        |folded AS (
-        |  SELECT symbol, transaction_count,
-        |    list_reduce(
-        |      list_prepend([CAST(25 AS HUGEINT), CAST(0 AS HUGEINT), CAST(0 AS HUGEINT), CAST(1 AS HUGEINT),
-        |                    CAST(0 AS HUGEINT), CAST(1 AS HUGEINT), CAST(0 AS HUGEINT), CAST(0 AS HUGEINT)], l),
-        |      (a, x) -> CASE
-        |        WHEN x[2] = 1 THEN [a[1], a[2] + x[1], a[3], a[4], a[5], a[6], a[7], a[8]]
-        |        ELSE list_transform([least(x[1], a[2])], c ->
-        |          list_transform([least(x[1] - c, a[1])], t ->
-        |            list_transform([[a[3] * x[1] + x[3] * x[4] * t * a[4],
-        |                             a[4] * x[1],
-        |                             a[5] * x[1] + x[5] * t * a[6],
-        |                             a[6] * x[1]]], u ->
-        |              [a[1] - t, a[2] - c,
-        |               u[1] // greatest(gcd(abs(u[1]), u[2]), 1),
-        |               u[2] // greatest(gcd(abs(u[1]), u[2]), 1),
-        |               u[3] // greatest(gcd(u[3], u[4]), 1),
-        |               u[4] // greatest(gcd(u[3], u[4]), 1),
-        |               a[7] + x[6] * t, a[8] + t]
-        |            )[1]
-        |          )[1]
-        |        )[1]
-        |      END) AS s
-        |  FROM packed)
-        |SELECT symbol,
-        |  CAST(CASE WHEN s[3] >= 0 THEN (2 * s[3] + s[4]) // (2 * s[4])
-        |            ELSE -((2 * (-s[3]) + s[4]) // (2 * s[4])) END AS DOUBLE) / 1000000.0 AS entry_credit,
-        |  CAST((2 * s[5] + s[6]) // (2 * s[6]) AS DOUBLE) / 1000000.0 AS fees,
-        |  CASE WHEN s[8] > 0
-        |       THEN CAST((2 * s[7] + s[8]) // (2 * s[8]) AS DOUBLE) / 1000000.0 END AS weighted_price,
-        |  transaction_count
-        |FROM folded
-        |WHERE s[1] = 0
-        |ORDER BY symbol""".stripMargin,
-    "a9_distinct_agg" ->
-      """SELECT p_brand,
-        |  CAST(count(DISTINCT p_type) AS BIGINT) AS n_types,
-        |  CAST(count(*) AS BIGINT) AS n_parts,
-        |  min(p_retailprice) AS min_rp,
-        |  max(p_retailprice) AS max_rp
-        |FROM part GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-    "a5_salted_agg" ->
-      """SELECT l_returnflag,
-        |  round(sum(l_quantity), 2) AS sum_qty,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "j1_region_revenue" ->
-      """SELECT r_name,
-        |  round(sum(o_totalprice), 2) AS revenue,
-        |  CAST(count(*) AS BIGINT) AS n_orders
-        |FROM orders
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-    "j2_position_metrics" ->
-      """WITH pos_raw AS (
-        |  SELECT CAST(p_partkey AS BIGINT) AS row_id,
-        |    'S' || CAST(p_partkey % 500 AS VARCHAR) AS symbol,
-        |    CASE CAST(p_partkey % 4 AS INTEGER) WHEN 0 THEN 'Equity' WHEN 1 THEN 'Equity Option'
-        |         WHEN 2 THEN 'Future' ELSE 'Equity Option' END AS instrument_type,
-        |    CASE WHEN p_partkey % 3 = 0 THEN NULL ELSE '.XS' || CAST(p_partkey % 500 AS VARCHAR) END AS streamer_symbol,
-        |    CAST(p_partkey % 7 + 1 AS DOUBLE) AS quantity,
-        |    CASE WHEN p_partkey % 11 = 0 THEN 'Closed' WHEN p_partkey % 2 = 0 THEN 'Long' ELSE 'Short' END AS quantity_direction
-        |  FROM part),
-        |pos_m AS (
-        |  SELECT *, CAST(CASE WHEN instrument_type LIKE '%Option' THEN 100.0
-        |                      WHEN instrument_type = 'Future' THEN 50.0 ELSE 1.0 END AS DOUBLE) AS multiplier
-        |  FROM pos_raw),
-        |pos_d AS (
-        |  SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY symbol
-        |      ORDER BY (streamer_symbol IS NOT NULL) DESC, row_id DESC) AS rn FROM pos_m) t WHERE rn = 1),
-        |pos AS (
-        |  SELECT row_id, symbol, instrument_type,
-        |    coalesce(streamer_symbol, CASE WHEN instrument_type = 'Equity' THEN symbol END) AS streamer_symbol,
-        |    quantity, quantity_direction, multiplier
-        |  FROM pos_d
-        |  WHERE coalesce(streamer_symbol, CASE WHEN instrument_type = 'Equity' THEN symbol END) IS NOT NULL),
-        |slots AS (SELECT DISTINCT CAST(p_partkey % 500 AS BIGINT) AS k FROM part),
-        |quotes AS (
-        |  SELECT '.XS' || CAST(k AS VARCHAR) AS streamer_symbol,
-        |    round(CAST(k AS DOUBLE) * 0.5 + 1.0, 2) AS bid_price,
-        |    round(CAST(k AS DOUBLE) * 0.5 + 1.2, 2) AS ask_price FROM slots
-        |  UNION ALL
-        |  SELECT 'S' || CAST(k AS VARCHAR),
-        |    round(CAST(k AS DOUBLE) + 10.0, 2), round(CAST(k AS DOUBLE) + 10.4, 2) FROM slots),
-        |greeks AS (
-        |  SELECT '.XS' || CAST(k AS VARCHAR) AS streamer_symbol,
-        |    round(CAST(k AS DOUBLE) / 500.0 - 0.5, 4) AS delta,
-        |    round(CAST(k AS DOUBLE) / 10000.0, 6) AS gamma,
-        |    round(-CAST(k AS DOUBLE) / 2000.0, 6) AS theta,
-        |    round(CAST(k AS DOUBLE) / 1000.0, 6) AS vega
-        |  FROM slots WHERE k % 5 <> 0),
-        |inst AS (
-        |  SELECT 'S' || CAST(k AS VARCHAR) AS symbol,
-        |    CASE WHEN k % 2 = 0 THEN 'C' ELSE 'P' END AS option_type,
-        |    CAST(k AS DECIMAL(12,3)) AS strike_price,
-        |    DATE '2026-09-18' AS expiration_date,
-        |    CAST(k % 45 + 1 AS INTEGER) AS days_to_expiration
-        |  FROM slots WHERE k % 7 <> 0),
-        |credits AS (
-        |  SELECT 'S' || CAST(k AS VARCHAR) AS symbol,
-        |    CAST(-k * 10 AS DECIMAL(12,2)) AS entry_credit,
-        |    CAST(CAST(k AS DOUBLE) / 10.0 AS DECIMAL(12,2)) AS fees
-        |  FROM slots WHERE k % 2 = 0),
-        |j AS (
-        |  SELECT p.symbol, p.streamer_symbol, p.instrument_type, p.quantity, p.quantity_direction, p.multiplier,
-        |    q.bid_price, q.ask_price, round((q.bid_price + q.ask_price) / 2.0, 4) AS mid_price,
-        |    g.delta AS g_delta, g.gamma AS g_gamma, g.theta AS g_theta, g.vega AS g_vega,
-        |    i.option_type, i.strike_price, i.expiration_date, i.days_to_expiration,
-        |    c.entry_credit, c.fees
-        |  FROM pos p
-        |  LEFT JOIN quotes q ON p.streamer_symbol = q.streamer_symbol
-        |  LEFT JOIN greeks g ON p.streamer_symbol = g.streamer_symbol
-        |    AND p.instrument_type IN ('Equity Option', 'Future Option')
-        |  LEFT JOIN inst i ON p.symbol = i.symbol
-        |  LEFT JOIN credits c ON p.symbol = c.symbol),
-        |f AS (
-        |  SELECT *,
-        |    coalesce(g_delta, CAST(CASE WHEN instrument_type NOT IN ('Equity Option', 'Future Option') THEN
-        |        CASE quantity_direction WHEN 'Long' THEN 1.0 WHEN 'Short' THEN -1.0 ELSE 0.0 END END AS DOUBLE)) AS delta,
-        |    coalesce(g_gamma, CAST(CASE WHEN instrument_type NOT IN ('Equity Option', 'Future Option') THEN 0.0 END AS DOUBLE)) AS gamma,
-        |    coalesce(g_theta, CAST(CASE WHEN instrument_type NOT IN ('Equity Option', 'Future Option') THEN 0.0 END AS DOUBLE)) AS theta,
-        |    coalesce(g_vega, CAST(CASE WHEN instrument_type NOT IN ('Equity Option', 'Future Option') THEN 0.0 END AS DOUBLE)) AS vega,
-        |    CASE WHEN quantity_direction = 'Short' THEN -quantity ELSE quantity END AS signed_quantity
-        |  FROM j)
-        |SELECT symbol, streamer_symbol, instrument_type, quantity, quantity_direction, multiplier,
-        |  bid_price, ask_price, mid_price, delta, gamma, theta, vega,
-        |  option_type, CAST(strike_price AS DOUBLE) AS strike_price,
-        |  strftime(expiration_date, '%Y-%m-%d') AS expiry, days_to_expiration,
-        |  CAST(entry_credit AS DOUBLE) AS entry_credit, CAST(fees AS DOUBLE) AS fees,
-        |  signed_quantity,
-        |  theta * signed_quantity * multiplier AS dollar_theta
-        |FROM f ORDER BY symbol""".stripMargin,
-    "j10_anti_join" ->
-      """SELECT c_custkey, c_name FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-        |ORDER BY c_custkey""".stripMargin,
-    "o4_topk_per_group" ->
-      """SELECT o_orderpriority, o_orderkey, o_totalprice
-        |FROM (SELECT *, row_number() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice DESC, o_orderkey ASC) AS rk FROM orders) t
-        |WHERE rk <= 3 ORDER BY o_orderpriority, o_orderkey""".stripMargin,
-    "f13_json_extract" ->
-      """SELECT event_type,
-        |  CAST(sum(k) AS BIGINT) AS sum_k,
-        |  CAST(count(k) AS BIGINT) AS n_k,
-        |  CAST(count(*) AS BIGINT) AS n_rows
-        |FROM (SELECT event_type, TRY_CAST(regexp_extract(props, '"k"\s*:\s*(\d+)', 1) AS BIGINT) AS k FROM events) t
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "u2_union_diagonal" ->
-      """SELECT CAST(c_custkey AS BIGINT) AS key, c_acctbal AS bal, 'customer' AS side, c_mktsegment AS mktsegment FROM customer
-        |UNION ALL
-        |SELECT CAST(s_suppkey AS BIGINT) AS key, s_acctbal AS bal, 'supplier' AS side, NULL AS mktsegment FROM supplier
-        |ORDER BY side, key""".stripMargin,
-    "f1_normalize" ->
-      """SELECT event_id,
-        |  CASE WHEN isnan(raw) OR isinf(raw) THEN NULL ELSE round(raw, 10) END AS norm_value
-        |FROM (SELECT event_id,
-        |        CASE WHEN event_id % 10 = 0 THEN 'inf'::DOUBLE
-        |             WHEN event_id % 10 = 1 THEN 'nan'::DOUBLE
-        |             WHEN event_id % 10 = 2 THEN '-inf'::DOUBLE
-        |             ELSE value END AS raw
-        |      FROM events) t
-        |ORDER BY event_id""".stripMargin,
-    "f2_symbol_munge" ->
-      """WITH s AS (
-        |  SELECT event_id,
-        |    concat('U', CAST(user_id AS VARCHAR), '{=',
-        |      CASE event_type WHEN 'click' THEN '1m' WHEN 'error' THEN '5m' WHEN 'purchase' THEN '1h'
-        |                      WHEN 'signup' THEN '1d' WHEN 'view' THEN '1w' END, '}') AS sym
-        |  FROM events),
-        |t AS (SELECT event_id, sym, regexp_replace(sym, '\{=1([a-zA-Z])\}', '{=\1}') AS stripped FROM s),
-        |u AS (SELECT event_id, sym, stripped,
-        |        regexp_extract(stripped, '^(.*?)\{=', 1) AS ticker,
-        |        regexp_extract(stripped, '\{=([^}]+)\}', 1) AS rawint
-        |      FROM t),
-        |v AS (SELECT event_id, sym, stripped, ticker,
-        |        CASE WHEN regexp_matches(rawint, '^[a-zA-Z]') THEN concat('1', rawint) ELSE rawint END AS interval
-        |      FROM u)
-        |SELECT event_id, sym, stripped, ticker, interval,
-        |  CAST(CASE WHEN regexp_extract(interval, '^(\d+)', 1) = '' THEN 1
-        |            ELSE CAST(regexp_extract(interval, '^(\d+)', 1) AS BIGINT) END *
-        |    CASE regexp_extract(interval, '([a-zA-Z]+)$', 1)
-        |      WHEN 's' THEN 1000 WHEN 'm' THEN 60000 WHEN 'h' THEN 3600000
-        |      WHEN 'd' THEN 86400000 WHEN 'w' THEN 604800000 END AS BIGINT) AS interval_ms
-        |FROM v ORDER BY event_id""".stripMargin,
-    "f6_occ_roundtrip" ->
-      """WITH o AS (
-        |  SELECT p_partkey,
-        |    concat(rpad(substr(p_brand, 1, 6), 6, ' '), '260320',
-        |           CASE WHEN p_size % 2 = 0 THEN 'C' ELSE 'P' END,
-        |           lpad(CAST(CAST(round(p_retailprice, 0) * 1000 AS BIGINT) AS VARCHAR), 8, '0')) AS occ
-        |  FROM part)
-        |SELECT p_partkey, occ,
-        |  strftime(strptime(concat('20', regexp_extract(occ, '(\d{6})([CP])(.+)$', 1)), '%Y%m%d'), '%Y-%m-%d') AS expiry,
-        |  regexp_extract(occ, '(\d{6})([CP])(.+)$', 2) AS opt_type,
-        |  CASE WHEN length(regexp_extract(occ, '(\d{6})([CP])(.+)$', 3)) = 8
-        |       THEN CAST(regexp_extract(occ, '(\d{6})([CP])(.+)$', 3) AS DOUBLE) / 1000.0
-        |       ELSE CAST(regexp_extract(occ, '(\d{6})([CP])(.+)$', 3) AS DOUBLE) END AS strike
-        |FROM o ORDER BY p_partkey""".stripMargin,
-    "f7_scalar_effects" ->
-      """SELECT o_orderkey,
-        |  CASE WHEN o_orderkey % 2 = 0 THEN o_totalprice ELSE -o_totalprice END AS signed_amount,
-        |  round((CAST(o_orderkey % 10000 AS DOUBLE) / CAST(100 AS DOUBLE)
-        |         + CAST(o_orderkey % 10000 + o_orderkey % 200 + 1 AS DOUBLE) / CAST(100 AS DOUBLE)) / CAST(2 AS DOUBLE), 4) AS mid,
-        |  (-((CAST(o_orderkey % 50 AS DOUBLE) + 1) / CAST(1000 AS DOUBLE)))
-        |    * CAST((CASE WHEN o_orderkey % 4 < 2 THEN 1 ELSE -1 END) * (o_orderkey % 3 + 1) AS DOUBLE)
-        |    * CAST(100 AS DOUBLE) AS dollar_theta,
-        |  CASE WHEN o_orderkey % 3 = 0 THEN concat('/ES', CAST(o_orderkey % 10 AS VARCHAR))
-        |       ELSE concat('SPY', CAST(o_orderkey % 10 AS VARCHAR)) END AS sym,
-        |  CASE WHEN o_orderkey % 3 = 0 THEN 1 ELSE 0 END AS is_fut,
-        |  CASE WHEN o_orderkey % 3 = 0 THEN concat('ES', CAST(o_orderkey % 10 AS VARCHAR))
-        |       ELSE concat('SPY', CAST(o_orderkey % 10 AS VARCHAR)) END AS product,
-        |  CASE WHEN o_orderkey % 5 IN (0, 1, 2) THEN NULL ELSE o_totalprice END AS parsed_price,
-        |  ((o_orderkey * 61234 + 17) // 300000) * 300000 AS bar_ms
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-    "t3_stream_candles" ->
-      """SELECT user_id,
-        |  (epoch_us(ts) // 300000000) * 300000000 AS bucket_us,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  round(sum(value), 4) AS sum_v,
-        |  CAST(max(event_id) AS BIGINT) AS last_event
-        |FROM events GROUP BY user_id, bucket_us
-        |ORDER BY user_id, bucket_us""".stripMargin,
-    "t3b_stream_candles_append" ->
-      // append-mode emission contract: ONLY windows the final
-      // watermark closed. The flusher sentinel (not in the events
-      // table) parks the watermark strictly inside the LAST real
-      // window, so "closed" = every bucket strictly before the last —
-      // stated here as bucket < (max ts_us div W)·W. Late-row drops
-      // are zero BY CONSTRUCTION (time-ordered tertile batches), so no
-      // drop clause is needed.
-      """WITH cutoff AS (
-        |  SELECT (max(epoch_us(ts)) // 300000000) * 300000000 AS c FROM events)
-        |SELECT user_id,
-        |  (epoch_us(ts) // 300000000) * 300000000 AS bucket_us,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  round(sum(value), 4) AS sum_v,
-        |  CAST(max(event_id) AS BIGINT) AS last_event
-        |FROM events, cutoff
-        |WHERE (epoch_us(ts) // 300000000) * 300000000 < c
-        |GROUP BY user_id, bucket_us
-        |ORDER BY user_id, bucket_us""".stripMargin,
-    "t6_stream_dedup" ->
-      """SELECT event_id // 3 AS fill_id,
-        |  min(event_id) AS event_id,
-        |  arg_min(event_type, event_id) AS payload
-        |FROM events GROUP BY 1 ORDER BY fill_id""".stripMargin,
-    "t8_stream_resume" ->
-      // the replayed subset: all events except the odd members of odd
-      // fills, which the resume harness never delivers; keep-first per
-      // fill over that subset = arg-min, the same contract as t6 but
-      // spanning a genuine checkpoint restart on the Spark side
-      """WITH replayed AS (
-        |  SELECT * FROM events
-        |  WHERE NOT (event_id % 2 = 1 AND (event_id // 2) % 2 = 1))
-        |SELECT event_id // 2 AS fill_id,
-        |  min(event_id) AS event_id,
-        |  arg_min(event_type, event_id) AS payload
-        |FROM replayed GROUP BY 1 ORDER BY fill_id""".stripMargin,
-    "p5_session_filter" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type
-        |FROM events
-        |WHERE hour(timezone('America/New_York', timezone('UTC', ts))) * 60
-        |      + minute(timezone('America/New_York', timezone('UTC', ts))) >= 600
-        |  AND hour(timezone('America/New_York', timezone('UTC', ts))) * 60
-        |      + minute(timezone('America/New_York', timezone('UTC', ts))) < 900
-        |ORDER BY event_id""".stripMargin,
-    "f19_time_display" ->
-      """WITH t AS (
-        |  SELECT event_id, epoch_us(ts) // 1000000 AS es,
-        |    (event_id * 7919) % 500000 AS up,
-        |    CASE WHEN event_id % 11 = 0 THEN NULL ELSE (event_id * 104729) % 200000 END AS a
-        |  FROM events)
-        |SELECT event_id,
-        |  up AS uptime_s,
-        |  CASE WHEN up // 86400 > 0 THEN concat(CAST(up // 86400 AS VARCHAR), 'd ',
-        |           CAST((up % 86400) // 3600 AS VARCHAR), 'h ', CAST((up % 3600) // 60 AS VARCHAR), 'm')
-        |       WHEN (up % 86400) // 3600 > 0 THEN concat(CAST((up % 86400) // 3600 AS VARCHAR), 'h ',
-        |           CAST((up % 3600) // 60 AS VARCHAR), 'm')
-        |       ELSE concat(CAST((up % 3600) // 60 AS VARCHAR), 'm') END AS uptime,
-        |  a AS age_s,
-        |  CASE WHEN a IS NULL THEN 'unknown'
-        |       WHEN a < 60 THEN concat(CAST((a * 2 + 1) // 2 AS VARCHAR), 's ago')
-        |       WHEN a < 3600 THEN concat(CAST((a * 2 + 60) // 120 AS VARCHAR), 'm ago')
-        |       WHEN a < 86400 THEN concat(CAST(((a * 20 + 3600) // 7200) // 10 AS VARCHAR), '.',
-        |           CAST(((a * 20 + 3600) // 7200) % 10 AS VARCHAR), 'h ago')
-        |       ELSE concat(CAST(((a * 20 + 86400) // 172800) // 10 AS VARCHAR), '.',
-        |           CAST(((a * 20 + 86400) // 172800) % 10 AS VARCHAR), 'd ago') END AS age,
-        |  epoch_us(timezone('America/New_York', timezone('UTC', make_timestamp(es * 1000000)))) // 1000000 AS et_epoch,
-        |  strftime(CASE WHEN isodow(CAST(ts AS DATE)) = 7 THEN CAST(ts AS DATE) - 2
-        |                WHEN isodow(CAST(ts AS DATE)) = 6 THEN CAST(ts AS DATE) - 1
-        |                ELSE CAST(ts AS DATE) END, '%Y-%m-%d') AS last_wd
-        |FROM t JOIN events USING (event_id) ORDER BY event_id""".stripMargin,
-    "j3_coalesce_join" ->
-      """SELECT o_orderkey,
-        |  coalesce(c_name, concat('CUST-', CAST(o_custkey AS VARCHAR))) AS display_name
-        |FROM orders
-        |LEFT JOIN (SELECT * FROM customer WHERE c_custkey % 3 = 0) c ON o_custkey = c_custkey
-        |ORDER BY o_orderkey""".stripMargin,
-    "w9_flags_filter" ->
-      """SELECT event_id, CAST(event_id % 32 AS INTEGER) AS flags, event_type
-        |FROM events WHERE ((event_id % 32) & 24) <> 0 ORDER BY event_id""".stripMargin,
-    // T7 — one completion per registered symbol at its first
-    // snapshot-end-flagged event (global min over time-ordered
-    // batches; see t7SnapshotCompletions determinism note).
-    "t7_snapshot_completions" ->
-      """SELECT CAST(user_id AS VARCHAR) AS symbol, min(epoch_us(ts)) AS completed_at_us
-        |FROM events
-        |WHERE ((event_id % 32) & 24) <> 0 AND user_id % 3 <> 2
-        |GROUP BY 1 ORDER BY symbol""".stripMargin,
-    "w12_jitter" ->
-      """SELECT doc_id,
-        |  ('0x' || substr(sha256(concat(source, '|', CAST(doc_id AS VARCHAR))), 1, 6))::BIGINT % 1000 AS jitter_us
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "a4_strategy_netting" ->
-      """WITH legs AS (
-        |  SELECT p_partkey // 4 AS strategy_id,
-        |    (CASE WHEN p_partkey % 2 = 0 THEN 1.0 ELSE -1.0 END) * (p_partkey % 3 + 1) AS qty,
-        |    round(p_retailprice / 1000.0, 4) AS delta,
-        |    round(p_retailprice / 50000.0, 6) AS theta,
-        |    100.0 AS multiplier,
-        |    round(p_retailprice, 0) AS strike,
-        |    (p_size % 5) * 7 + 7 AS dte
-        |  FROM part)
-        |SELECT strategy_id,
-        |  round(sum(delta * qty), 4) AS net_delta,
-        |  round(sum(theta * qty * multiplier), 2) AS net_theta,
-        |  CAST(min(dte) AS INTEGER) AS min_dte,
-        |  max(strike) - min(strike) AS width,
-        |  CAST(count(*) AS BIGINT) AS n_legs
-        |FROM legs GROUP BY strategy_id ORDER BY strategy_id""".stripMargin,
-    "a6_campaign_rollup" ->
-      """SELECT o_custkey,
-        |  round(sum(CASE WHEN o_orderstatus = 'F' THEN o_totalprice ELSE -o_totalprice END), 2) AS net,
-        |  CAST(count(*) AS BIGINT) AS n_orders,
-        |  CAST(count(DISTINCT o_orderstatus) AS BIGINT) AS n_statuses,
-        |  greatest(0.0, -round(sum(CASE WHEN o_orderstatus = 'F' THEN o_totalprice ELSE -o_totalprice END), 2)) AS recovery
-        |FROM orders GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "w8_candle_close" ->
-      """WITH b AS (
-        |  SELECT user_id, ts, event_id, value,
-        |    (epoch_us(ts) // 300000000) * 300000000 AS bucket_us
-        |  FROM events),
-        |l AS (
-        |  SELECT user_id, bucket_us,
-        |    lag(bucket_us, 1) OVER w AS prev_bucket,
-        |    lag(value, 1) OVER w AS prev_value
-        |  FROM b WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, prev_bucket AS closed_bucket_us, prev_value AS final_value
-        |FROM l WHERE prev_bucket IS NOT NULL AND bucket_us > prev_bucket
-        |ORDER BY user_id, closed_bucket_us""".stripMargin,
-    "u4_symbol_dedup" ->
-      """SELECT DISTINCT string_split(concat('U', CAST(user_id AS VARCHAR), '{=', event_type, '}'), '{=')[1] AS ticker
-        |FROM events ORDER BY ticker""".stripMargin,
-    "j5_explode_join" ->
-      """SELECT o_custkey,
-        |  CAST(count(*) AS BIGINT) AS n_lines,
-        |  round(sum(l_extendedprice), 2) AS total_price
-        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "s2_wire_decode" ->
-      """WITH f AS (
-        |  SELECT user_id,
-        |    flatten(list([CAST(event_id AS VARCHAR), CAST(epoch_us(ts) AS VARCHAR)] ORDER BY ts, event_id, epoch_us(ts))) AS vals
-        |  FROM events GROUP BY user_id),
-        |c AS (
-        |  SELECT user_id, unnest(generate_series(0, len(vals) // 2 - 1)) AS seq, vals
-        |  FROM f)
-        |SELECT user_id, CAST(seq AS INTEGER) AS seq,
-        |  CAST(vals[2*seq + 1] AS BIGINT) AS event_id,
-        |  CAST(vals[2*seq + 2] AS BIGINT) AS ts_us
-        |FROM c ORDER BY user_id, seq""".stripMargin,
-    "f16_leg_desc" ->
-      """SELECT o_custkey,
-        |  string_agg(concat(o_orderstatus, '#', CAST(o_orderkey AS VARCHAR)), ',' ORDER BY concat(o_orderstatus, '#', CAST(o_orderkey AS VARCHAR))) AS legs,
-        |  CAST(count(*) AS BIGINT) AS n
-        |FROM orders WHERE o_totalprice > 400000.0
-        |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin,
-    "x1_text_stats" ->
-      """WITH n AS (
-        |  SELECT doc_id, regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm FROM documents),
-        |t AS (
-        |  SELECT doc_id, norm, string_split(norm, ' ') AS toks FROM n),
-        |s AS (
-        |  SELECT doc_id, norm, toks,
-        |    CAST(len(toks) AS BIGINT) AS n_tokens,
-        |    CAST(len(regexp_extract_all(norm, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS n_pieces,
-        |    length(regexp_replace(norm, '[^.!?,;:]', '', 'g'))::DOUBLE / length(norm) AS punct_ratio,
-        |    CAST(len(list_filter(toks, x -> list_contains(['the','a','an','and','or','of','to','in','is','it','on','for','with','as','at','by'], x))) AS BIGINT) AS stop_cnt
-        |  FROM t)
-        |SELECT doc_id, n_tokens, n_pieces, punct_ratio, stop_cnt,
-        |  0.4 * (stop_cnt::DOUBLE / n_tokens::DOUBLE)
-        |  + 0.3 * (CASE WHEN n_tokens >= 10 AND n_tokens <= 100000 THEN 1.0 ELSE 0.0 END)
-        |  + 0.3 * (CASE WHEN length(norm)::DOUBLE / n_tokens::DOUBLE >= 3.0 AND length(norm)::DOUBLE / n_tokens::DOUBLE <= 12.0 THEN 1.0 ELSE 0.0 END)
-        |  - punct_ratio AS quality
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "x2_quality_gopher" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks,
-        |         regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, toks,
-        |    CAST(len(toks) AS BIGINT) AS n_words,
-        |    round((length(norm) - (len(toks) - 1))::DOUBLE / len(toks), 6) AS mean_word_len,
-        |    round(1.0 - len(list_distinct(toks))::DOUBLE / len(toks), 6) AS dup_word_frac,
-        |    round(len(list_filter(toks, x -> regexp_matches(x, '[a-z]')))::DOUBLE / len(toks), 6) AS alpha_frac
-        |  FROM t WHERE len(toks) > 0),
-        |bg AS (
-        |  SELECT doc_id, array_to_string(toks[i:i+1], ' ') AS bigram
-        |  FROM t, unnest(range(1, greatest(len(toks) - 1, 0) + 1)) AS u(i)),
-        |bgc AS (SELECT doc_id, bigram, count(*) AS c FROM bg GROUP BY 1, 2),
-        |topb AS (SELECT doc_id, max(c) AS max_c FROM bgc GROUP BY 1)
-        |SELECT b.doc_id, n_words, mean_word_len, dup_word_frac, alpha_frac,
-        |  round(coalesce(max_c, 0) * 2.0 / n_words, 6) AS top_bigram_frac,
-        |  (n_words >= 20 AND mean_word_len BETWEEN 3.0 AND 10.0
-        |   AND dup_word_frac < 0.6
-        |   AND round(coalesce(max_c, 0) * 2.0 / n_words, 6) < 0.2) AS keep_doc
-        |FROM b LEFT JOIN topb ON b.doc_id = topb.doc_id
-        |ORDER BY b.doc_id""".stripMargin,
-    "x6_chunking" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |c AS (
-        |  SELECT doc_id, u.i AS start_i,
-        |    array_to_string(toks[u.i:u.i+39], ' ') AS chunk_text
-        |  FROM t, unnest(range(1, greatest(len(toks) - 10, 1) + 1, 30)) AS u(i))
-        |SELECT doc_id,
-        |  CAST(row_number() OVER (PARTITION BY doc_id ORDER BY start_i) - 1 AS INTEGER) AS chunk_idx,
-        |  chunk_text,
-        |  CAST(len(string_split(chunk_text, ' ')) AS BIGINT) AS n_tokens
-        |FROM c ORDER BY doc_id, chunk_idx""".stripMargin,
-    "x7_packing" ->
-      """WITH t AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT source, doc_id, n_tokens,
-        |  CAST(floor(coalesce(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)::DOUBLE / 2048) AS BIGINT) AS bin_id
-        |FROM t ORDER BY source, doc_id""".stripMargin,
-    // X7b — the sequential first-fit fold as a recursive CTE: one
-    // iteration per in-shard position, every shard advances in lockstep,
-    // so total work is O(rows) (a list_reduce can only return the FINAL
-    // state — per-row bin assignments need the recursion). NULL token
-    // counts fold as 0 (matching the engine) but pass through the output
-    // column unchanged.
-    "x7b_packing" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT source, doc_id,
-        |    CAST(len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_tokens,
-        |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents),
-        |rec AS (
-        |  SELECT source, rn, doc_id, n_tokens, CAST(0 AS BIGINT) AS bin_id,
-        |    coalesce(n_tokens, 0) AS fill
-        |  FROM t WHERE rn = 1
-        |  UNION ALL
-        |  SELECT d.source, d.rn, d.doc_id, d.n_tokens,
-        |    CASE WHEN r.fill > 0 AND r.fill + coalesce(d.n_tokens, 0) > 2048
-        |         THEN r.bin_id + 1 ELSE r.bin_id END,
-        |    CASE WHEN r.fill > 0 AND r.fill + coalesce(d.n_tokens, 0) > 2048
-        |         THEN coalesce(d.n_tokens, 0) ELSE r.fill + coalesce(d.n_tokens, 0) END
-        |  FROM rec r JOIN t d ON d.source = r.source AND d.rn = r.rn + 1)
-        |SELECT source, doc_id, n_tokens, bin_id FROM rec ORDER BY source, doc_id""".stripMargin,
-    // X14 — the x7b recursive first-fit CTE, aggregated into packed
-    // sequences: list(norm ORDER BY doc_id) concatenation matches the
-    // engine's sort_array(collect_list(struct(doc_id, norm))) order
-    // (doc_id is unique per shard).
-    "x14_pack_sequences" ->
-      """WITH RECURSIVE t AS (
-        |  SELECT source, doc_id,
-        |    regexp_replace(lower(trim(text)), '\s+', ' ', 'g') AS norm,
-        |    CAST(len(string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_tokens,
-        |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
-        |  FROM documents WHERE text IS NOT NULL),
-        |rec AS (
-        |  SELECT source, rn, doc_id, norm, n_tokens, CAST(0 AS BIGINT) AS bin_id,
-        |    coalesce(n_tokens, 0) AS fill
-        |  FROM t WHERE rn = 1
-        |  UNION ALL
-        |  SELECT d.source, d.rn, d.doc_id, d.norm, d.n_tokens,
-        |    CASE WHEN r.fill > 0 AND r.fill + coalesce(d.n_tokens, 0) > 2048
-        |         THEN r.bin_id + 1 ELSE r.bin_id END,
-        |    CASE WHEN r.fill > 0 AND r.fill + coalesce(d.n_tokens, 0) > 2048
-        |         THEN coalesce(d.n_tokens, 0) ELSE r.fill + coalesce(d.n_tokens, 0) END
-        |  FROM rec r JOIN t d ON d.source = r.source AND d.rn = r.rn + 1)
-        |SELECT source, bin_id,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS seq_tokens,
-        |  coalesce(array_to_string(list(norm ORDER BY doc_id), ' '), '') AS seq_text
-        |FROM rec GROUP BY source, bin_id ORDER BY source, bin_id""".stripMargin,
-    // X8 — the md5 60-bit key: hex-literal cast (DuckDB has no conv());
-    // % stays pmod-compatible because the key is non-negative.
-    "x8_epoch_shuffle" ->
-      """WITH k AS (
-        |  SELECT doc_id, source, md5('42:' || CAST(doc_id AS VARCHAR)) AS h FROM documents),
-        |s AS (SELECT doc_id, source, h,
-        |        ('0x' || substr(h, 1, 15))::BIGINT % 8 AS shard FROM k)
-        |SELECT doc_id, source, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY h, doc_id) AS BIGINT) AS pos
-        |FROM s ORDER BY shard, pos""".stripMargin,
-    // X9 — 52-bit uniform deviate, exact in a double on both engines.
-    "x9_split" ->
-      """SELECT doc_id, source,
-        |  CASE WHEN u < CAST(0.8 AS DOUBLE) THEN 'train'
-        |       WHEN u < CAST(0.9 AS DOUBLE) THEN 'validation'
-        |       ELSE 'test' END AS split
-        |FROM (SELECT doc_id, source,
-        |        CAST(('0x' || substr(md5('7:' || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT AS DOUBLE)
-        |          / CAST(4503599627370496 AS DOUBLE) AS u
-        |      FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    // X16 — the x2 dup_word_frac CTE (same 6dp rounding) complemented
-    // to the unique-word fraction and thresholded by the x9 seeded
-    // uniform: admit iff u < score. Both halves are verbatim
-    // restatements of already-hash-green machinery.
-    "x16_quality_sample" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
-         |  FROM documents),
-         |b AS (
-         |  SELECT doc_id,
-         |    CAST(1.0 AS DOUBLE) - round(1.0 - len(list_distinct(toks))::DOUBLE / len(toks), 6) AS uniq_word_frac
-         |  FROM t WHERE len(toks) > 0),
-         |uu AS (
-         |  SELECT doc_id, uniq_word_frac,
-         |    CAST(('0x' || substr(md5('${QueryParams.X16Seed}:' || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT AS DOUBLE)
-         |      / CAST(4503599627370496 AS DOUBLE) AS u
-         |  FROM b)
-         |SELECT doc_id, uniq_word_frac FROM uu WHERE u < uniq_word_frac
-         |ORDER BY doc_id""".stripMargin,
-    "x11_eval_sample" ->
-      s"""SELECT doc_id, source FROM (
-         |  SELECT doc_id, source,
-         |    row_number() OVER (PARTITION BY source
-         |                       ORDER BY md5('${QueryParams.X11Seed}:' || CAST(doc_id AS VARCHAR)), doc_id) AS rk
-         |  FROM documents) t
-         |WHERE rk <= ${QueryParams.X11Quota} ORDER BY source, doc_id""".stripMargin,
-    // x12 — integer window counts, one final double division (the x10
-    // discipline); md5 span fingerprints are engine-portable. Zero-window
-    // docs (< n tokens) surface via the LEFT JOIN with fraction 0.
-    "x12_dup_spans" -> {
-      val n = QueryParams.X12SpanWidth
-      s"""WITH base AS (
-         |  SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
-         |  FROM documents WHERE text IS NOT NULL),
-         |spans AS (
-         |  SELECT doc_id,
-         |    CASE WHEN len(toks) >= $n
-         |      THEN list_transform(range(1, len(toks) - $n + 2), i -> md5(array_to_string(toks[i:i+${n - 1}], ' ')))
-         |      ELSE []::VARCHAR[] END AS ws
-         |  FROM base),
-         |expl AS (SELECT doc_id, unnest(ws) AS span FROM spans),
-         |dup AS (SELECT span FROM (SELECT span, count(*) AS c FROM expl GROUP BY span) t WHERE c > 1),
-         |stats AS (
-         |  SELECT e.doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_spans,
-         |    CAST(sum(CASE WHEN d.span IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dup_spans
-         |  FROM expl e LEFT JOIN dup d USING (span) GROUP BY e.doc_id)
-         |SELECT b.doc_id,
-         |  coalesce(s.n_spans, 0) AS n_spans,
-         |  coalesce(s.n_dup_spans, 0) AS n_dup_spans,
-         |  CASE WHEN coalesce(s.n_spans, 0) > 0
-         |    THEN CAST(s.n_dup_spans AS DOUBLE) / CAST(s.n_spans AS DOUBLE) ELSE 0.0 END AS dup_span_frac,
-         |  (CASE WHEN coalesce(s.n_spans, 0) > 0
-         |    THEN CAST(s.n_dup_spans AS DOUBLE) / CAST(s.n_spans AS DOUBLE) ELSE 0.0 END) < ${QueryParams.X12MaxDupFrac} AS keep_doc
-         |FROM base b LEFT JOIN stats s USING (doc_id)
-         |ORDER BY b.doc_id""".stripMargin
-    },
-    // x13 — the oracle recomputes first-occurrence retention with a
-    // row_number window (values identical to the engine's min-struct
-    // aggregate: (doc_id, pos) is a total order) and reconstructs the
-    // text with the same positional coverage rule. coalesce on the
-    // final join: DuckDB's array_to_string([]) is NULL where Spark's
-    // concat_ws over an empty array is '' (the fully-removed-doc case).
-    "x13_span_dedup" -> {
-      val n = QueryParams.X12SpanWidth
-      s"""WITH base AS (
-         |  SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
-         |  FROM documents WHERE text IS NOT NULL),
-         |spans AS (
-         |  SELECT doc_id, toks,
-         |    CASE WHEN len(toks) >= $n
-         |      THEN list_transform(range(1, len(toks) - $n + 2), i -> md5(array_to_string(toks[i:i+${n - 1}], ' ')))
-         |      ELSE []::VARCHAR[] END AS ws
-         |  FROM base),
-         |occ AS (
-         |  SELECT doc_id, u.pos, ws[u.pos] AS span
-         |  FROM spans, (SELECT unnest(range(1, len(ws) + 1)) AS pos) u),
-         |rmv AS (
-         |  SELECT doc_id, pos FROM (
-         |    SELECT doc_id, pos,
-         |      row_number() OVER (PARTITION BY span ORDER BY doc_id, pos) AS rn
-         |    FROM occ) t
-         |  WHERE rn > 1),
-         |starts AS (SELECT doc_id, list(pos ORDER BY pos) AS st FROM rmv GROUP BY doc_id),
-         |clean AS (
-         |  SELECT b.doc_id, b.toks,
-         |    list_transform(
-         |      list_filter(range(1, len(b.toks) + 1),
-         |        p -> len(list_filter(coalesce(s.st, []::BIGINT[]), x -> p >= x AND p < x + $n)) = 0),
-         |      p -> b.toks[p]) AS ct
-         |  FROM base b LEFT JOIN starts s USING (doc_id))
-         |SELECT doc_id,
-         |  CAST(len(toks) AS BIGINT) AS n_tokens,
-         |  CAST(len(toks) - len(ct) AS BIGINT) AS n_removed,
-         |  coalesce(array_to_string(ct, ' '), '') AS clean_text
-         |FROM clean ORDER BY doc_id""".stripMargin
-    },
-    // x10 — integer-exact internals (counts, sums), ONE final double
-    // division per output column: both engines produce identical bits
-    // with no float-order concerns.
-    "x10_corpus_freq" ->
-      s"""WITH nrm AS (
-         |  SELECT doc_id, regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm
-         |  FROM documents WHERE text IS NOT NULL),
-         |tk AS (SELECT doc_id, unnest(string_split(norm, ' ')) AS tok FROM nrm),
-         |vocab AS (SELECT tok, CAST(count(*) AS BIGINT) AS tok_count FROM tk GROUP BY tok),
-         |tot AS (SELECT CAST(sum(tok_count) AS BIGINT) AS corpus_tokens FROM vocab),
-         |per_doc AS (
-         |  SELECT t.doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_tokens,
-         |    CAST(sum(v.tok_count) AS BIGINT) AS freq_sum,
-         |    CAST(sum(CASE WHEN v.tok_count < ${QueryParams.X10MinCount} THEN 1 ELSE 0 END) AS BIGINT) AS oov_count
-         |  FROM tk t JOIN vocab v USING (tok)
-         |  GROUP BY t.doc_id)
-        |SELECT doc_id, n_tokens,
-        |  CAST(freq_sum AS DOUBLE) / (CAST(n_tokens AS DOUBLE) * CAST(corpus_tokens AS DOUBLE)) AS mean_token_freq,
-        |  CAST(oov_count AS DOUBLE) / CAST(n_tokens AS DOUBLE) AS oov_frac
-        |FROM per_doc, tot
-        |ORDER BY doc_id""".stripMargin,
-    "x3_lang_id" ->
-      """WITH t AS (
-        |  SELECT doc_id, lang, string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks FROM documents),
-        |s AS (
-        |  SELECT doc_id, lang,
-        |    len(list_filter(toks, x -> list_contains(['der','die','das','und','nicht','ist','ein','mit'], x))) AS s_de,
-        |    len(list_filter(toks, x -> list_contains(['the','and','of','to','is','in','that','it'], x))) AS s_en,
-        |    len(list_filter(toks, x -> list_contains(['el','la','los','las','que','de','y','es'], x))) AS s_es,
-        |    len(list_filter(toks, x -> list_contains(['le','la','les','et','que','des','est','un'], x))) AS s_fr,
-        |    len(list_filter(toks, x -> list_contains(['de','shi','le','zai','you','wo','ta','men'], x))) AS s_zh
-        |  FROM t)
-        |SELECT doc_id, lang,
-        |  CASE WHEN s_de = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'de'
-        |       WHEN s_en = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'en'
-        |       WHEN s_es = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'es'
-        |       WHEN s_fr = greatest(s_de, s_en, s_es, s_fr, s_zh) THEN 'fr'
-        |       ELSE 'zh' END AS lang_pred
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "x4_fingerprint" ->
-      """SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // X5 — the same planted-PII construction and the same three regexes
-    // in the same order (email → URL → digit run), each with the 'g'
-    // flag (DuckDB replaces first-match-only by default; Spark's
-    // regexp_replace is always global).
-    "x5_redact_pii" ->
-      """WITH planted AS (
-        |  SELECT doc_id,
-        |    text || ' contact user' || CAST(doc_id AS VARCHAR)
-        |         || '@mail.example.com or (https://site' || CAST(doc_id AS VARCHAR)
-        |         || '.example.org/path). acct 1234567' || CAST(doc_id AS VARCHAR) AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  regexp_replace(
-        |    regexp_replace(
-        |      regexp_replace(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |      '(?i)\bhttps?://[^\s]*[^\s).,;:!?]', '<URL>', 'g'),
-        |    '\b\d{7,}\b', '<NUM>', 'g') AS clean_text
-        |FROM planted ORDER BY doc_id""".stripMargin,
-    "d1_exact_dedup" ->
-      """WITH all_docs AS (
-        |  SELECT doc_id, text FROM documents
-        |  UNION ALL SELECT doc_id + 1000000, text FROM documents),
-        |fp AS (SELECT doc_id, md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fingerprint FROM all_docs),
-        |g AS (SELECT *, min(doc_id) OVER (PARTITION BY fingerprint) AS keeper_id,
-        |              count(*) OVER (PARTITION BY fingerprint) AS group_size FROM fp)
-        |SELECT doc_id, keeper_id, fingerprint, CAST(group_size AS BIGINT) AS group_size
-        |FROM g WHERE group_size > 1 ORDER BY doc_id""".stripMargin,
-    "d2_minhash_lsh" ->
-      s"""WITH $d2PairsCtes
-         |SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.3 ORDER BY id_a, id_b""".stripMargin,
-    // D9 — the incremental-index result is BY CONSTRUCTION the full
-    // pair list restricted to pairs touching the increment (doc_id%3=0)
-    // — the oracle states that contract directly over the same CTEs.
-    "d9_incremental_minhash" ->
-      s"""WITH $d2PairsCtes
-         |SELECT id_a, id_b, jaccard FROM pairs
-         |WHERE jaccard >= 0.3 AND (id_a % 3 = 0 OR id_b % 3 = 0)
-         |ORDER BY id_a, id_b""".stripMargin,
-    // D9b — incremental exact-novelty; IS NOT DISTINCT FROM mirrors the
-    // Spark <=> anti-join (NULL text is non-novel vs a corpus NULL).
-    "d9b_novel_filter" ->
-      """WITH fp AS (
-        |  SELECT doc_id, source,
-        |         md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS f
-        |  FROM documents)
-        |SELECT b.doc_id, b.source FROM fp b
-        |WHERE b.doc_id % 3 = 0
-        |  AND NOT EXISTS (SELECT 1 FROM fp c
-        |                  WHERE c.doc_id % 3 <> 0 AND c.f IS NOT DISTINCT FROM b.f)
-        |ORDER BY doc_id""".stripMargin,
-    // D13 — the sequential ingest gate restated batch by batch: seed =
-    // doc_id%3=1 (indexed ungated), then each gated batch (%3=2, then
-    // %3=0) is within-batch exact-keepered, fingerprint-novelty-checked
-    // against everything accepted so far, and cluster-resolved over the
-    // SAME global pair CTEs restricted to (batch ∪ accepted) pairs
-    // touching the batch — a corpus anchor in the cluster drops the
-    // whole batch side, else the min batch id keeps. Two unrolled
-    // recursive closures = the two ingestBatch calls.
-    "d13_ingest_corpus" ->
-      s"""WITH RECURSIVE $d2PairsCtes,
-         |p AS (SELECT id_a, id_b FROM pairs WHERE jaccard >= 0.3),
-         |sym AS (SELECT id_a AS src, id_b AS dst FROM p UNION ALL SELECT id_b, id_a FROM p),
-         |fpd AS (SELECT doc_id, source, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS f FROM documents),
-         |seed AS (SELECT doc_id, source, f FROM fpd WHERE doc_id % 3 = 1),
-         |e2 AS (
-         |  SELECT doc_id, source, f FROM (
-         |    SELECT b.*, min(doc_id) OVER (PARTITION BY f) AS kid
-         |    FROM (SELECT * FROM fpd WHERE doc_id % 3 = 2) b)
-         |  WHERE doc_id = kid),
-         |n2 AS (SELECT e.* FROM e2 e
-         |  WHERE NOT EXISTS (SELECT 1 FROM seed s WHERE s.f IS NOT DISTINCT FROM e.f)),
-         |u2 AS (SELECT doc_id FROM n2 UNION SELECT doc_id FROM seed),
-         |ed2 AS (SELECT src, dst FROM sym
-         |  WHERE (src IN (SELECT doc_id FROM n2) OR dst IN (SELECT doc_id FROM n2))
-         |    AND src IN (SELECT doc_id FROM u2) AND dst IN (SELECT doc_id FROM u2)),
-         |r2(id, r) AS (
-         |  SELECT doc_id, doc_id FROM u2
-         |  UNION
-         |  SELECT e.dst, r2.r FROM ed2 e JOIN r2 ON r2.id = e.src),
-         |c2 AS (SELECT id, min(r) AS component FROM r2 GROUP BY id),
-         |g2 AS (SELECT component,
-         |    max(CASE WHEN id NOT IN (SELECT doc_id FROM n2) THEN 1 ELSE 0 END) AS has_indexed,
-         |    min(CASE WHEN id IN (SELECT doc_id FROM n2) THEN id END) AS min_batch
-         |  FROM c2 GROUP BY component),
-         |acc2 AS (
-         |  SELECT n.doc_id, n.source, n.f FROM n2 n
-         |  JOIN c2 ON c2.id = n.doc_id
-         |  JOIN g2 ON g2.component = c2.component
-         |  WHERE g2.has_indexed = 0 AND n.doc_id = g2.min_batch),
-         |e0 AS (
-         |  SELECT doc_id, source, f FROM (
-         |    SELECT b.*, min(doc_id) OVER (PARTITION BY f) AS kid
-         |    FROM (SELECT * FROM fpd WHERE doc_id % 3 = 0) b)
-         |  WHERE doc_id = kid),
-         |af AS (SELECT f FROM seed UNION ALL SELECT f FROM acc2),
-         |n0 AS (SELECT e.* FROM e0 e
-         |  WHERE NOT EXISTS (SELECT 1 FROM af s WHERE s.f IS NOT DISTINCT FROM e.f)),
-         |u0 AS (SELECT doc_id FROM n0 UNION SELECT doc_id FROM seed UNION SELECT doc_id FROM acc2),
-         |ed0 AS (SELECT src, dst FROM sym
-         |  WHERE (src IN (SELECT doc_id FROM n0) OR dst IN (SELECT doc_id FROM n0))
-         |    AND src IN (SELECT doc_id FROM u0) AND dst IN (SELECT doc_id FROM u0)),
-         |r0(id, r) AS (
-         |  SELECT doc_id, doc_id FROM u0
-         |  UNION
-         |  SELECT e.dst, r0.r FROM ed0 e JOIN r0 ON r0.id = e.src),
-         |c0 AS (SELECT id, min(r) AS component FROM r0 GROUP BY id),
-         |g0 AS (SELECT component,
-         |    max(CASE WHEN id NOT IN (SELECT doc_id FROM n0) THEN 1 ELSE 0 END) AS has_indexed,
-         |    min(CASE WHEN id IN (SELECT doc_id FROM n0) THEN id END) AS min_batch
-         |  FROM c0 GROUP BY component),
-         |acc0 AS (
-         |  SELECT n.doc_id, n.source FROM n0 n
-         |  JOIN c0 ON c0.id = n.doc_id
-         |  JOIN g0 ON g0.component = c0.component
-         |  WHERE g0.has_indexed = 0 AND n.doc_id = g0.min_batch)
-         |SELECT doc_id, source FROM seed
-         |UNION ALL SELECT doc_id, source FROM acc2
-         |UNION ALL SELECT doc_id, source FROM acc0
-         |ORDER BY doc_id""".stripMargin,
-    // D8b — the deduplicated corpus: documents minus non-keeper cluster
-    // members, derived from the same recursive closure.
-    "d8b_dedup_filter" ->
-      s"""WITH RECURSIVE $d2PairsCtes,
-         |thresholded AS (SELECT id_a, id_b FROM pairs WHERE jaccard >= 0.3),
-         |nodes AS (SELECT id_a AS id FROM thresholded UNION SELECT id_b FROM thresholded),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM thresholded
-         |          UNION SELECT id_b, id_a FROM thresholded),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT e.dst, reach.r FROM edges e JOIN reach ON reach.id = e.src),
-         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id)
-         |SELECT doc_id, source FROM documents
-         |WHERE doc_id NOT IN (SELECT id FROM comp WHERE id <> component)
-         |ORDER BY doc_id""".stripMargin,
-    // D8 — connected components over the SAME pair CTEs via a recursive
-    // closure: reach(id, r) reaches every label r in id's component;
-    // min(r) is the component = canonical keeper id. UNION (not UNION
-    // ALL) dedups rows, so the recursion terminates at the closure.
-    "d8_components" ->
-      s"""WITH RECURSIVE $d2PairsCtes,
-         |thresholded AS (SELECT id_a, id_b FROM pairs WHERE jaccard >= 0.3),
-         |nodes AS (SELECT id_a AS id FROM thresholded UNION SELECT id_b FROM thresholded),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM thresholded
-         |          UNION SELECT id_b, id_a FROM thresholded),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT e.dst, reach.r FROM edges e JOIN reach ON reach.id = e.src),
-         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-         |csize AS (SELECT component, CAST(count(*) AS BIGINT) AS cluster_size FROM comp GROUP BY component)
-         |SELECT c.id, c.component, s.cluster_size
-         |FROM comp c JOIN csize s USING (component)
-         |ORDER BY c.component, c.id""".stripMargin,
-    // D11 — the d8 component machinery verbatim, its labels COALESCEd
-    // with the doc's own id into a group key, then the x9 threshold
-    // rule on that key: the oracle literally states "x9 over group
-    // keys", which is the operator's whole contract.
-    "d11_safe_split" ->
-      s"""WITH RECURSIVE $d2PairsCtes,
-         |thresholded AS (SELECT id_a, id_b FROM pairs WHERE jaccard >= 0.3),
-         |nodes AS (SELECT id_a AS id FROM thresholded UNION SELECT id_b FROM thresholded),
-         |edges AS (SELECT id_a AS src, id_b AS dst FROM thresholded
-         |          UNION SELECT id_b, id_a FROM thresholded),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM nodes
-         |  UNION
-         |  SELECT e.dst, reach.r FROM edges e JOIN reach ON reach.id = e.src),
-         |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-         |keyed AS (
-         |  SELECT d.doc_id, d.source, COALESCE(c.component, d.doc_id) AS group_key
-         |  FROM documents d LEFT JOIN comp c ON c.id = d.doc_id)
-         |SELECT doc_id, source, group_key,
-         |  CASE WHEN u < CAST(0.8 AS DOUBLE) THEN 'train'
-         |       WHEN u < CAST(0.9 AS DOUBLE) THEN 'validation'
-         |       ELSE 'test' END AS split
-         |FROM (SELECT *,
-         |        CAST(('0x' || substr(md5('7:' || CAST(group_key AS VARCHAR)), 1, 13))::BIGINT AS DOUBLE)
-         |          / CAST(4503599627370496 AS DOUBLE) AS u
-         |      FROM keyed)
-         |ORDER BY doc_id""".stripMargin,
-    // X15 — the whole mixture policy restated relationally: weights
-    // from the source name, integer floor-division budget split (//),
-    // seeded-md5 admission order, strict prefix-sum cap. NULL token
-    // counts cost 0 (COALESCE) but stay NULL in the output, same as
-    // the engine.
-    "x15_token_budget_mix" ->
-      s"""WITH t AS (
-         |  SELECT doc_id, source,
-         |    CAST(len(string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ')) AS BIGINT) AS n_tokens
-         |  FROM documents),
-         |w AS (SELECT DISTINCT source,
-         |        (CAST(regexp_extract(source, '(\\d+)', 1) AS BIGINT) % 3) + 1 AS wt
-         |      FROM t),
-         |tot AS (SELECT sum(wt) AS wsum FROM w),
-         |b AS (SELECT source, CAST((wt * ${QueryParams.X15Budget}) // wsum AS BIGINT) AS budget FROM w, tot),
-         |c AS (
-         |  SELECT doc_id, source, n_tokens,
-         |    sum(coalesce(n_tokens, 0)) OVER (
-         |      PARTITION BY source
-         |      ORDER BY md5('${QueryParams.X15Seed}:' || CAST(doc_id AS VARCHAR)), doc_id
-         |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-         |  FROM t)
-         |SELECT c.doc_id, c.source, c.n_tokens, CAST(c.cum AS BIGINT) AS cum_tokens
-         |FROM c JOIN b ON b.source = c.source
-         |WHERE c.cum <= b.budget
-         |ORDER BY c.doc_id""".stripMargin,
-    // x17 — integer counts plus ONE final double division (hit_frac):
-    // bit-identical on both engines. Window CTE mirrors x13's.
-    "x17_exact_decontaminate" -> x17Sql,
-    // x18 — the bloom-gated variant computes the IDENTICAL result (the
-    // sketch only over-admits and the exact verify removes every false
-    // positive), so its oracle IS x17's SQL: same contract, different
-    // physical gate.
-    "x18_bloom_decontaminate" -> x17Sql,
-    // x19 — integer-exact counts; (n_docs DESC, n_occurrences DESC,
-    // gram) is a TOTAL order (gram is the group key), so the LIMIT cut
-    // is deterministic on both engines.
-    // x21 — the composed-pipeline contract (see the x21Sql scaladoc):
-    // stage coupling is the thing under test.
-    "x21_pipeline_sweep" -> x21Sql,
-    "x19_frequent_ngrams" -> x19Sql,
-    // x19b — the count-min-gated twin SHARES x19's oracle verbatim: the
-    // sketch only over-admits and the exact second pass removes every
-    // false positive, so the sketch is result-invisible (the x18
-    // bloom-gate precedent with a counting sketch).
-    "x19b_frequent_ngrams_cms" -> x19Sql,
-    "d7_decontaminate" -> {
-      val sigExprs = graft.dedup.Dedup
-        .xorSeeds(16)
-        .map(s => s"list_min(list_transform(hs, h -> xor(h, $s)))")
-        .mkString("[", ", ", "]")
-      s"""WITH base AS (
-         |  SELECT doc_id AS id,
-         |    list_distinct(list_transform(range(1, greatest(len(toks)-2, 0)+1), i -> array_to_string(toks[i:i+2], ' '))) AS sh
-         |  FROM (SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks FROM documents)),
-         |filt AS (SELECT * FROM base WHERE len(sh) > 0),
-         |hashed AS (SELECT id, sh, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hs FROM filt),
-         |sig AS (SELECT id, $sigExprs AS sig FROM hashed),
-         |banded AS (
-         |  SELECT id, b.band, md5(array_to_string(sig[b.band*2+1:b.band*2+2], ',')) AS band_key
-         |  FROM sig, (SELECT unnest(range(0, 8)) AS band) b),
-         |cand AS (
-         |  SELECT DISTINCT c.id AS id_a, bm.id AS id_b
-         |  FROM (SELECT * FROM banded WHERE id % 5 <> 0) c
-         |  JOIN (SELECT * FROM banded WHERE id % 5 = 0) bm
-         |    ON c.band = bm.band AND c.band_key = bm.band_key),
-         |pairs AS (
-         |  SELECT cd.id_a, cd.id_b,
-         |    len(list_intersect(sa.sh, sb.sh))::DOUBLE / len(list_distinct(list_concat(sa.sh, sb.sh)))::DOUBLE AS jaccard
-         |  FROM cand cd JOIN filt sa ON sa.id = cd.id_a JOIN filt sb ON sb.id = cd.id_b)
-         |SELECT id_a, id_b, jaccard FROM pairs WHERE jaccard >= 0.3 ORDER BY id_a, id_b""".stripMargin
-    },
-    // simhash: the hex→int64 conversion DuckDB v1.0.0 lacks via conv()
-    // is expressed with the ('0x'||hex)::BIGINT cast; the 60-bit sketch
-    // is a nested list_reduce replicating Simhash60's sign-sum exactly.
-    "d3_simhash" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS ts
-        |  FROM documents),
-        |hs AS (
-        |  SELECT doc_id, list_transform(ts, t -> ('0x' || substr(md5(t), 1, 15))::BIGINT) AS hl FROM toks),
-        |sk AS (
-        |  SELECT doc_id,
-        |    list_reduce(list_transform(range(0, 60), b ->
-        |      CASE WHEN list_reduce(list_transform(hl, h -> CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END), (x,y) -> x+y) > 0
-        |           THEN (1::BIGINT << b) ELSE 0::BIGINT END), (x,y) -> x+y) AS sim
-        |  FROM hs),
-        |chunked AS (
-        |  SELECT doc_id, sim, c AS chunk, (sim >> (15*c)) & 32767 AS chunk_val
-        |  FROM sk, unnest([0,1,2,3]) AS u(c))
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(bit_count(xor(a.sim, b.sim)) AS INTEGER) AS hamming
-        |FROM chunked a JOIN chunked b ON a.chunk = b.chunk AND a.chunk_val = b.chunk_val AND a.doc_id < b.doc_id
-        |GROUP BY 1, 2, 3
-        |HAVING hamming <= 20
-        |ORDER BY id_a, id_b""".stripMargin,
-    "d4_ngram_jaccard" ->
-      """WITH s AS (
-        |  SELECT doc_id AS id, n_chars AS len,
-        |    list_distinct(list_transform(range(1, greatest(len(toks)-2, 0)+1), i -> array_to_string(toks[i:i+2], ' '))) AS sh
-        |  FROM (SELECT doc_id, n_chars, string_split(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'), ' ') AS toks FROM documents))
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE AS jaccard
-        |FROM s a JOIN s b ON a.id < b.id AND abs(a.len - b.len)::DOUBLE <= 0.15 * greatest(a.len, b.len)
-        |WHERE len(list_intersect(a.sh, b.sh))::DOUBLE / len(list_distinct(list_concat(a.sh, b.sh)))::DOUBLE >= 0.3
-        |ORDER BY id_a, id_b""".stripMargin,
-    "d5_embed_neardup" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> a.v[i] * b.v[i])), (acc, x) -> acc + x)
-        |    / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> a.v[i] * a.v[i])), (acc, x) -> acc + x))
-        |       * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> b.v[i] * b.v[i])), (acc, x) -> acc + x))) AS cos
-        |  FROM e a JOIN e b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, cos FROM p WHERE cos >= 0.4 ORDER BY id_a, id_b""".stripMargin,
-    "n1_ann_brute" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id AS nbr_id,
-        |    list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> q.qv[i] * e.v[i])), (acc, x) -> acc + x)
-        |    / (sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> q.qv[i] * q.qv[i])), (acc, x) -> acc + x))
-        |       * sqrt(list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> e.v[i] * e.v[i])), (acc, x) -> acc + x))) AS cos
-        |  FROM q JOIN e ON e.vec_id <> q.query_id)
-        |SELECT query_id, nbr_id, cos FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, nbr_id) AS rn FROM scored) t
-        |WHERE rn <= 5 ORDER BY query_id, nbr_id""".stripMargin,
-    "n4_ann_quantized" ->
-      """WITH e AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS v FROM embeddings),
-        |s AS (SELECT vec_id, v, list_max(list_transform(v, x -> abs(x))) / 127.0 AS sc FROM e),
-        |qz AS (SELECT vec_id,
-        |         list_transform(v, x -> CASE WHEN sc = 0.0 THEN 0.0 ELSE floor(x / sc + 0.5) END) AS qd
-        |       FROM s),
-        |n AS (SELECT vec_id, qd,
-        |        sqrt(list_reduce(list_prepend(0.0, list_transform(qd, x -> x * x)), (a, b) -> a + b)) AS qn
-        |      FROM qz),
-        |q AS (SELECT vec_id AS query_id, qd AS qv, qn AS qnm FROM n WHERE vec_id < 10),
-        |scored AS (
-        |  SELECT q.query_id, n.vec_id AS nbr_id,
-        |    list_reduce(list_prepend(0.0, list_transform(range(1, 65), i -> q.qv[i] * n.qd[i])), (a, b) -> a + b)
-        |      / (q.qnm * n.qn) AS qcos
-        |  FROM q JOIN n ON n.vec_id <> q.query_id)
-        |SELECT query_id, nbr_id, qcos FROM (
-        |  SELECT *, row_number() OVER (PARTITION BY query_id ORDER BY qcos DESC, nbr_id) AS rn FROM scored) t
-        |WHERE rn <= 5 ORDER BY query_id, nbr_id""".stripMargin,
-    // B1-enrich — candle-close signal rows (last event per 30-min bucket,
-    // stamped at the bucket start) as-of joined to the pricing stream.
-    "b1_enrich" ->
-      """WITH pricing AS (
-        |  SELECT CAST(user_id AS VARCHAR) AS symbol, epoch_us(ts) AS time_us, value AS close, event_id
-        |  FROM events),
-        |ranked AS (
-        |  SELECT symbol, (time_us // 1800000000) * 1800000000 AS bucket_us, time_us, close,
-        |    row_number() OVER (PARTITION BY symbol, time_us // 1800000000
-        |                       ORDER BY time_us DESC, event_id DESC) AS rn
-        |  FROM pricing),
-        |sig AS (SELECT symbol, bucket_us AS time_us, close AS close_price FROM ranked WHERE rn = 1)
-        |SELECT l.symbol, l.time_us, l.close_price, r.close AS entry_price
-        |FROM sig l
-        |ASOF LEFT JOIN (
-        |  SELECT symbol, time_us, close FROM (
-        |    SELECT symbol, time_us, close,
-        |      row_number() OVER (PARTITION BY symbol, time_us ORDER BY event_id DESC) AS prn
-        |    FROM pricing WHERE close IS NOT NULL) dp
-        |  WHERE prn = 1) r
-        |  ON l.symbol = r.symbol AND l.time_us >= r.time_us
-        |ORDER BY l.symbol, l.time_us""".stripMargin,
-    "j6_asof_join" ->
-      """SELECT l.user_id, epoch_us(l.ts) AS ts_us, l.event_id, r.value AS purchase_value
-        |FROM (SELECT * FROM events WHERE event_type = 'error') l
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') r
-        |  ON l.user_id = r.user_id AND l.ts >= r.ts
-        |ORDER BY l.user_id, ts_us""".stripMargin,
-    "w6_forward_fill" ->
-      """WITH ranked AS (
-        |  SELECT user_id, (epoch_us(ts) // 3600000000) * 3600000000 AS bucket_us, value,
-        |         row_number() OVER (PARTITION BY user_id, epoch_us(ts) // 3600000000 ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events),
-        |o AS (SELECT user_id, bucket_us, value FROM ranked WHERE rn = 1),
-        |bounds AS (SELECT user_id, min(bucket_us) AS lo, max(bucket_us) AS hi FROM o GROUP BY user_id),
-        |grid AS (SELECT user_id, unnest(generate_series(lo, hi, 3600000000)) AS bucket_us FROM bounds),
-        |j AS (SELECT g.user_id, g.bucket_us, o.value, o.user_id IS NOT NULL AS obs
-        |      FROM grid g LEFT JOIN o ON g.user_id = o.user_id AND g.bucket_us = o.bucket_us),
-        |f AS (SELECT user_id, bucket_us, obs,
-        |        last_value(value IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY bucket_us ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-        |      FROM j)
-        |SELECT user_id, bucket_us, value FROM f WHERE NOT obs ORDER BY user_id, bucket_us""".stripMargin,
-    "w7_prior_period" ->
-      """WITH ranked AS (
-        |  SELECT user_id, (epoch_us(ts) // 86400000000) * 86400000000 AS day_us, value,
-        |         row_number() OVER (PARTITION BY user_id, epoch_us(ts) // 86400000000 ORDER BY ts DESC, event_id DESC) AS rn
-        |  FROM events),
-        |o AS (SELECT user_id, day_us, value AS period_last FROM ranked WHERE rn = 1)
-        |SELECT user_id, day_us, period_last,
-        |       lag(period_last, 1) OVER (PARTITION BY user_id ORDER BY day_us) AS prior_last
-        |FROM o ORDER BY user_id, day_us""".stripMargin,
-    "p7_nearest_key" ->
-      """SELECT target, k AS matched FROM (
-        |  SELECT t.target, a.k, row_number() OVER (PARTITION BY t.target ORDER BY abs(a.k - t.target), a.k) AS rn
-        |  FROM (SELECT unnest([5, 15, 25, 48]) AS target) t
-        |  CROSS JOIN (SELECT DISTINCT p_size AS k FROM part) a) x
-        |WHERE rn = 1 ORDER BY target""".stripMargin,
-    "p1_filter_pushdown" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, strftime(l_shipdate, '%Y-%m-%d') AS ship_date
-        |FROM lineitem
-        |WHERE l_returnflag = 'R' AND l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-    "s7_pivot_wide" ->
-      """SELECT user_id, (epoch_us(ts) // 86400000000) * 86400000000 AS day_us,
-        |  round(sum(CASE WHEN event_type = 'click' THEN value END), 6) AS click,
-        |  round(sum(CASE WHEN event_type = 'error' THEN value END), 6) AS error,
-        |  round(sum(CASE WHEN event_type = 'purchase' THEN value END), 6) AS purchase,
-        |  round(sum(CASE WHEN event_type = 'signup' THEN value END), 6) AS signup,
-        |  round(sum(CASE WHEN event_type = 'view' THEN value END), 6) AS view
-        |FROM events GROUP BY user_id, day_us ORDER BY user_id, day_us""".stripMargin,
-    "w1_padded_wma" ->
-      """WITH b AS (
-        |  SELECT user_id, ts, event_id, epoch_us(ts) AS ts_us, value,
-        |         first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pad
-        |  FROM events)
-        |SELECT user_id, ts_us, event_id,
-        |  (5.0*value + 4.0*coalesce(lag(value,1) OVER w, pad) + 3.0*coalesce(lag(value,2) OVER w, pad) + 2.0*coalesce(lag(value,3) OVER w, pad) + 1.0*coalesce(lag(value,4) OVER w, pad)) / 15.0 AS wma
-        |FROM b
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-    "w2_hull" ->
-      """WITH b AS (
-        |  SELECT user_id, ts, event_id, epoch_us(ts) AS ts_us, value,
-        |         first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pad
-        |  FROM events),
-        |d AS (
-        |  SELECT user_id, ts, event_id, ts_us, pad,
-        |    2.0*((4.0*value + 3.0*coalesce(lag(value,1) OVER w, pad) + 2.0*coalesce(lag(value,2) OVER w, pad) + 1.0*coalesce(lag(value,3) OVER w, pad))/10.0)
-        |    - ((8.0*value + 7.0*coalesce(lag(value,1) OVER w, pad) + 6.0*coalesce(lag(value,2) OVER w, pad) + 5.0*coalesce(lag(value,3) OVER w, pad) + 4.0*coalesce(lag(value,4) OVER w, pad) + 3.0*coalesce(lag(value,5) OVER w, pad) + 2.0*coalesce(lag(value,6) OVER w, pad) + 1.0*coalesce(lag(value,7) OVER w, pad))/36.0) AS hd
-        |  FROM b
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |h AS (
-        |  SELECT user_id, ts, event_id, ts_us,
-        |    (3.0*hd + 2.0*coalesce(lag(hd,1) OVER w, pad) + 1.0*coalesce(lag(hd,2) OVER w, pad))/6.0 AS hma
-        |  FROM d
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, ts_us, event_id, hma,
-        |  CASE WHEN hma > lag(hma,1) OVER (PARTITION BY user_id ORDER BY ts, event_id) THEN 'Up' ELSE 'Down' END AS hma_color
-        |FROM h ORDER BY user_id, ts_us, event_id""".stripMargin,
-    "w3_ema_seeded" ->
-      """WITH b AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |         first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS seed,
-        |         list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-        |  FROM events)
-        |SELECT user_id, ts_us, event_id,
-        |  list_reduce(list_prepend(seed, pre), (acc, x) -> (2.0/6.0)*x + (1.0 - 2.0/6.0)*acc) AS ema
-        |FROM b ORDER BY user_id, ts_us, event_id""".stripMargin,
-    "w4_macd" ->
-      """WITH b AS (
-        |  SELECT user_id, ts, epoch_us(ts) AS ts_us, event_id,
-        |         first_value(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS seed,
-        |         list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS pre
-        |  FROM events),
-        |m AS (
-        |  SELECT user_id, ts, ts_us, event_id,
-        |    list_reduce(list_prepend(seed, pre), (acc, x) -> (2.0/5.0)*x + (1.0 - 2.0/5.0)*acc)
-        |    - list_reduce(list_prepend(seed, pre), (acc, x) -> (2.0/9.0)*x + (1.0 - 2.0/9.0)*acc) AS macd_value
-        |  FROM b),
-        |s AS (
-        |  SELECT user_id, ts, ts_us, event_id, macd_value,
-        |    list_reduce(list_prepend(0.0, list(macd_value) OVER (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), (acc, x) -> (2.0/4.0)*x + (1.0 - 2.0/4.0)*acc) AS avg
-        |  FROM m),
-        |d AS (SELECT *, macd_value - avg AS diff FROM s),
-        |e AS (SELECT *, lag(diff,1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS pd FROM d)
-        |SELECT user_id, ts_us, event_id, macd_value, avg, diff,
-        |  CASE WHEN pd IS NULL THEN (CASE WHEN diff > 0 THEN '#04FE00' ELSE '#FE0000' END)
-        |       WHEN diff > 0 THEN (CASE WHEN diff > pd THEN '#04FE00' ELSE '#006401' END)
-        |       ELSE (CASE WHEN diff < pd THEN '#FE0000' ELSE '#7E0100' END) END AS diff_color
-        |FROM e ORDER BY user_id, ts_us, event_id""".stripMargin
-  )
 }

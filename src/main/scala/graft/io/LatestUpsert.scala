@@ -312,6 +312,20 @@ object LatestUpsert {
     org.apache.spark.sql.types.StructType.fromDDL(
       cfg.allCols.zip(cfg.allTypes).map { case (c, t) => s"`$c` $t" }.mkString(", "))
 
+  /** Bucket dirs read with the pinned schema. The file index lists the
+    * paths when the frame is built, and above
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths (32
+    * by default) it lists them with a distributed Spark job; a bucket
+    * dir holds a few files, so the listing stays on the driver: past the
+    * threshold it is raised to the path count for the listing only.
+    */
+  private def readBuckets(spark: SparkSession, cfg: Config, paths: Seq[String]): DataFrame = {
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    def read = spark.read.schema(pinnedSchema(cfg)).parquet(paths: _*)
+    if (paths.size <= spark.conf.get(key).toInt) read
+    else graft.Sessions.withConf(spark, key -> paths.size.toString)(read)
+  }
+
   /** One row per key: `max_by(full row, (orderCols struct))`. The order
     * struct must be a TOTAL order per key (e.g. (ts, event_id)) or
     * latest-wins is not well-defined — same contract as
@@ -526,7 +540,7 @@ object LatestUpsert {
       val pinnedRows = pinned.drop("kb")
       val existing =
         if (existingPaths.isEmpty) pinnedRows.limit(0) // all-new buckets
-        else spark.read.schema(pinnedSchema(cfg)).parquet(existingPaths: _*)
+        else readBuckets(spark, cfg, existingPaths)
       val merged = withBucket(
         latestPerKey(existing.unionByName(pinnedRows), cfg.keyCols, cfg.orderCols),
         cfg.keyCols, cfg.buckets)
@@ -594,9 +608,7 @@ object LatestUpsert {
           else {
             // due buckets are already latest-per-key — pure rewrite,
             // no re-merge; kb recomputed from pinned keys (exact)
-            val extraRows = spark.read
-              .schema(pinnedSchema(cfg))
-              .parquet(extra.map(b => s"$root/${manifest(b)}"): _*)
+            val extraRows = readBuckets(spark, cfg, extra.map(b => s"$root/${manifest(b)}"))
             merged.unionByName(withBucket(extraRows, cfg.keyCols, cfg.buckets))
           }
         val planned = (touched ++ extra).toSet
@@ -670,7 +682,7 @@ object LatestUpsert {
       s"generation $gen of $root is not in the retention window " +
         s"(readable: ${generations(spark, root).mkString(", ")}) — raise retainedManifests to keep more history")
     val paths = readManifest(fs, root, gen).toSeq.sortBy(_._1).map { case (_, p) => s"$root/$p" }
-    spark.read.schema(pinnedSchema(readConfig(spark, root))).parquet(paths: _*)
+    readBuckets(spark, readConfig(spark, root), paths)
   }
 
   /** CDC read over the manifest history: every key whose latest row
@@ -721,12 +733,12 @@ object LatestUpsert {
     val after = {
       val paths = changed.map(b => s"$root/${mB(b)}")
       if (paths.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], pinnedSchema(cfg))
-      else spark.read.schema(pinnedSchema(cfg)).parquet(paths: _*)
+      else readBuckets(spark, cfg, paths)
     }
     val beforePaths = changed.flatMap(mA.get).map(p => s"$root/$p")
     val before =
       if (beforePaths.isEmpty) after.limit(0)
-      else spark.read.schema(pinnedSchema(cfg)).parquet(beforePaths: _*)
+      else readBuckets(spark, cfg, beforePaths)
     val bSide = before
       .select(cfg.keyCols.map(col) :+ struct(payload.map(col): _*).as("_old"): _*)
     val changed0 = after
@@ -792,9 +804,7 @@ object LatestUpsert {
     val manifest = readManifest(fs, root, gen)
     val target = which.distinct.filter(manifest.contains).sorted
     if (target.isEmpty) return
-    val rows = spark.read
-      .schema(pinnedSchema(cfg))
-      .parquet(target.map(b => s"$root/${manifest(b)}"): _*)
+    val rows = readBuckets(spark, cfg, target.map(b => s"$root/${manifest(b)}"))
     val bucketed = withBucket(rows, cfg.keyCols, cfg.buckets)
     val salted =
       if (filesPerBucket <= 1) bucketed.repartition(math.min(target.size, 1 << 12), col("kb"))

@@ -2,6 +2,7 @@ package graft
 
 import java.time.LocalDate
 
+import graft.queries.StrategyQueries
 import graft.strategies.{Health, Strategies}
 import graft.strategies.Strategies.ParsedLeg
 
@@ -38,7 +39,7 @@ class HealthSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     // the h1 synthesis at the smallest sf: enriched legs whose expected
     // alerts we recompute with the SAME pure functions driver-side
-    val legsDf = Queries.h1Legs(spark, sf0001)
+    val legsDf = StrategyQueries.h1Legs(spark, sf0001)
     val live = Health
       .alertsDf(spark, legsDf)
       .collect()

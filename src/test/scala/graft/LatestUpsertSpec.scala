@@ -826,4 +826,63 @@ class LatestUpsertSpec extends SparkSpec {
     q.stop()
     assert(readSet(root) == oneShotLatest(ev))
   }
+
+  /** Spark jobs `body` submits, counted by a scheduler listener. The bus
+    * delivers events in order, so once a marker job's start is seen,
+    * every job `body` ran has been counted.
+    */
+  private def jobCount(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"jobcount-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+        ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains(s"$group-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(s"$group-marker"), "listener bus did not deliver the marker job")
+      seen.toArray.count(_ == group)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a read over more than 32 buckets lists its files on the driver: no extra job at 64 and 128 buckets") {
+    // (filtered-read jobs, changesBetween jobs) on a fresh table of
+    // `buckets` buckets, every bucket rewritten by one upsert
+    def jobsAt(buckets: Int): (Int, Int) = {
+      val root = freshRoot()
+      val keys = 0L until 2000L
+      LatestUpsert.init(
+        spark, root, keys.map(k => (k, 0L, k)).toDF("k", "ts", "v"),
+        keyCols = Seq("k"), orderCols = Seq("ts"), buckets = buckets)
+      LatestUpsert.upsert(spark, root, keys.map(k => (k, 1L, -k)).toDF("k", "ts", "v"))
+      assert(LatestUpsert.bucketFileCounts(spark, root).size == buckets, "premise: every bucket holds rows")
+      val confBefore = spark.conf.getAll
+      val readJobs = jobCount {
+        assert(LatestUpsert.read(spark, root).filter($"k" === 7L).collect().map(_.getLong(2)).toSeq == Seq(-7L))
+      }
+      val cdcJobs = jobCount {
+        assert(LatestUpsert.changesBetween(spark, root, 0L, 1L).filter($"k" === 7L).collect().length == 1)
+      }
+      assert(spark.conf.getAll == confBefore, "the listing threshold escaped the read")
+      (readJobs, cdcJobs)
+    }
+    // 16 paths are below Spark's parallel-listing threshold (32): the
+    // file index lists them on the driver, with no job
+    val (read16, cdc16) = jobsAt(16)
+    assert(read16 == 1, s"filtered read over 16 buckets ran $read16 jobs")
+    for (buckets <- Seq(64, 128)) {
+      val (readJobs, cdcJobs) = jobsAt(buckets)
+      assert(readJobs == read16, s"filtered read over $buckets buckets ran $readJobs jobs, $read16 at 16")
+      assert(cdcJobs == cdc16, s"changesBetween over $buckets buckets ran $cdcJobs jobs, $cdc16 at 16")
+    }
+  }
 }

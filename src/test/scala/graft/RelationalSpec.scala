@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.io.Tables
 import graft.ops.Relational
+import graft.queries.{Fits, QueryDef}
+import graft.queries.Oracle.{Fitted, Fixture, Sql}
 
 class RelationalSpec extends SparkSpec {
 
@@ -38,21 +40,27 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  test("every query has an oracle (static or fitted) or is explicitly oracle-free") {
-    val missing =
-      SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- SparkEntry.fittedOracleNames
-    // Oracle-free queries get a weaker rows-only check from the driver;
-    // keep this list tight and intentional.
-    assert(missing.forall(SparkEntry.oracleFree.contains), s"missing oracles: $missing")
-    // and the three sets are disjoint — a name in two would let a stale
-    // static entry shadow the fitted rendering (or vice versa)
-    assert((SparkEntry.oracleSql.keySet & SparkEntry.fittedOracleNames).isEmpty)
-    assert((SparkEntry.oracleSql.keySet & SparkEntry.oracleFree).isEmpty)
-    assert((SparkEntry.fittedOracleNames & SparkEntry.oracleFree).isEmpty)
-    // and the declared fitted names are exactly what the dump renders —
-    // a name in the set without a rendered entry would pass coverage
-    // here while Verify silently dumps no oracle for it
-    assert(SparkEntry.oracleSqlFitted(spark, sf0001).keySet == SparkEntry.fittedOracleNames)
+  test("the registry: 111 uniquely named defs, each oracle renders SQL at sf0.001") {
+    val defs = SparkEntry.defs
+    assert(defs.size == 111)
+    assert(defs.map(_.name).toSet.size == defs.size)
+    // a name declared twice fails at construction instead of being
+    // dropped by a name-keyed view
+    val dup = defs(defs.size / 2)
+    val e = intercept[IllegalArgumentException](QueryDef.registry(defs :+ dup.copy(oracle = Sql("SELECT 1"))))
+    assert(e.getMessage.contains(dup.name))
+    val fits = new Fits(spark, sf0001)
+    defs.foreach { d =>
+      val sql = d.oracle match {
+        case Sql(text) => text
+        case Fitted(render) => render(fits)
+        case Fixture(_, text, _) => text
+      }
+      assert(sql.trim.nonEmpty, d.name)
+    }
+    // the views cover every def exactly once
+    assert(SparkEntry.queries.keySet == defs.map(_.name).toSet)
+    assert((SparkEntry.oracleSql ++ SparkEntry.oracleSqlFitted(spark, sf0001)).keySet == defs.map(_.name).toSet)
   }
 
   test("latestPerKey keeps exactly one row per key, the max-order one") {

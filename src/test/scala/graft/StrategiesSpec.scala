@@ -2,6 +2,7 @@ package graft
 
 import java.time.LocalDate
 
+import graft.queries.StrategyQueries
 import graft.strategies.Strategies
 import graft.strategies.Strategies.ParsedLeg
 
@@ -200,7 +201,7 @@ class StrategiesSpec extends SparkSpec {
   }
 
   test("a5 oracle query: live risk matches the committed fixture instance-by-instance (sf0.001)") {
-    val rows = Queries.a5MaxProfitLoss(spark, sf0001).collect()
+    val rows = StrategyQueries.a5MaxProfitLoss(spark, sf0001).collect()
     assert(rows.nonEmpty)
     // n_match == n on EVERY group: classification, legs_key, and both
     // risk figures (null-safe) agree with the fixture for every
