@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Relational
+
 /** LIFO entry-credit replay (reference `accounts/transactions.py:158-232`,
   * SURVEY A8): walk a symbol's fills newest→oldest, net out closes
   * against opens, consume surviving opens pro-rata until the current
@@ -12,9 +14,9 @@ import org.apache.spark.sql.types._
   *
   * This is an order-sensitive fold with cross-row netting — NOT a
   * commutative aggregate — so it runs as a per-symbol fold over
-  * key-sorted partitions (same engine shape as
-  * [[graft.indicators.Indicators.withFold]]): one shuffle on symbol,
-  * streaming within each key, O(1) state. Money stays exact end-to-end
+  * key-sorted partitions ([[graft.ops.Relational.perKeyRuns]], the
+  * engine's one ordered per-key fold): one shuffle on symbol, streaming
+  * within each key, O(1) state. Money stays exact end-to-end
   * (6-dp lattice, DecimalType(18,6) at the API surface) — the reference
   * deliberately keeps accounting off floats.
   */
@@ -344,41 +346,31 @@ object Lifo {
         col("quantity").cast("int").as("qty"),                            // 8
         currentQtyCol.as("current_qty_i")                                 // 9
       )
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("executed_at_us").desc, col("qty").desc)
-    joined.mapPartitions { rows =>
-      // Per-symbol runs stream straight from the sorted row iterator into
-      // a Fold — no history Vector, no Txn objects: once the position is
-      // accounted the run's tail is drained with a symbol compare only,
-      // so a symbol's cost is O(1) heap regardless of its fill count.
-      val buf = rows.buffered
-      val results = new Iterator[Option[Row]] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): Option[Row] = {
-          val sym = buf.head.getString(0)
-          val f = new Fold(buf.head.getInt(9))
-          while (buf.hasNext && buf.head.getString(0) == sym && !f.done) {
-            val r = buf.next()
-            if (r.getBoolean(2)) f.close(r.getInt(8))
-            else if (r.getBoolean(3))
-              f.open(r.getInt(8), r.getBoolean(4), r.getLong(5), r.getLong(6), r.getLong(7))
-            else f.other()
-          }
-          var n = 0
-          while (buf.hasNext && buf.head.getString(0) == sym) { buf.next(); n += 1 }
-          f.tail(n)
-          f.finish(sym).map { r =>
-            Row(
-              sym,
-              r.entryCredit.setScale(6, BigDecimal.RoundingMode.HALF_UP).bigDecimal,
-              r.fees.setScale(6, BigDecimal.RoundingMode.HALF_UP).bigDecimal,
-              r.weightedPrice.map(_.setScale(6, BigDecimal.RoundingMode.HALF_UP).bigDecimal).orNull,
-              r.transactionCount
-            )
-          }
-        }
+    // Each symbol's run streams straight from the sorted rows into a
+    // Fold — no history Vector, no Txn objects: once the position is
+    // accounted, the run's tail is only counted, so a symbol's cost is
+    // O(1) heap regardless of its fill count.
+    Relational.perKeyRuns(joined, Seq(col("symbol")), Seq(col("executed_at_us").desc, col("qty").desc))(
+      _.getString(0)) { (sym, run) =>
+      val it = run.buffered
+      val f = new Fold(it.head.getInt(9))
+      while (it.hasNext && !f.done) {
+        val r = it.next()
+        if (r.getBoolean(2)) f.close(r.getInt(8))
+        else if (r.getBoolean(3))
+          f.open(r.getInt(8), r.getBoolean(4), r.getLong(5), r.getLong(6), r.getLong(7))
+        else f.other()
       }
-      results.flatten
+      f.tail(it.size)
+      f.finish(sym).iterator.map { r =>
+        Row(
+          sym,
+          r.entryCredit.setScale(6, BigDecimal.RoundingMode.HALF_UP).bigDecimal,
+          r.fees.setScale(6, BigDecimal.RoundingMode.HALF_UP).bigDecimal,
+          r.weightedPrice.map(_.setScale(6, BigDecimal.RoundingMode.HALF_UP).bigDecimal).orNull,
+          r.transactionCount
+        )
+      }
     }(Encoders.row(outputSchema))
   }
 }

@@ -682,6 +682,10 @@ object Dedup {
     * and touches only candidate ids. Caller contract: ids are unique
     * across corpus ∪ batch (re-submitting an indexed id yields the
     * degenerate self-pair, which the id_a < id_b filter drops).
+    *
+    * Lifetime: the returned pairs read two pins, the batch's hashed rows
+    * and the candidate pairs. Once the pairs are consumed, the caller
+    * releases both with `Checkpoints.release(pairs)` (the plan's leaves).
     */
   def incrementalLshPairs(
       spark: org.apache.spark.sql.SparkSession,
@@ -697,10 +701,14 @@ object Dedup {
     // consumers read it (touched-key collect, the cross join's broadcast
     // side, both intra-join sides) — un-staged, the lazy plan re-ran the
     // shingle+minhash pipeline once per consumer. Both checkpoints are
-    // slim proxy rows (ids, hashes), never document text; the session's
-    // storage sweep releases them.
+    // slim proxy rows (ids, hashes), never document text. The eager
+    // candidate checkpoint is the banded pin's last reader, so the pin
+    // is released before returning.
     val (hashedB, bandedB) = batchSignaturesStaged(spark, path, batch, idCol, textCol)
-    incrementalLshPairsPre(spark, path, hashedB, bandedB.localCheckpoint(), threshold)
+    val banded = bandedB.localCheckpoint()
+    val pairs = incrementalLshPairsPre(spark, path, hashedB, banded, threshold)
+    graft.Checkpoints.release(banded)
+    pairs
   }
 
   /** The batch's (sketches, banded rows) under the index's recorded

@@ -3,7 +3,9 @@ package graft.indicators
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, StringType, StructField, StructType}
+
+import graft.ops.Relational
 
 /** Technical-indicator kernels (SURVEY §2.5 W1-W4), re-expressed for
   * Spark's execution model.
@@ -17,11 +19,11 @@ import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
   * Scale notes: the WMA family is pure window expressions
   * (whole-stage-codegen'd, one shuffle per key + in-partition sort).
   * The EMA family is an order-dependent recursion, which no frame-window
-  * aggregate expresses; it runs as a single-pass per-key fold over
-  * key-sorted partitions (`repartition` + `sortWithinPartitions` +
-  * `mapPartitions`) — O(n) per key, streaming, no group materialization,
-  * which is the 100 TB-safe shape (contrast with `collect_list`-based
-  * formulations that buffer whole series per key).
+  * aggregate expresses; it runs as a single-pass per-key fold on
+  * [[graft.ops.Relational.perKeyRuns]] (one shuffle on the key, one sort
+  * on (key, order), each key's run streamed) — O(n) per key, no group
+  * materialization, which is the 100 TB-safe shape (contrast with
+  * `collect_list`-based formulations that buffer whole series per key).
   */
 object Indicators {
 
@@ -78,8 +80,10 @@ object Indicators {
 
   /** Seeded EMA (reference `momentum.py:101-113`):
     * out(0) = α·v(0) + (1−α)·seed; out(i) = α·v(i) + (1−α)·out(i−1),
-    * α = 2/(length+1). Order-dependent recursion → single-pass fold over
-    * key-sorted partitions. `seedCol` must be constant within a key.
+    * α = 2/(length+1). Order-dependent recursion → one
+    * [[Relational.perKeyRuns]] fold holding one double per key.
+    * `seedCol` must be constant within a key; without it the seed is
+    * the key's first NON-NULL value.
     *
     * Null values propagate (null out, state unchanged) — the reference
     * operates on dense numpy arrays and has no null story.
@@ -94,53 +98,20 @@ object Indicators {
       outCol: String
   ): DataFrame = {
     val alpha = 2.0 / (length + 1.0)
-    withFold(df, key, order, valueCol, seedCol, outCol) { (acc, v) =>
-      alpha * v + (1 - alpha) * acc
-    }
-  }
-
-  /** Generic seeded left-fold over per-key time order: the engine's
-    * primitive for every order-dependent recursion (EMA here; the same
-    * machinery backs streaming-state twins). Partition by key, sort
-    * within partitions by (key, order), stream rows updating one double
-    * of state per key.
-    */
-  def withFold(
-      df: DataFrame,
-      key: String,
-      order: Seq[String],
-      valueCol: String,
-      seedCol: Option[String],
-      outCol: String
-  )(step: (Double, Double) => Double): DataFrame = {
-    val sorted = df
-      .repartition(col(key))
-      .sortWithinPartitions((key +: order).map(col): _*)
-    val outSchema = StructType(sorted.schema.fields :+ StructField(outCol, DoubleType, nullable = true))
-    val keyIdx = sorted.schema.fieldIndex(key)
-    val valIdx = sorted.schema.fieldIndex(valueCol)
-    val seedIdx = seedCol.map(sorted.schema.fieldIndex)
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
+    val outSchema = StructType(df.schema.fields :+ StructField(outCol, DoubleType, nullable = true))
+    val keyIdx = df.schema.fieldIndex(key)
+    val valIdx = df.schema.fieldIndex(valueCol)
+    val seedIdx = seedCol.map(df.schema.fieldIndex)
+    Relational.perKeyRuns(df, Seq(col(key)), order.map(col))(_.get(keyIdx)) { (_, run) =>
       var seeded = false
-      var acc: Double = 0.0
-      rows.map { r =>
-        val k = r.get(keyIdx)
-        if (!started || k != curKey) {
-          curKey = k
-          started = true
-          seeded = false
-        }
+      var acc = 0.0
+      run.map { r =>
         val out: Any =
           if (r.isNullAt(valIdx)) null // null propagates, state unchanged
           else {
-            if (!seeded) {
-              // seed: explicit per-key column, else first NON-NULL value
-              acc = seedIdx.fold(r.getDouble(valIdx))(r.getDouble)
-              seeded = true
-            }
-            acc = step(acc, r.getDouble(valIdx))
+            val v = r.getDouble(valIdx)
+            if (!seeded) { acc = seedIdx.fold(v)(r.getDouble); seeded = true }
+            acc = alpha * v + (1 - alpha) * acc
             acc
           }
         Row.fromSeq(r.toSeq :+ out)
@@ -188,50 +159,36 @@ object Indicators {
     val aM = 2.0 / (macdLength + 1.0)
     val outNames = Seq("macd_value", "avg", "diff", "diff_color")
     require(df.columns.intersect(outNames).isEmpty, s"input must not contain ${outNames.mkString(",")}")
-    // prePartitioned: the caller guarantees rows are already
-    // key-partitioned (e.g. straight out of a window over the same key);
-    // the explicit repartition would plan a redundant Exchange Catalyst
-    // can't remove. The in-partition sort stays either way (cheap on
-    // sorted input, and the fold's correctness depends on it).
-    val base = if (prePartitioned) df else df.repartition(col(key))
-    val sorted = base
-      .sortWithinPartitions((key +: order).map(col): _*)
+    // prePartitioned: rows are already key-partitioned (e.g. straight
+    // out of a window over the same key), so no exchange is planned; the
+    // in-partition sort stays (cheap on sorted input, and the fold's
+    // correctness depends on it).
     val outSchema = StructType(
-      sorted.schema.fields ++ Seq(
+      df.schema.fields ++ Seq(
         StructField("macd_value", DoubleType, nullable = true),
         StructField("avg", DoubleType, nullable = true),
         StructField("diff", DoubleType, nullable = true),
-        StructField("diff_color", org.apache.spark.sql.types.StringType, nullable = true)
+        StructField("diff_color", StringType, nullable = true)
       )
     )
-    val keyIdx = sorted.schema.fieldIndex(key)
-    val valIdx = sorted.schema.fieldIndex(valueCol)
-    val seedIdx = priorCloseCol.map(sorted.schema.fieldIndex)
-    sorted.mapPartitions { rows =>
-      var curKey: Any = null
-      var started = false
+    val keyIdx = df.schema.fieldIndex(key)
+    val valIdx = df.schema.fieldIndex(valueCol)
+    val seedIdx = priorCloseCol.map(df.schema.fieldIndex)
+    Relational.perKeyRuns(df, Seq(col(key)), order.map(col), prePartitioned)(_.get(keyIdx)) { (_, run) =>
       var seeded = false
       var fast, slow, signal = 0.0
       var prevDiff = Double.NaN
-      var first = true
-      rows.map { r =>
-        val k = r.get(keyIdx)
-        if (!started || k != curKey) {
-          curKey = k
-          started = true
-          seeded = false
-        }
+      run.map { r =>
         val base = r.toSeq
         if (r.isNullAt(valIdx)) Row.fromSeq(base ++ Seq(null, null, null, null))
         else {
-          if (!seeded) {
+          val v = r.getDouble(valIdx)
+          val first = !seeded
+          if (first) {
             // seed from the explicit column, else the first NON-NULL value
-            val seed = seedIdx.fold(r.getDouble(valIdx))(r.getDouble)
-            fast = seed; slow = seed; signal = 0.0
-            prevDiff = Double.NaN; first = true
+            fast = seedIdx.fold(v)(r.getDouble); slow = fast
             seeded = true
           }
-          val v = r.getDouble(valIdx)
           fast = aF * v + (1 - aF) * fast
           slow = aS * v + (1 - aS) * slow
           val value = fast - slow
@@ -243,7 +200,6 @@ object Indicators {
             else if (diff > 0) { if (diff > prevDiff) "#04FE00" else "#006401" }
             else { if (diff < prevDiff) "#FE0000" else "#7E0100" }
           prevDiff = diff
-          first = false
           Row.fromSeq(base ++ Seq(value, signal, diff, color))
         }
       }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -84,6 +84,44 @@ object Relational {
       .filter(col("__rank") <= k)
       .drop("__rank")
   }
+
+  /** The engine's one ordered per-key fold: ONE shuffle on `keys`, one
+    * sort on (keys, order) within partitions, then `perRun(k, run)` on
+    * each key's run in order, streamed — per-key memory is whatever
+    * `perRun` keeps, never the run itself. Runs split where `keyOf`
+    * changes under `==`: null-safe, and value equality for boxed
+    * primitives, so null keys form one run and a boxed `Long` key splits
+    * only where its value changes. Whatever `perRun` leaves of its run
+    * once its iterator is exhausted is skipped before the next key.
+    *
+    * `prePartitioned`: the caller guarantees `ds` is already
+    * hash-partitioned on `keys` (e.g. straight out of a window over the
+    * same key); Catalyst cannot see that through a typed operator, so
+    * the exchange is left out on request. The sort always runs.
+    */
+  def perKeyRuns[A, K, B: Encoder](
+      ds: Dataset[A],
+      keys: Seq[Column],
+      order: Seq[Column],
+      prePartitioned: Boolean = false
+  )(keyOf: A => K)(perRun: (K, Iterator[A]) => Iterator[B]): Dataset[B] =
+    (if (prePartitioned) ds else ds.repartition(keys: _*))
+      .sortWithinPartitions(keys ++ order: _*)
+      .mapPartitions { rows =>
+        val it = rows.buffered
+        new Iterator[(K, Iterator[A])] {
+          private var run: Iterator[A] = Iterator.empty
+          def hasNext: Boolean = { run.foreach(_ => ()); it.hasNext }
+          def next(): (K, Iterator[A]) = {
+            val k = keyOf(it.head)
+            run = new Iterator[A] {
+              def hasNext: Boolean = it.hasNext && keyOf(it.head) == k
+              def next(): A = it.next()
+            }
+            (k, run)
+          }
+        }.flatMap { case (k, run) => perRun(k, run) }
+      }
 
   /** Diagonal / schema-widening union (reference `providers/market.py:351-358`
     * `pl.concat how="diagonal"`; SURVEY U1/U2). Missing columns null-filled.

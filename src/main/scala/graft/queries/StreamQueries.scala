@@ -469,7 +469,7 @@ object StreamQueries {
   /** t4b — the same W5 incremental indicator series, same seed split,
     * same warm start, same oracle, through the Spark-4
     * `transformWithState` PRODUCTION API
-    * ([[graft.streaming.Streams.IndicatorSeriesProcessor]] with the
+    * ([[graft.streaming.Streams.IndicatorProcessor]] with the
     * RocksDB state-store provider) instead of
     * `flatMapGroupsWithState` — so BOTH stateful streaming APIs are
     * pinned against the one relational recomputation, and a divergence

@@ -534,7 +534,10 @@ object TextQueries {
     * instead of `documents`. The minhash signature machinery is
     * instantiated twice (stage-4 self-pairs over the exact-deduped
     * corpus; stage-5 benchmark side) with the same 16 xor seeds /
-    * 8 bands the engine uses.
+    * 8 bands the engine uses. Every CTE read more than once is
+    * `AS MATERIALIZED`: DuckDB otherwise inlines each reference, re-runs
+    * the MinHash chain and the recursion per reader, and runs out of
+    * memory.
     */
   private val x21Sql: String = {
     val n = X12SpanWidth
@@ -552,7 +555,7 @@ object TextQueries {
        |        '(?i)\\bhttps?://[^\\s]*[^\\s).,;:!?]', '<URL>', 'g'),
        |      '\\b\\d{7,}\\b', '<NUM>', 'g') AS text
        |  FROM raw),
-       |qt AS (
+       |qt AS MATERIALIZED (
        |  SELECT doc_id, text,
        |    regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS norm,
        |    string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
@@ -572,20 +575,20 @@ object TextQueries {
        |  WHERE n_words >= 20 AND mean_word_len BETWEEN 3.0 AND 10.0
        |    AND dup_word_frac < 0.6
        |    AND round(coalesce(max_c, 0) * 2.0 / n_words, 6) < 0.2),
-       |kept AS (SELECT qt.* FROM qt JOIN qkeep USING (doc_id)),
+       |kept AS MATERIALIZED (SELECT qt.* FROM qt JOIN qkeep USING (doc_id)),
        |ekeep AS (
        |  SELECT doc_id FROM (
        |    SELECT doc_id, min(doc_id) OVER (PARTITION BY md5(norm)) AS k FROM kept)
        |  WHERE doc_id = k),
-       |ex AS (SELECT kept.* FROM kept JOIN ekeep USING (doc_id)),
+       |ex AS MATERIALIZED (SELECT kept.* FROM kept JOIN ekeep USING (doc_id)),
        |m4base AS (
        |  SELECT doc_id AS id,
        |    list_distinct(list_transform(range(1, greatest(len(toks)-2, 0)+1), i -> array_to_string(toks[i:i+2], ' '))) AS sh
        |  FROM ex),
-       |m4filt AS (SELECT * FROM m4base WHERE len(sh) > 0),
+       |m4filt AS MATERIALIZED (SELECT * FROM m4base WHERE len(sh) > 0),
        |m4hashed AS (SELECT id, sh, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hs FROM m4filt),
        |m4sig AS (SELECT id, $sigExprs AS sig FROM m4hashed),
-       |m4banded AS (
+       |m4banded AS MATERIALIZED (
        |  SELECT id, b.band, md5(array_to_string(sig[b.band*2+1:b.band*2+2], ',')) AS band_key
        |  FROM m4sig, (SELECT unnest(range(0, 8)) AS band) b),
        |m4cand AS (
@@ -595,7 +598,7 @@ object TextQueries {
        |  SELECT c.id_a, c.id_b,
        |    len(list_intersect(sa.sh, sb.sh))::DOUBLE / len(list_distinct(list_concat(sa.sh, sb.sh)))::DOUBLE AS jaccard
        |  FROM m4cand c JOIN m4filt sa ON sa.id = c.id_a JOIN m4filt sb ON sb.id = c.id_b),
-       |th AS (SELECT id_a, id_b FROM m4pairs WHERE jaccard >= 0.3),
+       |th AS MATERIALIZED (SELECT id_a, id_b FROM m4pairs WHERE jaccard >= 0.3),
        |nodes AS (SELECT id_a AS id FROM th UNION SELECT id_b FROM th),
        |edges AS (SELECT id_a AS src, id_b AS dst FROM th UNION SELECT id_b, id_a FROM th),
        |reach(id, r) AS (
@@ -603,13 +606,13 @@ object TextQueries {
        |  UNION
        |  SELECT e.dst, reach.r FROM edges e JOIN reach ON reach.id = e.src),
        |comp AS (SELECT id, min(r) AS component FROM reach GROUP BY id),
-       |nd AS (SELECT ex.* FROM ex WHERE doc_id NOT IN (SELECT id FROM comp WHERE id <> component)),
+       |nd AS MATERIALIZED (SELECT ex.* FROM ex WHERE doc_id NOT IN (SELECT id FROM comp WHERE id <> component)),
        |bbase AS (
        |  SELECT doc_id AS id,
        |    list_distinct(list_transform(range(1, greatest(len(toks)-2, 0)+1), i -> array_to_string(toks[i:i+2], ' '))) AS sh
        |  FROM (SELECT doc_id, string_split(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' ') AS toks
        |        FROM documents WHERE doc_id % 101 = 0)),
-       |bfilt AS (SELECT * FROM bbase WHERE len(sh) > 0),
+       |bfilt AS MATERIALIZED (SELECT * FROM bbase WHERE len(sh) > 0),
        |bhashed AS (SELECT id, sh, list_transform(sh, s -> ('0x' || substr(md5(s), 1, 15))::BIGINT) AS hs FROM bfilt),
        |bsig AS (SELECT id, $sigExprs AS sig FROM bhashed),
        |bbanded AS (
@@ -626,13 +629,13 @@ object TextQueries {
        |cl AS (
        |  SELECT nd.* FROM nd
        |  WHERE doc_id NOT IN (SELECT DISTINCT id_a FROM xpairs WHERE jaccard >= 0.3)),
-       |sp AS (
+       |sp AS MATERIALIZED (
        |  SELECT doc_id, toks,
        |    CASE WHEN len(toks) >= $n
        |      THEN list_transform(range(1, len(toks) - $n + 2), i -> md5(array_to_string(toks[i:i+${n - 1}], ' ')))
        |      ELSE []::VARCHAR[] END AS ws
        |  FROM cl),
-       |expl AS (SELECT doc_id, unnest(ws) AS span FROM sp),
+       |expl AS MATERIALIZED (SELECT doc_id, unnest(ws) AS span FROM sp),
        |dup AS (SELECT span FROM (SELECT span, count(*) AS c FROM expl GROUP BY span) t WHERE c > 1),
        |sstats AS (
        |  SELECT e.doc_id,
@@ -643,7 +646,7 @@ object TextQueries {
        |  SELECT sp.doc_id FROM sp LEFT JOIN sstats s USING (doc_id)
        |  WHERE (CASE WHEN coalesce(s.n_spans, 0) > 0
        |    THEN CAST(s.n_dup_spans AS DOUBLE) / CAST(s.n_spans AS DOUBLE) ELSE 0.0 END) < 0.5),
-       |uf AS (SELECT sp.doc_id, sp.toks, sp.ws FROM sp JOIN keep6 USING (doc_id)),
+       |uf AS MATERIALIZED (SELECT sp.doc_id, sp.toks, sp.ws FROM sp JOIN keep6 USING (doc_id)),
        |occ6 AS (
        |  SELECT doc_id, u.pos, ws[u.pos] AS span
        |  FROM uf, (SELECT unnest(range(1, len(ws) + 1)) AS pos) u),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Relational
 import graft.streaming.Streams
 
 /** Hull MA + MACD confluence signal engine (reference
@@ -141,9 +142,9 @@ object HullMacd {
 
   /** Batch signal detection: `df` needs (symbolCol: string, timeUs: long,
     * closeCol: double). One pipeline: project to (symbol, time, close),
-    * drop null closes, shuffle once on symbol and sort within partitions
-    * by (symbol, time), then fold [[graft.streaming.Streams.stepIndicatorFull]]
-    * over each symbol's run — Hull(20) and MACD(12,26,9) updated per
+    * drop null closes, then [[Relational.perKeyRuns]] on symbol ordered by
+    * time folds [[graft.streaming.Streams.stepIndicatorFull]] over each
+    * symbol's run — Hull(20) and MACD(12,26,9) updated per
     * candle, padded and seeded with the symbol's first close (the
     * reference's `prior_close=None` fallback), and [[step]] applied from
     * the second candle on (reference requires ≥2 candles).
@@ -172,7 +173,7 @@ object HullMacd {
       .select(col(symbolCol).as("symbol"), col(timeUsCol).as("timeUs"), col(closeCol).as("close"))
       .filter(col("close").isNotNull)
       .as[Streams.CandleIn]
-    Streams.perSymbolRuns(candles) { (sym, run) =>
+    Relational.perKeyRuns(candles, Seq(col("symbol")), Seq(col("timeUs")))(_.symbol) { (sym, run) =>
       val it = run.buffered
       var state = Streams.emptyIndicatorState
       it.flatMap { c =>

@@ -73,8 +73,7 @@ object Health {
     alerts.result()
   }
 
-  import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
-  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
   val alertSchema: StructType = StructType(Seq(
@@ -102,39 +101,10 @@ object Health {
     * runs health right after classification per account snapshot —
     * `strategies/health.py:28-197`).
     */
-  def alertsDf(spark: SparkSession, legs: DataFrame, overrides: Map[String, Thresholds] = Map.empty): DataFrame = {
-    val idx = legs.schema.fieldIndex _
-    val (si, ui, ii, qi, oi, ki, ei, di, ti) = (
-      idx("symbol"), idx("underlying"), idx("instrument_type"), idx("signed_quantity"),
-      idx("option_type"), idx("strike"), idx("expiration"),
-      idx("delta"), idx("days_to_expiration")
-    )
-    val sorted = legs.repartition(col("underlying")).sortWithinPartitions(col("underlying"), col("symbol"))
-    sorted.mapPartitions { rows =>
-      val buf = rows.buffered
-      new Iterator[List[Row]] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): List[Row] = {
-          val u = buf.head.getString(ui)
-          val acc = List.newBuilder[ParsedLeg]
-          while (buf.hasNext && buf.head.getString(ui) == u) {
-            val r = buf.next()
-            acc += ParsedLeg(
-              r.getString(si), u, r.getString(ii), r.getDouble(qi),
-              Option(r.getString(oi)),
-              Option(r.getDecimal(ki)).map(BigDecimal(_)),
-              Option(r.getDate(ei)).map(_.toLocalDate),
-              delta = if (r.isNullAt(di)) None else Some(r.getDouble(di)),
-              daysToExpiration = if (r.isNullAt(ti)) None else Some(r.getInt(ti))
-            )
-          }
-          Strategies.classifyGroup(u, acc.result()).flatMap { m =>
-            check(m.strategyType, u, m.legs, overrides).map { a =>
-              Row(u, a.strategyType, m.legs.map(_.symbol).sorted.mkString(","), a.level, a.message)
-            }
-          }
-        }
-      }.flatten
-    }(Encoders.row(alertSchema))
-  }
+  def alertsDf(spark: SparkSession, legs: DataFrame, overrides: Map[String, Thresholds] = Map.empty): DataFrame =
+    Strategies.perMatch(legs, Seq("delta", "days_to_expiration"), alertSchema) { (u, m) =>
+      check(m.strategyType, u, m.legs, overrides).iterator.map { a =>
+        Row(u, a.strategyType, m.legs.map(_.symbol).sorted.mkString(","), a.level, a.message)
+      }
+    }
 }

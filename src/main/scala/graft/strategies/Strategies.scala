@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.Relational
+
 /** Option-strategy classification (reference
   * `analytics/strategies/patterns.py` + `classifier.py:100-163`,
   * SURVEY §2.11): group legs by underlying, apply matchers
@@ -496,79 +498,59 @@ object Strategies {
     * reference computes them on the freshly classified strategy,
     * `models.py:160-210`).
     */
-  def riskDf(spark: SparkSession, legs: DataFrame): DataFrame = {
-    val idx = legs.schema.fieldIndex _
-    val (si, ui, ii, qi, oi, ki, ei, mi, vi) = (
-      idx("symbol"), idx("underlying"), idx("instrument_type"), idx("signed_quantity"),
-      idx("option_type"), idx("strike"), idx("expiration"),
-      idx("multiplier"), idx("entry_value")
-    )
-    val sorted = legs.repartition(col("underlying")).sortWithinPartitions(col("underlying"), col("symbol"))
-    sorted.mapPartitions { rows =>
-      val buf = rows.buffered
-      new Iterator[List[Row]] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): List[Row] = {
-          val u = buf.head.getString(ui)
-          val acc = List.newBuilder[ParsedLeg]
-          while (buf.hasNext && buf.head.getString(ui) == u) {
-            val r = buf.next()
-            acc += ParsedLeg(
-              r.getString(si), u, r.getString(ii), r.getDouble(qi),
-              Option(r.getString(oi)),
-              Option(r.getDecimal(ki)).map(BigDecimal(_)),
-              Option(r.getDate(ei)).map(_.toLocalDate),
-              multiplier = Option(r.getDecimal(mi)).map(BigDecimal(_)).getOrElse(BigDecimal(1)),
-              entryValue = Option(r.getDecimal(vi)).map(BigDecimal(_))
-            )
-          }
-          classifyGroup(u, acc.result()).map { m =>
-            Row(
-              u,
-              m.strategyType,
-              m.legs.map(_.symbol).sorted.mkString(","),
-              maxProfit(m.strategyType, m.legs).map(v => Double.box(v.toDouble)).orNull,
-              maxLoss(m.strategyType, m.legs).map(v => Double.box(v.toDouble)).orNull
-            )
-          }
-        }
-      }.flatten
-    }(Encoders.row(riskSchema))
-  }
+  def riskDf(spark: SparkSession, legs: DataFrame): DataFrame =
+    perMatch(legs, Seq("multiplier", "entry_value"), riskSchema) { (u, m) =>
+      Iterator.single(Row(
+        u,
+        m.strategyType,
+        m.legs.map(_.symbol).sorted.mkString(","),
+        maxProfit(m.strategyType, m.legs).map(v => Double.box(v.toDouble)).orNull,
+        maxLoss(m.strategyType, m.legs).map(v => Double.box(v.toDouble)).orNull
+      ))
+    }
 
   /** Distributed classifier: `legs` needs columns (symbol, underlying,
     * instrument_type, signed_quantity, option_type, strike: decimal,
     * expiration: date). One shuffle on underlying; group combinatorics
     * run leg-local.
     */
-  def classify(spark: SparkSession, legs: DataFrame): DataFrame = {
+  def classify(spark: SparkSession, legs: DataFrame): DataFrame =
+    perMatch(legs, Nil, strategySchema) { (u, m) =>
+      Iterator.single(Row(u, m.strategyType, m.legs.size, m.legs.map(_.symbol), m.legs.map(_.signedQuantity).sum))
+    }
+
+  /** The one walk behind [[classify]], [[riskDf]] and
+    * [[graft.strategies.Health.alertsDf]]: each underlying's legs, in
+    * symbol order, through [[classifyGroup]], then `rows(underlying, m)`
+    * per match. [[Relational.perKeyRuns]] on underlying. `enrichment`
+    * names the nullable columns read into [[ParsedLeg]] beyond
+    * classify's seven: `multiplier` and `entry_value` (decimal; a null
+    * multiplier reads as 1), `delta` (double), `days_to_expiration`
+    * (int).
+    */
+  private[strategies] def perMatch(legs: DataFrame, enrichment: Seq[String], out: StructType)(
+      rows: (String, Match) => Iterator[Row]
+  ): DataFrame = {
     val idx = legs.schema.fieldIndex _
     val (si, ui, ii, qi, oi, ki, ei) = (
       idx("symbol"), idx("underlying"), idx("instrument_type"), idx("signed_quantity"),
       idx("option_type"), idx("strike"), idx("expiration")
     )
-    val sorted = legs.repartition(col("underlying")).sortWithinPartitions(col("underlying"), col("symbol"))
-    sorted.mapPartitions { rows =>
-      val buf = rows.buffered
-      new Iterator[List[Row]] {
-        def hasNext: Boolean = buf.hasNext
-        def next(): List[Row] = {
-          val u = buf.head.getString(ui)
-          var acc = List.newBuilder[ParsedLeg]
-          while (buf.hasNext && buf.head.getString(ui) == u) {
-            val r = buf.next()
-            acc += ParsedLeg(
-              r.getString(si), u, r.getString(ii), r.getDouble(qi),
-              Option(r.getString(oi)),
-              Option(r.getDecimal(ki)).map(BigDecimal(_)),
-              Option(r.getDate(ei)).map(_.toLocalDate)
-            )
-          }
-          classifyGroup(u, acc.result()).map { m =>
-            Row(u, m.strategyType, m.legs.size, m.legs.map(_.symbol), m.legs.map(_.signedQuantity).sum)
-          }
-        }
-      }.flatten
-    }(Encoders.row(strategySchema))
+    def opt(name: String): Option[Int] = if (enrichment.contains(name)) Some(idx(name)) else None
+    val (mi, vi, di, ti) = (opt("multiplier"), opt("entry_value"), opt("delta"), opt("days_to_expiration"))
+    def decimal(r: Row, i: Option[Int]) = i.flatMap(j => Option(r.getDecimal(j))).map(BigDecimal(_))
+    def parse(r: Row) = ParsedLeg(
+      r.getString(si), r.getString(ui), r.getString(ii), r.getDouble(qi),
+      Option(r.getString(oi)),
+      Option(r.getDecimal(ki)).map(BigDecimal(_)),
+      Option(r.getDate(ei)).map(_.toLocalDate),
+      delta = di.filterNot(r.isNullAt).map(r.getDouble),
+      multiplier = decimal(r, mi).getOrElse(BigDecimal(1)),
+      entryValue = decimal(r, vi),
+      daysToExpiration = ti.filterNot(r.isNullAt).map(r.getInt)
+    )
+    Relational.perKeyRuns(legs, Seq(col("underlying")), Seq(col("symbol")))(_.getString(ui)) { (u, run) =>
+      classifyGroup(u, run.map(parse).toList).iterator.flatMap(rows(u, _))
+    }(Encoders.row(out))
   }
 }

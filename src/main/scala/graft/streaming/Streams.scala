@@ -1,10 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues, ValueState}
 import org.apache.spark.sql.types.StructType
 
+import graft.ops.Relational
 import graft.signals.HullMacd
 
 /** Structured Streaming twins of the batch operators (SURVEY §2.9).
@@ -231,21 +232,7 @@ object Streams {
       signalLen: Int = 9
   ): org.apache.spark.sql.Dataset[IndicatorOut] = {
     import candles.sparkSession.implicits._
-    val fn = (sym: String, rows: Iterator[CandleIn], state: GroupState[IndicatorState]) => {
-      var st = state.getOption.getOrElse(emptyIndicatorState)
-      val out = rows.toSeq.sortBy(_.timeUs).map { c =>
-        val (ns, cd, _) = stepIndicatorFull(st, c, hullLength, fast, slow, signalLen)
-        st = ns
-        IndicatorOut(sym, c.timeUs, cd.hullValue, cd.hullColor, cd.macdValue, cd.macdSignal, cd.macdHistogram)
-      }
-      state.update(st)
-      out.iterator
-    }
-    val grouped = candles.groupByKey(_.symbol)
-    initialState match {
-      case Some(init) => grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, init)(fn)
-      case None       => grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-    }
+    candleStream(candles, initialState)(seriesStep(hullLength, fast, slow, signalLen))
   }
 
   def emptyIndicatorState: IndicatorState =
@@ -271,43 +258,69 @@ object Streams {
       signalLen: Int = 9
   ): org.apache.spark.sql.KeyValueGroupedDataset[String, IndicatorState] = {
     import history.sparkSession.implicits._
-    // The Lifo shape: no group materialization, so a caller can point
-    // this at a YEAR of history (not just a warmup-window slice) and the
-    // engine's sort handles spilling, not task memory.
-    perSymbolRuns(history) { (sym, run) =>
+    // The Lifo shape (graft.ops.Relational.perKeyRuns): no group
+    // materialization, so a caller can point this at a YEAR of history
+    // (not just a warmup-window slice) and the engine's sort handles
+    // spilling, not task memory.
+    Relational.perKeyRuns(history, Seq(col("symbol")), Seq(col("timeUs")))(_.symbol) { (sym, run) =>
       Iterator.single(sym -> run.foldLeft(emptyIndicatorState)(stepIndicator(_, _, hullLength, fast, slow, signalLen)._1))
     }
       .groupByKey(_._1)
       .mapValues(_._2)
   }
 
-  /** The batch per-symbol fold: ONE shuffle on symbol, an engine sort
-    * on (symbol, timeUs) within partitions, then `perRun(symbol, run)`
-    * on each symbol's time-ordered run, streamed — per-key memory is
-    * whatever `perRun` keeps, never the run itself. Whatever `perRun`
-    * leaves of its run is skipped before the next symbol starts.
+  /** One key's micro-batch slice, sorted by `order` and folded through
+    * `step` from `st`: the body of every stateful candle stream. The
+    * sort buffers the trigger-bounded slice only, never the key's
+    * history; cross-batch order is the source's responsibility (the
+    * reference's live engine likewise processes in arrival order).
     */
-  private[graft] def perSymbolRuns[B: Encoder](candles: Dataset[CandleIn])(
-      perRun: (String, Iterator[CandleIn]) => Iterator[B]
-  ): Dataset[B] =
-    candles
-      .repartition(col("symbol"))
-      .sortWithinPartitions(col("symbol"), col("timeUs"))
-      .mapPartitions { rows =>
-        val it = rows.buffered
-        new Iterator[(String, Iterator[CandleIn])] {
-          private var run: Iterator[CandleIn] = Iterator.empty
-          def hasNext: Boolean = { run.foreach(_ => ()); it.hasNext }
-          def next(): (String, Iterator[CandleIn]) = {
-            val sym = it.head.symbol
-            run = new Iterator[CandleIn] {
-              def hasNext: Boolean = it.hasNext && it.head.symbol == sym
-              def next(): CandleIn = it.next()
-            }
-            (sym, run)
-          }
-        }.flatMap { case (sym, run) => perRun(sym, run) }
-      }
+  private def foldSlice[A, O: Ordering, S, B](rows: Iterator[A], order: A => O, st: S)(
+      step: (S, A) => (S, Iterable[B])
+  ): (S, Iterator[B]) = {
+    var s = st
+    val out = rows.toSeq.sortBy(order).flatMap { a =>
+      val (next, emitted) = step(s, a)
+      s = next
+      emitted
+    }
+    (s, out.iterator)
+  }
+
+  private def signalStep(hullLength: Int, fast: Int, slow: Int, signalLen: Int)
+      : (IndicatorState, CandleIn) => (IndicatorState, Iterable[SignalOut]) =
+    stepIndicator(_, _, hullLength, fast, slow, signalLen)
+
+  private def seriesStep(hullLength: Int, fast: Int, slow: Int, signalLen: Int)
+      : (IndicatorState, CandleIn) => (IndicatorState, Iterable[IndicatorOut]) = { (st, c) =>
+    val (next, cd, _) = stepIndicatorFull(st, c, hullLength, fast, slow, signalLen)
+    (next, List(IndicatorOut(c.symbol, c.timeUs, cd.hullValue, cd.hullColor, cd.macdValue, cd.macdSignal, cd.macdHistogram)))
+  }
+
+  /** A per-symbol candle stream: each trigger's slice folds `step` from
+    * the symbol's state (else the seeded `initialState`, else empty), on
+    * `flatMapGroupsWithState` or, with `processor`, on
+    * `transformWithState` through an [[IndicatorProcessor]].
+    */
+  private def candleStream[B: Encoder](
+      candles: Dataset[CandleIn],
+      initialState: Option[KeyValueGroupedDataset[String, IndicatorState]],
+      processor: Boolean = false
+  )(step: (IndicatorState, CandleIn) => (IndicatorState, Iterable[B])): Dataset[B] = {
+    import candles.sparkSession.implicits._
+    val fn = (_: String, rows: Iterator[CandleIn], state: GroupState[IndicatorState]) => {
+      val (st, out) = foldSlice(rows, (_: CandleIn).timeUs, state.getOption.getOrElse(emptyIndicatorState))(step)
+      state.update(st)
+      out
+    }
+    val grouped = candles.groupByKey(_.symbol)
+    (processor, initialState) match {
+      case (false, Some(init)) => grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, init)(fn)
+      case (false, None)       => grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
+      case (true, Some(init))  => grouped.transformWithState(new IndicatorProcessor(step), TimeMode.None(), OutputMode.Append(), init)
+      case (true, None)        => grouped.transformWithState(new IndicatorProcessor(step), TimeMode.None(), OutputMode.Append())
+    }
+  }
 
   /** Streaming signal detection: keyed incremental state via
     * `flatMapGroupsWithState` (append mode). Candles within a micro-batch
@@ -324,25 +337,7 @@ object Streams {
       initialState: Option[org.apache.spark.sql.KeyValueGroupedDataset[String, IndicatorState]] = None
   ): org.apache.spark.sql.Dataset[SignalOut] = {
     import candles.sparkSession.implicits._
-    val fn = (sym: String, rows: Iterator[CandleIn], state: GroupState[IndicatorState]) => {
-      var st = state.getOption.getOrElse(emptyIndicatorState)
-      // toSeq.sortBy buffers one key's MICRO-BATCH slice (small by
-      // construction — trigger-bounded), not its full history; the batch
-      // twin (HullMacd.detectSignals) folds the same kernel over engine-
-      // sorted runs instead ([[perSymbolRuns]]).
-      val out = rows.toSeq.sortBy(_.timeUs).flatMap { c =>
-        val (ns, sigs) = stepIndicator(st, c, hullLength, fast, slow, signalLen)
-        st = ns
-        sigs
-      }
-      state.update(st)
-      out.iterator
-    }
-    val grouped = candles.groupByKey(_.symbol)
-    initialState match {
-      case Some(init) => grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout, init)(fn)
-      case None       => grouped.flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-    }
+    candleStream(candles, initialState)(signalStep(hullLength, fast, slow, signalLen))
   }
 
   // ---------------------------------------------------------------------
@@ -459,70 +454,50 @@ object Streams {
     candles
       .groupByKey(_.symbol)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (sym: String, rows: Iterator[RankedCandle], state: GroupState[BacktestState]) =>
-          var st = state.getOption.getOrElse(BacktestState(emptyIndicatorState, None))
-          val out = rows.toSeq.sortBy(c => (c.timeUs, c.rank)).flatMap { c =>
-            if (c.rank == 0) {
-              st = st.copy(lastPricing = Some(c.close))
-              Nil
-            } else {
-              val (ns, sigs) = stepIndicator(st.ind, CandleIn(c.symbol, c.timeUs, c.close), hullLength, fast, slow, signalLen)
-              st = st.copy(ind = ns)
-              sigs.map(s =>
-                EnrichedSignal(c.symbol, s.time_us, s.signal_type, s.direction, s.trigger, s.close_price, st.lastPricing)
-              )
+        (_: String, rows: Iterator[RankedCandle], state: GroupState[BacktestState]) =>
+          val st0 = state.getOption.getOrElse(BacktestState(emptyIndicatorState, None))
+          val (st, out) = foldSlice(rows, (c: RankedCandle) => (c.timeUs, c.rank), st0) { (cur, c) =>
+            if (c.rank == 0) (cur.copy(lastPricing = Some(c.close)), Nil)
+            else {
+              val (ns, sigs) = stepIndicator(cur.ind, CandleIn(c.symbol, c.timeUs, c.close), hullLength, fast, slow, signalLen)
+              (cur.copy(ind = ns), sigs.map(s =>
+                EnrichedSignal(c.symbol, s.time_us, s.signal_type, s.direction, s.trigger, s.close_price, cur.lastPricing)))
             }
           }
           state.update(st)
-          out.iterator
+          out
       }
   }
 
-  /** Spark 4 `transformWithState` twin of [[detectSignalsStream]]: the
-    * same [[stepIndicator]] arithmetic behind the new `StatefulProcessor`
-    * API (per-key TTL and timers available when the pipeline needs
-    * them). Extends `StatefulProcessorWithInitialState` so ONE class
-    * serves both the cold-start and the W5 warm-start
-    * (`handleInitialState` receives each key's seeded state from
-    * [[seedIndicatorState]]) call sites. Requires the RocksDB state
-    * store provider (`spark.sql.streaming.stateStore.providerClass` →
+  /** The `transformWithState` form of the candle streams: the same
+    * slice fold of `step` behind the Spark 4 `StatefulProcessor` API
+    * (per-key TTL and timers available when a pipeline needs them). As a
+    * `StatefulProcessorWithInitialState`, one class serves both the cold
+    * start and the W5 warm start (`handleInitialState` receives each
+    * key's [[seedIndicatorState]] fold). Requires the RocksDB state store
+    * provider (`spark.sql.streaming.stateStore.providerClass` →
     * `...state.RocksDBStateStoreProvider`) — the default HDFS-backed
     * provider does not support the multi-column-family state layout.
     */
-  class HullMacdProcessor(hullLength: Int, fast: Int, slow: Int, signalLen: Int)
-      extends StatefulProcessorWithInitialState[String, CandleIn, SignalOut, IndicatorState] {
+  class IndicatorProcessor[B](step: (IndicatorState, CandleIn) => (IndicatorState, Iterable[B]))
+      extends StatefulProcessorWithInitialState[String, CandleIn, B, IndicatorState] {
     @transient private var state: ValueState[IndicatorState] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[IndicatorState](
-        "indicator",
-        org.apache.spark.sql.Encoders.product[IndicatorState],
-        TTLConfig.NONE
-      )
+      state = getHandle.getValueState[IndicatorState]("indicator", Encoders.product[IndicatorState], TTLConfig.NONE)
 
     override def handleInitialState(key: String, initial: IndicatorState, timerValues: TimerValues): Unit =
       state.update(initial)
 
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[CandleIn],
-        timerValues: TimerValues
-    ): Iterator[SignalOut] = {
-      var st = Option(state.get()).getOrElse(emptyIndicatorState)
-      val out = rows.toSeq.sortBy(_.timeUs).flatMap { c =>
-        val (ns, sigs) = stepIndicator(st, c, hullLength, fast, slow, signalLen)
-        st = ns
-        sigs
-      }
+    override def handleInputRows(key: String, rows: Iterator[CandleIn], timerValues: TimerValues): Iterator[B] = {
+      val (st, out) = foldSlice(rows, (_: CandleIn).timeUs, Option(state.get()).getOrElse(emptyIndicatorState))(step)
       state.update(st)
-      out.iterator
+      out
     }
   }
 
-  /** T5 on the Spark 4 `transformWithState` API: the same
-    * [[HullMacdProcessor]], warm-startable like [[detectSignalsStream]] —
-    * each key's seeded [[IndicatorState]] (from [[seedIndicatorState]])
-    * is delivered via `handleInitialState` before its first input row.
+  /** T5 on the Spark 4 `transformWithState` API ([[IndicatorProcessor]]),
+    * warm-startable like [[detectSignalsStream]].
     */
   def detectSignalsTransformWithState(
       candles: org.apache.spark.sql.Dataset[CandleIn],
@@ -533,53 +508,10 @@ object Streams {
       signalLen: Int = 9
   ): org.apache.spark.sql.Dataset[SignalOut] = {
     import candles.sparkSession.implicits._
-    val grouped = candles.groupByKey(_.symbol)
-    val proc = new HullMacdProcessor(hullLength, fast, slow, signalLen)
-    initialState match {
-      case Some(init) => grouped.transformWithState(proc, TimeMode.None(), OutputMode.Append(), init)
-      case None       => grouped.transformWithState(proc, TimeMode.None(), OutputMode.Append())
-    }
+    candleStream(candles, initialState, processor = true)(signalStep(hullLength, fast, slow, signalLen))
   }
 
-  /** The `transformWithState` twin of [[indicatorSeriesStream]]: the W5
-    * per-candle indicator SURFACE (hull value/color, MACD value/signal/
-    * histogram) emitted from the same O(1) [[stepIndicatorFull]] update,
-    * behind the Spark-4 `StatefulProcessor` API. Warm-startable like
-    * the `flatMapGroupsWithState` form (`handleInitialState` receives
-    * each key's [[seedIndicatorState]] fold), and subject to the same
-    * RocksDB state-store requirement as [[HullMacdProcessor]].
-    */
-  class IndicatorSeriesProcessor(hullLength: Int, fast: Int, slow: Int, signalLen: Int)
-      extends StatefulProcessorWithInitialState[String, CandleIn, IndicatorOut, IndicatorState] {
-    @transient private var state: ValueState[IndicatorState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[IndicatorState](
-        "indicator",
-        org.apache.spark.sql.Encoders.product[IndicatorState],
-        TTLConfig.NONE
-      )
-
-    override def handleInitialState(key: String, initial: IndicatorState, timerValues: TimerValues): Unit =
-      state.update(initial)
-
-    override def handleInputRows(
-        key: String,
-        rows: Iterator[CandleIn],
-        timerValues: TimerValues
-    ): Iterator[IndicatorOut] = {
-      var st = Option(state.get()).getOrElse(emptyIndicatorState)
-      val out = rows.toSeq.sortBy(_.timeUs).map { c =>
-        val (ns, cd, _) = stepIndicatorFull(st, c, hullLength, fast, slow, signalLen)
-        st = ns
-        IndicatorOut(key, c.timeUs, cd.hullValue, cd.hullColor, cd.macdValue, cd.macdSignal, cd.macdHistogram)
-      }
-      state.update(st)
-      out.iterator
-    }
-  }
-
-  /** W5 indicator series on the Spark-4 `transformWithState` API — the
+  /** W5 indicator series on the Spark 4 `transformWithState` API — the
     * production-API twin of [[indicatorSeriesStream]], same arithmetic,
     * same warm start (the t4b oracle row pins the two engines against
     * one relational recomputation).
@@ -593,11 +525,6 @@ object Streams {
       signalLen: Int = 9
   ): org.apache.spark.sql.Dataset[IndicatorOut] = {
     import candles.sparkSession.implicits._
-    val grouped = candles.groupByKey(_.symbol)
-    val proc = new IndicatorSeriesProcessor(hullLength, fast, slow, signalLen)
-    initialState match {
-      case Some(init) => grouped.transformWithState(proc, TimeMode.None(), OutputMode.Append(), init)
-      case None       => grouped.transformWithState(proc, TimeMode.None(), OutputMode.Append())
-    }
+    candleStream(candles, initialState, processor = true)(seriesStep(hullLength, fast, slow, signalLen))
   }
 }

@@ -338,10 +338,11 @@ object TextOps {
     * whose prefix-sum rule keeps a boundary-straddling document in the
     * earlier bin (overflow) but is a pure window expression.
     *
-    * This is an order-sensitive fold, so it runs like the LIFO replay:
-    * one shuffle on the shard key, in-partition sort, streaming O(1)
-    * state per shard — no group materialization, spills handled by the
-    * engine's sort. The two rules bound each other: first-fit never uses
+    * This is an order-sensitive fold, so it runs like the LIFO replay on
+    * [[graft.ops.Relational.perKeyRuns]]: one shuffle on the shard key,
+    * in-partition sort, streaming O(1) state per shard — no group
+    * materialization, spills handled by the engine's sort. Shard keys of
+    * any type split by value (a boxed-long key is one run per value). The two rules bound each other: first-fit never uses
     * fewer bins than the prefix rule on the same shard, and its
     * non-singleton bins never exceed the budget (PackingSpec).
     */
@@ -360,27 +361,16 @@ object TextOps {
       prepared.schema.fields :+ org.apache.spark.sql.types.StructField("bin_id", LongType, nullable = false))
     val shardIdx = prepared.schema.fieldIndex(shardCol)
     val tokIdx = prepared.schema.fieldIndex(tokenCountCol)
-    prepared
-      .repartition(col(shardCol))
-      .sortWithinPartitions(col(shardCol), col(orderCol))
-      .mapPartitions { rows =>
-        var curShard: Any = null
-        var started = false
-        var bin = 0L
-        var fill = 0L
-        rows.map { r =>
-          val s = r.get(shardIdx)
-          // Any-typed key change detection: Scala `!=` dispatches through
-          // BoxesRunTime.equals — VALUE equality for boxed primitives
-          // (never reference identity), null-safe, i.e. Objects.equals
-          // semantics. PackingSpec pins this with a boxed-long shard key.
-          if (!started || s != curShard) { curShard = s; started = true; bin = 0L; fill = 0L }
-          val n = if (r.isNullAt(tokIdx)) 0L else r.getLong(tokIdx)
-          if (fill > 0 && fill + n > budget) { bin += 1; fill = 0L }
-          fill += n
-          Row.fromSeq(r.toSeq :+ bin)
-        }
-      }(Encoders.row(outSchema))
+    graft.ops.Relational.perKeyRuns(prepared, Seq(col(shardCol)), Seq(col(orderCol)))(_.get(shardIdx)) { (_, run) =>
+      var bin = 0L
+      var fill = 0L
+      run.map { r =>
+        val n = if (r.isNullAt(tokIdx)) 0L else r.getLong(tokIdx)
+        if (fill > 0 && fill + n > budget) { bin += 1; fill = 0L }
+        fill += n
+        Row.fromSeq(r.toSeq :+ bin)
+      }
+    }(Encoders.row(outSchema))
   }
 
   /** Materialize packed training sequences — the writer step after bin

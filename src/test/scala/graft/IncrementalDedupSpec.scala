@@ -88,6 +88,18 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(plan.contains("ResolvedHint") || probe.queryExecution.sparkPlan.toString.contains("BroadcastHashJoin"))
   }
 
+  test("released pairs leave no persistent RDD behind: the banded pin is freed inside the probe") {
+    val docs = Tables.documents(spark, sf0001)
+    val path = Files.createTempDirectory("mhindex5").toString + "/index"
+    Dedup.writeMinhashIndex(docs.filter(col("doc_id") % 3 =!= 0), "doc_id", "text", path)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val pairs = Dedup.incrementalLshPairs(spark, path, docs.filter(col("doc_id") % 3 === 0), "doc_id", "text")
+    pairs.collect()
+    Checkpoints.release(pairs, blocking = true)
+    val left = spark.sparkContext.getPersistentRDDs.filter { case (id, _) => !before.contains(id) }
+    assert(left.isEmpty, s"persistent RDDs left after release: ${left.values.map(_.toDebugString).mkString("\n")}")
+  }
+
   test("novelOnly: exact incremental novelty with null-safe fingerprints") {
     import spark.implicits._
     val corpus = Seq((1L, "the cat sat"), (2L, null.asInstanceOf[String])).toDF("doc_id", "text")
